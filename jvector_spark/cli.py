@@ -112,7 +112,10 @@ def _ensure_importable() -> None:
     sub = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     if "--py-files" in sub:
         try:
-            files = sub.split("--py-files", 1)[1].strip().split(" ", 1)[0]
+            # both `--py-files a.zip` and `--py-files=a.zip`, optionally
+            # quoted
+            rest = sub.split("--py-files", 1)[1].strip().removeprefix("=")
+            files = rest.strip().split(" ", 1)[0].strip("'\"")
             for uri in files.split(","):
                 path = uri.removeprefix("file:")
                 if path and os.path.exists(path):

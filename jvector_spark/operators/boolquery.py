@@ -19,9 +19,8 @@ BooleanQuery models):
                 (MUST_NOT clauses never score — Lucene contract).
   * execution   doc-partitioned segments decide match + score locally
                 (all of a doc's postings live in its segment); per-segment
-                bounded top-k partials merge globally — the same scatter
-                shape as wand.search_index, so the shuffle stays
-                ≤ n_queries × k × n_tasks rows at any corpus size.
+                bounded top-k partials merge globally, so the shuffle
+                stays ≤ n_queries × k × n_tasks rows at any corpus size.
 
 ``ast_to_sql`` emits the equivalent DuckDB predicate (``bool_or`` per leaf
 under ``GROUP BY doc_id HAVING ...``) so every boolean query is oracle-
@@ -332,81 +331,40 @@ def boolean_search_index(
     """Distributed boolean top-k over a segment index.
 
     queries: pandas (qid:int, query:str, k:int). ASTs parse once on the
-    driver (syntax errors surface before any job launches) and broadcast;
-    segments scatter over tasks exactly like wand.search_index — per-task
-    bounded partials, global merge. Returns (qid, rank, docid, score)-less
-    raw (qid, docid, score) like search_index; callers rank/round.
+    driver (syntax errors surface before any job launches) and broadcast.
+    Returns (qid, rank, docid, score).
     """
-    from collections.abc import Iterator
-
     from jvector_spark.operators.wand import (
-        _TopK, _filter_key, empty_topk, global_term_stats, idf_map,
-        merge_topk, scatter_paths,
-    )
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
+        IndexSnapshot, _TopK, _topk_frame, global_term_stats, idf_map,
+        open_segments,
     )
 
     asts = {int(r.qid): parse_query(str(r.query))
             for r in queries.itertuples()}
     ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
+    # positive terms drive the bloom skip too: every match has >=1
+    # positive term (negated terms never create matches)
     pos_terms = sorted({leaf.text for a in asts.values()
                         for leaf in positive_leaves(a)})
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
-    idfs = idf_map(n_docs, global_term_stats(spark, index_dir, pos_terms)
+    snap = IndexSnapshot(index_dir)
+    avgdl = snap.manifest["avgdl"]
+    idfs = idf_map(snap.manifest["n_docs"],
+                   global_term_stats(spark, index_dir, pos_terms)
                    if pos_terms else {})
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    if not seg_paths:
-        return empty_topk(spark, "score", merge)
 
-    sc = spark.sparkContext
-    b_asts = sc.broadcast(asts)
-    b_ks = sc.broadcast(ks)
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        if not paths:
-            return
-        asts_l, idfs_l = b_asts.value, b_idfs.value
-        states = {qid: _TopK(b_ks.value[qid]) for qid in asts_l}
-        # positive terms drive the bloom skip: every match has >=1
-        # positive term, so a segment whose bloom rejects ALL of them
-        # cannot contribute (negated terms never create matches)
-        probe = sorted({leaf.text for a in asts_l.values()
-                        for leaf in positive_leaves(a)})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            seg_cache: dict = {}
-            accept = None
-            if doc_filter:
-                accept = reader.accepted_docids(doc_filter)
-                seg_cache[("accept", _filter_key(doc_filter))] = accept
+    def kernel(paths, tomb, payload):
+        asts_l, idfs_l = payload
+        states = {qid: _TopK(ks[qid]) for qid in asts_l}
+        for seg in open_segments(paths, tomb, pos_terms, doc_filter):
             for qid, st in states.items():
-                d, s = score_boolean_on_segment(
-                    reader, asts_l[qid], idfs_l, st.k, avgdl, tomb_l,
-                    seg_cache, accept,
-                )
-                st.push(d, s)
-        out = [
-            pd.DataFrame({"qid": qid, "docid": st.docids, "score": st.scores})
-            for qid, st in states.items() if len(st.docids)
-        ]
-        if out:
-            yield pd.concat(out, ignore_index=True)
+                st.push(*score_boolean_on_segment(
+                    seg.reader, asts_l[qid], idfs_l, st.k, avgdl,
+                    seg.tombstones, seg.cache, seg.accept,
+                ))
+        yield _topk_frame(states)
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, score double")
-    return merge_topk(partial, ks, "score", merge)
+    return snap.scatter_topk(spark, kernel, (asts, idfs), "score", ks,
+                             merge, num_tasks)
 
 
 # --- oracle SQL generation ------------------------------------------------

@@ -37,15 +37,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _matched_docids(reader, terms: list[str], tombstones, accept) -> np.ndarray:
+def _matched_docids(seg, terms: list[str]) -> np.ndarray:
+    """Live, filter-accepted docids of `seg` holding ANY of `terms` (OR
+    match), memoized in the segment cache per term set."""
+    key = ("match", tuple(terms))
+    if key in seg.cache:
+        return seg.cache[key]
+    reader = seg.reader
     parts = [reader.decode_term(t)[0] for t in terms if reader.has_term(t)]
-    if not parts:
-        return np.zeros(0, np.int64)
-    d = np.unique(np.concatenate(parts))
-    if accept is not None:
-        d = d[np.isin(d, accept, assume_unique=True)]
-    if tombstones is not None and len(tombstones):
-        d = d[~np.isin(d, tombstones)]
+    d = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
+    if seg.accept is not None:
+        d = d[np.isin(d, seg.accept, assume_unique=True)]
+    if len(seg.tombstones):
+        d = d[~np.isin(d, seg.tombstones)]
+    seg.cache[key] = d
     return d
 
 
@@ -58,20 +63,23 @@ def _attr_values(reader, attr: str,
     doc-length array) is never null and skips the mask."""
     if attr == "dl":
         return d, reader.doclen(d).astype(np.int64)
-    raw = pd.Series(reader.doc_attribute(attr)[d - reader._min_docid])
-    ok = raw.notna().to_numpy()
-    vals = (np.asarray(raw.to_numpy(), dtype=np.float64) if ok.all()
-            else np.asarray(raw[ok].tolist(), dtype=np.float64))
-    # the int64 cast is a CONTRACT, not a coercion: truncating 9.99 to 9
-    # would silently corrupt sort order, stats, and histogram bins for a
-    # float attribute — refuse loudly instead (int-typed columns that
-    # reach pandas as float64 via nulls are integral and pass)
-    if len(vals) and not np.all(vals == np.floor(vals)):
-        raise ValueError(
-            f"attribute {attr!r} holds non-integral values — the "
-            "attribute surface is integer-keyed (cast/scale the column, "
-            "e.g. cents instead of dollars, before indexing)")
-    return (d if ok.all() else d[ok]), vals.astype(np.int64)
+    raw = reader.doc_attribute(attr)[d - reader._min_docid]
+    ok = pd.notna(raw)
+    vals = np.asarray(raw[ok].tolist())
+    if vals.dtype.kind not in "iub":
+        # integer columns cast straight to int64 (a float64 detour
+        # corrupts |v| > 2^53); anything else — float columns, and int
+        # columns that reach pandas as float64 via nulls — must be
+        # integral: the int64 cast is a CONTRACT, not a coercion, since
+        # truncating 9.99 to 9 would silently corrupt sort order, stats
+        # and histogram bins — refuse loudly instead
+        vals = vals.astype(np.float64)
+        if len(vals) and not np.all(vals == np.floor(vals)):
+            raise ValueError(
+                f"attribute {attr!r} holds non-integral values — the "
+                "attribute surface is integer-keyed (cast/scale the "
+                "column, e.g. cents instead of dollars, before indexing)")
+    return d[ok], vals.astype(np.int64)
 
 
 def facet_counts(
@@ -88,66 +96,37 @@ def facet_counts(
     facet value if it contains ANY query term (deleted docs excluded,
     doc_filter honored — the counts agree with what filtered search
     would return)."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import IndexSnapshot, open_segments
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
+    snap = IndexSnapshot(index_dir)
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, facet string, n_docs long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    probe = sorted({t for ts in qterms.values() for t in ts})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = reader.accepted_docids(doc_filter) if doc_filter else None
-            vals = reader.doc_attribute(facet_col)
-            cache: dict = {}
+    def kernel(paths, tomb, qt):
+        for seg in open_segments(paths, tomb, probe, doc_filter):
+            vals = seg.reader.doc_attribute(facet_col)
             for qid, terms in qt.items():
-                key = tuple(terms)
-                if key in cache:
-                    counts = cache[key]
-                else:
-                    d = _matched_docids(reader, terms, tomb_l, accept)
-                    # dropna=False: SQL GROUP BY keeps one NULL group —
-                    # silently omitting null-attribute matches would
-                    # under-count vs the oracle (collapse_topk already
-                    # preserves the distinct null group the same way)
-                    counts = cache[key] = (
-                        pd.Series(vals[d - reader._min_docid])
-                        .value_counts(dropna=False)
-                        if len(d) else None
-                    )
-                if counts is not None and len(counts):
-                    facet_vals = [
-                        None if (v is None or (isinstance(v, float)
-                                               and v != v))
-                        else str(v)
-                        for v in counts.index.tolist()]
-                    yield pd.DataFrame({
-                        "qid": np.int64(qid),
-                        "facet": pd.Series(facet_vals, dtype=object),
-                        "n_docs": counts.to_numpy(np.int64),
-                    })
+                d = _matched_docids(seg, terms)
+                if not len(d):
+                    continue
+                # dropna=False: SQL GROUP BY keeps one NULL group —
+                # silently omitting null-attribute matches would
+                # under-count vs the oracle (collapse_topk already
+                # preserves the distinct null group the same way)
+                counts = (pd.Series(vals[d - seg.reader._min_docid])
+                          .value_counts(dropna=False))
+                facet_vals = [
+                    None if (v is None or (isinstance(v, float) and v != v))
+                    else str(v)
+                    for v in counts.index.tolist()]
+                yield pd.DataFrame({
+                    "qid": np.int64(qid),
+                    "facet": pd.Series(facet_vals, dtype=object),
+                    "n_docs": counts.to_numpy(np.int64),
+                })
 
-    partial = paths_df.mapInPandas(run, schema)
+    partial = snap.scatter(spark, kernel, qterms,
+                           "qid long, facet string, n_docs long", num_tasks)
     # the only shuffle: |queries| x |facet values| rows, corpus-size-free
     return partial.groupBy("qid", "facet").agg(
         F.sum("n_docs").alias("n_docs")
@@ -173,54 +152,31 @@ def collapse_topk(
     asc) so the chosen representative agrees with the SQL oracle even at
     sub-1e-6 score ties."""
     from jvector_spark.operators.wand import (
-        global_term_stats, idf_map, scatter_paths, score_query_on_segment,
-    )
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
+        IndexSnapshot, global_term_stats, idf_map, open_segments,
+        score_query_on_segment,
     )
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
+    snap = IndexSnapshot(index_dir)
+    avgdl = snap.manifest["avgdl"]
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
-    all_t = sorted({t for ts in qterms.values() for t in ts})
-    idfs = idf_map(n_docs, global_term_stats(spark, index_dir, all_t)
-                   if all_t else {})
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, grp string, docid long, score double"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast((qterms, ks))
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    probe = sorted({t for ts in qterms.values() for t in ts})
+    idfs = idf_map(snap.manifest["n_docs"],
+                   global_term_stats(spark, index_dir, probe)
+                   if probe else {})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        (qt, _), idfs_l = b_q.value, b_idfs.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = reader.accepted_docids(doc_filter) if doc_filter else None
-            grp = reader.doc_attribute(collapse_col)
-            cache: dict = {}
+    def kernel(paths, tomb, payload):
+        qt, idfs_l = payload
+        for seg in open_segments(paths, tomb, probe, doc_filter):
+            grp = seg.reader.doc_attribute(collapse_col)
             for qid, terms in qt.items():
                 # k=n_docs + theta=0 => exact full scoring of every match
                 d, s = score_query_on_segment(
-                    reader, terms, idfs_l, 1 << 62, 0.0, avgdl, tomb_l,
-                    cache, accept,
+                    seg.reader, terms, idfs_l, 1 << 62, 0.0, avgdl,
+                    seg.tombstones, seg.cache, seg.accept,
                 )
                 if not len(d):
                     continue
-                g = grp[d - reader._min_docid]
+                g = grp[d - seg.reader._min_docid]
                 # segment-local group-best: rounded-score desc, docid asc.
                 # HALF_UP rounding (floor(x*1e6+0.5) for the nonnegative
                 # BM25 scores), NOT np.round's half-to-even: the global
@@ -235,13 +191,14 @@ def collapse_topk(
                 g_sel = pd.Series(g[order])
                 g_col = np.where(g_sel.notna(),
                                  g_sel.astype(str), None)
-                pdf = pd.DataFrame({
+                yield pd.DataFrame({
                     "qid": np.int64(qid), "grp": g_col,
                     "docid": d[order], "score": s[order],
                 }).drop_duplicates("grp", keep="first")
-                yield pdf
 
-    return paths_df.mapInPandas(run, schema)
+    return snap.scatter(spark, kernel, (qterms, idfs),
+                        "qid long, grp string, docid long, score double",
+                        num_tasks)
 
 
 def _sidecar_attr_best_signv(seg_path: str, attr: str,
@@ -287,48 +244,41 @@ def sorted_scan_partition(
     propagation + stats-based segment skip (see sorted_search). Module-
     level so the skip behavior is directly testable in-process;
     `reader_cls` lets tests observe which segments actually open."""
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import open_segments
+    from jvector_spark.sources.segment import SegmentReader
 
-    if reader_cls is None:
-        reader_cls = SegmentReader
     probe = sorted({t for ts in qterms.values() for t in ts})
     # kept sign*v values per query across THIS task's segments (the θ
     # state); θ_q = worst kept value once k are held
     kept: dict[int, np.ndarray] = {q: np.zeros(0, np.int64) for q in qterms}
-    for path in paths:
-        best_signv = _sidecar_attr_best_signv(path, attr, sign)
-        if best_signv is not None and all(
-            ks[q] <= 0 or (len(kept[q]) >= ks[q]
-                           and best_signv > kept[q][-1])
-            for q in qterms
-        ):
-            continue  # no query can improve: metadata-only skip
-        bloom = load_term_bloom(path)
-        if bloom is not None and probe and not any(
-            bloom_may_contain(bloom, t) for t in probe
-        ):
-            continue
-        reader = reader_cls(path)
-        seg_tomb = (tombstones.for_segment(path)
-                    if hasattr(tombstones, "for_segment") else tombstones)
-        accept = reader.accepted_docids(doc_filter) if doc_filter else None
-        cache: dict = {}
+    best: dict[str, int | None] = {}
+
+    def beyond(q: int, best_signv: int | None) -> bool:
+        """Query q's kept top-k strictly beats anything in the segment."""
+        return (best_signv is not None and len(kept[q]) >= ks[q]
+                and best_signv > kept[q][-1])
+
+    def unskipped() -> Iterator[str]:
+        # lazily consumed by open_segments, so each skip decision sees
+        # the θ state left by every segment before it
+        for path in paths:
+            b = best[path] = _sidecar_attr_best_signv(path, attr, sign)
+            if b is not None and all(ks[q] <= 0 or beyond(q, b)
+                                     for q in qterms):
+                continue  # no query can improve: metadata-only skip
+            yield path
+
+    for seg in open_segments(unskipped(), tombstones, probe, doc_filter,
+                             reader_cls=reader_cls or SegmentReader):
         for qid, terms in qterms.items():
             if ks[qid] <= 0:
                 continue  # k=0: legal degenerate query, returns no rows
-            if (best_signv is not None and len(kept[qid]) >= ks[qid]
-                    and best_signv > kept[qid][-1]):
+            if beyond(qid, best[seg.path]):
                 continue  # this query is already beyond the segment
-            key = tuple(terms)
-            d = cache.get(key)
-            if d is None:
-                d = cache[key] = _matched_docids(
-                    reader, terms, seg_tomb, accept)
+            d = _matched_docids(seg, terms)
             if not len(d):
                 continue
-            d, v = _attr_values(reader, attr, d)
+            d, v = _attr_values(seg.reader, attr, d)
             if not len(d):
                 continue
             top = np.lexsort((d, sign * v))[: ks[qid]]
@@ -361,7 +311,7 @@ def sorted_search(
     attribute comes from the doclen array (`attr="dl"`) or one cached
     docs-sidecar column read per (segment, attr). Top-k by attribute is
     mergeable, so partials are cut to k per (segment, query) before the
-    shuffle — the same bounded-merge scale shape as search_index.
+    shuffle.
 
     Segment-skip pruning (the attribute-sort analog of BM25's block-max +
     θ propagation): each task carries its kept top-k values per query
@@ -371,41 +321,28 @@ def sorted_search(
     opened (no postings decode, no sidecar row read). Ties process the
     segment (a tied value with a smaller docid can still win), so the
     result stays exact. Stats-less sidecars fail open to the full scan."""
-    from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import IndexSnapshot
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
+    snap = IndexSnapshot(index_dir)
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
     ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    if not seg_paths:
-        return empty_topk(spark, "sort_key", merge)
-    sc = spark.sparkContext
-    b_q = sc.broadcast((qterms, ks))
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
     sign = 1 if ascending else -1  # lexsort ascending on sign*v
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        (qt, ks_l) = b_q.value
-        yield from sorted_scan_partition(
-            paths, qt, ks_l, tomb_view, doc_filter, attr, sign)
+    def kernel(paths, tomb, qt):
+        for pdf in sorted_scan_partition(paths, qt, ks, tomb, doc_filter,
+                                         attr, sign):
+            # merge_topk ranks value desc: ascending merges on -v
+            pdf["sort_key"] *= -sign
+            yield pdf
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, sort_key long")
-    if ascending:
-        merged = merge_topk(
-            partial.withColumn("sort_key", -F.col("sort_key")), ks,
-            "sort_key", merge)
-        if merge == "driver":
-            merged["sort_key"] = -merged["sort_key"]
-            return merged
-        return merged.withColumn("sort_key", -F.col("sort_key"))
-    return merge_topk(partial, ks, "sort_key", merge)
+    merged = snap.scatter_topk(spark, kernel, qterms, "sort_key", ks, merge,
+                               num_tasks)
+    if not ascending:
+        return merged
+    if merge == "driver":
+        merged["sort_key"] = -merged["sort_key"]
+        return merged
+    return merged.withColumn("sort_key", -F.col("sort_key"))
 
 
 def rank_collapsed(partial: DataFrame, ks: dict[int, int]) -> DataFrame:
@@ -452,53 +389,31 @@ def attr_stats(
     |queries|-row groupBy — corpus rows never shuffle. avg is derived
     from (sum, n) after the merge and rounded to 6 for cross-engine
     display parity."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import IndexSnapshot, open_segments
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
+    snap = IndexSnapshot(index_dir)
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = ("qid long, n_docs long, min_attr long, max_attr long, "
-              "sum_attr long")
-    if not seg_paths:
-        partial = spark.createDataFrame([], schema)
-    else:
-        sc = spark.sparkContext
-        b_q = sc.broadcast(qterms)
-        paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    probe = sorted({t for ts in qterms.values() for t in ts})
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            paths = [p for pdf in batches for p in pdf["path"].tolist()]
-            qt = b_q.value
-            probe = sorted({t for ts in qt.values() for t in ts})
-            for path in paths:
-                bloom = load_term_bloom(path)
-                if bloom is not None and probe and not any(
-                    bloom_may_contain(bloom, t) for t in probe
-                ):
+    def kernel(paths, tomb, qt):
+        for seg in open_segments(paths, tomb, probe, doc_filter):
+            for qid, terms in qt.items():
+                d = _matched_docids(seg, terms)
+                if not len(d):
                     continue
-                reader = SegmentReader(path)
-                tomb_l = tomb_view.for_segment(path)
-                accept = (reader.accepted_docids(doc_filter)
-                          if doc_filter else None)
-                for qid, terms in qt.items():
-                    d = _matched_docids(reader, terms, tomb_l, accept)
-                    if not len(d):
-                        continue
-                    _, v = _attr_values(reader, attr, d)
-                    if not len(v):
-                        continue  # every matched doc had a null attr
-                    yield pd.DataFrame({
-                        "qid": [np.int64(qid)], "n_docs": [len(v)],
-                        "min_attr": [int(v.min())],
-                        "max_attr": [int(v.max())],
-                        "sum_attr": [int(v.sum())]})
+                _, v = _attr_values(seg.reader, attr, d)
+                if not len(v):
+                    continue  # every matched doc had a null attr
+                yield pd.DataFrame({
+                    "qid": [np.int64(qid)], "n_docs": [len(v)],
+                    "min_attr": [int(v.min())],
+                    "max_attr": [int(v.max())],
+                    "sum_attr": [int(v.sum())]})
 
-        partial = paths_df.mapInPandas(run, schema)
+    partial = snap.scatter(
+        spark, kernel, qterms,
+        "qid long, n_docs long, min_attr long, max_attr long, sum_attr long",
+        num_tasks)
     return (
         partial.groupBy("qid").agg(
             F.sum("n_docs").alias("n_docs"),
@@ -525,45 +440,22 @@ def attr_histogram(
     the timestamp): (qid, bin, n_docs) where bin = floor(attr/width)*width.
     Same scale shape as facet_counts — per-segment binned counts, then a
     (qid × bins)-row final reduce; corpus rows never shuffle."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import IndexSnapshot, open_segments
 
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
+    snap = IndexSnapshot(index_dir)
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, bin long, n_docs long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    probe = sorted({t for ts in qterms.values() for t in ts})
     w = int(bin_width)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = (reader.accepted_docids(doc_filter)
-                      if doc_filter else None)
+    def kernel(paths, tomb, qt):
+        for seg in open_segments(paths, tomb, probe, doc_filter):
             for qid, terms in qt.items():
-                d = _matched_docids(reader, terms, tomb_l, accept)
+                d = _matched_docids(seg, terms)
                 if not len(d):
                     continue
-                _, v = _attr_values(reader, attr, d)
+                _, v = _attr_values(seg.reader, attr, d)
                 if not len(v):
                     continue
                 bins, counts = np.unique((v // w) * w, return_counts=True)
@@ -571,7 +463,8 @@ def attr_histogram(
                     "qid": np.int64(qid), "bin": bins,
                     "n_docs": counts.astype(np.int64)})
 
-    partial = paths_df.mapInPandas(run, schema)
+    partial = snap.scatter(spark, kernel, qterms,
+                           "qid long, bin long, n_docs long", num_tasks)
     return partial.groupBy("qid", "bin").agg(
         F.sum("n_docs").alias("n_docs"))
 
@@ -593,43 +486,21 @@ def match_export(
     merge is needed — the result is already disjoint across tasks). At
     10^12 docs this is the write-straight-to-parquet shape; bound it
     upstream with doc_filter if the match set must be narrowed."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import IndexSnapshot, open_segments
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
+    snap = IndexSnapshot(index_dir)
     qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, docid long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    probe = sorted({t for ts in qterms.values() for t in ts})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = (reader.accepted_docids(doc_filter)
-                      if doc_filter else None)
+    def kernel(paths, tomb, qt):
+        for seg in open_segments(paths, tomb, probe, doc_filter):
             for qid, terms in qt.items():
-                d = _matched_docids(reader, terms, tomb_l, accept)
+                d = _matched_docids(seg, terms)
                 if len(d):
                     yield pd.DataFrame({"qid": np.int64(qid), "docid": d})
 
-    return paths_df.mapInPandas(run, schema)
+    return snap.scatter(spark, kernel, qterms, "qid long, docid long",
+                        num_tasks)
 
 
 def match_count(

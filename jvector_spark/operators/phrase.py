@@ -26,14 +26,12 @@ across segments — then merged by a window/driver rank like search_index.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
-from jvector_spark.sources.segment import SegmentReader, load_manifest
+from jvector_spark.sources.segment import SegmentReader
 
 
 def _positions_by_doc(
@@ -110,6 +108,27 @@ def match_phrase_on_segment(
     return uniq, counts.astype(np.int64)
 
 
+def phrase_partial(segments, queries: pd.DataFrame) -> pd.DataFrame:
+    """(qid, docid, n_matches) phrase matches of queries(qid, terms, k)
+    over opened segments (wand.open_segments), cut to top-k per (segment,
+    query) in rank order (n_matches desc, docid asc): top-k is mergeable
+    across segments, so a stop-word-ish phrase over a big segment emits
+    k rows, not millions."""
+    from jvector_spark.operators.wand import _partial_frame
+
+    out = []
+    for seg in segments:
+        for q in queries.itertuples():
+            d, n = match_phrase_on_segment(
+                seg.reader, list(q.terms), seg.tombstones)
+            if len(d):
+                top = np.lexsort((d, -n))[: int(q.k)]
+                out.append(pd.DataFrame({
+                    "qid": int(q.qid), "docid": d[top],
+                    "n_matches": n[top]}))
+    return _partial_frame(out, "n_matches")
+
+
 def phrase_search(
     spark: SparkSession,
     index_dir: str,
@@ -121,52 +140,28 @@ def phrase_search(
 
     The phrase tokenizes with the INDEX's tokenizer mode, so query and
     index agree on token boundaries. Ranking: n_matches desc, docid asc,
-    top-k per query. Same distribution shape as wand.search_index.
+    top-k per query.
     """
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
+    from jvector_spark.operators.wand import IndexSnapshot, open_segments
 
-    if not seg_paths:  # valid empty index (nothing can match any phrase)
-        return empty_topk(spark, "n_matches", merge)
-    if not manifest.get("has_positions"):
+    snap = IndexSnapshot(index_dir)
+    # a zero-segment index carries no has_positions stamp and matches
+    # nothing — empty, not an error
+    if snap.paths and not snap.manifest.get("has_positions"):
         raise ValueError(
             "index was built without positions=True — phrase queries need "
             "the positional payload stream")
-    mode = manifest["tokenizer_mode"]
     qp = queries.copy()
-    qp["terms"] = tokenize_series(qp["phrase"].astype(str), mode)
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qp[["qid", "terms", "k"]])
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    qp["terms"] = tokenize_series(qp["phrase"].astype(str),
+                                  snap.manifest["tokenizer_mode"])
+    qp = qp[["qid", "terms", "k"]]
+    # a phrase match needs every one of its terms in the segment
+    probe = sorted({t for ts in qp["terms"] for t in ts})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        out = []
-        for path in paths:
-            reader = SegmentReader(path)
-            if not reader.has_positions:
-                continue
-            tomb_l = tomb_view.for_segment(path)
-            for q in b_q.value.itertuples():
-                d, n = match_phrase_on_segment(
-                    reader, list(q.terms), tomb_l)
-                if len(d):
-                    # Bound the shuffle: per-(segment, query) top-k cut in
-                    # rank order (n_matches desc, docid asc) — top-k is
-                    # mergeable across segments, so a stop-word-ish phrase
-                    # over a big segment emits k rows, not millions
-                    # (mirrors regex.py's per-segment cut).
-                    top = np.lexsort((d, -n))[: int(q.k)]
-                    out.append(pd.DataFrame({
-                        "qid": int(q.qid), "docid": d[top],
-                        "n_matches": n[top]}))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+    def kernel(paths, tomb, q):
+        yield phrase_partial(
+            open_segments(paths, tomb, probe, positions=True), q)
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, n_matches long")
     ks = {int(q.qid): int(q.k) for q in qp.itertuples()}
-    return merge_topk(partial, ks, "n_matches", merge)
+    return snap.scatter_topk(spark, kernel, qp, "n_matches", ks, merge,
+                             num_tasks)

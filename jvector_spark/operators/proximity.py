@@ -23,14 +23,12 @@ searchsorted sweeps per term, no per-token Python.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.operators.phrase import _positions_by_doc
-from jvector_spark.sources.segment import SegmentReader, load_manifest
+from jvector_spark.sources.segment import SegmentReader
 
 
 def window_match_count(
@@ -116,42 +114,32 @@ def proximity_search(
 ) -> DataFrame | pd.DataFrame:
     """queries(qid, terms:list[str], window:int, k) ->
     (qid, rank, docid, n_matches), ranked n_matches desc, docid asc."""
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
     from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
+        IndexSnapshot, _partial_frame, open_segments)
 
-    if not seg_paths:
-        return empty_topk(spark, "n_matches", merge)
-    if not manifest.get("has_positions"):
+    snap = IndexSnapshot(index_dir)
+    # a zero-segment index carries no has_positions stamp and matches
+    # nothing — empty, not an error
+    if snap.paths and not snap.manifest.get("has_positions"):
         raise ValueError(
             "index was built without positions=True — proximity queries "
             "need the positional payload stream")
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    sc = spark.sparkContext
-    b_q = sc.broadcast(queries[["qid", "terms", "window", "k"]])
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    qw = queries[["qid", "terms", "window", "k"]]
+    probe = sorted({t for ts in qw["terms"] for t in ts})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
+    def kernel(paths, tomb, q):
         out = []
-        for path in paths:
-            reader = SegmentReader(path)
-            if not reader.has_positions:
-                continue
-            tomb_l = tomb_view.for_segment(path)
-            for q in b_q.value.itertuples():
+        for seg in open_segments(paths, tomb, probe, positions=True):
+            for r in q.itertuples():
                 d, n = match_window_on_segment(
-                    reader, list(q.terms), int(q.window), tomb_l)
+                    seg.reader, list(r.terms), int(r.window), seg.tombstones)
                 if len(d):
-                    top = np.lexsort((d, -n))[: int(q.k)]
+                    top = np.lexsort((d, -n))[: int(r.k)]
                     out.append(pd.DataFrame({
-                        "qid": int(q.qid), "docid": d[top],
+                        "qid": int(r.qid), "docid": d[top],
                         "n_matches": n[top]}))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+        yield _partial_frame(out, "n_matches")
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, n_matches long")
-    ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
-    return merge_topk(partial, ks, "n_matches", merge)
+    ks = {int(q.qid): int(q.k) for q in qw.itertuples()}
+    return snap.scatter_topk(spark, kernel, qw, "n_matches", ks, merge,
+                             num_tasks)

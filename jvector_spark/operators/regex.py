@@ -27,16 +27,12 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from jvector_spark.sources.segment import SegmentReader, load_manifest
-
 
 #: above this many term_stats.parquet bytes the driver stops scanning the
 #: vocabulary itself and expands patterns as a Spark job (collect bounded
@@ -249,35 +245,27 @@ def regex_token_topk(
     n_occ = total occurrences of matching tokens in the doc (sum of tf
     over matched terms); rank: n_occ desc, docid asc, top-k per query.
     """
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
     from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
+        IndexSnapshot, _partial_frame, open_segments)
 
-    if not seg_paths:  # valid empty index — BEFORE pattern expansion
-        return empty_topk(spark, "n_occ", merge)
+    snap = IndexSnapshot(index_dir)
     expansions = expand_patterns(
         index_dir,
         {int(q.qid): str(q.pattern) for q in queries.itertuples()},
         max_terms,
         spark=spark,
     )
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    sc = spark.sparkContext
-    b_q = sc.broadcast(
-        [(int(q.qid), expansions[int(q.qid)], int(q.k))
-         for q in queries.itertuples()]
-    )
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    qx = [(int(q.qid), expansions[int(q.qid)], int(q.k))
+          for q in queries.itertuples()]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
+    def kernel(paths, tomb, q):
+        # expansions can run to max_terms per query: the probe derives
+        # from the broadcast payload rather than riding in the closure
+        probe = sorted({t for _, terms, _ in q for t in terms})
         out = []
-        for path in paths:
-            reader = SegmentReader(path)
-            tombs = tomb_view.for_segment(path)
-            for qid, terms, k in b_q.value:
+        for seg in open_segments(paths, tomb, probe):
+            reader, tombs = seg.reader, seg.tombstones
+            for qid, terms, k in q:
                 present = [t for t in terms if reader.has_term(t)]
                 if not present:
                     continue
@@ -301,9 +289,8 @@ def regex_token_topk(
                 top = np.lexsort((uniq, -occ))[:k]
                 out.append(pd.DataFrame({
                     "qid": qid, "docid": uniq[top], "n_occ": occ[top]}))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+        yield _partial_frame(out, "n_occ")
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, n_occ long")
     ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
-    return merge_topk(partial, ks, "n_occ", merge)
+    return snap.scatter_topk(spark, kernel, qx, "n_occ", ks, merge,
+                             num_tasks)

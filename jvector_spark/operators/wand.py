@@ -28,7 +28,7 @@ All inner loops are numpy-vectorized; Python iterates only over query terms
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from typing import Iterable, Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -39,7 +39,9 @@ from jvector_spark import B, K1
 from jvector_spark.sources.segment import (
     SegmentReader,
     block_meta_bounds,
+    bloom_may_contain,
     load_manifest,
+    load_term_bloom,
 )
 
 
@@ -153,6 +155,31 @@ def _empty_result(value_col: str) -> pd.DataFrame:
     })
 
 
+def _rank_topk(pdf: pd.DataFrame, ks: dict[int, int],
+               value_col: str) -> pd.DataFrame:
+    """Driver-side global top-k of partial rows (qid, docid, value): one
+    numpy lexsort per query, value desc, docid asc."""
+    outs = []
+    for qid, g in pdf.groupby("qid", sort=True):
+        d = g["docid"].to_numpy(np.int64)
+        v = g[value_col].to_numpy()
+        order = np.lexsort((d, -v))[: ks[int(qid)]]
+        outs.append(pd.DataFrame({
+            "qid": np.int64(qid),
+            "rank": np.arange(len(order), dtype=np.int32),
+            "docid": d[order], value_col: v[order],
+        }))
+    return (pd.concat(outs, ignore_index=True)
+            if outs else _empty_result(value_col))
+
+
+def _partial_frame(parts: list[pd.DataFrame], value_col: str) -> pd.DataFrame:
+    """One task's partial rows (qid, docid, value_col); typed when empty."""
+    if parts:
+        return pd.concat(parts, ignore_index=True)
+    return _empty_result(value_col).drop(columns="rank")
+
+
 def merge_topk(
     partial: DataFrame,
     ks: dict[int, int],
@@ -163,22 +190,9 @@ def merge_topk(
     rank by value desc, docid asc, bounded per query. merge="spark" is a
     lazy window (composable); merge="driver" collects the bounded partial
     rows and merges with one numpy lexsort per query — the caller-thread
-    multi-index combine (GraphSearcher.java:368-385). Shared by
-    search_index / phrase_search / regex_token_topk."""
+    multi-index combine (GraphSearcher.java:368-385)."""
     if merge == "driver":
-        pdf = partial.toPandas()
-        outs = []
-        for qid, g in pdf.groupby("qid", sort=True):
-            d = g["docid"].to_numpy(np.int64)
-            v = g[value_col].to_numpy()
-            order = np.lexsort((d, -v))[: ks[int(qid)]]
-            outs.append(pd.DataFrame({
-                "qid": np.int64(qid),
-                "rank": np.arange(len(order), dtype=np.int32),
-                "docid": d[order], value_col: v[order],
-            }))
-        return (pd.concat(outs, ignore_index=True)
-                if outs else _empty_result(value_col))
+        return _rank_topk(partial.toPandas(), ks, value_col)
     kmap = F.create_map(*[x for qid, k in ks.items()
                           for x in (F.lit(qid), F.lit(k))])
     w = Window.partitionBy("qid").orderBy(F.desc(value_col), F.asc("docid"))
@@ -200,6 +214,119 @@ def empty_topk(spark: SparkSession, value_col: str,
     typ = "double" if value_col == "score" else "long"
     return spark.createDataFrame(
         pdf, f"qid long, rank int, docid long, {value_col} {typ}")
+
+
+class Segment(NamedTuple):
+    """One opened segment as an index-scatter kernel sees it."""
+
+    path: str
+    reader: SegmentReader
+    tombstones: np.ndarray  # this segment's deleted docids (sorted int64)
+    accept: np.ndarray | None  # doc_filter bitmap; None = no filter
+    cache: dict  # per-segment scratch (pooled: lives for the generation)
+
+
+def open_segments(
+    paths: Iterable[str],
+    tombstones=None,  # plans.merge.TombstoneView | np.ndarray | None
+    probe: Sequence[str] = (),
+    doc_filter: dict | None = None,
+    pool: "SearcherPool | None" = None,
+    positions: bool = False,
+    reader_cls=SegmentReader,
+) -> Iterator[Segment]:
+    """The per-segment open sequence of every index-scatter operator.
+
+    Yields each segment of `paths` (consumed lazily, in order) that can
+    match, skipping:
+      * segments whose term bloom rejects EVERY `probe` term (the BQ
+        1-bit sketch analog: the dictionary never opens; FP-safe — an
+        absent or corrupt bloom.bin never skips). `probe` must hold every
+        term a match needs at least one of; empty disables the skip.
+      * with `positions`, segments built without positional payloads.
+    `tombstones` resolves per segment when it is a TombstoneView, so a
+    task reads only its own segments' delete shards. The doc_filter
+    bitmap (acceptOrds) is memoized in the segment cache under the
+    filter's canonical key; with a `pool`, readers, blooms and caches
+    (so the bitmap too) persist across calls."""
+    per_segment = hasattr(tombstones, "for_segment")
+    flat = (np.zeros(0, np.int64) if tombstones is None or per_segment
+            else tombstones)
+    fkey = ("accept", _filter_key(doc_filter)) if doc_filter else None
+    for path in paths:
+        bloom = pool.bloom(path) if pool is not None else load_term_bloom(path)
+        if bloom is not None and probe and not any(
+            bloom_may_contain(bloom, t) for t in probe
+        ):
+            continue
+        if pool is not None:
+            reader, cache = pool.reader(path), pool.cache(path)
+        else:
+            reader, cache = reader_cls(path), {}
+        if positions and not reader.has_positions:
+            continue
+        accept = None
+        if fkey is not None:
+            accept = cache.get(fkey)
+            if accept is None:
+                accept = cache[fkey] = reader.accepted_docids(doc_filter)
+        yield Segment(path, reader,
+                      tombstones.for_segment(path) if per_segment else flat,
+                      accept, cache)
+
+
+class IndexSnapshot:
+    """One read of an index manifest plus the tombstone view pinned to
+    that manifest's docid epoch, scattered over Spark tasks. Shared by
+    every index-scatter operator, so none of them re-derives the epoch
+    rule of plans.merge.tombstone_view: the deletes always match the
+    segment list being scored, even across a concurrent compaction.
+    Small delete lists ship inline in the view; large ones resolve
+    task-side from per-segment shards, so the driver never materializes
+    (nor broadcasts) an unbounded delete list."""
+
+    def __init__(self, index_dir: str) -> None:
+        # late bind: the traced benchmark run wraps the module attribute
+        from jvector_spark.plans.merge import tombstone_view
+
+        self.manifest = load_manifest(index_dir)
+        self.paths = [s["path"] for s in self.manifest["segments"]]
+        self.tombstones = tombstone_view(
+            index_dir, epoch=self.manifest.get("docid_epoch", 0))
+
+    def scatter(self, spark: SparkSession, kernel, payload, schema: str,
+                num_tasks: int | None = None) -> DataFrame:
+        """Partial rows (`schema`) of kernel(paths, tombstones, payload)
+        -> Iterator[pd.DataFrame], run once per task over that task's
+        segment paths. `payload` (queries, idfs, ...) is broadcast once.
+        A zero-segment index (legal: an everything-tombstoned compaction)
+        launches nothing and yields an empty partial."""
+        if not self.paths:
+            return spark.createDataFrame([], schema)
+        b_payload = spark.sparkContext.broadcast(payload)
+        tomb = self.tombstones
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            paths = [p for pdf in batches for p in pdf["path"].tolist()]
+            if paths:
+                yield from kernel(paths, tomb, b_payload.value)
+
+        return scatter_paths(spark, self.paths, num_tasks).mapInPandas(
+            run, schema)
+
+    def scatter_topk(self, spark: SparkSession, kernel, payload,
+                     value_col: str, ks: dict[int, int], merge: str,
+                     num_tasks: int | None = None
+                     ) -> DataFrame | pd.DataFrame:
+        """scatter() of bounded (qid, docid, value_col) partials, then the
+        global merge_topk: (qid, rank, docid, value_col)."""
+        if not self.paths:
+            return empty_topk(spark, value_col, merge)
+        typ = "double" if value_col == "score" else "long"
+        partial = self.scatter(spark, kernel, payload,
+                               f"qid long, docid long, {value_col} {typ}",
+                               num_tasks)
+        return merge_topk(partial, ks, value_col, merge)
 
 
 def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -585,8 +712,6 @@ class SearcherPool:
 
     def bloom(self, path: str):
         if path not in self.blooms:
-            from jvector_spark.sources.segment import load_term_bloom
-
             self.blooms[path] = load_term_bloom(path)
         return self.blooms[path]
 
@@ -639,31 +764,18 @@ def search_partition(
            for qid in states
            if exclude.get(qid) is not None and len(exclude[qid])}
 
-    # tombstones may be a flat array (serving pool / tests) or a
-    # TombstoneView resolving PER SEGMENT (the scale path: each task reads
-    # only its segments' shards, never the global delete list)
-    per_segment_tomb = hasattr(tombstones, "for_segment")
-    if per_segment_tomb and getattr(tombstones, "inline", None) is not None:
-        # inline regime: for_segment returns the SAME array for every
-        # segment — hoist the per-query tombstone/exclude union out of the
-        # segment loop (S×Q identical union1d calls on the warm hot path)
-        tombstones = tombstones.inline
-        per_segment_tomb = False
-
-    def _qtomb(seg_tomb: np.ndarray | None) -> dict[int, np.ndarray | None]:
-        out: dict[int, np.ndarray | None] = {}
+    def _qtomb(seg_tomb: np.ndarray) -> dict[int, np.ndarray]:
+        out: dict[int, np.ndarray] = {}
         for qid in states:
             ex = qex.get(qid)
             if ex is None:
                 out[qid] = seg_tomb
-            elif seg_tomb is None or not len(seg_tomb):
+            elif not len(seg_tomb):
                 out[qid] = ex
             else:
                 out[qid] = np.union1d(seg_tomb, ex)
         return out
 
-    if not per_segment_tomb:
-        qtomb = _qtomb(tombstones)
     # terms shared by >=2 queries always decode fully (once, cached) —
     # repeated partial block decodes of the same hot term cost more than
     # one full decode amortized across the batch
@@ -672,29 +784,15 @@ def search_partition(
     usage = Counter(t for ts in qterms.values() for t in set(ts))
     hot = frozenset(t for t, n in usage.items() if n >= 2)
     all_terms = [t for t in usage if t in idfs]
-    from jvector_spark.sources.segment import bloom_may_contain, load_term_bloom
 
-    for path in seg_paths:
-        # term-presence bloom (BQ 1-bit sketch analog): a segment whose
-        # bloom rejects EVERY query term never opens its dictionary —
-        # at thousands of segments this skips whole-segment loads for
-        # selective vocabularies (FP-safe: false positives only cost the
-        # normal lookup; absent bloom.bin = pre-bloom segment, no skip)
-        bloom = pool.bloom(path) if pool is not None else load_term_bloom(path)
-        if bloom is not None and all_terms and not any(
-            bloom_may_contain(bloom, t) for t in all_terms
-        ):
-            if metrics is not None:
-                for qid in states:
-                    qs = metrics.setdefault(qid, {})
-                    qs["segments_bloom_skipped"] = (
-                        qs.get("segments_bloom_skipped", 0) + 1
-                    )
-            continue
+    n_opened = 0
+    seg_tomb = qtomb = None
+    for seg in open_segments(seg_paths, tombstones, all_terms, doc_filter,
+                             pool):
+        n_opened += 1
+        seg_cache = seg.cache
+        seg_cache["_hot"] = hot  # hot set is per request batch
         if pool is not None:
-            reader = pool.reader(path)
-            seg_cache = pool.cache(path)
-            seg_cache["_hot"] = hot  # hot set is per request batch
             # pooled caches outlive the batch: partial block decodes of a
             # term would repeat every request, so pooled mode decodes
             # terms FULLY into the generation-scoped cache and scores
@@ -702,28 +800,11 @@ def search_partition(
             # in-memory index trade (results identical; only which bytes
             # get decoded when changes)
             seg_cache["_pooled"] = True
-        else:
-            reader = SegmentReader(path)
-            seg_cache = {"_hot": hot}  # shared across this segment's queries
-        if per_segment_tomb:
-            # shard read bounded by THIS segment's deletes (one small
-            # parquet, or the inline array when the index's delete list
-            # is small enough to ship in the closure). With no per-query
-            # excludes every entry is the same seg_tomb reference —
-            # build that dict directly rather than S×Q union passes
-            seg_tomb = tombstones.for_segment(path)
-            qtomb = ({qid: seg_tomb for qid in states} if not qex
-                     else _qtomb(seg_tomb))
-        accept = None
-        if doc_filter:
-            # memo per (segment, filter): ONE docs-sidecar read per
-            # segment per filter — across the batch's queries here, and
-            # across request batches when a pool persists the cache
-            # (the reference caches its Bits acceptOrds per View)
-            fkey = ("accept", _filter_key(doc_filter))
-            accept = seg_cache.get(fkey)
-            if accept is None:
-                accept = seg_cache[fkey] = reader.accepted_docids(doc_filter)
+        if seg.tombstones is not seg_tomb:
+            # inline/flat tombstones are one array for every segment: the
+            # per-query tombstone/exclude union then runs once, not S×Q
+            seg_tomb = seg.tombstones
+            qtomb = _qtomb(seg_tomb)
         for qid, st in states.items():
             qstats = metrics.setdefault(qid, {}) if metrics is not None else None
             # the cursor applies INSIDE the scorer, before its top-k cut —
@@ -733,14 +814,14 @@ def search_partition(
             q_after = after.get(qid)
             if mode == "and":
                 d, s = score_conjunctive_on_segment(
-                    reader, qterms[qid], idfs, st.k, avgdl, qtomb[qid],
-                    seg_cache, accept, after=q_after,
+                    seg.reader, qterms[qid], idfs, st.k, avgdl, qtomb[qid],
+                    seg_cache, seg.accept, after=q_after,
                 )
             else:
                 d, s = score_query_on_segment(
-                    reader, qterms[qid], idfs, st.k,
+                    seg.reader, qterms[qid], idfs, st.k,
                     max(st.theta, min_score), avgdl, qtomb[qid],
-                    seg_cache, accept, qstats, prune_epsilon,
+                    seg_cache, seg.accept, qstats, prune_epsilon,
                     after=q_after,
                 )
             if min_score > 0.0 and len(s):
@@ -756,18 +837,20 @@ def search_partition(
                 keep = s >= min_score
                 d, s = d[keep], s[keep]
             st.push(d, s)
-    out = [
-        pd.DataFrame({"qid": qid, "docid": st.docids, "score": st.scores})
-        for qid, st in states.items()
-        if len(st.docids)
-    ]
-    return (
-        pd.concat(out, ignore_index=True)
-        if out
-        else pd.DataFrame({"qid": pd.Series([], dtype="int64"),
-                           "docid": pd.Series([], dtype="int64"),
-                           "score": pd.Series([], dtype="float64")})
-    )
+    n_bloom_skipped = len(seg_paths) - n_opened
+    if metrics is not None and n_bloom_skipped:
+        for qid in states:
+            qs = metrics.setdefault(qid, {})
+            qs["segments_bloom_skipped"] = (
+                qs.get("segments_bloom_skipped", 0) + n_bloom_skipped)
+    return _topk_frame(states)
+
+
+def _topk_frame(states: dict[int, _TopK]) -> pd.DataFrame:
+    """Partial rows (qid, docid, score) of per-query _TopK states."""
+    return _partial_frame(
+        [pd.DataFrame({"qid": qid, "docid": st.docids, "score": st.scores})
+         for qid, st in states.items() if len(st.docids)], "score")
 
 
 def search_index(
@@ -814,49 +897,34 @@ def search_index(
     scores stay exact, recall is traded for fewer block decodes. Keep 0.0
     (default) for rank-identical mode.
     """
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
+    snap = IndexSnapshot(index_dir)
+    avgdl = snap.manifest["avgdl"]
     all_terms = sorted({t for ts in queries["terms"] for t in ts})
     dfm = global_term_stats(spark, index_dir, all_terms) if all_terms else {}
-    idfs = idf_map(n_docs, dfm)
-    from jvector_spark.plans.merge import tombstone_view
+    idfs = idf_map(snap.manifest["n_docs"], dfm)
 
-    # per-segment tombstone resolution: small delete lists ship inline in
-    # the view; large ones resolve segment-side from parquet shards — the
-    # driver never materializes (nor broadcasts) an unbounded delete list
-    tomb = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
+    def kernel(paths, tomb, payload):
+        q, idfs_l = payload
+        task_metrics: dict | None = {} if metrics_acc is not None else None
+        yield search_partition(
+            paths, q, idfs_l, avgdl, tomb, doc_filter, min_score, after,
+            task_metrics, mode, exclude=exclude, prune_epsilon=prune_epsilon,
+        )
+        if metrics_acc is not None:
+            from pyspark import TaskContext
 
-    if not seg_paths:  # zero-segment index (everything-compacted) is valid
-        return empty_topk(spark, "score", merge)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(queries[["qid", "terms", "k"]])
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+            tc = TaskContext.get()
+            pid = tc.partitionId() if tc is not None else -1
+            # keyed by partition: a retried/speculative attempt or a
+            # re-materialization OVERWRITES its partition's entry
+            # instead of double-counting (Spark only guarantees
+            # exactly-once accumulators in actions)
+            metrics_acc.add({pid: task_metrics})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        if paths:
-            task_metrics: dict | None = {} if metrics_acc is not None else None
-            yield search_partition(
-                paths, b_q.value, b_idfs.value, avgdl, tomb,
-                doc_filter, min_score, after, task_metrics, mode,
-                exclude=exclude, prune_epsilon=prune_epsilon,
-            )
-            if metrics_acc is not None:
-                from pyspark import TaskContext
-
-                tc = TaskContext.get()
-                pid = tc.partitionId() if tc is not None else -1
-                # keyed by partition: a retried/speculative attempt or a
-                # re-materialization OVERWRITES its partition's entry
-                # instead of double-counting (Spark only guarantees
-                # exactly-once accumulators in actions)
-                metrics_acc.add({pid: task_metrics})
-
-    partial = paths_df.mapInPandas(run, "qid long, docid long, score double")
     ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
-    return merge_topk(partial, ks, "score", merge)
+    return snap.scatter_topk(spark, kernel,
+                             (queries[["qid", "terms", "k"]], idfs),
+                             "score", ks, merge, num_tasks)
 
 
 def explain_score(
@@ -871,9 +939,8 @@ def explain_score(
     `total` is bit-identical to the score search_index returns for the
     same doc. Serving-sized driver work: one segment lookup by docid
     range, block-selective postings decode per term."""
-    from jvector_spark.plans.merge import tombstone_view
-
-    manifest = load_manifest(index_dir)
+    snap = IndexSnapshot(index_dir)
+    manifest = snap.manifest
     docid = int(docid)
     seg = next(
         (s for s in manifest["segments"]
@@ -881,9 +948,7 @@ def explain_score(
     if seg is None:
         raise KeyError(f"docid {docid} not in any segment of {index_dir}")
     # one segment's shard, not the global delete list
-    if docid in tombstone_view(
-            index_dir, epoch=manifest.get("docid_epoch", 0)).for_segment(
-            seg["path"]):
+    if docid in snap.tombstones.for_segment(seg["path"]):
         return {"docid": docid, "deleted": True, "terms": {}, "total": 0.0}
     reader = SegmentReader(seg["path"])
     uniq = sorted({t for t in terms})

@@ -538,6 +538,11 @@ class VectorPool:
             raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         if ef is not None and ef < 1:
             raise ValueError(f"ef must be >= 1, got {ef}")
+        if self.rerank_k is not None and k > self.rerank_k:
+            # the exact rerank keeps only rerank_k candidates: a larger k
+            # would silently return fewer than k rows
+            raise ValueError(f"k={k} exceeds the pool's rerank_k="
+                             f"{self.rerank_k}")
         q = np.asarray(qvecs, dtype=np.float64)
         if q.size == 0:  # empty batch: typed empty frame, not AxisError
             return pd.DataFrame({
@@ -723,18 +728,25 @@ class IndexServer:
             {t: df for t in terms if (df := self._df_memo.get(t, 0)) > 0},
         )
 
+    def _tombstones(self):
+        """Deletes pinned to this session's manifest snapshot (the epoch
+        rule of plans.merge.tombstone_view); re-read per request, since a
+        delete bumps no manifest."""
+        from jvector_spark.plans.merge import tombstone_view
+
+        return tombstone_view(
+            self.index_dir, epoch=self.manifest.get("docid_epoch", 0))
+
     def phrase(self, queries: pd.DataFrame) -> pd.DataFrame:
         """Exact phrase queries over the warm index: queries(qid,
         phrase:str, k) -> (qid, rank, docid, n_matches). Local mode runs
-        match_phrase_on_segment over the POOLED readers (block-selective
-        position decode, zero Spark jobs); spark mode delegates to
+        phrase_partial over the POOLED readers (block-selective position
+        decode, zero Spark jobs); spark mode delegates to
         phrase_search(merge="driver")."""
-        import numpy as np
-
         from jvector_spark.functions.tokenizer import tokenize_series
         from jvector_spark.operators.phrase import (
-            match_phrase_on_segment, phrase_search)
-        from jvector_spark.plans.merge import tombstone_view
+            phrase_partial, phrase_search)
+        from jvector_spark.operators.wand import _rank_topk, open_segments
 
         self._refresh_if_stale()
         self.requests_served += 1
@@ -744,35 +756,16 @@ class IndexServer:
         if self.mode == "spark":
             return phrase_search(self.spark, self.index_dir, queries,
                                  merge="driver")
-        tomb_view = tombstone_view(
-            self.index_dir, epoch=self.manifest.get("docid_epoch", 0))
-        mode = self.manifest["tokenizer_mode"]
         qp = queries.copy()
-        qp["terms"] = tokenize_series(qp["phrase"].astype(str), mode)
-        outs = []
-        for q in qp.itertuples():
-            ds, ns = [], []
-            for seg in self.manifest["segments"]:
-                reader = self.pool.reader(seg["path"])
-                d, n = match_phrase_on_segment(
-                    reader, list(q.terms),
-                    tomb_view.for_segment(seg["path"]))
-                if len(d):
-                    ds.append(d)
-                    ns.append(n)
-            if not ds:
-                continue
-            d = np.concatenate(ds)
-            n = np.concatenate(ns)
-            top = np.lexsort((d, -n))[: int(q.k)]
-            outs.append(pd.DataFrame({
-                "qid": np.int64(q.qid),
-                "rank": np.arange(len(top), dtype=np.int32),
-                "docid": d[top], "n_matches": n[top]}))
-        from jvector_spark.operators.wand import _empty_result
-
-        return (pd.concat(outs, ignore_index=True) if outs else
-                _empty_result("n_matches"))
+        qp["terms"] = tokenize_series(qp["phrase"].astype(str),
+                                      self.manifest["tokenizer_mode"])
+        probe = sorted({t for ts in qp["terms"] for t in ts})
+        segments = open_segments(
+            [s["path"] for s in self.manifest["segments"]],
+            self._tombstones(), probe, pool=self.pool, positions=True)
+        return _rank_topk(phrase_partial(segments, qp),
+                          {int(q.qid): int(q.k) for q in qp.itertuples()},
+                          "n_matches")
 
     def delete(self, docids: list[int]) -> dict:
         """Phase-1 delete through the warm session (tombstones visible to
@@ -1031,16 +1024,12 @@ class IndexServer:
                                 exclude=exclude, after=after,
                                 doc_filter=doc_filter, min_score=min_score,
                                 merge="driver", mode=mode)
-        from jvector_spark.plans.merge import tombstone_view
-
         seg_paths = [s["path"] for s in self.manifest["segments"]]
         all_terms = sorted({t for ts in queries["terms"] for t in ts})
         idfs = self._idfs(all_terms)
-        tomb = tombstone_view(
-            self.index_dir, epoch=self.manifest.get("docid_epoch", 0))
         out = search_partition(
             seg_paths, queries[["qid", "terms", "k"]], idfs,
-            self.manifest["avgdl"], tomb, doc_filter, min_score,
+            self.manifest["avgdl"], self._tombstones(), doc_filter, min_score,
             mode=mode, pool=self.pool, exclude=exclude, after=after,
         )
         # search_partition's _TopK output is already globally merged

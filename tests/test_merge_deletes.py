@@ -29,7 +29,7 @@ from jvector_spark.sources.segment import build_index, load_manifest
 def index(spark, corpus_df, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("idx_merge"))
     docs = assign_dense_docids(corpus_df)
-    manifest = build_index(docs, idx, num_segments=6)
+    manifest = build_index(docs, idx, num_segments=6, positions=True)
     return idx, manifest
 
 
@@ -188,12 +188,70 @@ def test_compaction_no_tombstones_is_pure_merge(spark, corpus_df, corpus_pdf,
                            exp["score"].to_numpy(), rtol=0, atol=0)
 
 
+def test_deleted_docs_absent_from_every_operator(spark, index, corpus_pdf,
+                                                oracle):
+    """Tombstones reach every index-scatter operator, not just search:
+    each query below is built from a DELETED doc's own tokens, so that
+    doc would match (k covers the corpus) were its tombstone ignored."""
+    from jvector_spark.functions.tokenizer import tokenize_series
+    from jvector_spark.operators.boolquery import boolean_search_index
+    from jvector_spark.operators.facets import facet_counts, match_export
+    from jvector_spark.operators.phrase import phrase_search
+    from jvector_spark.operators.proximity import proximity_search
+    from jvector_spark.operators.regex import regex_token_topk
+
+    idx, _ = index
+    mark_deleted(idx, DELETED)
+    keyed = corpus_pdf.sort_values(["repo", "path", "commit"]).reset_index(
+        drop=True)
+    probes = [list(t[1:3]) for t in
+              tokenize_series(keyed["content"].iloc[[0, 50, 200]], "code")]
+    k = len(corpus_pdf)
+    qids = range(len(probes))
+    terms_q = pd.DataFrame({"qid": qids, "terms": probes, "k": k})
+    live_matches = 0
+    for q in terms_q.itertuples():
+        d = np.unique(np.concatenate(
+            [oracle.postings[t][0] for t in q.terms]))
+        assert np.isin(d, DELETED).any()  # the check is not vacuous
+        live_matches += int((~np.isin(d, DELETED)).sum())
+
+    exported = match_export(spark, idx, terms_q[["qid", "terms"]]).toPandas()
+    assert len(exported) == live_matches
+    facets = facet_counts(spark, idx, terms_q[["qid", "terms"]],
+                          "repo").toPandas()
+    assert int(facets["n_docs"].sum()) == live_matches
+    results = {
+        "export": exported,
+        "boolean": boolean_search_index(spark, idx, pd.DataFrame({
+            "qid": qids, "query": [" OR ".join(t) for t in probes],
+            "k": k}), merge="driver"),
+        "phrase": phrase_search(spark, idx, pd.DataFrame({
+            "qid": qids, "phrase": [" ".join(t) for t in probes],
+            "k": k}), merge="driver"),
+        "proximity": proximity_search(spark, idx, pd.DataFrame({
+            "qid": qids, "terms": probes, "window": 4, "k": k}),
+            merge="driver"),
+        "regex": regex_token_topk(spark, idx, pd.DataFrame({
+            "qid": qids, "pattern": [f"^{t[0]}$" for t in probes],
+            "k": k}), merge="driver"),
+    }
+    for name, res in results.items():
+        assert len(res), name
+        assert not res["docid"].isin(DELETED).any(), name
+
+
 def test_empty_index_queries_return_empty(spark, corpus_df, tmp_path_factory):
     """A zero-segment index (everything-tombstoned compaction output) is
-    valid: search/regex/phrase return EMPTY results, never crash."""
-    import pandas as pd
-
+    valid: every index-scatter operator returns its typed EMPTY result,
+    never crashes."""
+    from jvector_spark.operators.boolquery import boolean_search_index
+    from jvector_spark.operators.facets import (
+        attr_histogram, attr_stats, collapse_topk, facet_counts,
+        match_count, match_export, sorted_search,
+    )
     from jvector_spark.operators.phrase import phrase_search
+    from jvector_spark.operators.proximity import proximity_search
     from jvector_spark.operators.regex import regex_token_topk
 
     idx = str(tmp_path_factory.mktemp("idx_e"))
@@ -202,13 +260,40 @@ def test_empty_index_queries_return_empty(spark, corpus_df, tmp_path_factory):
     mark_deleted(idx, list(range(int(m["max_docid"].max()) + 1)))
     out = str(tmp_path_factory.mktemp("idx_e_out"))
     compact_index(spark, idx, out, target_segments=1)
+    assert not load_manifest(out)["segments"]
     q = pd.DataFrame({"qid": [0], "terms": [["import"]], "k": [5]})
-    assert search_index(spark, out, q).count() == 0
-    assert len(search_index(spark, out, q, merge="driver")) == 0
-    rq = pd.DataFrame({"qid": [0], "pattern": ["^run_"], "k": [5]})
-    assert regex_token_topk(spark, out, rq).count() == 0
-    pq_ = pd.DataFrame({"qid": [0], "phrase": ["import os"], "k": [5]})
-    assert len(phrase_search(spark, out, pq_, merge="driver")) == 0
+    for col, res in [
+        ("score", search_index(spark, out, q).toPandas()),
+        ("score", search_index(spark, out, q, merge="driver")),
+        ("score", boolean_search_index(spark, out, pd.DataFrame(
+            {"qid": [0], "query": ["import OR os"], "k": [5]}),
+            merge="driver")),
+        ("n_occ", regex_token_topk(spark, out, pd.DataFrame(
+            {"qid": [0], "pattern": ["^run_"], "k": [5]}), merge="driver")),
+        ("n_matches", phrase_search(spark, out, pd.DataFrame(
+            {"qid": [0], "phrase": ["import os"], "k": [5]}),
+            merge="driver")),
+        ("n_matches", proximity_search(spark, out, pd.DataFrame(
+            {"qid": [0], "terms": [["import", "os"]], "window": [3],
+             "k": [5]}), merge="driver")),
+        ("sort_key", sorted_search(spark, out, q, merge="driver")),
+    ]:
+        assert list(res.columns) == ["qid", "rank", "docid", col]
+        assert len(res) == 0, col
+    terms = q[["qid", "terms"]]
+    aggs = {
+        ("qid", "facet", "n_docs"): facet_counts(spark, out, terms, "repo"),
+        ("qid", "grp", "docid", "score"): collapse_topk(spark, out, q,
+                                                        "repo"),
+        ("qid", "n_docs", "min_attr", "max_attr", "sum_attr",
+         "avg_attr"): attr_stats(spark, out, terms),
+        ("qid", "bin", "n_docs"): attr_histogram(spark, out, terms),
+        ("qid", "docid"): match_export(spark, out, terms),
+        ("qid", "n_docs"): match_count(spark, out, terms),
+    }
+    for cols, res in aggs.items():
+        assert tuple(res.columns) == cols
+        assert res.count() == 0, cols
 
 
 def test_resume_rebuilds_when_build_params_change(spark, corpus_df,

@@ -40,6 +40,8 @@ def ncorpus_pdf() -> pd.DataFrame:
     pdf["grpc"] = [None if i % 5 == 0
                    else ("None" if i % 5 == 1 else f"g{i % 3}")
                    for i in range(n)]
+    # big: int64 values above 2^53 (odd, so float64 cannot hold them)
+    pdf["big"] = np.int64(2**53) + 2 * ((np.arange(n) * 37) % n) + 1
     return pdf
 
 
@@ -50,7 +52,7 @@ def nindex(spark, ncorpus_pdf, tmp_path_factory):
         spark.createDataFrame(ncorpus_pdf).repartition(4))
     build_index(docs, idx, num_segments=3,
                 key_cols=("repo", "path", "commit", "lang", "stars",
-                          "grpc"))
+                          "grpc", "big"))
     return idx
 
 
@@ -89,15 +91,17 @@ def test_attr_histogram_skips_null_values(spark, nindex, ncorpus_pdf,
 
 def test_sorted_search_excludes_null_attr_docs(spark, nindex, ncorpus_pdf,
                                                matched):
-    got = sorted_search(spark, nindex, Q, attr="stars",
-                        merge="driver")
-    vals = ncorpus_pdf["stars"].iloc[matched].to_numpy()
-    nn = [(int(v), int(d)) for v, d in zip(vals, matched)
-          if pd.notna(v)]
-    exp = sorted(nn, key=lambda t: (-t[0], t[1]))[:100]
-    assert list(zip(got["sort_key"], got["docid"])) == exp
-    null_docids = {int(d) for v, d in zip(vals, matched) if pd.isna(v)}
-    assert not (set(got["docid"]) & null_docids)
+    # "big" (no nulls) pins exact int64 keys above 2^53
+    for attr in ("stars", "big"):
+        got = sorted_search(spark, nindex, Q, attr=attr, merge="driver")
+        vals = ncorpus_pdf[attr].iloc[matched].to_numpy()
+        nn = [(int(v), int(d)) for v, d in zip(vals, matched)
+              if pd.notna(v)]
+        exp = sorted(nn, key=lambda t: (-t[0], t[1]))[:100]
+        assert list(zip(got["sort_key"], got["docid"])) == exp, attr
+        null_docids = {int(d) for v, d in zip(vals, matched)
+                       if pd.isna(v)}
+        assert not (set(got["docid"]) & null_docids)
 
 
 def test_collapse_null_group_distinct_from_none_string(spark, nindex,

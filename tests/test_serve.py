@@ -246,6 +246,33 @@ def test_serve_knn_requires_vectors(spark, served_index):
         IndexServer(spark, served_index, mode="local").knn([[0.0] * 4], 3)
 
 
+def test_serve_knn_rejects_k_above_rerank_k(spark, served_index,
+                                            tmp_path_factory):
+    """A reranked pool keeps only rerank_k candidates: k > rerank_k is a
+    per-request error (never a silently short result), and the session
+    keeps serving."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+
+    X = np.random.RandomState(3).normal(size=(40, 8)).astype(np.float32)
+    path = str(tmp_path_factory.mktemp("rr_serve")) + "/emb.parquet"
+    pq_mod.write_table(pa.table({
+        "vec_id": np.arange(40, dtype=np.int64), "embedding": list(X)}),
+        path)
+    server = IndexServer(spark, served_index, mode="local", vectors=path,
+                         vector_quantize="nvq", vector_rerank_k=5)
+    q = X[:2].astype(float).tolist()
+    reqs = [{"op": "knn", "queries": q, "k": 10},
+            {"op": "knn", "queries": q, "k": 5},
+            {"op": "quit"}]
+    inp = io.StringIO("".join(json.dumps(r) + "\n" for r in reqs))
+    out = io.StringIO()
+    serve_loop(server, inp, out)
+    lines = [json.loads(x) for x in out.getvalue().splitlines()]
+    assert not lines[0]["ok"] and "rerank_k" in lines[0]["error"]
+    assert lines[1]["ok"] and len(lines[1]["results"]) == 2 * 5
+
+
 def test_vector_pool_ivf_recall_and_full_probe_exactness():
     """IVF-probed warm kNN: nprobe = n_clusters reproduces the exact
     brute result EXACTLY (every cell probed); a partial probe keeps

@@ -150,3 +150,23 @@ def test_get_spark_master_parse_tolerates_commas():
     assert infer("local-cluster[2,1,1024]") == 2
     assert infer("local[*]") == 32
     assert infer("spark://host:7077") == 32
+
+
+@pytest.mark.parametrize("form", ["--py-files {}", "--py-files={}",
+                                  "--py-files='{}'"])
+def test_ensure_importable_parses_pyfiles_forms(tmp_path, monkeypatch, form):
+    """The sessionless CLI fast paths put the --py-files zip on sys.path
+    from PYSPARK_SUBMIT_ARGS, in every spelling spark-submit accepts."""
+    from jvector_spark import cli
+
+    zip_path = tmp_path / "pkg.zip"
+    zip_path.write_bytes(b"")
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                       "--master local[1] " + form.format(zip_path)
+                       + " pyspark-shell")
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    # the package looks absent, as on a Spark 4 driver before the zip
+    # is on the import path
+    monkeypatch.setitem(sys.modules, "jvector_spark", None)
+    cli._ensure_importable()
+    assert sys.path[0] == str(zip_path)
