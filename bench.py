@@ -9,7 +9,7 @@ bm25_queries_per_sec) as metadata keys prefixed with "_".
 
 Environment:
   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default os.cpu_count())
 
 Usage:
   python bench.py                 # headline run, one JSON line
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 INDEX_DIR = "/tmp/jvector_bench_index"
 N_BM25_QUERIES = 200
 

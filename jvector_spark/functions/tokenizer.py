@@ -1,4 +1,4 @@
-"""Vectorized tokenizers (Arrow pandas UDFs — no per-row Python loops).
+"""Vectorized tokenizers (pandas over Arrow batches — no per-row loops).
 
 The reference has no string functions at all (its 'row value' is a float32
 vector, jvector-base/.../vector/types/VectorFloat.java); the tokenizer is our
@@ -22,14 +22,12 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 CODE_TOKEN_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def tokenize_series(content: pd.Series, mode: str = "code") -> pd.Series:
-    """Series[str] -> Series[list[str]] — shared by UDFs and the oracle."""
+    """Series[str] -> Series[list[str]] — shared by operators and oracle."""
     if mode == "code":
         return content.fillna("").str.lower().str.findall(CODE_TOKEN_RE)
     if mode == "simple":
@@ -186,17 +184,3 @@ def _factorize_code_bytes(low):
     codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     uniq = enc.dictionary.to_numpy(zero_copy_only=False)
     return codes, uniq, lens
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_code(content: pd.Series) -> pd.Series:
-    return tokenize_series(content, "code")
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_simple(content: pd.Series) -> pd.Series:
-    return tokenize_series(content, "simple")
-
-
-def get_tokenizer_udf(mode: str):
-    return {"code": tokenize_code, "simple": tokenize_simple}[mode]

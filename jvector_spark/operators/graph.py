@@ -46,6 +46,7 @@ which pin a generation in memory and swap on SearcherPool.reset()).
 
 from __future__ import annotations
 
+import glob
 import heapq
 import json
 import os
@@ -469,7 +470,6 @@ def _read_graph_rows(spark, path: str, id_col: str, vec_col: str):
     insert, and even the retry of the purge itself. Return a
     correctly-typed empty frame instead, so an emptied index stays a
     working (0-row) index."""
-    import glob
     if not glob.glob(os.path.join(path, "cluster=*")):
         return spark.createDataFrame(
             [], f"{id_col} long, {vec_col} array<float>, "
@@ -1057,6 +1057,7 @@ def beam_search_cluster(
     threshold: float | None = None,
     use_pruning: bool = False,
     scorer=None,
+    expand=None,
 ) -> tuple[np.ndarray, int]:
     """ef-bounded best-first search (GraphSearcher.java:387-451): expand
     the best unexpanded candidate, stop when it cannot beat the worst of
@@ -1065,8 +1066,9 @@ def beam_search_cluster(
     BLAS-batched per expansion.
 
     `seed_pos` optionally seeds the frontier with extra entry points
-    besides the medoid. A kNN-candidate graph has only short intra-basin
-    edges, so a single entry cannot cross well-separated sub-clusters —
+    besides the medoid (merged in position order when absent from them).
+    A kNN-candidate graph has only short intra-basin edges, so a single
+    entry cannot cross well-separated sub-clusters —
     the same routing problem HNSW solves with its upper layers and the
     reference solves by accumulating search-path edges during insertion
     (GraphIndexBuilder.java:441-453). Spread seeds restore global
@@ -1087,27 +1089,35 @@ def beam_search_cluster(
     precedence as ScoreTrackerFactory.getScoreTracker: a threshold wins),
     trading exactness of the candidate set for an eval cut once the beam
     is statistically past its local maximum. Default off (rank-identical
-    mode, matching GraphIndexBuilder.java:330-334)."""
+    mode, matching GraphIndexBuilder.java:330-334).
+
+    `scorer` (positions -> similarity scores) abstracts the score
+    representation: float rows by default, or NVQ/PQ codes — the
+    ScoreFunction SPI (similarity/ScoreFunction.java:31-69) of the beam.
+    `expand(best, visited) -> (new positions, their scores)` replaces the
+    per-expansion `nbrs` gather + `scorer` call: the fused-slab score
+    provider (FusedADC.java:39-59), which scores a node's whole
+    contiguous neighbor-code block in one matmul and keeps the unvisited
+    rows. Seeds are still scored through `scorer`."""
     if threshold is not None:
         tracker = TwoPhaseTracker(threshold)
     elif use_pruning:
         tracker = RelaxedMonotonicityTracker(best_tracked=min(ef, 100))
     else:
         tracker = None
-    # `scorer` (positions -> similarity scores) abstracts the score
-    # representation: float rows by default, or NVQ codes via the
-    # shift/scale identity (graph_topk_nvq) — the ScoreFunction SPI
-    # (similarity/ScoreFunction.java:31-69) of the beam
     if scorer is None:
         def scorer(pos):
             return V[pos] @ q
     n = len(ids)
-    if seed_pos is None:
-        seed_pos = np.asarray([medoid_pos], dtype=np.int64)
+    seed_pos = np.asarray([medoid_pos] if seed_pos is None else seed_pos,
+                          dtype=np.int64)
+    if medoid_pos in seed_pos:
+        # a seed set that already holds the entry keeps its order (the
+        # warm pool's first-seen descent seeds); only duplicates go
+        seed_pos = seed_pos[np.sort(
+            np.unique(seed_pos, return_index=True)[1])]
     else:
-        seed_pos = np.unique(np.concatenate(
-            [np.asarray([medoid_pos], dtype=np.int64),
-             np.asarray(seed_pos, dtype=np.int64)]))
+        seed_pos = np.unique(np.append(seed_pos, medoid_pos))
     visited = np.zeros(n, dtype=bool)
     visited[seed_pos] = True
     cand_pos = [int(p) for p in seed_pos]
@@ -1148,10 +1158,14 @@ def beam_search_cluster(
         neg_s, _, best = heapq.heappop(frontier)
         if len(held) == ef and -neg_s < held[0]:
             break  # cannot improve the ef held results
-        new = nbrs[best][~visited[nbrs[best]]]
+        if expand is not None:
+            new, s = expand(best, visited)
+        else:
+            new = nbrs[best][~visited[nbrs[best]]]
+            s = scorer(new) if len(new) else None
         if len(new):
             visited[new] = True
-            s = np.asarray(scorer(new))
+            s = np.asarray(s)
             n_evals += len(new)
             for p, sv in zip(new.tolist(), s.tolist()):
                 cand_pos.append(p)
@@ -1251,12 +1265,8 @@ def graph_topk_nvq(
     memory, full-precision fetched for rerank" split (README.md:25-39).
     With covering ef the candidate union is the whole probed membership
     and the result is rank-identical to graph_topk/brute force
-    (pytest-asserted).
-
-    `threshold` / `use_pruning` / `router` / `route_ef` mirror
-    graph_topk exactly (the tracker stops and the threshold cut both
-    operate on the quantized beam / exact rerank the same way — the
-    tiers must not drift in surface)."""
+    (pytest-asserted). Probing, hierarchy descent and the beam are
+    graph_topk's (_beam_candidates); only the scan and scorer differ."""
     meta = load_graph_meta(path)
     codes_path = path.rstrip("/") + "_codes"
     # staleness gate: an id join against an out-of-date sidecar silently
@@ -1272,93 +1282,48 @@ def graph_topk_nvq(
             f"NVQ codes sidecar at {codes_path} was built from graph "
             f"generation {codes_gen} but the graph is at {graph_gen} — "
             "re-run quantize_graph_vectors after mutations")
-    qpdf = queries.select(qid_col, qvec_col).toPandas()
-    cluster_qids = _resolve_probe_map(
-        queries, qpdf, centroids, nprobe, router, route_ef,
-        qid_col, qvec_col)
-    probed = sorted(cluster_qids)
-    qvecs = _unit_query_vecs(qpdf, qid_col, qvec_col)
-    medoids = meta["medoids"]
 
-    # column-pruned graph scan: NO embedding column
-    graph_side = (_read_graph_rows(spark, path, id_col, vec_col)
-                  .where(F.col("cluster").isin(probed))
-                  .select(id_col, "neighbors", "is_medoid", "cluster"))
-    import glob as _glob
-    if _glob.glob(os.path.join(codes_path, "cluster=*")):
-        codes_raw = spark.read.parquet(codes_path)
-    else:
-        # codes sidecar rebuilt over an every-cluster-purged graph: no
-        # partition dirs to infer a schema from (same hazard as
-        # _read_graph_rows) — an empty typed frame keeps the join valid
-        codes_raw = spark.createDataFrame(
-            [], f"{id_col} long, codes binary, vmin double, delta double, "
-                "dq_norm double, cluster int")
-    codes_side = (codes_raw
-                  .where(F.col("cluster").isin(probed))
-                  .select(id_col, "codes", "vmin", "delta", "dq_norm"))
-    corpus = _flag_tombstones(spark, graph_side.join(codes_side, id_col),
-                              path, id_col)
-    lentries: dict[int, tuple[int, int]] = {}
-    if layers:
-        lp = path.rstrip("/") + "_layers" if layers is True else layers
-        packed, lentries = _load_layers(
-            spark, lp, probed, id_col, graph_gen)
-        if packed is not None:
-            corpus = corpus.join(packed, id_col, "left")
-    out_schema = f"qid long, {id_col} long"
+    def scan(probed):
+        # column-pruned graph scan: NO embedding column
+        graph_side = (_read_graph_rows(spark, path, id_col, vec_col)
+                      .where(F.col("cluster").isin(probed))
+                      .select(id_col, "neighbors", "is_medoid", "cluster"))
+        if glob.glob(os.path.join(codes_path, "cluster=*")):
+            codes_raw = spark.read.parquet(codes_path)
+        else:
+            # codes sidecar rebuilt over an every-cluster-purged graph: no
+            # partition dirs to infer a schema from (same hazard as
+            # _read_graph_rows) — an empty typed frame keeps the join valid
+            codes_raw = spark.createDataFrame(
+                [], f"{id_col} long, codes binary, vmin double, "
+                    "delta double, dq_norm double, cluster int")
+        return graph_side.join(
+            codes_raw.where(F.col("cluster").isin(probed))
+            .select(id_col, "codes", "vmin", "delta", "dq_norm"), id_col)
 
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        cluster = int(pdf["cluster"].iloc[0])
-        qids = cluster_qids.get(cluster, [])
-        if not qids:
-            return pd.DataFrame(columns=["qid", id_col])
-        pdf, ids, nbrs, medoid_pos, banned, seed_pos = _cell_search_state(
-            pdf, id_col, medoids, cluster, n_seeds)
-        dim = len(pdf["codes"].iloc[0])
+    def cell_scorer(pdf):
         codes = np.frombuffer(
             b"".join(pdf["codes"].to_numpy()), dtype=np.uint8
-        ).reshape(len(pdf), dim)
+        ).reshape(len(pdf), -1)
         vmin = pdf["vmin"].to_numpy(np.float64)
         delta = pdf["delta"].to_numpy(np.float64)
         norms = np.maximum(pdf["dq_norm"].to_numpy(np.float64), 1e-12)
-        entry = lentries.get(cluster)
-        amap: dict[int, dict[int, np.ndarray]] = {}
-        if entry is not None:
-            pos = {int(v): i for i, v in enumerate(ids)}
-            amap = _upper_maps(pdf, pos)
-            entry_pos = pos.get(entry[0], medoid_pos)
-        outs = []
-        for qid in qids:
-            q = qvecs[qid]
+
+        def for_query(q):
             qsum = float(q.sum())
+            return lambda p: ((vmin[p] * qsum + delta[p] * (codes[p] @ q))
+                              / norms[p])
+        return for_query
 
-            def nvq_score(p):
-                return ((vmin[p] * qsum + delta[p] * (codes[p] @ q))
-                        / norms[p])
-
-            d_evals = 0
-            sp = seed_pos
-            if entry is not None and amap:
-                # the descent scores through the SAME quantized scorer
-                # as the beam — the hierarchy never touches floats
-                sp, d_evals = _descend_layers(
-                    amap, entry_pos, entry[1], nvq_score)
-            found, n_evals = beam_search_cluster(
-                ids, None, nbrs, medoid_pos, q, ef, sp,
-                banned=banned, threshold=threshold,
-                use_pruning=use_pruning, scorer=nvq_score)
-            if evals_acc is not None:
-                evals_acc.add(int(n_evals) + int(d_evals))
-            outs.append(pd.DataFrame({
-                "qid": np.int64(qid), id_col: ids[found]}))
-        return pd.concat(outs, ignore_index=True)
-
-    cands = corpus.groupBy("cluster").applyInPandas(search, out_schema)
+    cands = _beam_candidates(
+        spark, path, meta, queries, centroids, scan, cell_scorer,
+        carry_col=None, nprobe=nprobe, ef=ef, n_seeds=n_seeds,
+        id_col=id_col, qid_col=qid_col, qvec_col=qvec_col,
+        evals_acc=evals_acc, threshold=threshold, use_pruning=use_pruning,
+        router=router, route_ef=route_ef, layers=layers)
     # the exact rerank fetches full-precision rows for candidates only
-    # (the "compressed in memory, floats for rerank" split)
-    # threshold mode: the cut applies on EXACT rerank scores, exactly as
-    # in graph_topk (beam-side tracker only bounds exploration)
+    # (the "compressed in memory, floats for rerank" split); the
+    # threshold cut applies on EXACT rerank scores, as in graph_topk
     return exact_rerank(
         cands.join(vectors.select(id_col, vec_col), id_col),
         queries.select(F.col(qid_col).alias("qid"), qvec_col),
@@ -1403,6 +1368,24 @@ def _node_levels(ids: np.ndarray, R: int, n: int) -> np.ndarray:
     return np.minimum(lev, cap)
 
 
+def _upper_layers(ids: np.ndarray, V: np.ndarray, R: int, alpha: float
+                  ) -> list[tuple[int, np.ndarray, list]]:
+    """One cell's sparse upper layers: [(level, sub, adj)] for levels
+    1..top, where `sub` holds the positions sampled into the level
+    (_node_levels >= level) and adj[j] the positions, into `sub`, of
+    sub[j]'s alpha-pruned neighbors — the same construction as L0 over
+    the level's rows. Empty when the cell is too small to sample any
+    upper node. Shared by build_hierarchy and the warm VectorPool."""
+    levels = _node_levels(ids, R, len(ids))
+    out = []
+    for lvl in range(1, int(levels.max(initial=0)) + 1):
+        sub = np.flatnonzero(levels >= lvl)
+        adj = ([[]] if len(sub) == 1
+               else _build_cluster_graph(V[sub], R, alpha)[0])
+        out.append((lvl, sub, adj))
+    return out
+
+
 def build_hierarchy(spark, path: str) -> str:
     """Write the upper-layer SIDECAR for a graph layout:
     path_layers/cluster=N/*.parquet with one row per (node, layer >= 1):
@@ -1430,19 +1413,10 @@ def build_hierarchy(spark, path: str) -> str:
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         ids = pdf[id_col].to_numpy(np.int64)
         V = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-        levels = _node_levels(ids, R, len(ids))
         out_id: list[int] = []
         out_layer: list[int] = []
         out_nbrs: list[list[int]] = []
-        top = int(levels.max(initial=0))
-        for lvl in range(1, top + 1):
-            sub = np.flatnonzero(levels >= lvl)
-            if len(sub) == 0:
-                break
-            if len(sub) == 1:
-                adjs: list[list[int]] = [[]]
-            else:
-                adjs, _ = _build_cluster_graph(V[sub], R, alpha)
+        for lvl, sub, adjs in _upper_layers(ids, V, R, alpha):
             for j, a in enumerate(adjs):
                 out_id.append(int(ids[sub[j]]))
                 out_layer.append(lvl)
@@ -1461,8 +1435,7 @@ def build_hierarchy(spark, path: str) -> str:
                         "cluster int")
      .write.mode("overwrite").partitionBy("cluster").parquet(layers_path))
     entries: dict[int, list[int]] = {}
-    import glob as _glob
-    if _glob.glob(os.path.join(layers_path, "cluster=*")):
+    if glob.glob(os.path.join(layers_path, "cluster=*")):
         # per-cell entry = the node at the top layer (lowest id on ties)
         rows = (spark.read.parquet(layers_path).groupBy("cluster")
                 .agg(F.expr(f"min_by({id_col}, struct(-layer, {id_col}))")
@@ -1497,8 +1470,7 @@ def _load_layers(spark, layers_path: str, probed: list[int],
             "re-run build_hierarchy after mutations")
     entries = {int(k): (int(v[0]), int(v[1]))
                for k, v in lm.get("entries", {}).items()}
-    import glob as _glob
-    if not _glob.glob(os.path.join(layers_path, "cluster=*")):
+    if not glob.glob(os.path.join(layers_path, "cluster=*")):
         return None, entries
     packed = (spark.read.parquet(layers_path)
               .where(F.col("cluster").isin(probed))
@@ -1667,6 +1639,86 @@ def _resolve_probe_map(queries: DataFrame, qpdf: pd.DataFrame,
     return cluster_qids
 
 
+def _beam_candidates(spark, path: str, meta: dict, queries: DataFrame,
+                     centroids: np.ndarray, scan, cell_scorer, *,
+                     carry_col: str | None, nprobe: int, ef: int,
+                     n_seeds: int, id_col: str, qid_col: str,
+                     qvec_col: str, evals_acc, threshold, use_pruning,
+                     router, route_ef: int, layers) -> DataFrame:
+    """The per-cell beam driver of the float and NVQ graph tiers: probe
+    map (brute or routed), unit query vectors, tombstone flags, the
+    optional upper-layer join, then one applyInPandas task per probed
+    cell running descent + beam_search_cluster for every query probing
+    it. Returns (qid, id_col[, carry_col]) candidate rows, <=ef per
+    (query, cell).
+
+    What differs between tiers comes in as callbacks: `scan(probed)` is
+    the probed cells' rows (id, neighbors, is_medoid, cluster plus the
+    scorer's columns); `cell_scorer(pdf)(q)` is the positions -> score
+    function of one query over one id-sorted cell; `carry_col` is a
+    column copied to the candidate rows (the float vectors the rerank
+    reads) or None."""
+    qpdf = queries.select(qid_col, qvec_col).toPandas()
+    cluster_qids = _resolve_probe_map(
+        queries, qpdf, centroids, nprobe, router, route_ef,
+        qid_col, qvec_col)
+    probed = sorted(cluster_qids)
+    qvecs = _unit_query_vecs(qpdf, qid_col, qvec_col)
+    medoids = meta["medoids"]
+    corpus = _flag_tombstones(spark, scan(probed), path, id_col)
+    lentries: dict[int, tuple[int, int]] = {}
+    if layers:
+        lp = path.rstrip("/") + "_layers" if layers is True else layers
+        packed, lentries = _load_layers(
+            spark, lp, probed, id_col, int(meta.get("mutation_gen", 0)))
+        if packed is not None:
+            corpus = corpus.join(packed, id_col, "left")
+    out_cols = ["qid", id_col] + ([carry_col] if carry_col else [])
+    out_schema = f"qid long, {id_col} long" + (
+        f", {carry_col} array<float>" if carry_col else "")
+
+    def search(pdf: pd.DataFrame) -> pd.DataFrame:
+        cluster = int(pdf["cluster"].iloc[0])
+        qids = cluster_qids.get(cluster, [])
+        if not qids:
+            return pd.DataFrame(columns=out_cols)
+        pdf, ids, nbrs, medoid_pos, banned, seed_pos = _cell_search_state(
+            pdf, id_col, medoids, cluster, n_seeds)
+        scorer_for = cell_scorer(pdf)
+        entry = lentries.get(cluster)
+        amap: dict[int, dict[int, np.ndarray]] = {}
+        if entry is not None:
+            pos = {int(v): i for i, v in enumerate(ids)}
+            amap = _upper_maps(pdf, pos)
+            entry_pos = pos.get(entry[0], medoid_pos)
+        outs = []
+        for qid in qids:
+            q = qvecs[qid]
+            scorer = scorer_for(q)
+            d_evals = 0
+            sp = seed_pos
+            if entry is not None and amap:
+                # the descent scores through the SAME scorer as the beam
+                # (an NVQ hierarchy never touches floats); its seeds
+                # enter the beam in position order
+                sp, d_evals = _descend_layers(
+                    amap, entry_pos, entry[1], scorer)
+                sp = np.sort(sp)
+            found, n_evals = beam_search_cluster(
+                ids, None, nbrs, medoid_pos, q, ef, sp,
+                banned=banned, threshold=threshold,
+                use_pruning=use_pruning, scorer=scorer)
+            if evals_acc is not None:
+                evals_acc.add(int(n_evals) + int(d_evals))
+            out = {"qid": np.int64(qid), id_col: ids[found]}
+            if carry_col:
+                out[carry_col] = pdf[carry_col].iloc[found].to_numpy()
+            outs.append(pd.DataFrame(out))
+        return pd.concat(outs, ignore_index=True)
+
+    return corpus.groupBy("cluster").applyInPandas(search, out_schema)
+
+
 def graph_topk(
     spark,
     path: str,
@@ -1711,67 +1763,24 @@ def graph_topk(
     the medoid). See beam_search_cluster on why multi-seed entry is what
     makes a kNN-candidate graph globally navigable."""
     meta = load_graph_meta(path)
-    qpdf = queries.select(qid_col, qvec_col).toPandas()
-    cluster_qids = _resolve_probe_map(
-        queries, qpdf, centroids, nprobe, router, route_ef,
-        qid_col, qvec_col)
-    probed = sorted(cluster_qids)
-    qvecs = _unit_query_vecs(qpdf, qid_col, qvec_col)
-    medoids = meta["medoids"]
 
-    corpus = _flag_tombstones(
-        spark,
-        _read_graph_rows(spark, path, id_col, vec_col)
-        .where(F.col("cluster").isin(probed)),
-        path, id_col)
-    lentries: dict[int, tuple[int, int]] = {}
-    if layers:
-        lp = path.rstrip("/") + "_layers" if layers is True else layers
-        packed, lentries = _load_layers(
-            spark, lp, probed, id_col, int(meta.get("mutation_gen", 0)))
-        if packed is not None:
-            corpus = corpus.join(packed, id_col, "left")
-    out_schema = f"qid long, {id_col} long, {vec_col} array<float>"
+    def scan(probed):
+        return (_read_graph_rows(spark, path, id_col, vec_col)
+                .where(F.col("cluster").isin(probed)))
 
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        cluster = int(pdf["cluster"].iloc[0])
-        qids = cluster_qids.get(cluster, [])
-        if not qids:
-            return pd.DataFrame(columns=["qid", id_col, vec_col])
-        pdf, ids, nbrs, medoid_pos, banned, seed_pos = _cell_search_state(
-            pdf, id_col, medoids, cluster, n_seeds)
+    def cell_scorer(pdf):
         V = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-        entry = lentries.get(cluster)
-        amap: dict[int, dict[int, np.ndarray]] = {}
-        if entry is not None:
-            pos = {int(v): i for i, v in enumerate(ids)}
-            amap = _upper_maps(pdf, pos)
-            entry_pos = pos.get(entry[0], medoid_pos)
-        outs = []
-        for qid in qids:
-            q = qvecs[qid]
-            d_evals = 0
-            sp = seed_pos
-            if entry is not None and amap:
-                sp, d_evals = _descend_layers(
-                    amap, entry_pos, entry[1], lambda p: V[p] @ q)
-            found, n_evals = beam_search_cluster(
-                ids, V, nbrs, medoid_pos, q, ef, sp,
-                banned=banned, threshold=threshold,
-                use_pruning=use_pruning)
-            if evals_acc is not None:
-                evals_acc.add(int(n_evals) + int(d_evals))
-            outs.append(pd.DataFrame({
-                "qid": np.int64(qid),
-                id_col: ids[found],
-                vec_col: pdf[vec_col].iloc[found].to_numpy(),
-            }))
-        return pd.concat(outs, ignore_index=True)
+        return lambda q: lambda p: V[p] @ q
 
-    cands = corpus.groupBy("cluster").applyInPandas(search, out_schema)
+    cands = _beam_candidates(
+        spark, path, meta, queries, centroids, scan, cell_scorer,
+        carry_col=vec_col, nprobe=nprobe, ef=ef, n_seeds=n_seeds,
+        id_col=id_col, qid_col=qid_col, qvec_col=qvec_col,
+        evals_acc=evals_acc, threshold=threshold, use_pruning=use_pruning,
+        router=router, route_ef=route_ef, layers=layers)
     # threshold mode: the cut applies on EXACT rerank scores
     # (GraphSearcher.java:192-195 — results with similarity >= threshold,
-    # bounded by topK); the beam's probabilistic stop above only bounds
+    # bounded by topK); the beam's probabilistic stop only bounds
     # exploration
     return exact_rerank(
         cands, queries.select(F.col(qid_col).alias("qid"), qvec_col),

@@ -30,7 +30,6 @@ generation — the read-while-write snapshot contract.
 
 from __future__ import annotations
 
-import heapq
 import json
 import os
 from typing import IO
@@ -282,7 +281,7 @@ class VectorPool:
 
     def _build_graph(self, mat: np.ndarray, R: int) -> None:
         from jvector_spark.operators.graph import (
-            _build_cluster_graph, _node_levels)
+            _build_cluster_graph, _upper_layers)
 
         unit = mat / np.maximum(
             np.sqrt((mat * mat).sum(axis=1))[:, None], 1e-12)
@@ -299,8 +298,8 @@ class VectorPool:
                 if self._hier is not None:
                     self._hier.append(None)
                 continue
-            adj, medoid = _build_cluster_graph(
-                unit[members], R=R, alpha=1.2)
+            um = unit[members]
+            adj, medoid = _build_cluster_graph(um, R=R, alpha=1.2)
             nbrs = [np.asarray(a, dtype=np.int64) for a in adj]
             seeds = np.unique(np.concatenate([
                 np.asarray([medoid], dtype=np.int64),
@@ -308,34 +307,15 @@ class VectorPool:
             self._graph.append((members, nbrs, seeds))
             if self._hier is None:
                 continue
-            # HNSW-style in-cell upper layers, the warm twin of
-            # graph.build_hierarchy: same deterministic id-hash level
-            # sampling, same alpha-pruned per-layer construction; cells
-            # too small to sample upper nodes keep the stride seeds
-            levels = _node_levels(self.ids[members], R, m)
-            top = int(levels.max(initial=0))
-            amap: dict[int, dict[int, np.ndarray]] = {}
-            # one fancy-index copy of the cell submatrix for ALL levels
-            # (unit[members] inside the loop would re-copy per level)
-            um = unit[members]
-            for lvl in range(1, top + 1):
-                sub = np.flatnonzero(levels >= lvl)
-                if len(sub) == 0:
-                    top = lvl - 1
-                    break
-                if len(sub) == 1:
-                    ladj = [[]]
-                else:
-                    ladj, _ = _build_cluster_graph(
-                        um[sub], R=R, alpha=1.2)
-                amap[lvl] = {
-                    int(sub[j]): sub[np.asarray(a, dtype=np.int64)]
-                    for j, a in enumerate(ladj)}
-            if top < 1:
-                self._hier.append(None)
-                continue
-            at_top = np.flatnonzero(levels >= top)
-            self._hier.append((amap, int(at_top[0]), top))
+            # HNSW-style in-cell upper layers (graph.build_hierarchy's
+            # construction) as (level maps, entry = lowest position on the
+            # top level, top level); too-small cells keep the stride seeds
+            layers = _upper_layers(self.ids[members], um, R, 1.2)
+            self._hier.append(None if not layers else (
+                {lvl: {int(sub[j]): sub[np.asarray(a, dtype=np.int64)]
+                       for j, a in enumerate(ladj)}
+                 for lvl, sub, ladj in layers},
+                int(layers[-1][1][0]), layers[-1][0]))
 
     def _train_ivf(self, mat: np.ndarray, n_clusters: int, seed: int,
                    iters: int = 8) -> None:
@@ -394,127 +374,64 @@ class VectorPool:
     def _beam_cell(self, cell: int, q: np.ndarray, qn: float,
                    ef: int,
                    threshold: float | None = None
-                   ) -> tuple[np.ndarray, np.ndarray, int, int]:
+                   ) -> tuple[np.ndarray, np.ndarray, int]:
         """ef-bounded best-first beam inside one graph cell (the warm
-        GraphSearcher.java:387-451 loop). Returns (global positions,
-        their sims, evals, scored). `evals` counts unique nodes visited
-        (SearchResult.getVisitedCount semantics — fused and gather paths
-        agree by construction); `scored` counts score computations,
-        which in fused mode exceeds evals because the bulk matmul
-        re-scores already-visited rows in each adjacency block.
-        `threshold` arms the TwoPhaseTracker probabilistic stop (see
-        operators/graph.beam_search_cluster).
+        GraphSearcher.java:387-451 loop): operators/graph
+        .beam_search_cluster scoring through the pool's own kernel.
+        Returns (global positions, their sims, evals). `evals` counts
+        unique nodes visited (SearchResult.getVisitedCount semantics —
+        fused and gather paths agree by construction). The fused
+        expansion adds the already-visited rows its bulk matmul re-scores
+        to self.last_graph_scored, which otherwise grows with `evals`.
+        `threshold` arms the TwoPhaseTracker probabilistic stop."""
+        from jvector_spark.operators.graph import (
+            _descend_layers, beam_search_cluster)
 
-        DELIBERATE TWIN of operators/graph.beam_search_cluster: the warm
-        path keeps its own loop for the fused-slab layout and because it
-        returns scores for reuse (the batch beam's callers rerank). Any
-        semantic change to either loop (tie-break, termination floor,
-        banned handling, tracker wiring) must land in BOTH —
-        tests/test_serve.py::test_beam_cell_matches_batch_beam runs them
-        over identical cell arrays and fails on any divergence."""
-        from jvector_spark.operators.graph import TwoPhaseTracker
-
-        tracker = (TwoPhaseTracker(threshold)
-                   if threshold is not None else None)
         members, nbrs, seeds = self._graph[cell]
-        m = len(members)
-        if m == 0:
-            return (np.empty(0, dtype=np.int64), np.empty(0), 0, 0)
-        fz = self._fused[cell] if self._fused is not None else None
-        qsum = float(q.sum())
+        if len(members) == 0:
+            return np.empty(0, dtype=np.int64), np.empty(0), 0
+
+        def score(p):
+            return self._score_positions(members[p], q, qn)
+
         d_evals = 0
         hier = self._hier[cell] if self._hier is not None else None
         if hier is not None:
             # greedy multi-layer descent replaces the stride seeds (the
             # warm internalSearch:250-269); scoring goes through the
-            # pool's own kernel, so NVQ pools descend over codes
-            from jvector_spark.operators.graph import _descend_layers
+            # pool's own kernel, so quantized pools descend over codes
+            seeds, d_evals = _descend_layers(*hier, score)
+        fz = self._fused[cell] if self._fused is not None else None
+        expand = None
+        if fz is not None:
+            qsum = float(q.sum())
 
-            amap, entry_pos, top = hier
-            seeds, d_evals = _descend_layers(
-                amap, entry_pos, top,
-                lambda p: self._score_positions(members[p], q, qn))
-        visited = np.zeros(m, dtype=bool)
-        visited[seeds] = True
-        sims0 = self._score_positions(members[seeds], q, qn)
-        cand_pos = [int(p) for p in seeds]
-        cand_sim = sims0.tolist()
-        n_evals = len(seeds)
-        n_scored = len(seeds)
-        if tracker is not None:
-            tracker.track(sims0)
-        # heap-based best-first (NodeQueue pair analog, see
-        # beam_search_cluster in operators/graph.py for the tie-break and
-        # threshold equivalence argument): max-heap frontier of unexpanded
-        # candidates + bounded min-heap of the ef best scores seen
-        frontier = [(-s, i, p) for i, (p, s) in enumerate(zip(cand_pos,
-                                                              cand_sim))]
-        heapq.heapify(frontier)
-        held: list[float] = []
-        for s in cand_sim:
-            if len(held) < ef:
-                heapq.heappush(held, s)
-            else:
-                heapq.heappushpop(held, s)
-        seq = len(cand_pos)
-        while frontier:
-            neg_s, _, best = heapq.heappop(frontier)
-            if len(held) == ef and -neg_s < held[0]:
-                break
-            if fz is not None:
+            def expand(best, visited):
                 # fused neighborhood scoring: ONE contiguous-slice matmul
                 # over the whole adjacency block (visited rows are scored
-                # and discarded — the FusedADC bulk-then-filter shape),
-                # the NVQScorer shift/scale identity on the fused copies
+                # and discarded — the FusedADC bulk-then-filter shape)
                 lo, hi = int(fz["off"][best]), int(fz["off"][best + 1])
                 nbr = fz["nbr"][lo:hi]
                 mask = ~visited[nbr]
-                if mask.any():
-                    if self.quantize == "pq":
-                        # FusedADCPQDecoder: per-query ADC table gathered
-                        # over the contiguous neighborhood code slab
-                        tab = self._adc_table(q)
-                        block = tab[
-                            np.arange(self.pq_m)[None, :],
-                            fz["codes"][lo:hi]].sum(axis=1)
-                    else:
-                        block = (fz["vmin"][lo:hi] * qsum
-                                 + fz["delta"][lo:hi]
-                                 * (fz["codes"][lo:hi] @ q))
-                    sims_all = block / (qn * fz["norms"][lo:hi])
-                    new, s = nbr[mask], sims_all[mask]
-                    # the bulk matmul scored the whole block — visited
-                    # rows included — so the work counter takes hi-lo
-                    # while the visited counter below takes len(new)
-                    n_scored += int(hi - lo) - len(new)
-                else:
-                    new = nbr[:0]
-            else:
-                new = nbrs[best][~visited[nbrs[best]]]
-                if len(new):
-                    s = self._score_positions(members[new], q, qn)
-            if len(new):
-                visited[new] = True
-                n_evals += len(new)
-                n_scored += len(new)
-                for p, sv in zip(new.tolist(), s.tolist()):
-                    cand_pos.append(p)
-                    cand_sim.append(sv)
-                    heapq.heappush(frontier, (-sv, seq, p))
-                    seq += 1
-                    if len(held) < ef:
-                        heapq.heappush(held, sv)
-                    else:
-                        heapq.heappushpop(held, sv)
-                if tracker is not None:
-                    tracker.track(np.asarray(s))
-                    if tracker.should_stop():
-                        break
-        cp = np.asarray(cand_pos, dtype=np.int64)
-        cs = np.asarray(cand_sim)
-        keep = np.lexsort((self.ids[members[cp]], -cs))[:ef]
-        return members[cp[keep]], cs[keep], n_evals + d_evals, \
-            n_scored + d_evals
+                if not mask.any():
+                    return nbr[:0], None
+                if self.quantize == "pq":
+                    # FusedADCPQDecoder: per-query ADC table gathered
+                    # over the contiguous neighborhood code slab
+                    block = self._adc_table(q)[
+                        np.arange(self.pq_m)[None, :],
+                        fz["codes"][lo:hi]].sum(axis=1)
+                else:  # NVQScorer shift/scale identity on the copies
+                    block = (fz["vmin"][lo:hi] * qsum + fz["delta"][lo:hi]
+                             * (fz["codes"][lo:hi] @ q))
+                self.last_graph_scored += int(hi - lo - mask.sum())
+                return nbr[mask], (block / (qn * fz["norms"][lo:hi]))[mask]
+        # entry = seeds[0], already a seed: the seeds enter in this order
+        found, evals = beam_search_cluster(
+            self.ids[members], None, nbrs, int(seeds[0]), q, ef, seeds,
+            threshold=threshold, scorer=score, expand=expand)
+        pos = members[found]
+        return pos, self._score_positions(pos, q, qn), evals + d_evals
 
     def knn(self, qvecs: np.ndarray, k: int,
             nprobe: int | None = None,
@@ -568,13 +485,13 @@ class VectorPool:
                          else np.arange(len(self._graph)))
                 ps, ss = [], []
                 for c in cells:
-                    gp, gs, ne, ns = self._beam_cell(int(c), q[qid],
-                                                     float(qn[qid]), ef,
-                                                     threshold=threshold)
+                    gp, gs, ne = self._beam_cell(int(c), q[qid],
+                                                 float(qn[qid]), ef,
+                                                 threshold=threshold)
                     ps.append(gp)
                     ss.append(gs)
                     self.last_graph_evals += ne
-                    self.last_graph_scored += ns
+                    self.last_graph_scored += ne
                 pos = np.concatenate(ps)
                 sims = np.round(np.concatenate(ss), 6)
                 ids = self.ids[pos]

@@ -567,6 +567,12 @@ def load_term_bloom(seg_dir: str) -> np.ndarray | None:
 
 KEY_BLOOM_BITS = 1 << 20  # 128 KiB per segment: ~10 bits/key at 100k docs
 KEY_BLOOM_K = 3
+# versioned file name: blooms written before _canon_key rendered integral
+# floats as ints hashed the key 2.0 as '2.0' and sit under the old name
+# "key_bloom.bin". Probing them with today's '2' would be a false
+# negative (a duplicate doc on redelivery), so load_key_bloom never reads
+# them — those segments fail open to the exact anti-join.
+KEY_BLOOM_FILE = "key_bloom.v2.bin"
 KEY_SEP = "\x1f"  # separator for key tuples (write AND probe side)
 KEY_NULL = "\x00\x1fNULL"  # null sentinel — cannot collide with str values
 
@@ -674,7 +680,7 @@ def build_key_bloom(hashes: np.ndarray) -> bytes:
 def load_key_bloom(seg_dir: str) -> np.ndarray | None:
     """Packed committed-keys bloom; None for legacy/corrupt files (callers
     must then treat the segment as a possible key match — fail open)."""
-    path = os.path.join(seg_dir, "key_bloom.bin")
+    path = os.path.join(seg_dir, KEY_BLOOM_FILE)
     if not os.path.exists(path):
         return None
     bits = np.fromfile(path, dtype=np.uint8)
@@ -724,7 +730,7 @@ def write_segment_files(
     key_cols = meta_extra.get("key_cols")
     if key_cols and all(c in docs_pdf.columns for c in key_cols):
         kb = build_key_bloom(_key_hash60(docs_pdf[list(key_cols)]))
-        with open(os.path.join(tmp_dir, "key_bloom.bin"), "wb") as f:
+        with open(os.path.join(tmp_dir, KEY_BLOOM_FILE), "wb") as f:
             f.write(kb)
         meta_extra = {**meta_extra,
                       "key_bloom_sha256": hashlib.sha256(kb).hexdigest()}
@@ -888,7 +894,7 @@ def _build_segment_stream(
     fp = _fingerprint(
         docids, docs_pdf["content_sha"],
         f"mode={mode}|codec={codec}|positions={positions}|block={block_size}"
-        # key_cols changes docs.parquet AND key_bloom.bin — omitting it
+        # key_cols changes docs.parquet AND the key bloom — omitting it
         # made a re-run with different keys silently resume segments
         # whose sidecars lacked the new columns
         f"|qmeta={quantize_meta}|keys={','.join(key_cols)}",
@@ -988,24 +994,6 @@ def _build_segment_stream(
         json.dump(meta, f)
     os.replace(mtmp, os.path.join(seg_dir, "meta.json"))
     return manifest_row("built", meta, time.time() - t0)
-
-
-def _build_one_segment(
-    pdf: pd.DataFrame,
-    index_dir: str,
-    mode: str,
-    content_col: str,
-    key_cols: tuple[str, ...],
-    block_size: int,
-    codec: str = "adaptive",
-    positions: bool = False,
-    quantize_meta: bool = False,
-) -> pd.DataFrame:
-    """Whole-frame convenience wrapper over the streaming builder."""
-    return _build_segment_stream(
-        iter([pdf]), index_dir, mode, content_col, key_cols, block_size,
-        codec, positions, quantize_meta
-    )
 
 
 def build_index(

@@ -137,7 +137,7 @@ def _append_micro_segment_locked(
             base = max(s["max_docid"] for s in old["segments"]) + 1
             # Doc-granular dedup against the committed index, bloom-
             # prefiltered: each segment carries a committed-keys bloom
-            # (key_bloom.bin, written atomically with the segment), so
+            # (KEY_BLOOM_FILE, written atomically with the segment), so
             # the steady-state all-new-docs batch touches 128 KiB per
             # segment instead of rescanning every docs sidecar —
             # O(batch) driver work + O(segments) bloom bytes per batch

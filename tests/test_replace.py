@@ -167,6 +167,43 @@ def test_key_bloom_parity_null_bool_numeric_keys(spark, tmp_path_factory):
     assert _live_count(spark, d, "alpha") == 3
 
 
+def test_legacy_key_bloom_fails_open(spark, tmp_path_factory):
+    """A key bloom written before integral floats rendered as ints hashed
+    the float key 2.0 as '2.0'. Probing such a bloom with today's '2' is
+    a false negative, so a redelivered doc would be indexed twice. A
+    segment that carries only the old-rendering bloom must fail open to
+    the exact anti-join."""
+    import glob
+    import os
+
+    import pyspark.sql.types as T
+
+    from jvector_spark.sources.segment import _key_hash60, build_key_bloom
+
+    d = str(tmp_path_factory.mktemp("idx_legacy_bloom"))
+    schema = T.StructType([
+        T.StructField("repo", T.StringType()),
+        T.StructField("path", T.StringType()),
+        T.StructField("commit", T.StringType()),
+        T.StructField("ver", T.DoubleType()),
+        T.StructField("content", T.StringType()),
+    ])
+    batch = spark.createDataFrame(
+        [("r", "a", "c0", 2.0, "alpha legacy")], schema)
+    kc = ("repo", "path", "commit", "ver")
+    append_micro_segment(batch, batch_id=0, index_dir=d, key_cols=kc)
+    # the pre-change writer's bloom: key rendered '2.0', old file name
+    legacy = build_key_bloom(_key_hash60(pd.DataFrame(
+        {"repo": ["r"], "path": ["a"], "commit": ["c0"], "ver": ["2.0"]})))
+    for s in load_manifest(d)["segments"]:
+        for f in glob.glob(os.path.join(s["path"], "key_bloom*.bin")):
+            os.remove(f)
+        with open(os.path.join(s["path"], "key_bloom.bin"), "wb") as f:
+            f.write(legacy)
+    append_micro_segment(batch, batch_id=1, index_dir=d, key_cols=kc)
+    assert _live_count(spark, d, "alpha") == 1
+
+
 def test_append_rejects_positions_mismatch(spark, tmp_path_factory):
     """Appending a position-less segment into a positional index would
     AND the manifest's has_positions to False, permanently disabling

@@ -370,49 +370,43 @@ def test_vector_pool_graph_tier(tmp_path_factory):
     assert fcov.equals(ncov)
 
 
-def test_beam_cell_matches_batch_beam(tmp_path_factory):
-    """serve.VectorPool._beam_cell and operators.graph.beam_search_cluster
-    are two implementations of the same NodeQueue best-first loop (the
-    warm path keeps its own for the fused layout and score reuse). This
-    pins them together: identical cell arrays + identical scorer must
-    produce identical result sets, result order, and eval counts — a fix
-    applied to one copy and not the other fails here, in both plain and
-    threshold-tracker modes."""
+def test_fused_expansion_matches_gather_under_threshold(tmp_path_factory):
+    """The fused-slab expansion (one contiguous matmul per adjacency
+    block) and the gather expansion feed the same beam, so with the
+    TwoPhaseTracker armed (threshold=0.5) an NVQ or PQ pool must return
+    the same frame and visit the same nodes fused or not. ef=1024 with
+    16 well-separated clusters of ~150 rows makes the tracker stop both
+    beams early; the plain beam is the baseline for that cut."""
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
 
-    from jvector_spark.operators.graph import beam_search_cluster
     from jvector_spark.serve import VectorPool
 
     rng = np.random.RandomState(17)
-    centers = rng.normal(size=(5, 12))
-    n = 900
-    X = centers[rng.randint(0, 5, n)] + 0.3 * rng.normal(size=(n, 12))
+    centers = rng.normal(size=(16, 32))
+    n = 2400
+    X = centers[rng.randint(0, 16, n)] + 0.3 * rng.normal(size=(n, 32))
     X = (X / np.linalg.norm(X, axis=1, keepdims=True)).astype(np.float32)
-    path = str(tmp_path_factory.mktemp("parity")) + "/emb.parquet"
+    path = str(tmp_path_factory.mktemp("fusedthr")) + "/emb.parquet"
     pq_mod.write_table(pa.table({
         "vec_id": np.arange(n, dtype=np.int64),
         "embedding": list(X)}), path)
-    pool = VectorPool(path, n_clusters=4, graph_R=6)
-    q = X[7].astype(np.float64)
-    qn = float(np.linalg.norm(q))
-
-    checked = 0
-    for thr in (None, 0.5):
-        for cell in range(4):
-            members, nbrs, seeds = pool._graph[cell]
-            if len(members) == 0:
-                continue
-            got_pos, got_sims, ne, ns = pool._beam_cell(
-                cell, q, qn, ef=32, threshold=thr)
-            found, evals = beam_search_cluster(
-                pool.ids[members], None, nbrs, int(seeds[0]), q, 32,
-                seed_pos=seeds, threshold=thr,
-                scorer=lambda p: pool._score_positions(members[p], q, qn))
-            assert np.array_equal(members[found], got_pos)
-            assert evals == ne == ns  # no fused layout -> scored == evals
-            checked += 1
-    assert checked >= 6
+    q = X[rng.randint(0, n, 8)].astype(np.float64)
+    for quant in ("nvq", "pq"):
+        gather = VectorPool(path, n_clusters=2, graph_R=6, quantize=quant)
+        fused = VectorPool(path, n_clusters=2, graph_R=6, quantize=quant,
+                           graph_fused=True)
+        gather.knn(q, 10, ef=1024)
+        plain_evals = gather.last_graph_evals
+        want = gather.knn(q, 10, ef=1024, threshold=0.5)
+        got = fused.knn(q, 10, ef=1024, threshold=0.5)
+        assert got.equals(want), quant
+        assert fused.last_graph_evals == gather.last_graph_evals, quant
+        assert gather.last_graph_evals < 0.8 * plain_evals, quant
+        assert len(want) == 80 and (want["score"] >= 0.5).all(), quant
+        # the bulk matmul also re-scores visited rows; gather never does
+        assert gather.last_graph_scored == gather.last_graph_evals
+        assert fused.last_graph_scored > fused.last_graph_evals
 
 
 def test_vector_pool_fused_requires_nvq_graph(tmp_path_factory):
