@@ -72,7 +72,7 @@ def _get_session(master: str | None):
     )
     spark.conf.set(
         "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)),
     )
     try:
         from jvector_spark.session import package_zip

@@ -40,6 +40,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from jvector_spark.operators.wand import (
+    IndexSnapshot, _TopK, _topk_frame, accumulate, global_term_stats,
+    idf_map, intersect, live, open_segments, term_contrib, term_postings,
+    topk_after,
+)
+
 # --- AST ------------------------------------------------------------------
 
 
@@ -233,18 +239,12 @@ def _doc_set(node: Node, docs: dict[str, np.ndarray]) -> np.ndarray:
             return np.zeros(0, np.int64)
         return np.unique(np.concatenate(parts))
     if isinstance(node, And):
-        pos = [c for c in node.children if not isinstance(c, Not)]
-        neg = [c.child for c in node.children if isinstance(c, Not)]
-        cur: np.ndarray | None = None
-        # cheapest-first intersection (same policy as the conjunctive
-        # scorer: the smallest list drives)
-        sets = sorted((_doc_set(c, docs) for c in pos), key=len)
-        for s in sets:
-            cur = s if cur is None else cur[np.isin(cur, s, assume_unique=True)]
-            if not len(cur):
-                return cur
-        assert cur is not None  # _validate: >=1 positive child
-        for n in neg:
+        # _validate guarantees >=1 positive child to intersect
+        cur = intersect(_doc_set(c, docs) for c in node.children
+                        if not isinstance(c, Not))
+        if not len(cur):
+            return cur
+        for n in (c.child for c in node.children if isinstance(c, Not)):
             ex = _doc_set(n, docs)
             if len(ex):
                 cur = cur[~np.isin(cur, ex, assume_unique=True)]
@@ -268,53 +268,22 @@ def score_boolean_on_segment(
 
     Match = the clause tree over posting docid sets; score = Σ over
     positive leaves of boost × BM25 contribution (leaves summed in
-    canonical order for oracle bit-parity). Reuses the shared per-segment
-    decode/contribution caches of wand.score_query_on_segment.
+    canonical order for oracle bit-parity). Decodes, contributions, the
+    live filter and the cut go through wand's match-and-score helpers
+    (term_postings, term_contrib, live, accumulate, topk_after).
     """
-    from jvector_spark.operators.wand import _tf_norm
-
     if cache is None:
         cache = {}
-
-    def decode_full(t: str):
-        key = ("full", t)
-        if key not in cache:
-            cache[key] = (
-                reader.decode_term(t)
-                if reader.has_term(t)
-                else (np.zeros(0, np.int64), np.zeros(0, np.int64))
-            )
-        return cache[key]
-
-    def contrib_full(t: str):
-        key = ("contrib", t)
-        if key not in cache:
-            d, tf = decode_full(t)
-            idf = idfs.get(t, 0.0)
-            cache[key] = (d, idf * _tf_norm(tf, reader.doclen(d), avgdl)
-                          if len(d) else np.zeros(0, np.float64))
-        return cache[key]
-
-    docs = {t: decode_full(t)[0] for t in all_terms(node)}
-    cand = _doc_set(node, docs)
-    if accept is not None and len(cand):
-        cand = cand[np.isin(cand, accept, assume_unique=True)]
-    if tombstones is not None and len(tombstones) and len(cand):
-        cand = cand[~np.isin(cand, tombstones)]
-    if not len(cand):
-        return np.zeros(0, np.int64), np.zeros(0, np.float64)
-
+    docs = {t: term_postings(reader, cache, t)[0] for t in all_terms(node)}
+    cand = live(_doc_set(node, docs), accept, tombstones)
     scores = np.zeros(len(cand), dtype=np.float64)
+    if not len(cand):
+        return cand, scores
     for leaf in positive_leaves(node):
-        d, c = contrib_full(leaf.text)
-        if not len(d):
-            continue
-        pos = np.searchsorted(d, cand)
-        valid = pos < len(d)
-        valid[valid] &= d[pos[valid]] == cand[valid]
-        scores[valid] += leaf.boost * c[pos[valid]]
-    top = np.lexsort((cand, -scores))[:k]
-    return cand[top], scores[top]
+        d, c = term_contrib(reader, cache, leaf.text,
+                            idfs.get(leaf.text, 0.0), avgdl)
+        accumulate(scores, cand, d, leaf.boost * c)
+    return topk_after(cand, scores, k)
 
 
 # --- distributed search ---------------------------------------------------
@@ -334,11 +303,6 @@ def boolean_search_index(
     driver (syntax errors surface before any job launches) and broadcast.
     Returns (qid, rank, docid, score).
     """
-    from jvector_spark.operators.wand import (
-        IndexSnapshot, _TopK, _topk_frame, global_term_stats, idf_map,
-        open_segments,
-    )
-
     asts = {int(r.qid): parse_query(str(r.query))
             for r in queries.itertuples()}
     ks = {int(r.qid): int(r.k) for r in queries.itertuples()}

@@ -40,18 +40,15 @@ from pyspark.sql import functions as F
 def _matched_docids(seg, terms: list[str]) -> np.ndarray:
     """Live, filter-accepted docids of `seg` holding ANY of `terms` (OR
     match), memoized in the segment cache per term set."""
+    from jvector_spark.operators.wand import live, term_postings
+
     key = ("match", tuple(terms))
-    if key in seg.cache:
-        return seg.cache[key]
-    reader = seg.reader
-    parts = [reader.decode_term(t)[0] for t in terms if reader.has_term(t)]
-    d = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
-    if seg.accept is not None:
-        d = d[np.isin(d, seg.accept, assume_unique=True)]
-    if len(seg.tombstones):
-        d = d[~np.isin(d, seg.tombstones)]
-    seg.cache[key] = d
-    return d
+    if key not in seg.cache:
+        parts = [term_postings(seg.reader, seg.cache, t)[0] for t in terms]
+        seg.cache[key] = live(
+            np.unique(np.concatenate(parts)) if parts
+            else np.zeros(0, np.int64), seg.accept, seg.tombstones)
+    return seg.cache[key]
 
 
 def _attr_values(reader, attr: str,
@@ -152,8 +149,8 @@ def collapse_topk(
     asc) so the chosen representative agrees with the SQL oracle even at
     sub-1e-6 score ties."""
     from jvector_spark.operators.wand import (
-        IndexSnapshot, global_term_stats, idf_map, open_segments,
-        score_query_on_segment,
+        IndexSnapshot, accumulate, global_term_stats, idf_map,
+        open_segments, term_contrib,
     )
 
     snap = IndexSnapshot(index_dir)
@@ -169,13 +166,14 @@ def collapse_topk(
         for seg in open_segments(paths, tomb, probe, doc_filter):
             grp = seg.reader.doc_attribute(collapse_col)
             for qid, terms in qt.items():
-                # k=n_docs + theta=0 => exact full scoring of every match
-                d, s = score_query_on_segment(
-                    seg.reader, terms, idfs_l, 1 << 62, 0.0, avgdl,
-                    seg.tombstones, seg.cache, seg.accept,
-                )
+                # exact full scoring of every match, terms in sorted order
+                d = _matched_docids(seg, terms)
                 if not len(d):
                     continue
+                s = np.zeros(len(d), dtype=np.float64)
+                for t in terms:
+                    accumulate(s, d, *term_contrib(seg.reader, seg.cache, t,
+                                                   idfs_l.get(t, 0.0), avgdl))
                 g = grp[d - seg.reader._min_docid]
                 # segment-local group-best: rounded-score desc, docid asc.
                 # HALF_UP rounding (floor(x*1e6+0.5) for the nonnegative

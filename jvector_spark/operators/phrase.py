@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
+from jvector_spark.operators.wand import (
+    IndexSnapshot, _partial_frame, intersect, live, open_segments)
 from jvector_spark.sources.segment import SegmentReader
 
 
@@ -59,22 +61,11 @@ def match_phrase_on_segment(
     """(docids, n_matches) of one phrase against one segment (exact)."""
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    # candidate docs: intersect docid lists cheapest-first (no positions)
-    lists = {}
-    for t in set(terms):
-        d, _ = reader.decode_term(t)
-        lists[t] = d
-    cand = None
-    for t in sorted(set(terms), key=lambda t: len(lists[t])):
-        cand = lists[t] if cand is None else cand[
-            np.isin(cand, lists[t], assume_unique=True)
-        ]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    if tombstones is not None and len(tombstones):
-        cand = cand[~np.isin(cand, tombstones)]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    # candidate docs: live docs holding every term (no positions yet)
+    cand = live(intersect(reader.decode_term(t)[0] for t in set(terms)),
+                None, tombstones)
+    if not len(cand):
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
 
     # anchor set per candidate: positions of t1 shifted by 0, t2 by -1, ...
     # kept as (doc, anchor) pairs packed into one int64 key space. Docids
@@ -114,8 +105,6 @@ def phrase_partial(segments, queries: pd.DataFrame) -> pd.DataFrame:
     query) in rank order (n_matches desc, docid asc): top-k is mergeable
     across segments, so a stop-word-ish phrase over a big segment emits
     k rows, not millions."""
-    from jvector_spark.operators.wand import _partial_frame
-
     out = []
     for seg in segments:
         for q in queries.itertuples():
@@ -142,8 +131,6 @@ def phrase_search(
     index agree on token boundaries. Ranking: n_matches desc, docid asc,
     top-k per query.
     """
-    from jvector_spark.operators.wand import IndexSnapshot, open_segments
-
     snap = IndexSnapshot(index_dir)
     # a zero-segment index carries no has_positions stamp and matches
     # nothing — empty, not an error

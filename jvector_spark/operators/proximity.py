@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.operators.phrase import _positions_by_doc
+from jvector_spark.operators.wand import (
+    IndexSnapshot, _partial_frame, intersect, live, open_segments)
 from jvector_spark.sources.segment import SegmentReader
 
 
@@ -61,21 +63,10 @@ def match_window_on_segment(
     terms = sorted(set(terms))
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    lists = {}
-    for t in terms:
-        d, _ = reader.decode_term(t)
-        lists[t] = d
-    cand = None
-    for t in sorted(terms, key=lambda t: len(lists[t])):
-        cand = lists[t] if cand is None else cand[
-            np.isin(cand, lists[t], assume_unique=True)
-        ]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    if tombstones is not None and len(tombstones):
-        cand = cand[~np.isin(cand, tombstones)]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    cand = live(intersect(reader.decode_term(t)[0] for t in terms), None,
+                tombstones)
+    if not len(cand):
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
 
     # positions per (term, candidate doc): list-of-arrays keyed by doc
     pos_by_doc: dict[int, list[np.ndarray]] = {int(c): [] for c in cand}
@@ -114,9 +105,6 @@ def proximity_search(
 ) -> DataFrame | pd.DataFrame:
     """queries(qid, terms:list[str], window:int, k) ->
     (qid, rank, docid, n_matches), ranked n_matches desc, docid asc."""
-    from jvector_spark.operators.wand import (
-        IndexSnapshot, _partial_frame, open_segments)
-
     snap = IndexSnapshot(index_dir)
     # a zero-segment index carries no has_positions stamp and matches
     # nothing — empty, not an error

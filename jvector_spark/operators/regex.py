@@ -246,7 +246,7 @@ def regex_token_topk(
     over matched terms); rank: n_occ desc, docid asc, top-k per query.
     """
     from jvector_spark.operators.wand import (
-        IndexSnapshot, _partial_frame, open_segments)
+        IndexSnapshot, _partial_frame, live, open_segments, term_postings)
 
     snap = IndexSnapshot(index_dir)
     expansions = expand_patterns(
@@ -264,31 +264,24 @@ def regex_token_topk(
         probe = sorted({t for _, terms, _ in q for t in terms})
         out = []
         for seg in open_segments(paths, tomb, probe):
-            reader, tombs = seg.reader, seg.tombstones
             for qid, terms, k in q:
-                present = [t for t in terms if reader.has_term(t)]
-                if not present:
+                parts = [term_postings(seg.reader, seg.cache, t)
+                         for t in terms if seg.reader.has_term(t)]
+                if not parts:
                     continue
-                parts_d, parts_n = [], []
-                for t in present:
-                    d, tf = reader.decode_term(t)
-                    parts_d.append(d)
-                    parts_n.append(tf)
-                d = np.concatenate(parts_d)
-                n = np.concatenate(parts_n)
+                d, n = (np.concatenate(x) for x in zip(*parts))
                 # per-doc occurrence sum (docids repeat across terms)
                 uniq, inv = np.unique(d, return_inverse=True)
                 occ = np.zeros(len(uniq), dtype=np.int64)
                 np.add.at(occ, inv, n)
-                if len(tombs):
-                    live = ~np.isin(uniq, tombs)
-                    uniq, occ = uniq[live], occ[live]
-                if not len(uniq):
+                docs = live(uniq, None, seg.tombstones)
+                if not len(docs):
                     continue
+                occ = occ[np.searchsorted(uniq, docs)]
                 # partial top-k bounds the shuffle
-                top = np.lexsort((uniq, -occ))[:k]
+                top = np.lexsort((docs, -occ))[:k]
                 out.append(pd.DataFrame({
-                    "qid": qid, "docid": uniq[top], "n_occ": occ[top]}))
+                    "qid": qid, "docid": docs[top], "n_occ": occ[top]}))
         yield _partial_frame(out, "n_occ")
 
     ks = {int(q.qid): int(q.k) for q in queries.itertuples()}

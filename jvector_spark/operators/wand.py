@@ -334,6 +334,90 @@ def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
 
 
+# --- the per-segment match-and-score core ---------------------------------
+# Every index-scatter kernel builds its candidate set and scores it through
+# these helpers (the filter-then-verify split): `cache` is the Segment's
+# scratch dict, so decodes and contributions are shared by every query of
+# a task (and, pooled, of an index generation — idf is fixed per one).
+
+
+def term_postings(reader: SegmentReader, cache: dict,
+                  t: str) -> tuple[np.ndarray, np.ndarray]:
+    """Full (docids asc, tfs) of term t, decoded once per segment cache;
+    empty for a term the segment does not hold."""
+    key = ("full", t)
+    if key not in cache:
+        cache[key] = (reader.decode_term(t) if reader.has_term(t) else
+                      (np.zeros(0, np.int64), np.zeros(0, np.int64)))
+    return cache[key]
+
+
+def term_contrib(reader: SegmentReader, cache: dict, t: str, idf: float,
+                 avgdl: float) -> tuple[np.ndarray, np.ndarray]:
+    """(docids, exact BM25 contribution idf·tf_norm) of term t's full
+    posting list, scored once per segment cache and shared by every query
+    containing t (precomputed-query-table analog, SURVEY §4 row 5)."""
+    key = ("contrib", t)
+    if key not in cache:
+        d, tf = term_postings(reader, cache, t)
+        cache[key] = (d, idf * _tf_norm(tf, reader.doclen(d), avgdl))
+    return cache[key]
+
+
+def intersect(lists: Iterable[np.ndarray]) -> np.ndarray:
+    """Intersection of sorted unique docid arrays (at least one),
+    cheapest-first: the smallest list drives, and an empty partial result
+    stops early."""
+    cand = None
+    for d in sorted(lists, key=len):
+        cand = d if cand is None else cand[np.isin(cand, d, assume_unique=True)]
+        if not len(cand):
+            break
+    return cand
+
+
+def live(cand: np.ndarray, accept: np.ndarray | None,
+         tombstones: np.ndarray | None) -> np.ndarray:
+    """Sorted unique candidates minus docs outside the doc_filter bitmap
+    `accept` (None = no filter) and minus deleted docs — the
+    accepted-and-live predicate (Bits.intersectionOf acceptOrds, deletes;
+    GraphSearcher.search:202-214), applied before scoring."""
+    if accept is not None and len(cand):
+        cand = cand[np.isin(cand, accept, assume_unique=True)]
+    if tombstones is not None and len(tombstones) and len(cand):
+        cand = cand[~np.isin(cand, tombstones)]
+    return cand
+
+
+def accumulate(scores: np.ndarray, cand: np.ndarray, d: np.ndarray,
+               c: np.ndarray) -> int:
+    """scores[cand == d] += c for one term's postings (d sorted unique;
+    postings outside `cand` are ignored); returns how many matched.
+    Callers add terms in canonical sorted order, so every candidate sums
+    the same float64 terms in the same order as the oracle."""
+    pos = np.searchsorted(cand, d)
+    valid = pos < len(cand)
+    valid[valid] &= cand[pos[valid]] == d[valid]
+    scores[pos[valid]] += c[valid]
+    return int(valid.sum())
+
+
+def topk_after(cand: np.ndarray, scores: np.ndarray, k: int,
+               after: tuple[float, int] | None = None
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k (docids, scores), score desc then docid asc, of the rows
+    strictly after the `after` (score, docid) cursor. The cursor filters
+    BEFORE the cut: a segment may hold more than k rows at-or-before the
+    cursor, and cutting first would silently drop valid after-cursor
+    rows (resume correctness)."""
+    if after is not None:
+        a_s, a_d = after
+        keep = (scores < a_s) | ((scores == a_s) & (cand > a_d))
+        cand, scores = cand[keep], scores[keep]
+    top = np.lexsort((cand, -scores))[:k]
+    return cand[top], scores[top]
+
+
 def score_query_on_segment(
     reader: SegmentReader,
     terms: list[str],
@@ -384,21 +468,6 @@ def score_query_on_segment(
             cache[key] = reader.term_row(t)
         return cache[key]
 
-    def decode_full(t):
-        key = ("full", t)
-        if key not in cache:
-            cache[key] = reader.decode_term(t)
-        return cache[key]
-
-    def contrib_full(t):
-        """Full posting list scored once per segment, shared by every query
-        containing t (precomputed-query-table analog, SURVEY §4 row 5)."""
-        key = ("contrib", t)
-        if key not in cache:
-            d, tf = decode_full(t)
-            cache[key] = (d, idfs[t] * _tf_norm(tf, reader.doclen(d), avgdl))
-        return cache[key]
-
     rows = {t: term_row(t) for t in terms}
     block_ub: dict[str, np.ndarray] = {}
     term_ub = np.empty(len(terms))
@@ -447,6 +516,11 @@ def score_query_on_segment(
     gen: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     gen_mask: dict[str, np.ndarray] = {}
     cand_parts = []
+    # terms scored from their cached full-list contributions: already
+    # decoded, shared by >=2 queries of the batch, or pooled; a term
+    # whose generation decodes it fully joins below
+    hot, pooled = cache.get("_hot", ()), cache.get("_pooled")
+    full = {t: ("full", t) in cache or t in hot or pooled for t in terms}
     for i, t in enumerate(terms):
         if t in nonessential:
             gen_mask[t] = np.zeros(len(block_ub[t]), dtype=bool)
@@ -456,31 +530,23 @@ def score_query_on_segment(
         gen_mask[t] = mask
         if stats is not None:
             stats["blocks_gen"] = stats.get("blocks_gen", 0) + int(mask.sum())
-        if mask.all():
-            d, tf = decode_full(t)
-        elif (("full", t) in cache or t in cache.get("_hot", ())
-              or cache.get("_pooled") or mask.mean() > 0.5):
+        if full[t] or mask.mean() > 0.5:
             # slice the masked blocks out of the (cached) full decode —
             # pruning semantics preserved, decode amortized across queries
-            d_full, tf_full = decode_full(t)
-            ex = np.repeat(mask, np.asarray(rows[t]["block_n"], dtype=np.int64))
-            d, tf = d_full[ex], tf_full[ex]
+            d, tf = term_postings(reader, cache, t)
+            if not mask.all():
+                ex = np.repeat(mask, np.asarray(rows[t]["block_n"],
+                                                dtype=np.int64))
+                d, tf = d[ex], tf[ex]
+            full[t] = True
         else:
             d, tf = reader.decode_term(t, mask)
         gen[t] = (d, tf)
         cand_parts.append(d)
     if not cand_parts:
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    candidates = np.unique(np.concatenate(cand_parts))
-    if accept is not None:
-        # attribute-filter bitmap (acceptOrds): applied inside the search
-        candidates = candidates[
-            np.isin(candidates, accept, assume_unique=True)
-        ]
-    if tombstones is not None and len(tombstones):
-        candidates = candidates[
-            ~np.isin(candidates, tombstones, assume_unique=False)
-        ]
+    candidates = live(np.unique(np.concatenate(cand_parts)), accept,
+                      tombstones)
     if not len(candidates):
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
     if stats is not None:
@@ -490,25 +556,19 @@ def score_query_on_segment(
     scores = np.zeros(len(candidates), dtype=np.float64)
     for t in terms:
         r = rows[t]
-        if (("full", t) in cache or t in cache.get("_hot", ())
-                or cache.get("_pooled")):
-            d, c = contrib_full(t)
-            pos = np.searchsorted(candidates, d)
-            valid = pos < len(candidates)
-            valid[valid] &= candidates[pos[valid]] == d[valid]
-            scores[pos[valid]] += c[valid]
+        if full[t]:
+            n = accumulate(scores, candidates,
+                           *term_contrib(reader, cache, t, idfs[t], avgdl))
             if stats is not None:
-                stats["postings_scored"] = (
-                    stats.get("postings_scored", 0) + int(valid.sum())
-                )
+                stats["postings_scored"] = stats.get("postings_scored", 0) + n
             continue
         parts_d, parts_tf = [], []
         if t in gen:
             parts_d.append(gen[t][0])
             parts_tf.append(gen[t][1])
         # gather pass: non-generating blocks that overlap the candidate
-        # set (a fully-cached term can't reach here — the loop already
-        # took the contrib_full shortcut above)
+        # set (a fully-decoded term can't reach here — the loop already
+        # took the term_contrib shortcut above)
         gmask = ~gen_mask[t]
         if gmask.any():
             first = np.asarray(r["block_first"], dtype=np.int64)
@@ -550,87 +610,32 @@ def score_query_on_segment(
             stats["postings_scored"] = (
                 stats.get("postings_scored", 0) + int(len(d))
             )
-
-    if after is not None:
-        # cursor filter BEFORE the top-k cut: the segment may hold more
-        # than k results at-or-before the cursor, and cutting first would
-        # silently drop valid after-cursor rows (resume correctness)
-        a_s, a_d = after
-        keep = (scores < a_s) | ((scores == a_s) & (candidates > a_d))
-        candidates, scores = candidates[keep], scores[keep]
-    top = np.lexsort((candidates, -scores))[:k]
-    return candidates[top], scores[top]
+    return topk_after(candidates, scores, k, after)
 
 
-def score_conjunctive_on_segment(
-    reader: SegmentReader,
-    terms: list[str],
-    idfs: dict[str, float],
-    k: int,
-    avgdl: float,
-    tombstones: np.ndarray | None = None,
-    cache: dict | None = None,
-    accept: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Conjunctive (AND) top-k: only docs containing EVERY query term
-    score; scores are the same exact BM25 sums as the disjunctive path.
-    Doc-partitioned segments decide the conjunction locally (all of a
-    doc's postings live in its segment). Strict semantics: a query term
-    that is OOV corpus-wide (or absent from this segment) empties the
-    result — matching `HAVING count(DISTINCT term) = m` in SQL.
-
-    Candidates come from a cheapest-first docid-list intersection (no
-    block-max machinery needed — the intersection is already a stronger
-    filter than theta); scoring reuses the shared per-segment caches.
-    """
-    uniq_terms = sorted(set(terms))
-    if not uniq_terms or any(
-        t not in idfs or not reader.has_term(t) for t in uniq_terms
-    ):
+def _conjunctive_topk(seg: Segment, terms: list[str], idfs: dict[str, float],
+                     k: int, avgdl: float, tombstones: np.ndarray,
+                     after: tuple[float, int] | None
+                     ) -> tuple[np.ndarray, np.ndarray]:
+    """Conjunctive (AND) top-k: only docs holding EVERY query term score,
+    with the same exact BM25 sums as the disjunctive path. Segments are
+    doc-partitioned, so the conjunction is decided locally. Strict: a
+    term OOV corpus-wide (or absent from the segment) empties the result
+    — SQL's `HAVING count(DISTINCT term) = m`. The intersection is a
+    stronger filter than θ, so no block-max machinery runs."""
+    reader, cache = seg.reader, seg.cache
+    terms = sorted(set(terms))
+    if not terms or any(t not in idfs or not reader.has_term(t)
+                        for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    if cache is None:
-        cache = {}
-
-    def decode_full(t):
-        key = ("full", t)
-        if key not in cache:
-            cache[key] = reader.decode_term(t)
-        return cache[key]
-
-    def contrib_full(t):
-        key = ("contrib", t)
-        if key not in cache:
-            d, tf = decode_full(t)
-            cache[key] = (d, idfs[t] * _tf_norm(tf, reader.doclen(d), avgdl))
-        return cache[key]
-
-    lists = {t: decode_full(t)[0] for t in uniq_terms}
-    cand = None
-    for t in sorted(uniq_terms, key=lambda t: len(lists[t])):
-        cand = lists[t] if cand is None else cand[
-            np.isin(cand, lists[t], assume_unique=True)
-        ]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    if accept is not None:
-        cand = cand[np.isin(cand, accept, assume_unique=True)]
-    if tombstones is not None and len(tombstones):
-        cand = cand[~np.isin(cand, tombstones)]
-    if not len(cand):
-        return np.zeros(0, np.int64), np.zeros(0, np.float64)
-
+    cand = live(intersect(term_postings(reader, cache, t)[0] for t in terms),
+                seg.accept, tombstones)
     scores = np.zeros(len(cand), dtype=np.float64)
-    for t in uniq_terms:  # canonical sorted order (oracle bit-parity)
-        d, c = contrib_full(t)
-        pos = np.searchsorted(d, cand)
-        scores += c[pos]  # every candidate is in every list by construction
-    if after is not None:  # cursor filter before the cut (see disjunctive)
-        a_s, a_d = after
-        keep = (scores < a_s) | ((scores == a_s) & (cand > a_d))
-        cand, scores = cand[keep], scores[keep]
-    top = np.lexsort((cand, -scores))[:k]
-    return cand[top], scores[top]
+    if not len(cand):
+        return cand, scores
+    for t in terms:  # canonical sorted order (oracle bit-parity)
+        accumulate(scores, cand, *term_contrib(reader, cache, t, idfs[t], avgdl))
+    return topk_after(cand, scores, k, after)
 
 
 class _TopK:
@@ -813,10 +818,8 @@ def search_partition(
             # silently drop valid after-cursor rows
             q_after = after.get(qid)
             if mode == "and":
-                d, s = score_conjunctive_on_segment(
-                    seg.reader, qterms[qid], idfs, st.k, avgdl, qtomb[qid],
-                    seg_cache, seg.accept, after=q_after,
-                )
+                d, s = _conjunctive_topk(seg, qterms[qid], idfs, st.k, avgdl,
+                                         qtomb[qid], q_after)
             else:
                 d, s = score_query_on_segment(
                     seg.reader, qterms[qid], idfs, st.k,

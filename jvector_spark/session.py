@@ -77,7 +77,7 @@ def get_spark(
     # JVM, which inherits os.environ set before getOrCreate
     for k, v in _MALLOC_TUNING.items():
         os.environ.setdefault(k, v)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = _infer_shuffle_partitions(master)

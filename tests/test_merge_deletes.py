@@ -195,7 +195,8 @@ def test_deleted_docs_absent_from_every_operator(spark, index, corpus_pdf,
     doc would match (k covers the corpus) were its tombstone ignored."""
     from jvector_spark.functions.tokenizer import tokenize_series
     from jvector_spark.operators.boolquery import boolean_search_index
-    from jvector_spark.operators.facets import facet_counts, match_export
+    from jvector_spark.operators.facets import (
+        collapse_topk, facet_counts, match_export)
     from jvector_spark.operators.phrase import phrase_search
     from jvector_spark.operators.proximity import proximity_search
     from jvector_spark.operators.regex import regex_token_topk
@@ -223,6 +224,8 @@ def test_deleted_docs_absent_from_every_operator(spark, index, corpus_pdf,
     assert int(facets["n_docs"].sum()) == live_matches
     results = {
         "export": exported,
+        "and": search_index(spark, idx, terms_q, mode="and", merge="driver"),
+        "collapse": collapse_topk(spark, idx, terms_q, "repo").toPandas(),
         "boolean": boolean_search_index(spark, idx, pd.DataFrame({
             "qid": qids, "query": [" OR ".join(t) for t in probes],
             "k": k}), merge="driver"),

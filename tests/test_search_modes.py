@@ -80,17 +80,35 @@ def test_search_after_pagination(spark, index, oracle, queries_pdf):
         assert not p1 & set(got["docid"])
 
 
-def test_conjunctive_search(spark, index, oracle, queries_pdf):
+def test_conjunctive_search(spark, index, oracle, corpus_pdf, queries_pdf):
     """mode='and': results = exact BM25 over docs containing EVERY query
-    term; a query with an OOV term is empty (strict AND)."""
-    res = search_index(spark, index, queries_pdf, mode="and",
-                       merge="driver")
+    term; a query with an OOV term is empty (strict AND). Checked on page
+    1, under a lang='python' filter, and on page 2 via search-after."""
+    keyed = corpus_pdf.sort_values(["repo", "path", "commit"]).reset_index(drop=True)
+    python = np.flatnonzero((keyed["lang"] == "python").to_numpy())
+    page1 = search_index(spark, index, queries_pdf, mode="and",
+                         merge="driver")
+    filtered = search_index(spark, index, queries_pdf, mode="and",
+                            merge="driver", doc_filter={"lang": "python"})
+    cursors = {
+        int(qid): (float(g["score"].iloc[-1]), int(g["docid"].iloc[-1]))
+        for qid, g in page1.sort_values("rank").groupby("qid")
+    }
+    page2 = search_index(spark, index, queries_pdf, mode="and",
+                         merge="driver", after=cursors)
+
+    def check(res, qid, d, s):
+        got = res[res["qid"] == qid].sort_values("rank")
+        assert got["docid"].tolist() == d.tolist(), f"qid={qid}"
+        assert np.allclose(got["score"].to_numpy(), s, rtol=0, atol=0)
+
+    n_filtered = n_page2 = 0
     for q in queries_pdf.itertuples():
-        got = res[res["qid"] == q.qid].sort_values("rank")
         # oracle: intersect per-term posting docids, rank by full score
         terms = sorted(set(q.terms))
         if any(t not in oracle.postings for t in terms):
-            assert len(got) == 0
+            for res in (page1, filtered, page2):
+                assert not (res["qid"] == q.qid).any()
             continue
         cand = None
         for t in terms:
@@ -99,13 +117,17 @@ def test_conjunctive_search(spark, index, oracle, queries_pdf):
         docids, scores = oracle.score_query(list(q.terms))
         keep = np.isin(docids, cand)
         d, s = docids[keep], scores[keep]
-        order = np.lexsort((d, -s))[: int(q.k)]
-        assert got["docid"].tolist() == d[order].tolist(), f"qid={q.qid}"
-        assert np.allclose(got["score"].to_numpy(), s[order],
-                           rtol=0, atol=0)
+        order = np.lexsort((d, -s))
+        d, s, k = d[order], s[order], int(q.k)
+        check(page1, q.qid, d[:k], s[:k])
+        py = np.isin(d, python)
+        check(filtered, q.qid, d[py][:k], s[py][:k])
+        check(page2, q.qid, d[k: 2 * k], s[k: 2 * k])
+        n_filtered += bool((~py[:k]).any())
+        n_page2 += len(d) > k
+    # the filter drops some page-1 doc and some query reaches page 2
+    assert n_filtered and n_page2
     # an OOV term empties the whole query under strict AND
-    import pandas as pd
-
     oov = pd.DataFrame({"qid": [0], "terms": [["import", "zz_not_a_term"]],
                         "k": [5]})
     assert len(search_index(spark, index, oov, mode="and",
