@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.probes import StealSampler, membw_gbps  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 INDEX_DIR = "/tmp/jvector_bench_index"
@@ -230,75 +232,17 @@ SCALING_SEGMENTS = 64  # FIXED across parallelism levels: the job (input,
 # which is the honest analog of N vs 4N executors on one cluster
 
 
-class _StealSampler:
-    """Samples hypervisor CPU steal from /proc/stat once per second.
+def _steal_pct(sampler: StealSampler) -> dict[str, float]:
+    """Hypervisor steal over a sampled window, as percentages.
 
-    This sandbox is an oversubscribed guest: steal bursts of 10-50% hit
-    whenever many vCPUs are busy, and they poison wall-clock at exactly
-    the parallelism levels the scaling ratio needs. Each run therefore
-    reports its own avg/max steal so a reader (and the round judge) can
-    tell an engine-scaling number from a hypervisor artifact; best-of
-    interleaved selection keys on the LOW-steal runs.
+    On an oversubscribed VM guest, steal bursts of 10-50% poison
+    wall-clock at exactly the parallelism levels the scaling ratio needs,
+    so each run reports its own avg/max steal and best-of selection keys
+    on the low-steal runs.
     """
-
-    def __init__(self) -> None:
-        import threading
-
-        self.samples: list[float] = []
-        self._stop = threading.Event()
-        self._t = threading.Thread(target=self._loop, daemon=True)
-
-    @staticmethod
-    def _snap() -> list[int]:
-        with open("/proc/stat") as f:
-            return [int(x) for x in f.readline().split()[1:]]
-
-    def _loop(self) -> None:
-        prev = self._snap()
-        while not self._stop.wait(1.0):
-            cur = self._snap()
-            d = [y - x for x, y in zip(prev, cur)]
-            prev = cur
-            tot = sum(d)
-            if tot:
-                self.samples.append(d[7] / tot * 100.0)  # field 8 = steal
-
-    def __enter__(self):
-        self._t.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._t.join(timeout=2.0)
-        return False
-
-    def stats(self) -> dict[str, float]:
-        if not self.samples:
-            return {"steal_avg_pct": 0.0, "steal_max_pct": 0.0}
-        return {"steal_avg_pct": round(sum(self.samples) / len(self.samples), 1),
-                "steal_max_pct": round(max(self.samples), 1)}
-
-
-def _membw_probe(nbytes: int = 100_000_000, reps: int = 3) -> float:
-    """Single-thread memcpy bandwidth in GB/s (median of reps).
-
-    This sandbox's host oscillates between ~0.03 and ~2.6 GB/s single-
-    thread copy bandwidth (measured 100x swings minutes apart with <1%
-    steal), which is invisible to the steal counter yet decides whether a
-    16-worker memory-bound build can scale at all. Each scaling run
-    records the bandwidth window it saw so ratios can be read against
-    box state.
-    """
-    import numpy as np
-
-    src = np.ones(nbytes, dtype=np.uint8)
-    times = []
-    for _ in range(reps):
-        t0 = time.time()
-        src.copy()
-        times.append(time.time() - t0)
-    times.sort()
-    return round(nbytes / 1e9 / times[len(times) // 2], 2)
+    s = sampler.stats()
+    return {"steal_avg_pct": round(100.0 * s["steal_avg_share"], 1),
+            "steal_max_pct": round(100.0 * s["steal_max_share"], 1)}
 
 
 def scaling_run(cpus: str, corpus_path: str, queries) -> dict[str, float]:
@@ -336,8 +280,11 @@ def scaling_run(cpus: str, corpus_path: str, queries) -> dict[str, float]:
 
         docs.mapInPandas(_noop, "n long").count()
 
-        bw_before = _membw_probe()
-        with _StealSampler() as build_steal:
+        # on a shared VM, memcpy bandwidth can swing ~100x minutes apart
+        # with <1% steal, which decides whether a memory-bound build can
+        # scale at all
+        bw_before = round(membw_gbps(), 2)
+        with StealSampler() as build_steal:
             t0 = time.time()
             # assume_partitioned=False: the parquet re-read may pack files
             # into partitions arbitrarily, so the timed build includes the
@@ -346,7 +293,7 @@ def scaling_run(cpus: str, corpus_path: str, queries) -> dict[str, float]:
             build_sec = time.time() - t0
 
         search_secs = []
-        with _StealSampler() as search_steal:
+        with StealSampler() as search_steal:
             for i in range(3):  # run 0 = warmup, best of the rest reported
                 t0 = time.time()
                 # 16 tasks x 4 segments: within-task theta propagation beats
@@ -360,10 +307,10 @@ def scaling_run(cpus: str, corpus_path: str, queries) -> dict[str, float]:
                 assert len(res) > 0
         return {"build_sec": round(build_sec, 2),
                 "search_sec": round(min(search_secs[1:]), 2),
-                "build_steal_pct": build_steal.stats()["steal_avg_pct"],
-                "search_steal_pct": search_steal.stats()["steal_avg_pct"],
+                "build_steal_pct": _steal_pct(build_steal)["steal_avg_pct"],
+                "search_steal_pct": _steal_pct(search_steal)["steal_avg_pct"],
                 "membw_gbps_before": bw_before,
-                "membw_gbps_after": _membw_probe()}
+                "membw_gbps_after": round(membw_gbps(), 2)}
     finally:
         spark.stop()
 
@@ -386,10 +333,9 @@ def grid_run() -> None:
     recall reported per config; ThroughputBenchmark.java warmup protocol).
 
     Sweeps IVF nprobe and PQ rerank_k against the exact brute-force oracle
-    on the sf embeddings table, then sanity-checks on the reference's OWN
-    siftsmall query fvecs (the base fvecs are not shipped in this checkout,
-    so the 100 query vectors double as the corpus and the oracle is exact
-    brute force — recall of an exact config must be 1.0).
+    on the sf embeddings table, then on a synthetic 40k x 64 clustered
+    corpus where graph navigation matters; the oracle is exact brute force,
+    so recall of an exact config must be 1.0.
     """
     from jvector_spark.operators.ann import (
         brute_force_topk, ivf_topk, train_centroids)
@@ -578,13 +524,6 @@ def grid_run() -> None:
         emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
         sweep(os.path.basename(os.path.normpath(SF_DIR)), emb,
               n_clusters=16, m=8)
-
-        sift_q = "/root/reference/siftsmall/siftsmall_query.fvecs"
-        if os.path.exists(sift_q):
-            from jvector_spark.sources.vecfiles import fvecs_df
-
-            sweep("siftsmall_query_fvecs", fvecs_df(spark, sift_q),
-                  n_clusters=8, m=8)
 
         # SIFT-like corpus at a size where graph navigation matters (the
         # sf embeddings tables stop at 2k rows): deterministic mixture of
@@ -891,9 +830,9 @@ def main() -> None:
         }))
         return
 
-    with _StealSampler() as steal:
+    with StealSampler() as steal:
         times = one_run(CPUS, SF_DIR, INDEX_DIR)
-    times.update({f"_{k}": v for k, v in steal.stats().items()})
+    times.update({f"_{k}": v for k, v in _steal_pct(steal).items()})
     total = round(sum(v for k, v in times.items() if not k.startswith("_")), 3)
     print(json.dumps({
         "metric": "bm25_index_suite_total_sec",

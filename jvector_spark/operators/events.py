@@ -50,9 +50,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     gap-based sessionization: a session breaks when a user is idle longer
     than `gap_minutes`.
 
-    Batch twin of streaming/sessions.streaming_sessionize (the
-    applyInPandasWithState operator); same session boundaries, verifiable
-    in ANSI SQL. Timestamps compared at microsecond precision as float64
+    Timestamps compared at microsecond precision as float64
     epoch seconds (exact below 2^53 micro-units) — never unix_timestamp,
     which truncates to seconds and can move a boundary.
 

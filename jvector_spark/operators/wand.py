@@ -391,8 +391,8 @@ def live(cand: np.ndarray, accept: np.ndarray | None,
 
 def accumulate(scores: np.ndarray, cand: np.ndarray, d: np.ndarray,
                c: np.ndarray) -> int:
-    """scores[cand == d] += c for one term's postings (d sorted unique;
-    postings outside `cand` are ignored); returns how many matched.
+    """scores[cand == d] += c for one term's postings (d unique, in any
+    order; postings outside `cand` are ignored); returns how many matched.
     Callers add terms in canonical sorted order, so every candidate sums
     the same float64 terms in the same order as the oracle."""
     pos = np.searchsorted(cand, d)
@@ -429,22 +429,10 @@ def score_query_on_segment(
     cache: dict | None = None,
     accept: np.ndarray | None = None,
     stats: dict | None = None,
-    prune_epsilon: float = 0.0,
     after: tuple[float, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k (docids, scores) of one query against one segment,
     pruning with block-max bounds against incoming threshold theta.
-
-    `prune_epsilon` > 0 switches to APPROXIMATE aggressive pruning (the
-    relaxed-monotonicity analog, ScoreTracker.java:26-143 — skip
-    expansion earlier than provably safe): every pruning decision
-    (segment skip, MaxScore split, block generation) tests against
-    theta * (1 + prune_epsilon) instead of theta, so borderline blocks
-    whose upper bound clears theta by less than the margin never
-    generate candidates. Scores of SURVIVING candidates stay exact —
-    only recall is traded. Defaults to 0.0 (rank-identical mode), as
-    the reference defaults builders to usePruning(false)
-    (GraphIndexBuilder.java:330-334).
 
     `tombstones` (sorted int64) is the Bits-acceptOrds analog
     (GraphSearcher.search:202-214): excluded docids are dropped from the
@@ -490,10 +478,7 @@ def score_query_on_segment(
 
     blocks_total = int(sum(len(block_ub[t]) for t in terms))
     total_ub = float(term_ub.sum())
-    # pruning threshold only — result membership still uses the true theta
-    # upstream, and surviving candidates score exactly
-    theta_p = theta * (1.0 + prune_epsilon) if prune_epsilon > 0.0 else theta
-    if total_ub < theta_p:
+    if total_ub < theta:
         if stats is not None:
             stats["segments_skipped_ub"] = stats.get("segments_skipped_ub", 0) + 1
             stats["blocks_skipped"] = stats.get("blocks_skipped", 0) + blocks_total
@@ -507,7 +492,7 @@ def score_query_on_segment(
     # for docs already in the candidate set.
     order = np.argsort(term_ub, kind="stable")
     csum = np.cumsum(term_ub[order])
-    n_nonessential = int(np.searchsorted(csum, theta_p, side="left"))
+    n_nonessential = int(np.searchsorted(csum, theta, side="left"))
     nonessential = {terms[i] for i in order[:n_nonessential]}
 
     # candidate generation with per-block skipping (BMW): a block whose
@@ -526,7 +511,7 @@ def score_query_on_segment(
             gen_mask[t] = np.zeros(len(block_ub[t]), dtype=bool)
             continue
         other = total_ub - term_ub[i]
-        mask = block_ub[t] + other >= theta_p
+        mask = block_ub[t] + other >= theta
         gen_mask[t] = mask
         if stats is not None:
             stats["blocks_gen"] = stats.get("blocks_gen", 0) + int(mask.sum())
@@ -555,61 +540,32 @@ def score_query_on_segment(
     # exact scoring in canonical sorted-term order (oracle bit-parity)
     scores = np.zeros(len(candidates), dtype=np.float64)
     for t in terms:
-        r = rows[t]
         if full[t]:
-            n = accumulate(scores, candidates,
-                           *term_contrib(reader, cache, t, idfs[t], avgdl))
-            if stats is not None:
-                stats["postings_scored"] = stats.get("postings_scored", 0) + n
-            continue
-        parts_d, parts_tf = [], []
-        if t in gen:
-            parts_d.append(gen[t][0])
-            parts_tf.append(gen[t][1])
-        # gather pass: non-generating blocks that overlap the candidate
-        # set (a fully-decoded term can't reach here — the loop already
-        # took the term_contrib shortcut above)
-        gmask = ~gen_mask[t]
-        if gmask.any():
-            first = np.asarray(r["block_first"], dtype=np.int64)
-            last = np.asarray(r["block_last"], dtype=np.int64)
-            lo = np.searchsorted(candidates, first, side="left")
-            overlap = (lo < len(candidates)) & gmask
-            overlap[overlap] &= candidates[lo[overlap]] <= last[overlap]
-            d, tf = (
-                reader.decode_term(t, overlap)
-                if overlap.any()
-                else (np.zeros(0, np.int64), np.zeros(0, np.int64))
-            )
-            if len(d):
-                idx = np.searchsorted(candidates, d)
-                keep = (idx < len(candidates))
-                keep[keep] &= candidates[idx[keep]] == d[keep]
-                parts_d.append(d[keep])
-                parts_tf.append(tf[keep])
-        if not parts_d:
-            continue
-        d = np.concatenate(parts_d)
-        tf = np.concatenate(parts_tf)
-        if len(d) == 0:
-            continue
-        # membership check is mandatory: generated docids may have been
-        # dropped from `candidates` by the tombstone filter
-        pos = np.searchsorted(candidates, d)
-        valid = pos < len(candidates)
-        valid[valid] &= candidates[pos[valid]] == d[valid]
-        if not valid.all():
-            d, tf, pos = d[valid], tf[valid], pos[valid]
-        if len(d) == 0:
-            continue
-        contrib = idfs[t] * _tf_norm(tf, reader.doclen(d), avgdl)
-        # docids are unique within a term (gen/gather block sets are
-        # disjoint), so fancy-index add is safe and faster than np.add.at
-        scores[pos] += contrib
+            d, c = term_contrib(reader, cache, t, idfs[t], avgdl)
+        else:
+            parts = [gen[t]] if t in gen else []
+            # gather pass: non-generating blocks that overlap the
+            # candidate set
+            gmask = ~gen_mask[t]
+            if gmask.any():
+                r = rows[t]
+                first = np.asarray(r["block_first"], dtype=np.int64)
+                last = np.asarray(r["block_last"], dtype=np.int64)
+                lo = np.searchsorted(candidates, first, side="left")
+                overlap = (lo < len(candidates)) & gmask
+                overlap[overlap] &= candidates[lo[overlap]] <= last[overlap]
+                if overlap.any():
+                    parts.append(reader.decode_term(t, overlap))
+            if not parts:
+                continue
+            # gen and gather block sets are disjoint, so d is unique
+            d = np.concatenate([p[0] for p in parts])
+            tf = np.concatenate([p[1] for p in parts])
+            c = idfs[t] * _tf_norm(tf, reader.doclen(d), avgdl)
+        # the membership test also drops docids the live filter took out
+        n = accumulate(scores, candidates, d, c)
         if stats is not None:
-            stats["postings_scored"] = (
-                stats.get("postings_scored", 0) + int(len(d))
-            )
+            stats["postings_scored"] = stats.get("postings_scored", 0) + n
     return topk_after(candidates, scores, k, after)
 
 
@@ -734,7 +690,6 @@ def search_partition(
     mode: str = "or",
     pool: "SearcherPool | None" = None,
     exclude: dict | None = None,
-    prune_epsilon: float = 0.0,
 ) -> pd.DataFrame:
     """Score all queries against a list of segments sequentially, θ
     propagating segment-to-segment (the multi-sstable rerankFloor pattern).
@@ -824,8 +779,7 @@ def search_partition(
                 d, s = score_query_on_segment(
                     seg.reader, qterms[qid], idfs, st.k,
                     max(st.theta, min_score), avgdl, qtomb[qid],
-                    seg_cache, seg.accept, qstats, prune_epsilon,
-                    after=q_after,
+                    seg_cache, seg.accept, qstats, after=q_after,
                 )
             if min_score > 0.0 and len(s):
                 # membership at the floor compares RAW float64 sums on
@@ -868,7 +822,6 @@ def search_index(
     merge: str = "spark",
     mode: str = "or",
     exclude: dict | None = None,
-    prune_epsilon: float = 0.0,
 ) -> DataFrame | pd.DataFrame:
     """Distributed top-k BM25: scatter segments over tasks, per-task partial
     top-k (bounded k rows per query per task), global TakeOrderedAndProject
@@ -894,11 +847,6 @@ def search_index(
     (small); segments are the parallel dimension — at 10^12 docs this is
     thousands of segments fanned over the cluster, each task streaming its
     segments with θ propagation.
-
-    prune_epsilon > 0 enables opt-in APPROXIMATE aggressive pruning
-    (relaxed-monotonicity analog; see score_query_on_segment) — returned
-    scores stay exact, recall is traded for fewer block decodes. Keep 0.0
-    (default) for rank-identical mode.
     """
     snap = IndexSnapshot(index_dir)
     avgdl = snap.manifest["avgdl"]
@@ -911,7 +859,7 @@ def search_index(
         task_metrics: dict | None = {} if metrics_acc is not None else None
         yield search_partition(
             paths, q, idfs_l, avgdl, tomb, doc_filter, min_score, after,
-            task_metrics, mode, exclude=exclude, prune_epsilon=prune_epsilon,
+            task_metrics, mode, exclude=exclude,
         )
         if metrics_acc is not None:
             from pyspark import TaskContext

@@ -58,14 +58,7 @@ from pyspark.sql import DataFrame
 
 from jvector_spark import BLOCK_SIZE, SEGMENT_FORMAT_VERSION
 from jvector_spark.functions.codec import varint_decode, varint_encode, varint_nbytes
-from jvector_spark.functions.tokenizer import (
-    tokenize_factorized,
-    tokenize_series,
-)
-
-# Build-path tokenizer selection; both paths are property-tested
-# byte-identical (tests/test_tokenizer.py). See BENCH.md "tokenizer A/B".
-_ARROW_TOKENIZE = os.environ.get("SPARK_GRAFT_TOKENIZER", "pandas") == "arrow"
+from jvector_spark.functions.tokenizer import tokenize_series
 
 MANIFEST_SCHEMA = (
     "segment_id string, path string, status string, min_docid long, "
@@ -830,20 +823,11 @@ def _build_segment_stream(
         shas = pdf[content_col].map(
             lambda s: hashlib.sha256(s.encode()).hexdigest()
         )
-        # Two equivalence-tested tokenize+factorize paths (see BENCH.md
-        # "tokenizer A/B"): the Arrow byte-level path keeps the token
-        # stream in C buffers (no per-token PyObjects) but is pure
-        # sequential memory traffic, which this sandbox's degraded
-        # host-state punishes 10-20x unpredictably; the pandas twin is
-        # allocator-bound and stable here. Default pandas, env-switchable.
-        if _ARROW_TOKENIZE:
-            codes, uniq, lens = tokenize_factorized(pdf[content_col], mode)
-        else:
-            toks = tokenize_series(pdf[content_col], mode)
-            lens = toks.map(len).to_numpy(np.int64)
-            flat = np.fromiter(chain.from_iterable(toks), dtype=object,
-                               count=int(lens.sum()))
-            codes, uniq = pd.factorize(flat, sort=False)
+        toks = tokenize_series(pdf[content_col], mode)
+        lens = toks.map(len).to_numpy(np.int64)
+        flat = np.fromiter(chain.from_iterable(toks), dtype=object,
+                           count=int(lens.sum()))
+        codes, uniq = pd.factorize(flat, sort=False)
         doc_meta.append(pd.DataFrame({
             "docid": docids, "dl": lens,
             **{c: pdf[c] for c in key_cols},

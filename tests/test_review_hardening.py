@@ -161,70 +161,6 @@ def test_knn_rejects_zero_nprobe_and_ef(spark, tmp_path):
 
 # ------------------------------------------------- sweep 3 (sources etc) ---
 
-def test_hdf5_heap_free_list_is_valid(tmp_path):
-    """The local-heap tail free block is 16 bytes (next + size, size
-    counting itself) INSIDE the reserved heap data segment — regression
-    for the writer reserving 8 bytes and letting the size field spill
-    into the SNOD, which conforming HDF5 readers reject as a corrupt
-    free list (the in-repo reader ignores free lists, hiding it)."""
-    import struct
-
-    from jvector_spark.sources.hdf5_minimal import read_hdf5, write_hdf5
-
-    p = str(tmp_path / "t.h5")
-    X = np.arange(24, dtype=np.float32).reshape(6, 4)
-    write_hdf5(p, {"train": X,
-                   "neighbors": np.arange(12, dtype=np.int32).reshape(3, 4)})
-    assert np.array_equal(read_hdf5(p, "train"), X)
-    b = open(p, "rb").read()
-    i = b.find(b"HEAP")
-    _ver, dsz, headoff, dataaddr = struct.unpack("<B3xQQQ", b[i + 4:i + 32])
-    nxt, size = struct.unpack("<QQ", b[dataaddr + headoff:
-                                       dataaddr + headoff + 16])
-    assert nxt == 1 and size == 16  # last free block, spec-sized
-    assert headoff + size <= dsz    # inside the heap data segment
-
-
-def test_distributed_vec_readers_handle_empty_files(spark, tmp_path):
-    """Zero-record vector files load as empty DataFrames (matching the
-    driver-side readers) instead of crashing in repartition(0) or on the
-    missing first header."""
-    import struct
-
-    from jvector_spark.sources.vecfiles import (
-        read_bvecs_distributed, read_fbin_distributed,
-        read_fvecs_distributed)
-
-    empty = str(tmp_path / "e.fvecs")
-    open(empty, "wb").close()
-    df = read_fvecs_distributed(spark, empty)
-    assert df.count() == 0 and df.columns == ["vec_id", "embedding"]
-    assert read_bvecs_distributed(spark, str(tmp_path / "e.fvecs")).count() == 0
-    fb = str(tmp_path / "e.fbin")
-    with open(fb, "wb") as f:
-        f.write(struct.pack("<ii", 0, 16))  # header says n=0
-    assert read_fbin_distributed(spark, fb).count() == 0
-
-
-def test_distributed_fvecs_rejects_nonuniform_dims(spark, tmp_path):
-    """A dim header corrupted mid-file must fail loudly in the
-    distributed scan (as the driver-side reader does), never reinterpret
-    misaligned bytes as vector components."""
-    from pyspark.errors import PythonException
-
-    from jvector_spark.sources.vecfiles import read_fvecs_distributed
-
-    p = str(tmp_path / "bad.fvecs")
-    n, dim = 8, 4
-    rec = np.empty((n, 4 + 4 * dim), np.uint8)
-    rec[:, :4] = np.full((n, 1), dim, np.int32).view(np.uint8)
-    rec[:, 4:] = np.arange(n * dim, dtype="<f4").reshape(n, dim).view(np.uint8)
-    rec[5, :4] = np.full((1,), 7, np.int32).view(np.uint8)  # rot one header
-    rec.tofile(p)
-    with pytest.raises(PythonException, match="non-uniform fvecs"):
-        read_fvecs_distributed(spark, p, num_partitions=2).collect()
-
-
 def test_generate_queries_tiny_corpus_falls_back_to_full_vocab():
     """A corpus with <2 distinct terms leaves the mid band empty; query
     generation must fall back to the full vocabulary, not crash on

@@ -186,40 +186,6 @@ def test_streaming_rollup_matches_batch(spark, tmp_path_factory):
     assert np.allclose(g["sum_value"], e["sum_value"], atol=1e-6)
 
 
-def test_stateful_sessionize_matches_batch(spark, tmp_path_factory):
-    """applyInPandasWithState sessionization: closed sessions emitted by
-    the stream equal the batch operator's sessions minus each user's final
-    (still-open) session."""
-    import shutil
-
-    from jvector_spark.operators.events import sessionize
-    from jvector_spark.streaming.sessions import streaming_sessionize
-
-    src = str(tmp_path_factory.mktemp("sess_src"))
-    shutil.copy("/root/testdata/sf0.001/events.parquet",
-                os.path.join(src, "events.parquet"))
-    events = spark.read.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_sessionize(stream, gap_minutes=30)
-    q = (
-        out.writeStream.format("memory").queryName("sessions")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from sessions").toPandas()
-
-    exp = sessionize(events, gap_minutes=30).toPandas()
-    # drop each user's final session (still open in the stream's state)
-    last = exp.groupby("user_id")["session_idx"].transform("max")
-    exp_closed = exp[exp["session_idx"] < last]
-    g = got.sort_values(["user_id", "session_idx"]).reset_index(drop=True)
-    e = exp_closed.sort_values(["user_id", "session_idx"]).reset_index(drop=True)
-    assert len(g) == len(e)
-    for col in ["user_id", "session_idx", "n_events", "start_sec", "end_sec"]:
-        assert (g[col].to_numpy() == e[col].to_numpy()).all(), col
-    assert np.allclose(g["sum_value"], e["sum_value"], atol=1e-6)
-
-
 def test_sessionize_matches_spark_builtin_session_window(spark):
     """Cross-validate the custom gap sessionizer against Spark's OWN
     F.session_window aggregation (30-min gap): same session count, same
@@ -245,82 +211,6 @@ def test_sessionize_matches_spark_builtin_session_window(spark):
     assert a["user_id"].tolist() == b["user_id"].tolist()
     assert a["n_events"].tolist() == b["n_events"].tolist()
     assert a["start_sec"].tolist() == b["start_sec"].tolist()
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving the session fn directly
-    (batch-by-batch control the streaming harness can't give)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def setTimeoutDuration(self, *_):
-        pass
-
-
-def _drive_session(fn, state, rows):
-    ts = pd.to_datetime([r[0] for r in rows], unit="s")
-    pdf = pd.DataFrame({
-        "ts": ts,
-        "event_id": np.arange(len(rows), dtype=np.int64),
-        "value": np.array([r[1] for r in rows], dtype=np.float64),
-    })
-    return list(fn((7,), iter([pdf]), state))
-
-
-def test_session_late_event_does_not_regress_boundary():
-    """A late event (older than the open session's last-seen ts, within
-    the gap) must not regress the stored max: the next batch's gap test
-    compares against the true max, like the batch twin (review finding:
-    state stored the late batch's end, splitting sessions the batch twin
-    keeps whole)."""
-    from jvector_spark.streaming.sessions import _session_fn_factory
-
-    fn = _session_fn_factory(gap_sec=1800.0)
-    st = _FakeState()
-    assert _drive_session(fn, st, [(500, 1.0), (1000, 1.0)]) == []
-    assert _drive_session(fn, st, [(900, 1.0)]) == []  # late, absorbed
-    assert st.get[1] == 1000.0  # stored max did NOT regress to 900
-    # 2750 - 1000 = 1750 <= 1800: same session continues (pre-fix the
-    # regressed max closed it at a phantom boundary)
-    out = _drive_session(fn, st, [(2750, 1.0)])
-    assert out == []
-    s_idx, last, n0, val0, start0 = st.get
-    assert (last, n0, start0) == (2750.0, 4, 500.0)
-    # closing emission carries the true extent
-    closed = _drive_session(fn, st, [(99999, 0.0)])
-    row = closed[0].iloc[0]
-    assert (row["start_sec"], row["end_sec"], row["n_events"]) == (500, 2750, 4)
-
-
-def test_session_rounding_is_half_up_like_batch_twin(spark):
-    """sum_value rounds HALF_UP (Spark F.round semantics), not numpy's
-    half-to-even: a session summing to an exactly-representable tie like
-    0.03125 must emit 0.0313, as the batch twin does."""
-    from pyspark.sql import functions as F
-
-    from jvector_spark.streaming.sessions import _session_fn_factory
-
-    fn = _session_fn_factory(gap_sec=1800.0)
-    st = _FakeState()
-    _drive_session(fn, st, [(0, 0.03125)])
-    out = _drive_session(fn, st, [(100000, 1.0)])
-    got = float(out[0]["sum_value"].iloc[0])
-    exp = spark.range(1).select(
-        F.round(F.lit(0.03125), 4).alias("r")).collect()[0]["r"]
-    assert got == exp == 0.0313
-    assert got != np.round(0.03125, 4)  # the half-even value (0.0312)
 
 
 def test_within_batch_duplicate_keys_index_once(spark, corpus_pdf,
