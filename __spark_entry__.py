@@ -434,9 +434,7 @@ def q_collapse_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = _ensure_index(spark, sf_dir)
     qpdf = _qpdf(k_mult=1)
-    partial = collapse_topk(spark, index_dir, qpdf, "source")
-    return rank_collapsed(
-        partial, {int(r.qid): int(r.k) for r in qpdf.itertuples()})
+    return rank_collapsed(collapse_topk(spark, index_dir, qpdf, "source"))
 
 
 # fuzzy (edit-distance) queries: misspellings whose Levenshtein

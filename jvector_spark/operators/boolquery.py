@@ -41,9 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.operators.wand import (
-    IndexSnapshot, _TopK, _topk_frame, accumulate, global_term_stats,
-    idf_map, intersect, live, open_segments, term_contrib, term_postings,
-    topk_after,
+    IndexSnapshot, accumulate, global_term_stats, idf_map, intersect, live,
+    open_segments, term_contrib, term_postings, topk_after, topk_partial,
 )
 
 # --- AST ------------------------------------------------------------------
@@ -303,12 +302,11 @@ def boolean_search_index(
     driver (syntax errors surface before any job launches) and broadcast.
     Returns (qid, rank, docid, score).
     """
-    asts = {int(r.qid): parse_query(str(r.query))
-            for r in queries.itertuples()}
-    ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
+    qa = queries[["qid", "k"]].assign(
+        ast=[parse_query(str(q)) for q in queries["query"]])
     # positive terms drive the bloom skip too: every match has >=1
     # positive term (negated terms never create matches)
-    pos_terms = sorted({leaf.text for a in asts.values()
+    pos_terms = sorted({leaf.text for a in qa["ast"]
                         for leaf in positive_leaves(a)})
     snap = IndexSnapshot(index_dir)
     avgdl = snap.manifest["avgdl"]
@@ -317,18 +315,15 @@ def boolean_search_index(
                    if pos_terms else {})
 
     def kernel(paths, tomb, payload):
-        asts_l, idfs_l = payload
-        states = {qid: _TopK(ks[qid]) for qid in asts_l}
-        for seg in open_segments(paths, tomb, pos_terms, doc_filter):
-            for qid, st in states.items():
-                st.push(*score_boolean_on_segment(
-                    seg.reader, asts_l[qid], idfs_l, st.k, avgdl,
-                    seg.tombstones, seg.cache, seg.accept,
-                ))
-        yield _topk_frame(states)
+        q, idfs_l = payload
+        yield topk_partial(
+            open_segments(paths, tomb, pos_terms, doc_filter), q,
+            lambda seg, r, top: score_boolean_on_segment(
+                seg.reader, r.ast, idfs_l, top.k, avgdl, seg.tombstones,
+                seg.cache, seg.accept))
 
-    return snap.scatter_topk(spark, kernel, (asts, idfs), "score", ks,
-                             merge, num_tasks)
+    return snap.scatter_topk(spark, kernel, (qa, idfs), "score", merge,
+                             num_tasks)
 
 
 # --- oracle SQL generation ------------------------------------------------

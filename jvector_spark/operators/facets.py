@@ -51,6 +51,32 @@ def _matched_docids(seg, terms: list[str]) -> np.ndarray:
     return seg.cache[key]
 
 
+def _or_queries(queries: pd.DataFrame) -> pd.DataFrame:
+    """queries with each term list canonical (sorted, unique) — the
+    _matched_docids memo key."""
+    return queries.assign(terms=[sorted(set(ts)) for ts in queries["terms"]])
+
+
+def _probe(queries: pd.DataFrame) -> list[str]:
+    """Every term of `queries`: an OR match holds at least one of them."""
+    return sorted({t for ts in queries["terms"] for t in ts})
+
+
+def _or_matches(paths, tomb, queries: pd.DataFrame, doc_filter: dict | None
+                ) -> Iterator[tuple]:
+    """(segment, query row, matched docids) of every non-empty OR match
+    of _or_queries rows over one task's segments — the scan the facet,
+    collapse, stats, histogram and export aggregators share."""
+    from jvector_spark.operators.wand import open_segments
+
+    rows = list(queries.itertuples(index=False))
+    for seg in open_segments(paths, tomb, _probe(queries), doc_filter):
+        for q in rows:
+            d = _matched_docids(seg, q.terms)
+            if len(d):
+                yield seg, q, d
+
+
 def _attr_values(reader, attr: str,
                  d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(docids, int64 attr values) for matched docids `d`, with NULL-attr
@@ -93,36 +119,30 @@ def facet_counts(
     facet value if it contains ANY query term (deleted docs excluded,
     doc_filter honored — the counts agree with what filtered search
     would return)."""
-    from jvector_spark.operators.wand import IndexSnapshot, open_segments
+    from jvector_spark.operators.wand import IndexSnapshot
 
     snap = IndexSnapshot(index_dir)
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    probe = sorted({t for ts in qterms.values() for t in ts})
 
-    def kernel(paths, tomb, qt):
-        for seg in open_segments(paths, tomb, probe, doc_filter):
+    def kernel(paths, tomb, qs):
+        for seg, q, d in _or_matches(paths, tomb, qs, doc_filter):
+            # dropna=False: SQL GROUP BY keeps one NULL group — silently
+            # omitting null-attribute matches would under-count vs the
+            # oracle (collapse_topk already preserves the distinct null
+            # group the same way)
             vals = seg.reader.doc_attribute(facet_col)
-            for qid, terms in qt.items():
-                d = _matched_docids(seg, terms)
-                if not len(d):
-                    continue
-                # dropna=False: SQL GROUP BY keeps one NULL group —
-                # silently omitting null-attribute matches would
-                # under-count vs the oracle (collapse_topk already
-                # preserves the distinct null group the same way)
-                counts = (pd.Series(vals[d - seg.reader._min_docid])
-                          .value_counts(dropna=False))
-                facet_vals = [
-                    None if (v is None or (isinstance(v, float) and v != v))
-                    else str(v)
-                    for v in counts.index.tolist()]
-                yield pd.DataFrame({
-                    "qid": np.int64(qid),
-                    "facet": pd.Series(facet_vals, dtype=object),
-                    "n_docs": counts.to_numpy(np.int64),
-                })
+            counts = (pd.Series(vals[d - seg.reader._min_docid])
+                      .value_counts(dropna=False))
+            facet_vals = [
+                None if (v is None or (isinstance(v, float) and v != v))
+                else str(v)
+                for v in counts.index.tolist()]
+            yield pd.DataFrame({
+                "qid": np.int64(q.qid),
+                "facet": pd.Series(facet_vals, dtype=object),
+                "n_docs": counts.to_numpy(np.int64),
+            })
 
-    partial = snap.scatter(spark, kernel, qterms,
+    partial = snap.scatter(spark, kernel, _or_queries(queries),
                            "qid long, facet string, n_docs long", num_tasks)
     # the only shuffle: |queries| x |facet values| rows, corpus-size-free
     return partial.groupBy("qid", "facet").agg(
@@ -139,8 +159,9 @@ def collapse_topk(
     doc_filter: dict | None = None,
 ) -> DataFrame:
     """Top-k groups per query, each represented by its best doc:
-    (qid, group, docid, score) — ranked by the caller (group-best score
-    desc, docid asc).
+    (qid, grp, docid, score, k) partials — one row per (segment, query,
+    group) — for rank_collapsed to rank (group-best score desc, docid
+    asc) and cut at each row's k.
 
     queries: pandas (qid:int, terms:list[str], k:int). Matched docs are
     scored exactly (full BM25 sums, no pruning — every group must see its
@@ -149,54 +170,48 @@ def collapse_topk(
     asc) so the chosen representative agrees with the SQL oracle even at
     sub-1e-6 score ties."""
     from jvector_spark.operators.wand import (
-        IndexSnapshot, accumulate, global_term_stats, idf_map,
-        open_segments, term_contrib,
+        IndexSnapshot, accumulate, global_term_stats, idf_map, term_contrib,
     )
 
     snap = IndexSnapshot(index_dir)
     avgdl = snap.manifest["avgdl"]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    probe = sorted({t for ts in qterms.values() for t in ts})
+    qs = _or_queries(queries)
+    probe = _probe(qs)
     idfs = idf_map(snap.manifest["n_docs"],
                    global_term_stats(spark, index_dir, probe)
                    if probe else {})
 
     def kernel(paths, tomb, payload):
-        qt, idfs_l = payload
-        for seg in open_segments(paths, tomb, probe, doc_filter):
-            grp = seg.reader.doc_attribute(collapse_col)
-            for qid, terms in qt.items():
-                # exact full scoring of every match, terms in sorted order
-                d = _matched_docids(seg, terms)
-                if not len(d):
-                    continue
-                s = np.zeros(len(d), dtype=np.float64)
-                for t in terms:
-                    accumulate(s, d, *term_contrib(seg.reader, seg.cache, t,
-                                                   idfs_l.get(t, 0.0), avgdl))
-                g = grp[d - seg.reader._min_docid]
-                # segment-local group-best: rounded-score desc, docid asc.
-                # HALF_UP rounding (floor(x*1e6+0.5) for the nonnegative
-                # BM25 scores), NOT np.round's half-to-even: the global
-                # merge orders by Spark F.round (HALF_UP), and the two
-                # phases must agree on which group member survives even
-                # at an exact .5e-6 boundary
-                s_key = np.floor(s * 1e6 + 0.5)
-                order = np.lexsort((d, -s_key))
-                # null collapse values stay SQL NULL (one distinct null
-                # group, like GROUP BY) — never stringified to "None",
-                # which would collide with a legitimate 'None' value
-                g_sel = pd.Series(g[order])
-                g_col = np.where(g_sel.notna(),
-                                 g_sel.astype(str), None)
-                yield pd.DataFrame({
-                    "qid": np.int64(qid), "grp": g_col,
-                    "docid": d[order], "score": s[order],
-                }).drop_duplicates("grp", keep="first")
+        q_l, idfs_l = payload
+        for seg, q, d in _or_matches(paths, tomb, q_l, doc_filter):
+            # exact full scoring of every match, terms in sorted order
+            s = np.zeros(len(d), dtype=np.float64)
+            for t in q.terms:
+                accumulate(s, d, *term_contrib(seg.reader, seg.cache, t,
+                                               idfs_l.get(t, 0.0), avgdl))
+            g = seg.reader.doc_attribute(collapse_col)[
+                d - seg.reader._min_docid]
+            # segment-local group-best: rounded-score desc, docid asc.
+            # HALF_UP rounding (floor(x*1e6+0.5) for the nonnegative BM25
+            # scores), NOT np.round's half-to-even: the global merge
+            # orders by Spark F.round (HALF_UP), and the two phases must
+            # agree on which group member survives even at an exact
+            # .5e-6 boundary
+            s_key = np.floor(s * 1e6 + 0.5)
+            order = np.lexsort((d, -s_key))
+            # null collapse values stay SQL NULL (one distinct null
+            # group, like GROUP BY) — never stringified to "None", which
+            # would collide with a legitimate 'None' value
+            g_sel = pd.Series(g[order])
+            g_col = np.where(g_sel.notna(), g_sel.astype(str), None)
+            yield pd.DataFrame({
+                "qid": np.int64(q.qid), "grp": g_col,
+                "docid": d[order], "score": s[order], "k": np.int64(q.k),
+            }).drop_duplicates("grp", keep="first")
 
-    return snap.scatter(spark, kernel, (qterms, idfs),
-                        "qid long, grp string, docid long, score double",
-                        num_tasks)
+    return snap.scatter(
+        spark, kernel, (qs, idfs),
+        "qid long, grp string, docid long, score double, k long", num_tasks)
 
 
 def _sidecar_attr_best_signv(seg_path: str, attr: str,
@@ -230,62 +245,51 @@ def _sidecar_attr_best_signv(seg_path: str, attr: str,
 
 def sorted_scan_partition(
     paths: list[str],
-    qterms: dict[int, list[str]],
-    ks: dict[int, int],
+    queries: pd.DataFrame,
     tombstones,  # np.ndarray | plans.merge.TombstoneView | None
     doc_filter: dict | None,
     attr: str,
     sign: int,
     reader_cls=None,
-) -> Iterator[pd.DataFrame]:
+) -> pd.DataFrame:
     """One task's sorted-search scan over its segment list, with θ
-    propagation + stats-based segment skip (see sorted_search). Module-
-    level so the skip behavior is directly testable in-process;
-    `reader_cls` lets tests observe which segments actually open."""
-    from jvector_spark.operators.wand import open_segments
+    propagation + stats-based segment skip (see sorted_search):
+    topk_partial rows (qid, docid, sort_key, k) of queries (qid, terms,
+    k), where sort_key = -sign·attr is the value merge_topk ranks
+    descending. Module-level so the skip behavior is directly testable
+    in-process; `reader_cls` lets tests observe which segments actually
+    open."""
+    from jvector_spark.operators.wand import open_segments, topk_partial
     from jvector_spark.sources.segment import SegmentReader
 
-    probe = sorted({t for ts in qterms.values() for t in ts})
-    # kept sign*v values per query across THIS task's segments (the θ
-    # state); θ_q = worst kept value once k are held
-    kept: dict[int, np.ndarray] = {q: np.zeros(0, np.int64) for q in qterms}
+    queries = _or_queries(queries)
+    # best achievable sort_key per segment (None: no stats, never skip)
     best: dict[str, int | None] = {}
 
-    def beyond(q: int, best_signv: int | None) -> bool:
-        """Query q's kept top-k strictly beats anything in the segment."""
-        return (best_signv is not None and len(kept[q]) >= ks[q]
-                and best_signv > kept[q][-1])
+    def segments(tops):
+        def unskipped() -> Iterator[str]:
+            # lazily consumed by open_segments, so each skip decision
+            # sees the θ state left by every segment before it
+            for path in paths:
+                b = _sidecar_attr_best_signv(path, attr, sign)
+                best[path] = None if b is None else -b
+                if b is not None and all(t.closed(best[path])
+                                         for t in tops.values()):
+                    continue  # no query can improve: metadata-only skip
+                yield path
 
-    def unskipped() -> Iterator[str]:
-        # lazily consumed by open_segments, so each skip decision sees
-        # the θ state left by every segment before it
-        for path in paths:
-            b = best[path] = _sidecar_attr_best_signv(path, attr, sign)
-            if b is not None and all(ks[q] <= 0 or beyond(q, b)
-                                     for q in qterms):
-                continue  # no query can improve: metadata-only skip
-            yield path
+        return open_segments(unskipped(), tombstones, _probe(queries),
+                             doc_filter, reader_cls=reader_cls or SegmentReader)
 
-    for seg in open_segments(unskipped(), tombstones, probe, doc_filter,
-                             reader_cls=reader_cls or SegmentReader):
-        for qid, terms in qterms.items():
-            if ks[qid] <= 0:
-                continue  # k=0: legal degenerate query, returns no rows
-            if beyond(qid, best[seg.path]):
-                continue  # this query is already beyond the segment
-            d = _matched_docids(seg, terms)
-            if not len(d):
-                continue
-            d, v = _attr_values(seg.reader, attr, d)
-            if not len(d):
-                continue
-            top = np.lexsort((d, sign * v))[: ks[qid]]
-            kept[qid] = np.sort(
-                np.concatenate((kept[qid], sign * v[top]))
-            )[: ks[qid]]
-            yield pd.DataFrame({
-                "qid": np.int64(qid), "docid": d[top],
-                "sort_key": v[top]})
+    def match(seg, q, top):
+        # closed: k=0 (a legal degenerate query, no rows), or this query
+        # is already beyond the segment
+        d = (np.zeros(0, np.int64) if top.closed(best[seg.path])
+             else _matched_docids(seg, q.terms))
+        d, v = _attr_values(seg.reader, attr, d) if len(d) else (d, d)
+        return d, -sign * v
+
+    return topk_partial(segments, queries, match, "sort_key")
 
 
 def sorted_search(
@@ -308,7 +312,7 @@ def sorted_search(
     scores are computed — term postings decode docids only, and the
     attribute comes from the doclen array (`attr="dl"`) or one cached
     docs-sidecar column read per (segment, attr). Top-k by attribute is
-    mergeable, so partials are cut to k per (segment, query) before the
+    mergeable, so partials are cut to k per (task, query) before the
     shuffle.
 
     Segment-skip pruning (the attribute-sort analog of BM25's block-max +
@@ -322,19 +326,13 @@ def sorted_search(
     from jvector_spark.operators.wand import IndexSnapshot
 
     snap = IndexSnapshot(index_dir)
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
-    sign = 1 if ascending else -1  # lexsort ascending on sign*v
+    sign = 1 if ascending else -1  # merge_topk ranks -sign*v desc
 
-    def kernel(paths, tomb, qt):
-        for pdf in sorted_scan_partition(paths, qt, ks, tomb, doc_filter,
-                                         attr, sign):
-            # merge_topk ranks value desc: ascending merges on -v
-            pdf["sort_key"] *= -sign
-            yield pdf
+    def kernel(paths, tomb, qs):
+        yield sorted_scan_partition(paths, qs, tomb, doc_filter, attr, sign)
 
-    merged = snap.scatter_topk(spark, kernel, qterms, "sort_key", ks, merge,
-                               num_tasks)
+    merged = snap.scatter_topk(spark, kernel, queries[["qid", "terms", "k"]],
+                               "sort_key", merge, num_tasks)
     if not ascending:
         return merged
     if merge == "driver":
@@ -343,14 +341,13 @@ def sorted_search(
     return merged.withColumn("sort_key", -F.col("sort_key"))
 
 
-def rank_collapsed(partial: DataFrame, ks: dict[int, int]) -> DataFrame:
+def rank_collapsed(partial: DataFrame) -> DataFrame:
     """Global merge of collapse partials: best row per (qid, grp), then
-    top-k groups per qid by (round(score,6) desc, docid asc). Returns
-    (qid, rank, grp, docid, score) with rounded display scores."""
+    top-k groups per qid by (round(score,6) desc, docid asc), cut at each
+    row's k. Returns (qid, rank, grp, docid, score) with rounded display
+    scores."""
     from pyspark.sql import Window
 
-    kmap = F.create_map(*[x for qid, k in ks.items()
-                          for x in (F.lit(qid), F.lit(k))])
     w_g = Window.partitionBy("qid", "grp").orderBy(
         F.desc(F.round("score", 6)), F.asc("docid"))
     w_q = Window.partitionBy("qid").orderBy(
@@ -359,7 +356,7 @@ def rank_collapsed(partial: DataFrame, ks: dict[int, int]) -> DataFrame:
         partial.withColumn("grn", F.row_number().over(w_g))
         .where(F.col("grn") == 1)
         .withColumn("rn", F.row_number().over(w_q))
-        .where(F.col("rn") <= kmap[F.col("qid")])
+        .where(F.col("rn") <= F.col("k"))
         .select(
             F.col("qid").cast("long").alias("qid"),
             (F.col("rn") - 1).cast("int").alias("rank"),
@@ -387,29 +384,21 @@ def attr_stats(
     |queries|-row groupBy — corpus rows never shuffle. avg is derived
     from (sum, n) after the merge and rounded to 6 for cross-engine
     display parity."""
-    from jvector_spark.operators.wand import IndexSnapshot, open_segments
+    from jvector_spark.operators.wand import IndexSnapshot
 
     snap = IndexSnapshot(index_dir)
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    probe = sorted({t for ts in qterms.values() for t in ts})
 
-    def kernel(paths, tomb, qt):
-        for seg in open_segments(paths, tomb, probe, doc_filter):
-            for qid, terms in qt.items():
-                d = _matched_docids(seg, terms)
-                if not len(d):
-                    continue
-                _, v = _attr_values(seg.reader, attr, d)
-                if not len(v):
-                    continue  # every matched doc had a null attr
+    def kernel(paths, tomb, qs):
+        for seg, q, d in _or_matches(paths, tomb, qs, doc_filter):
+            _, v = _attr_values(seg.reader, attr, d)
+            if len(v):  # else every matched doc had a null attr
                 yield pd.DataFrame({
-                    "qid": [np.int64(qid)], "n_docs": [len(v)],
-                    "min_attr": [int(v.min())],
-                    "max_attr": [int(v.max())],
+                    "qid": [np.int64(q.qid)], "n_docs": [len(v)],
+                    "min_attr": [int(v.min())], "max_attr": [int(v.max())],
                     "sum_attr": [int(v.sum())]})
 
     partial = snap.scatter(
-        spark, kernel, qterms,
+        spark, kernel, _or_queries(queries),
         "qid long, n_docs long, min_attr long, max_attr long, sum_attr long",
         num_tasks)
     return (
@@ -438,30 +427,23 @@ def attr_histogram(
     the timestamp): (qid, bin, n_docs) where bin = floor(attr/width)*width.
     Same scale shape as facet_counts — per-segment binned counts, then a
     (qid × bins)-row final reduce; corpus rows never shuffle."""
-    from jvector_spark.operators.wand import IndexSnapshot, open_segments
+    from jvector_spark.operators.wand import IndexSnapshot
 
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
     snap = IndexSnapshot(index_dir)
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    probe = sorted({t for ts in qterms.values() for t in ts})
     w = int(bin_width)
 
-    def kernel(paths, tomb, qt):
-        for seg in open_segments(paths, tomb, probe, doc_filter):
-            for qid, terms in qt.items():
-                d = _matched_docids(seg, terms)
-                if not len(d):
-                    continue
-                _, v = _attr_values(seg.reader, attr, d)
-                if not len(v):
-                    continue
+    def kernel(paths, tomb, qs):
+        for seg, q, d in _or_matches(paths, tomb, qs, doc_filter):
+            _, v = _attr_values(seg.reader, attr, d)
+            if len(v):
                 bins, counts = np.unique((v // w) * w, return_counts=True)
                 yield pd.DataFrame({
-                    "qid": np.int64(qid), "bin": bins,
+                    "qid": np.int64(q.qid), "bin": bins,
                     "n_docs": counts.astype(np.int64)})
 
-    partial = snap.scatter(spark, kernel, qterms,
+    partial = snap.scatter(spark, kernel, _or_queries(queries),
                            "qid long, bin long, n_docs long", num_tasks)
     return partial.groupBy("qid", "bin").agg(
         F.sum("n_docs").alias("n_docs"))
@@ -484,21 +466,16 @@ def match_export(
     merge is needed — the result is already disjoint across tasks). At
     10^12 docs this is the write-straight-to-parquet shape; bound it
     upstream with doc_filter if the match set must be narrowed."""
-    from jvector_spark.operators.wand import IndexSnapshot, open_segments
+    from jvector_spark.operators.wand import IndexSnapshot
 
     snap = IndexSnapshot(index_dir)
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    probe = sorted({t for ts in qterms.values() for t in ts})
 
-    def kernel(paths, tomb, qt):
-        for seg in open_segments(paths, tomb, probe, doc_filter):
-            for qid, terms in qt.items():
-                d = _matched_docids(seg, terms)
-                if len(d):
-                    yield pd.DataFrame({"qid": np.int64(qid), "docid": d})
+    def kernel(paths, tomb, qs):
+        for _, q, d in _or_matches(paths, tomb, qs, doc_filter):
+            yield pd.DataFrame({"qid": np.int64(q.qid), "docid": d})
 
-    return snap.scatter(spark, kernel, qterms, "qid long, docid long",
-                        num_tasks)
+    return snap.scatter(spark, kernel, _or_queries(queries),
+                        "qid long, docid long", num_tasks)
 
 
 def match_count(

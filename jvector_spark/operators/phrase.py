@@ -19,9 +19,9 @@ Scale shape (same scatter/gather as wand.search_index): phrases broadcast;
 segments are the parallel dimension; per segment, candidate docs come from
 the docid-intersection of the phrase's term postings FIRST — positions
 (the big stream) decode only for blocks containing surviving candidates.
-Partial results are bounded at k per (segment, query) — a per-segment
-lexsort cut in rank order, mergeable because top-k of n_matches composes
-across segments — then merged by a window/driver rank like search_index.
+Partial results are bounded at k per (task, query) by the shared
+collector wand.topk_partial — top-k of n_matches composes across
+segments — then merged by a window/driver rank like search_index.
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
 from jvector_spark.operators.wand import (
-    IndexSnapshot, _partial_frame, intersect, live, open_segments)
+    IndexSnapshot, intersect, live, open_segments, overlapping_blocks,
+    term_postings, topk_partial)
 from jvector_spark.sources.segment import SegmentReader
 
 
@@ -41,12 +42,7 @@ def _positions_by_doc(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(docids, tfs, flat_positions) restricted to blocks overlapping the
     sorted candidate docids (block-selective payload read)."""
-    r = reader.term_row(term)
-    first = np.asarray(r["block_first"], dtype=np.int64)
-    last = np.asarray(r["block_last"], dtype=np.int64)
-    lo = np.searchsorted(cand, first, side="left")
-    overlap = lo < len(cand)
-    overlap[overlap] &= cand[lo[overlap]] <= last[overlap]
+    overlap = overlapping_blocks(reader.term_row(term), cand)
     if not overlap.any():
         z = np.zeros(0, np.int64)
         return z, z, z
@@ -59,11 +55,19 @@ def match_phrase_on_segment(
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(docids, n_matches) of one phrase against one segment (exact)."""
+    return _phrase_on_segment(reader, {}, terms, tombstones)
+
+
+def _phrase_on_segment(reader: SegmentReader, cache: dict, terms: list[str],
+                       tombstones: np.ndarray | None
+                       ) -> tuple[np.ndarray, np.ndarray]:
+    """match_phrase_on_segment with the candidate docids decoded through
+    the segment cache (wand.term_postings)."""
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
     # candidate docs: live docs holding every term (no positions yet)
-    cand = live(intersect(reader.decode_term(t)[0] for t in set(terms)),
-                None, tombstones)
+    cand = live(intersect(term_postings(reader, cache, t)[0]
+                          for t in set(terms)), None, tombstones)
     if not len(cand):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
 
@@ -100,22 +104,15 @@ def match_phrase_on_segment(
 
 
 def phrase_partial(segments, queries: pd.DataFrame) -> pd.DataFrame:
-    """(qid, docid, n_matches) phrase matches of queries(qid, terms, k)
-    over opened segments (wand.open_segments), cut to top-k per (segment,
-    query) in rank order (n_matches desc, docid asc): top-k is mergeable
-    across segments, so a stop-word-ish phrase over a big segment emits
-    k rows, not millions."""
-    out = []
-    for seg in segments:
-        for q in queries.itertuples():
-            d, n = match_phrase_on_segment(
-                seg.reader, list(q.terms), seg.tombstones)
-            if len(d):
-                top = np.lexsort((d, -n))[: int(q.k)]
-                out.append(pd.DataFrame({
-                    "qid": int(q.qid), "docid": d[top],
-                    "n_matches": n[top]}))
-    return _partial_frame(out, "n_matches")
+    """(qid, docid, n_matches, k) phrase matches of queries(qid, terms, k)
+    over opened segments (wand.open_segments), cut to top-k per query in
+    rank order (n_matches desc, docid asc) by wand.topk_partial: a
+    stop-word-ish phrase over a big segment emits k rows, not millions."""
+    return topk_partial(
+        segments, queries,
+        lambda seg, q, top: _phrase_on_segment(
+            seg.reader, seg.cache, list(q.terms), seg.tombstones),
+        "n_matches")
 
 
 def phrase_search(
@@ -149,6 +146,5 @@ def phrase_search(
         yield phrase_partial(
             open_segments(paths, tomb, probe, positions=True), q)
 
-    ks = {int(q.qid): int(q.k) for q in qp.itertuples()}
-    return snap.scatter_topk(spark, kernel, qp, "n_matches", ks, merge,
+    return snap.scatter_topk(spark, kernel, qp, "n_matches", merge,
                              num_tasks)

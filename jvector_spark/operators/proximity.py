@@ -16,7 +16,8 @@ terms of a W=8 query counts 1, not 0 (mirrors the oracle's
 Scale shape: identical scatter/gather to phrase_search — queries
 broadcast, segments the parallel dimension, candidates from the
 conjunctive docid intersection FIRST (positions decode only for blocks
-holding survivors), per-(segment,query) top-k cut before the shuffle.
+holding survivors), per-(task,query) top-k cut (wand.topk_partial)
+before the shuffle.
 The per-candidate window count is O(m * dl) numpy work via two
 searchsorted sweeps per term, no per-token Python.
 """
@@ -29,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.operators.phrase import _positions_by_doc
 from jvector_spark.operators.wand import (
-    IndexSnapshot, _partial_frame, intersect, live, open_segments)
+    IndexSnapshot, intersect, live, open_segments, term_postings,
+    topk_partial)
 from jvector_spark.sources.segment import SegmentReader
 
 
@@ -60,11 +62,19 @@ def match_window_on_segment(
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(docids, n_matches) for one proximity query against one segment."""
+    return _window_on_segment(reader, {}, terms, window, tombstones)
+
+
+def _window_on_segment(reader: SegmentReader, cache: dict, terms: list[str],
+                       window: int, tombstones: np.ndarray | None
+                       ) -> tuple[np.ndarray, np.ndarray]:
+    """match_window_on_segment with the candidate docids decoded through
+    the segment cache (wand.term_postings)."""
     terms = sorted(set(terms))
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    cand = live(intersect(reader.decode_term(t)[0] for t in terms), None,
-                tombstones)
+    cand = live(intersect(term_postings(reader, cache, t)[0] for t in terms),
+                None, tombstones)
     if not len(cand):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
 
@@ -116,18 +126,12 @@ def proximity_search(
     probe = sorted({t for ts in qw["terms"] for t in ts})
 
     def kernel(paths, tomb, q):
-        out = []
-        for seg in open_segments(paths, tomb, probe, positions=True):
-            for r in q.itertuples():
-                d, n = match_window_on_segment(
-                    seg.reader, list(r.terms), int(r.window), seg.tombstones)
-                if len(d):
-                    top = np.lexsort((d, -n))[: int(r.k)]
-                    out.append(pd.DataFrame({
-                        "qid": int(r.qid), "docid": d[top],
-                        "n_matches": n[top]}))
-        yield _partial_frame(out, "n_matches")
+        yield topk_partial(
+            open_segments(paths, tomb, probe, positions=True), q,
+            lambda seg, r, top: _window_on_segment(
+                seg.reader, seg.cache, r.terms, int(r.window),
+                seg.tombstones),
+            "n_matches")
 
-    ks = {int(q.qid): int(q.k) for q in qw.itertuples()}
-    return snap.scatter_topk(spark, kernel, qw, "n_matches", ks, merge,
+    return snap.scatter_topk(spark, kernel, qw, "n_matches", merge,
                              num_tasks)

@@ -246,7 +246,7 @@ def regex_token_topk(
     over matched terms); rank: n_occ desc, docid asc, top-k per query.
     """
     from jvector_spark.operators.wand import (
-        IndexSnapshot, _partial_frame, live, open_segments, term_postings)
+        IndexSnapshot, live, open_segments, term_postings, topk_partial)
 
     snap = IndexSnapshot(index_dir)
     expansions = expand_patterns(
@@ -255,35 +255,28 @@ def regex_token_topk(
         max_terms,
         spark=spark,
     )
-    qx = [(int(q.qid), expansions[int(q.qid)], int(q.k))
-          for q in queries.itertuples()]
+    qx = queries[["qid", "k"]].assign(
+        terms=[expansions[int(qid)] for qid in queries["qid"]])
+
+    def occurrences(seg, q, top):
+        """(live docids, total occurrences of the query's matched terms)."""
+        parts = [term_postings(seg.reader, seg.cache, t)
+                 for t in q.terms if seg.reader.has_term(t)]
+        if not parts:
+            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+        d, n = (np.concatenate(x) for x in zip(*parts))
+        # per-doc occurrence sum (docids repeat across terms)
+        uniq, inv = np.unique(d, return_inverse=True)
+        occ = np.zeros(len(uniq), dtype=np.int64)
+        np.add.at(occ, inv, n)
+        docs = live(uniq, None, seg.tombstones)
+        return docs, occ[np.searchsorted(uniq, docs)]
 
     def kernel(paths, tomb, q):
         # expansions can run to max_terms per query: the probe derives
         # from the broadcast payload rather than riding in the closure
-        probe = sorted({t for _, terms, _ in q for t in terms})
-        out = []
-        for seg in open_segments(paths, tomb, probe):
-            for qid, terms, k in q:
-                parts = [term_postings(seg.reader, seg.cache, t)
-                         for t in terms if seg.reader.has_term(t)]
-                if not parts:
-                    continue
-                d, n = (np.concatenate(x) for x in zip(*parts))
-                # per-doc occurrence sum (docids repeat across terms)
-                uniq, inv = np.unique(d, return_inverse=True)
-                occ = np.zeros(len(uniq), dtype=np.int64)
-                np.add.at(occ, inv, n)
-                docs = live(uniq, None, seg.tombstones)
-                if not len(docs):
-                    continue
-                occ = occ[np.searchsorted(uniq, docs)]
-                # partial top-k bounds the shuffle
-                top = np.lexsort((docs, -occ))[:k]
-                out.append(pd.DataFrame({
-                    "qid": qid, "docid": docs[top], "n_occ": occ[top]}))
-        yield _partial_frame(out, "n_occ")
+        probe = sorted({t for ts in q["terms"] for t in ts})
+        yield topk_partial(open_segments(paths, tomb, probe), q,
+                           occurrences, "n_occ")
 
-    ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
-    return snap.scatter_topk(spark, kernel, qx, "n_occ", ks, merge,
-                             num_tasks)
+    return snap.scatter_topk(spark, kernel, qx, "n_occ", merge, num_tasks)

@@ -10,8 +10,9 @@ Reference mapping (SURVEY §3):
     survives.
   * Multi-index combine with rerankFloor (GraphSearcher.java:368-385) ->
     θ propagates across segments scored sequentially in one task; the global
-    merge is a partial-top-k union (per-segment top-k is a superset of each
-    segment's contribution to the global top-k).
+    merge is a partial-top-k union (a task's top-k is a superset of its
+    segments' contribution to the global top-k). One collector,
+    topk_partial, keeps that per-task heap for every ranked index operator.
   * Tie-break contract (SearchResult.NodeScore.compareTo:101-106):
     score desc, docid asc — enforced via lexsort everywhere.
 
@@ -155,50 +156,39 @@ def _empty_result(value_col: str) -> pd.DataFrame:
     })
 
 
-def _rank_topk(pdf: pd.DataFrame, ks: dict[int, int],
-               value_col: str) -> pd.DataFrame:
-    """Driver-side global top-k of partial rows (qid, docid, value): one
-    numpy lexsort per query, value desc, docid asc."""
-    outs = []
-    for qid, g in pdf.groupby("qid", sort=True):
-        d = g["docid"].to_numpy(np.int64)
-        v = g[value_col].to_numpy()
-        order = np.lexsort((d, -v))[: ks[int(qid)]]
-        outs.append(pd.DataFrame({
-            "qid": np.int64(qid),
-            "rank": np.arange(len(order), dtype=np.int32),
-            "docid": d[order], value_col: v[order],
-        }))
-    return (pd.concat(outs, ignore_index=True)
-            if outs else _empty_result(value_col))
-
-
-def _partial_frame(parts: list[pd.DataFrame], value_col: str) -> pd.DataFrame:
-    """One task's partial rows (qid, docid, value_col); typed when empty."""
-    if parts:
-        return pd.concat(parts, ignore_index=True)
-    return _empty_result(value_col).drop(columns="rank")
+def _rank_topk(pdf: pd.DataFrame, value_col: str) -> pd.DataFrame:
+    """Driver-side global top-k of partial rows (qid, docid, value, k):
+    one numpy lexsort (qid, value desc, docid asc), cut at each row's own
+    k."""
+    if not len(pdf):
+        return _empty_result(value_col)
+    q = pdf["qid"].to_numpy(np.int64)
+    d = pdf["docid"].to_numpy(np.int64)
+    v = pdf[value_col].to_numpy()
+    order = np.lexsort((d, -v, q))
+    q, d, v = q[order], d[order], v[order]
+    rank = np.arange(len(q)) - np.searchsorted(q, q)
+    keep = rank < pdf["k"].to_numpy(np.int64)[order]
+    return pd.DataFrame({"qid": q[keep], "rank": rank[keep].astype(np.int32),
+                         "docid": d[keep], value_col: v[keep]})
 
 
 def merge_topk(
     partial: DataFrame,
-    ks: dict[int, int],
     value_col: str = "score",
     merge: str = "spark",
 ) -> DataFrame | pd.DataFrame:
-    """Global top-k merge of per-task partial rows (qid, docid, value):
-    rank by value desc, docid asc, bounded per query. merge="spark" is a
-    lazy window (composable); merge="driver" collects the bounded partial
-    rows and merges with one numpy lexsort per query — the caller-thread
+    """Global top-k merge of per-task partial rows (qid, docid, value, k):
+    rank by value desc, docid asc, cut at each query's k. merge="spark"
+    is a lazy window (composable); merge="driver" collects the bounded
+    partial rows and merges with one numpy lexsort — the caller-thread
     multi-index combine (GraphSearcher.java:368-385)."""
     if merge == "driver":
-        return _rank_topk(partial.toPandas(), ks, value_col)
-    kmap = F.create_map(*[x for qid, k in ks.items()
-                          for x in (F.lit(qid), F.lit(k))])
+        return _rank_topk(partial.toPandas(), value_col)
     w = Window.partitionBy("qid").orderBy(F.desc(value_col), F.asc("docid"))
     return (
         partial.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= kmap[F.col("qid")])
+        .where(F.col("rn") <= F.col("k"))
         .select("qid", (F.col("rn") - 1).cast("int").alias("rank"),
                 "docid", value_col)
     )
@@ -315,18 +305,19 @@ class IndexSnapshot:
             run, schema)
 
     def scatter_topk(self, spark: SparkSession, kernel, payload,
-                     value_col: str, ks: dict[int, int], merge: str,
+                     value_col: str, merge: str,
                      num_tasks: int | None = None
                      ) -> DataFrame | pd.DataFrame:
-        """scatter() of bounded (qid, docid, value_col) partials, then the
-        global merge_topk: (qid, rank, docid, value_col)."""
+        """scatter() of bounded (qid, docid, value_col, k) partials (a
+        kernel yields topk_partial frames), then the global merge_topk:
+        (qid, rank, docid, value_col)."""
         if not self.paths:
             return empty_topk(spark, value_col, merge)
         typ = "double" if value_col == "score" else "long"
-        partial = self.scatter(spark, kernel, payload,
-                               f"qid long, docid long, {value_col} {typ}",
-                               num_tasks)
-        return merge_topk(partial, ks, value_col, merge)
+        partial = self.scatter(
+            spark, kernel, payload,
+            f"qid long, docid long, {value_col} {typ}, k long", num_tasks)
+        return merge_topk(partial, value_col, merge)
 
 
 def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -374,6 +365,18 @@ def intersect(lists: Iterable[np.ndarray]) -> np.ndarray:
         if not len(cand):
             break
     return cand
+
+
+def overlapping_blocks(row: dict, cand: np.ndarray) -> np.ndarray:
+    """Mask of a term's blocks (its dictionary `row`) whose docid range
+    [block_first, block_last] holds at least one of the sorted
+    candidates — the blocks a candidate-restricted decode must read."""
+    first = np.asarray(row["block_first"], dtype=np.int64)
+    last = np.asarray(row["block_last"], dtype=np.int64)
+    lo = np.searchsorted(cand, first, side="left")
+    overlap = lo < len(cand)
+    overlap[overlap] &= cand[lo[overlap]] <= last[overlap]
+    return overlap
 
 
 def live(cand: np.ndarray, accept: np.ndarray | None,
@@ -548,12 +551,7 @@ def score_query_on_segment(
             # candidate set
             gmask = ~gen_mask[t]
             if gmask.any():
-                r = rows[t]
-                first = np.asarray(r["block_first"], dtype=np.int64)
-                last = np.asarray(r["block_last"], dtype=np.int64)
-                lo = np.searchsorted(candidates, first, side="left")
-                overlap = (lo < len(candidates)) & gmask
-                overlap[overlap] &= candidates[lo[overlap]] <= last[overlap]
+                overlap = overlapping_blocks(rows[t], candidates) & gmask
                 if overlap.any():
                     parts.append(reader.decode_term(t, overlap))
             if not parts:
@@ -596,7 +594,9 @@ def _conjunctive_topk(seg: Segment, terms: list[str], idfs: dict[str, float],
 
 class _TopK:
     """Per-query bounded top-k accumulator across segments (the NodeQueue /
-    BoundedLongHeap analog, util/BoundedLongHeap.java:33-80)."""
+    BoundedLongHeap analog, util/BoundedLongHeap.java:33-80): docids with
+    their values, value desc then docid asc. The values keep the dtype of
+    the first push, so int64 keys never pass through float64."""
 
     __slots__ = ("k", "docids", "scores")
 
@@ -608,10 +608,11 @@ class _TopK:
     def push(self, docids: np.ndarray, scores: np.ndarray) -> None:
         if len(docids) == 0:
             return
-        d = np.concatenate([self.docids, docids])
-        s = np.concatenate([self.scores, scores])
-        order = np.lexsort((d, -s))[: self.k]
-        self.docids, self.scores = d[order], s[order]
+        if len(self.docids):
+            docids = np.concatenate([self.docids, docids])
+            scores = np.concatenate([self.scores, scores])
+        order = np.lexsort((docids, -scores))[: self.k]
+        self.docids, self.scores = docids[order], scores[order]
 
     @property
     def theta(self) -> float:
@@ -622,6 +623,46 @@ class _TopK:
         if self.k <= 0:
             return float("inf")
         return float(self.scores[-1]) if len(self.scores) >= self.k else 0.0
+
+    def closed(self, bound) -> bool:
+        """No value at or below `bound` can enter any more: k <= 0, or k
+        values are held and the kth strictly beats `bound`. Compared in
+        the values' own dtype (exact for int64 keys); None = unbounded."""
+        return self.k <= 0 or (bound is not None and len(self.scores) >= self.k
+                               and self.scores[-1] > bound)
+
+
+def topk_partial(segments, queries: pd.DataFrame, match,
+                 value_col: str = "score") -> pd.DataFrame:
+    """One task's partial top-k rows (qid, docid, value_col, k): the
+    per-task collector of every ranked index operator.
+
+    Keeps one _TopK per query of `queries` (qid, k, ...) across all of
+    the task's `segments` and calls match(seg, q, top) -> (docids,
+    values) once per (segment, query row), pushing what it returns;
+    `top` exposes the query's k, θ and held values for pruning. Top-k
+    composes across segments, so at most k rows per (task, query) reach
+    the global merge_topk, which cuts at each row's own k. `segments`
+    may also be a function of the {qid: _TopK} states returning the
+    segments, for a scan whose segment skip reads θ (consumed lazily, so
+    each decision sees every segment before it)."""
+    rows = {int(q.qid): q for q in queries.itertuples(index=False)}
+    tops = {qid: _TopK(int(q.k)) for qid, q in rows.items()}
+    for seg in segments(tops) if callable(segments) else segments:
+        for qid, q in rows.items():
+            top = tops[qid]
+            top.push(*match(seg, q, top))
+    held = [(qid, t) for qid, t in tops.items() if len(t.docids)]
+    if not held:
+        return _empty_result(value_col).drop(columns="rank").assign(
+            k=pd.Series([], dtype="int64"))
+    n = [len(t.docids) for _, t in held]
+    return pd.DataFrame({
+        "qid": np.repeat(np.array([q for q, _ in held], np.int64), n),
+        "docid": np.concatenate([t.docids for _, t in held]),
+        value_col: np.concatenate([t.scores for _, t in held]),
+        "k": np.repeat(np.array([t.k for _, t in held], np.int64), n),
+    })
 
 
 def _filter_key(doc_filter: dict) -> tuple:
@@ -713,101 +754,93 @@ def search_partition(
                 the tombstone mask per query, i.e. INSIDE the segment
                 scorer before its top-k cut, so an excluded doc can never
                 displace a returned one.
+
+    Returns topk_partial rows (qid, docid, score, k), each query's rows
+    in rank order.
     """
-    states = {
-        int(q.qid): _TopK(int(q.k)) for q in queries.itertuples()
-    }
-    qterms = {int(q.qid): list(q.terms) for q in queries.itertuples()}
     after = after or {}
     exclude = exclude or {}
     qex = {qid: np.asarray(exclude[qid], dtype=np.int64)
-           for qid in states
+           for qid in map(int, queries["qid"])
            if exclude.get(qid) is not None and len(exclude[qid])}
+    unions: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-    def _qtomb(seg_tomb: np.ndarray) -> dict[int, np.ndarray]:
-        out: dict[int, np.ndarray] = {}
-        for qid in states:
-            ex = qex.get(qid)
-            if ex is None:
-                out[qid] = seg_tomb
-            elif not len(seg_tomb):
-                out[qid] = ex
-            else:
-                out[qid] = np.union1d(seg_tomb, ex)
-        return out
+    def qtomb(qid: int, seg_tomb: np.ndarray) -> np.ndarray:
+        ex = qex.get(qid)
+        if ex is None:
+            return seg_tomb
+        if not len(seg_tomb):
+            return ex
+        # inline/flat tombstones are one array for every segment: the
+        # per-query tombstone/exclude union then runs once, not S×Q
+        if qid not in unions or unions[qid][0] is not seg_tomb:
+            unions[qid] = (seg_tomb, np.union1d(seg_tomb, ex))
+        return unions[qid][1]
 
     # terms shared by >=2 queries always decode fully (once, cached) —
     # repeated partial block decodes of the same hot term cost more than
     # one full decode amortized across the batch
     from collections import Counter
 
-    usage = Counter(t for ts in qterms.values() for t in set(ts))
+    usage = Counter(t for ts in queries["terms"] for t in set(ts))
     hot = frozenset(t for t, n in usage.items() if n >= 2)
     all_terms = [t for t in usage if t in idfs]
-
     n_opened = 0
-    seg_tomb = qtomb = None
-    for seg in open_segments(seg_paths, tombstones, all_terms, doc_filter,
-                             pool):
-        n_opened += 1
-        seg_cache = seg.cache
-        seg_cache["_hot"] = hot  # hot set is per request batch
-        if pool is not None:
-            # pooled caches outlive the batch: partial block decodes of a
-            # term would repeat every request, so pooled mode decodes
-            # terms FULLY into the generation-scoped cache and scores
-            # from cached per-term contributions thereafter — the warm
-            # in-memory index trade (results identical; only which bytes
-            # get decoded when changes)
-            seg_cache["_pooled"] = True
-        if seg.tombstones is not seg_tomb:
-            # inline/flat tombstones are one array for every segment: the
-            # per-query tombstone/exclude union then runs once, not S×Q
-            seg_tomb = seg.tombstones
-            qtomb = _qtomb(seg_tomb)
-        for qid, st in states.items():
-            qstats = metrics.setdefault(qid, {}) if metrics is not None else None
-            # the cursor applies INSIDE the scorer, before its top-k cut —
-            # a segment may hold more than k results at-or-before the
-            # cursor, and a post-hoc filter on an already-cut top-k would
-            # silently drop valid after-cursor rows
-            q_after = after.get(qid)
-            if mode == "and":
-                d, s = _conjunctive_topk(seg, qterms[qid], idfs, st.k, avgdl,
-                                         qtomb[qid], q_after)
-            else:
-                d, s = score_query_on_segment(
-                    seg.reader, qterms[qid], idfs, st.k,
-                    max(st.theta, min_score), avgdl, qtomb[qid],
-                    seg_cache, seg.accept, qstats, after=q_after,
-                )
-            if min_score > 0.0 and len(s):
-                # membership at the floor compares RAW float64 sums on
-                # both engine and oracle sides; a doc whose true score
-                # sits within ~1 ulp of min_score could flip between
-                # engines with different summation orders (the same
-                # boundary class the top-k cutoff neutralizes with
-                # k_mult slack). Accepted: BM25 terms are irrational
-                # idf×tf ratios, so fixture scores never land on the
-                # round decimal thresholds queries use; a caller with a
-                # score-derived floor should pad it by ~1e-9.
-                keep = s >= min_score
-                d, s = d[keep], s[keep]
-            st.push(d, s)
+
+    def segments():
+        nonlocal n_opened
+        for seg in open_segments(seg_paths, tombstones, all_terms,
+                                 doc_filter, pool):
+            n_opened += 1
+            seg.cache["_hot"] = hot  # hot set is per request batch
+            if pool is not None:
+                # pooled caches outlive the batch: partial block decodes
+                # of a term would repeat every request, so pooled mode
+                # decodes terms FULLY into the generation-scoped cache and
+                # scores from cached per-term contributions thereafter —
+                # the warm in-memory index trade (results identical; only
+                # which bytes get decoded when changes)
+                seg.cache["_pooled"] = True
+            yield seg
+
+    def match(seg: Segment, q, top: _TopK):
+        qid = int(q.qid)
+        qstats = metrics.setdefault(qid, {}) if metrics is not None else None
+        # the cursor applies INSIDE the scorer, before its top-k cut — a
+        # segment may hold more than k results at-or-before the cursor,
+        # and a post-hoc filter on an already-cut top-k would silently
+        # drop valid after-cursor rows
+        if mode == "and":
+            d, s = _conjunctive_topk(seg, q.terms, idfs, top.k, avgdl,
+                                     qtomb(qid, seg.tombstones),
+                                     after.get(qid))
+        else:
+            d, s = score_query_on_segment(
+                seg.reader, q.terms, idfs, top.k,
+                max(top.theta, min_score), avgdl, qtomb(qid, seg.tombstones),
+                seg.cache, seg.accept, qstats, after=after.get(qid),
+            )
+        if min_score > 0.0 and len(s):
+            # membership at the floor compares RAW float64 sums on both
+            # engine and oracle sides; a doc whose true score sits within
+            # ~1 ulp of min_score could flip between engines with
+            # different summation orders (the same boundary class the
+            # top-k cutoff neutralizes with k_mult slack). Accepted: BM25
+            # terms are irrational idf×tf ratios, so fixture scores never
+            # land on the round decimal thresholds queries use; a caller
+            # with a score-derived floor should pad it by ~1e-9.
+            keep = s >= min_score
+            d, s = d[keep], s[keep]
+        return d, s
+
+    out = topk_partial(segments(), queries, match)
     n_bloom_skipped = len(seg_paths) - n_opened
     if metrics is not None and n_bloom_skipped:
-        for qid in states:
+        for qid in map(int, queries["qid"]):
             qs = metrics.setdefault(qid, {})
             qs["segments_bloom_skipped"] = (
                 qs.get("segments_bloom_skipped", 0) + n_bloom_skipped)
-    return _topk_frame(states)
-
-
-def _topk_frame(states: dict[int, _TopK]) -> pd.DataFrame:
-    """Partial rows (qid, docid, score) of per-query _TopK states."""
-    return _partial_frame(
-        [pd.DataFrame({"qid": qid, "docid": st.docids, "score": st.scores})
-         for qid, st in states.items() if len(st.docids)], "score")
+    return out
 
 
 def search_index(
@@ -872,10 +905,9 @@ def search_index(
             # exactly-once accumulators in actions)
             metrics_acc.add({pid: task_metrics})
 
-    ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
     return snap.scatter_topk(spark, kernel,
                              (queries[["qid", "terms", "k"]], idfs),
-                             "score", ks, merge, num_tasks)
+                             "score", merge, num_tasks)
 
 
 def explain_score(

@@ -680,9 +680,7 @@ class IndexServer:
         segments = open_segments(
             [s["path"] for s in self.manifest["segments"]],
             self._tombstones(), probe, pool=self.pool, positions=True)
-        return _rank_topk(phrase_partial(segments, qp),
-                          {int(q.qid): int(q.k) for q in qp.itertuples()},
-                          "n_matches")
+        return _rank_topk(phrase_partial(segments, qp), "n_matches")
 
     def delete(self, docids: list[int]) -> dict:
         """Phase-1 delete through the warm session (tombstones visible to

@@ -90,9 +90,8 @@ def _expected_collapse(oracle, attrs, terms, k):
 
 
 def test_collapse_matches_truth(spark, findex, oracle, doc_attrs):
-    partial = collapse_topk(spark, findex, QUERIES, "repo")
-    ks = {int(r.qid): int(r.k) for r in QUERIES.itertuples()}
-    got = rank_collapsed(partial, ks).toPandas()
+    got = rank_collapsed(collapse_topk(spark, findex, QUERIES,
+                                       "repo")).toPandas()
     for qid, terms, k in zip(QUERIES["qid"], QUERIES["terms"], QUERIES["k"]):
         exp = _expected_collapse(oracle, doc_attrs, terms, int(k))
         g = (got[got["qid"] == qid].sort_values("rank")
@@ -163,28 +162,6 @@ def test_sorted_search_oov_empty(spark, findex):
 
     q = pd.DataFrame({"qid": [0], "terms": [["zz_never_a_token"]], "k": [5]})
     assert sorted_search(spark, findex, q, attr="dl").count() == 0
-
-
-def test_sorted_search_partials_bounded_per_segment(spark, findex,
-                                                   monkeypatch):
-    import jvector_spark.operators.wand as wand_mod
-    from jvector_spark.operators.facets import sorted_search
-    from jvector_spark.sources.segment import load_manifest
-
-    k = 3
-    captured = {}
-    real_merge = wand_mod.merge_topk
-
-    def spy(partial, ks, score_col, merge):
-        captured["n_partial"] = partial.count()
-        return real_merge(partial, ks, score_col, merge)
-
-    monkeypatch.setattr(wand_mod, "merge_topk", spy)
-    q = pd.DataFrame({"qid": [0], "terms": [["if"]], "k": [k]})
-    got = sorted_search(spark, findex, q, attr="dl", merge="driver")
-    assert len(got) == k
-    n_segments = len(load_manifest(findex)["segments"])
-    assert captured["n_partial"] <= k * n_segments
 
 
 def test_attr_stats_matches_truth(spark, findex, oracle):
@@ -277,10 +254,9 @@ def test_sorted_search_skips_dominated_segments(spark, tmp_path_factory):
             opened.append(path)
             super().__init__(path, *a, **kw)
 
-    out = list(sorted_scan_partition(
-        paths, {0: ["tok"]}, {0: 5}, None, None, "dl", -1,
-        reader_cls=SpyReader))
-    got = pd.concat(out, ignore_index=True)
+    got = sorted_scan_partition(
+        paths, pd.DataFrame({"qid": [0], "terms": [["tok"]], "k": [5]}),
+        None, None, "dl", -1, reader_cls=SpyReader)
     # exactness: the 5 longest docs are docids 0..4 (all in segment 0)
     assert sorted(got["docid"].tolist()) == [0, 1, 2, 3, 4]
     assert len(opened) == 1, opened  # segments 1, 2 skipped on stats

@@ -286,8 +286,8 @@ def test_empty_index_queries_return_empty(spark, corpus_df, tmp_path_factory):
     terms = q[["qid", "terms"]]
     aggs = {
         ("qid", "facet", "n_docs"): facet_counts(spark, out, terms, "repo"),
-        ("qid", "grp", "docid", "score"): collapse_topk(spark, out, q,
-                                                        "repo"),
+        ("qid", "grp", "docid", "score", "k"): collapse_topk(spark, out, q,
+                                                             "repo"),
         ("qid", "n_docs", "min_attr", "max_attr", "sum_attr",
          "avg_attr"): attr_stats(spark, out, terms),
         ("qid", "bin", "n_docs"): attr_histogram(spark, out, terms),

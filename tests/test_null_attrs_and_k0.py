@@ -91,9 +91,11 @@ def test_attr_histogram_skips_null_values(spark, nindex, ncorpus_pdf,
 
 def test_sorted_search_excludes_null_attr_docs(spark, nindex, ncorpus_pdf,
                                                matched):
-    # "big" (no nulls) pins exact int64 keys above 2^53
-    for attr in ("stars", "big"):
-        got = sorted_search(spark, nindex, Q, attr=attr, merge="driver")
+    # "big" (no nulls) pins exact int64 keys above 2^53; at num_tasks=1
+    # one task's top-k merges all three segments' keys
+    for attr, num_tasks in (("stars", None), ("big", None), ("big", 1)):
+        got = sorted_search(spark, nindex, Q, attr=attr, merge="driver",
+                            num_tasks=num_tasks)
         vals = ncorpus_pdf[attr].iloc[matched].to_numpy()
         nn = [(int(v), int(d)) for v, d in zip(vals, matched)
               if pd.notna(v)]
@@ -108,7 +110,7 @@ def test_collapse_null_group_distinct_from_none_string(spark, nindex,
                                                        ncorpus_pdf,
                                                        matched):
     partial = collapse_topk(spark, nindex, Q, collapse_col="grpc")
-    got = rank_collapsed(partial, {0: 100}).toPandas()
+    got = rank_collapsed(partial).toPandas()
     grp_vals = ncorpus_pdf["grpc"].to_numpy()[matched]
     exp_groups = {g for g in grp_vals}  # includes None AND 'None'
     assert None in exp_groups and "None" in exp_groups

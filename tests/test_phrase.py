@@ -119,29 +119,6 @@ def test_phrase_spark_merge_equals_driver(spark, pos_index):
         b[["qid", "docid", "n_matches"]].values.tolist()
 
 
-def test_phrase_partials_bounded_per_segment(spark, pos_index, monkeypatch):
-    """The scatter stage must emit ≤ k rows per (segment, query): a
-    high-frequency phrase ('def' matches most docs) must not ship every
-    matching doc into the shuffle (the round-2 scale flaw this pins)."""
-    import jvector_spark.operators.wand as wand_mod
-
-    idx, manifest = pos_index
-    n_segments = len(manifest)
-    k = 3
-    captured = {}
-    real_merge = wand_mod.merge_topk
-
-    def spy(partial, ks, score_col, merge):
-        captured["n_partial"] = partial.count()
-        return real_merge(partial, ks, score_col, merge)
-
-    monkeypatch.setattr(wand_mod, "merge_topk", spy)
-    queries = pd.DataFrame({"qid": [0], "phrase": ["def"], "k": [k]})
-    got = phrase_search(spark, idx, queries, merge="driver")
-    assert len(got) == k, "phrase 'def' must rank a full top-k"
-    assert captured["n_partial"] <= k * n_segments
-
-
 def test_phrase_requires_positions(spark, corpus_df, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("idx_nopos"))
     build_index(assign_dense_docids(corpus_df), idx, num_segments=2)

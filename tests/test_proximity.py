@@ -112,32 +112,6 @@ def test_oov_term_empties_result(spark, pos_index):
     assert proximity_search(spark, idx, qpdf).count() == 0
 
 
-def test_proximity_partials_bounded_per_segment(spark, pos_index, monkeypatch):
-    """Scatter stage emits ≤ k rows per (segment, query) even for a
-    stop-word-ish query matching most docs."""
-    import pandas as pd
-
-    import jvector_spark.operators.wand as wand_mod
-
-    idx, manifest = pos_index
-    k = 3
-    captured = {}
-    real_merge = wand_mod.merge_topk
-
-    def spy(partial, ks, score_col, merge):
-        captured["n_partial"] = partial.count()
-        return real_merge(partial, ks, score_col, merge)
-
-    monkeypatch.setattr(wand_mod, "merge_topk", spy)
-    qpdf = pd.DataFrame(
-        [(0, ["def", "import"], 20, k)],
-        columns=["qid", "terms", "window", "k"],
-    )
-    got = proximity_search(spark, idx, qpdf, merge="driver")
-    assert len(got) == k
-    assert captured["n_partial"] <= k * len(manifest)
-
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
