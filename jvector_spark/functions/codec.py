@@ -1,31 +1,20 @@
-"""Posting-block codecs: docID-delta + varint / FOR-bitpack, numpy-vectorized.
+"""LEB128 varint kernels for the segment format, numpy-vectorized.
 
 The analog of the reference's compression operators (SURVEY §2.8):
 ProductQuantization encode/decode (quantization/ProductQuantization.java:
 418-450 — vector -> compact codes -> approximate vector) becomes here
 *lossless* docid-gap compression (postings must decode exactly; BM25 is
-exact, unlike ANN). Block structure mirrors PQLayout chunking
-(PQVectors.java:430-492): fixed-size blocks (default 128 postings) with
-per-block metadata enabling O(1) addressing and block-max pruning
-(the FusedADC-style inline metadata, graph/disk/feature/FusedADC.java:39-59).
+exact, unlike ANN). The segment encoder (sources/segment.
+encode_postings_frame) uses these for its varint streams and byte
+offsets; FOR bit-packing and the block layout live there.
 
-All encode/decode paths are numpy-vectorized (no per-value Python loops in
-the hot path): varint encode is <=10 masked scatter passes; decode is a
-flatnonzero/segment-sum; FOR bitpack uses packbits/unpackbits.
-
-Wire format of one block payload (self-describing):
-    [docid_codec:1B][len:4B LE][docid-gap bytes]
-    [tf_codec:1B]  [len:4B LE][tf bytes]
-Gaps are np.diff(docids) (n-1 values); the block's first docid lives in the
-dictionary metadata (block_first_docid), like the ODGI header/offset scheme.
+No per-value Python loops: encode is <=10 masked scatter passes, decode
+a flatnonzero/segment-sum.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-CODEC_VARINT = 0
-CODEC_FOR = 1
 
 _U64 = np.uint64
 _SEVEN = _U64(7)
@@ -75,74 +64,3 @@ def varint_decode(buf: bytes, n: int | None = None) -> np.ndarray:
     if n is not None and len(out) != n:
         raise ValueError(f"varint_decode: expected {n} values, got {len(out)}")
     return out
-
-
-def for_encode(vals: np.ndarray) -> bytes:
-    """Frame-of-reference bitpack: [width:1B][packed bits]. Lossless."""
-    vals = np.ascontiguousarray(vals, dtype=_U64)
-    if len(vals) == 0:
-        return bytes([0])
-    w = int(vals.max()).bit_length()
-    if w == 0:
-        return bytes([0])
-    shifts = np.arange(w - 1, -1, -1, dtype=_U64)
-    bits = ((vals[:, None] >> shifts) & _U64(1)).astype(np.uint8)
-    return bytes([w]) + np.packbits(bits.ravel()).tobytes()
-
-
-def for_decode(buf: bytes, n: int) -> np.ndarray:
-    w = buf[0]
-    if w == 0:
-        return np.zeros(n, dtype=_U64)
-    bits = np.unpackbits(np.frombuffer(buf, np.uint8, offset=1))[: n * w]
-    bits = bits.reshape(n, w).astype(_U64)
-    shifts = np.arange(w - 1, -1, -1, dtype=_U64)
-    return (bits << shifts).sum(axis=1, dtype=_U64)
-
-
-def _encode_section(vals: np.ndarray, codec: int) -> bytes:
-    payload = varint_encode(vals) if codec == CODEC_VARINT else for_encode(vals)
-    return bytes([codec]) + len(payload).to_bytes(4, "little") + payload
-
-
-def _decode_section(buf: bytes, off: int, n: int) -> tuple[np.ndarray, int]:
-    codec = buf[off]
-    ln = int.from_bytes(buf[off + 1 : off + 5], "little")
-    payload = buf[off + 5 : off + 5 + ln]
-    vals = varint_decode(payload, n) if codec == CODEC_VARINT else for_decode(payload, n)
-    return vals, off + 5 + ln
-
-
-def choose_codec(vals: np.ndarray) -> int:
-    """Pick the smaller encoding (PFOR-style adaptivity, cheap heuristic):
-    FOR wins on dense uniform gaps, varint on skewed ones."""
-    if len(vals) == 0:
-        return CODEC_FOR
-    w = int(vals.max()).bit_length()
-    for_bytes = 1 + (len(vals) * w + 7) // 8
-    nb = 1 + np.floor_divide(
-        np.maximum(np.log2(np.maximum(vals.astype(np.float64), 1.0)), 0.0), 7.0
-    )
-    return CODEC_FOR if for_bytes <= nb.sum() else CODEC_VARINT
-
-
-def encode_block(docids: np.ndarray, tfs: np.ndarray) -> bytes:
-    """One posting block (docids sorted ascending, parallel tfs) -> payload."""
-    docids = np.ascontiguousarray(docids, dtype=np.int64)
-    gaps = np.diff(docids).astype(_U64)
-    tfs = np.ascontiguousarray(tfs, dtype=_U64)
-    return _encode_section(gaps, choose_codec(gaps)) + _encode_section(
-        tfs, choose_codec(tfs)
-    )
-
-
-def decode_block(buf: bytes, n: int, first_docid: int) -> tuple[np.ndarray, np.ndarray]:
-    """Payload -> (docids int64 asc, tfs int64). Exact round-trip."""
-    gaps, off = _decode_section(buf, 0, n - 1)
-    tfs, _ = _decode_section(buf, off, n)
-    docids = np.empty(n, dtype=np.int64)
-    docids[0] = first_docid
-    if n > 1:
-        np.cumsum(gaps.astype(np.int64), out=docids[1:])
-        docids[1:] += first_docid
-    return docids, tfs.astype(np.int64)

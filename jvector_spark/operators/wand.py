@@ -71,7 +71,7 @@ def global_term_stats(
     if fast is not None:
         return fast
     # enumerate the MANIFEST's segments, never a `seg-*` glob: a glob
-    # also matches seg-*.tmp staging dirs (write_segment_files stages
+    # also matches seg-*.tmp staging dirs (write_segment stages
     # terms.parquet there first) and crashed/unpublished orphan segments,
     # double-counting their df and silently skewing idf vs the
     # manifest's n_docs

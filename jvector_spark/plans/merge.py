@@ -19,8 +19,8 @@ Reference mapping (SURVEY §2.9):
     range (same reason ODGI records are ordinal-ordered).
 
 Scale shape: compaction = one task per OUTPUT segment group; each task
-streams its input segments' postings through the same vectorized
-encode_postings_frame used at build. No shuffle at all — grouping is on
+streams its input segments' postings through write_segment, the same
+writer the build uses. No shuffle at all — grouping is on
 contiguous docid ranges, the remap is order-preserving, and term
 dictionaries merge via pandas concat/groupby inside the task. At 10^12 docs
 you compact O(thousands) of segments in parallel groups, each group bounded
@@ -45,10 +45,11 @@ from jvector_spark import BLOCK_SIZE
 from jvector_spark.sources.segment import (
     MANIFEST_SCHEMA,
     SegmentReader,
-    encode_postings_frame,
+    _concat,
+    empty_manifest,
     load_manifest,
     write_index_manifest,
-    write_segment_files,
+    write_segment,
 )
 
 TOMBSTONES_FILE = "tombstones.json"
@@ -465,57 +466,20 @@ def _merge_group(
     old = docs_live["docid"].to_numpy(np.int64)  # sorted ascending
     new = docid_offset + np.arange(len(old), dtype=np.int64)
 
-    if t_parts:
-        all_t = np.concatenate(t_parts)
-        all_d = np.concatenate(d_parts)
-        all_tf = np.concatenate(tf_parts)
-        # live filter + remap via one searchsorted against the sorted
-        # survivor ids (new docid = offset + rank)
-        rpos = np.searchsorted(old, all_d)
-        keep = rpos < len(old)
-        keep[keep] &= old[rpos[keep]] == all_d[keep]
-        p_term = all_t[keep]
-        p_doc = docid_offset + rpos[keep]
-        p_tf = all_tf[keep].astype(np.int64)
-        # (term, docid) order via factorize + int sort (no string sort of
-        # the posting stream — same pattern as _build_segment_stream)
-        codes, uniq = pd.factorize(p_term, sort=False)
-        rank = np.empty(len(uniq), dtype=np.int64)
-        rank[np.argsort(uniq, kind="stable")] = np.arange(len(uniq))
-        span = len(old)
-        order = np.argsort(rank[codes] * max(span, 1) + (p_doc - docid_offset),
-                           kind="stable")
-        p_term, p_doc, p_tf = p_term[order], p_doc[order], p_tf[order]
-        p_pos = None
-        if with_positions:
-            from jvector_spark.sources.segment import _scatter_positions
-
-            all_pos = (np.concatenate(pos_parts) if pos_parts
-                       else np.zeros(0, np.int64))
-            occ_off = np.concatenate(([0], np.cumsum(all_tf)))[:-1]
-            p_pos = all_pos[_scatter_positions(occ_off[keep][order], p_tf)]
-    else:
-        p_term = np.array([], dtype=object)
-        p_doc = p_tf = np.array([], dtype=np.int64)
-        p_pos = np.array([], dtype=np.int64) if with_positions else None
+    all_t = _concat(t_parts, object)
+    all_d = _concat(d_parts, np.int64)
+    all_tf = _concat(tf_parts, np.int64)
+    # live filter + remap via one searchsorted against the sorted
+    # survivor ids (new docid = offset + rank)
+    rpos = np.searchsorted(old, all_d)
+    keep = rpos < len(old)
+    keep[keep] &= old[rpos[keep]] == all_d[keep]
+    p_pos = (_concat(pos_parts, np.int64)[np.repeat(keep, all_tf)]
+             if with_positions else None)
 
     docs_live = docs_live.copy()
     docs_live["docid"] = new
-    dl_arr = docs_live["dl"].to_numpy(np.int64)
     seg_id = f"seg-{docid_offset:012d}"
-    seg_dir = os.path.join(out_dir, seg_id)
-    if len(p_doc):
-        terms_tbl, blob = encode_postings_frame(
-            p_term, p_doc, p_tf, dl_arr[p_doc - docid_offset], block_size,
-            p_pos=p_pos, quantize_meta=with_qmeta,
-        )
-    else:
-        terms_tbl, blob = encode_postings_frame(
-            np.array(["\x00dummy"]), np.array([0], np.int64),
-            np.array([1], np.int64), np.array([1], np.int64), block_size,
-        )
-        terms_tbl = terms_tbl.slice(0, 0)
-        blob = b""
     # committed-keys bloom carries through the merge when every input
     # agrees on the key columns (legacy inputs without key_cols just
     # produce a bloom-less merged segment — appends fail open on those)
@@ -535,15 +499,10 @@ def _merge_group(
     }
     if content_col:
         meta_extra["content_col"] = content_col
-    meta = write_segment_files(seg_dir, terms_tbl, blob, docs_live,
-                               meta_extra)
-    man = pd.DataFrame([{
-        "segment_id": seg_id, "path": seg_dir, "status": "merged",
-        "min_docid": meta["min_docid"], "max_docid": meta["max_docid"],
-        "n_docs": meta["n_docs"], "n_terms": meta["n_terms"],
-        "n_postings": meta["n_postings"], "bytes_postings": meta["bytes_postings"],
-        "build_sec": time.time() - t0, "fingerprint": meta["fingerprint"],
-    }])
+    man = write_segment(
+        os.path.join(out_dir, seg_id), all_t[keep],
+        docid_offset + rpos[keep], all_tf[keep], p_pos, docs_live,
+        block_size, meta_extra, "merged", t0, {}, quantize_meta=with_qmeta)
     docid_map = pd.DataFrame({"old_docid": old, "new_docid": new})
     return man, docid_map
 
@@ -901,11 +860,7 @@ def compact_index(
             # or the hardlinked shard pin lives forever inside the new
             # live generation (vacuum never looks inside live gen dirs)
             shutil.rmtree(tomb_snap_dir, ignore_errors=True)
-        empty = pd.DataFrame(
-            columns=["segment_id", "path", "status", "min_docid", "max_docid",
-                     "n_docs", "n_terms", "n_postings", "bytes_postings",
-                     "build_sec", "fingerprint"]
-        )
+        empty = empty_manifest()
         write_index_manifest(out_dir, empty, mode)
         return empty
     offsets = np.concatenate(([0], np.cumsum(live_counts)[:-1]))

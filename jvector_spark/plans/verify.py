@@ -2,13 +2,18 @@
 checksummed-write contract.
 
 Reference mapping: the segment writer records `postings_sha256` and
-per-doc `content_sha` at build (the OnDiskGraphIndex footer/checksum
-discipline, write_segment_files); this op re-reads every segment
-DISTRIBUTED (one task per segment batch) and verifies:
+per-doc `content_sha` at build and compaction (the OnDiskGraphIndex
+footer/checksum discipline, sources/segment.write_segment); this op
+re-reads every segment DISTRIBUTED (one task per segment batch) and
+verifies:
 
   * postings.bin and bloom.bin match their recorded sha256 (bit-rot /
     truncation; a garbled bloom would silently skip matching segments),
     and the bloom has no false negatives over the dictionary;
+  * the key bloom matches its recorded sha256 (a flipped bit keeps the
+    file's size, so the loader accepts it, and a false negative lets a
+    streaming append skip the exact anti-join and index a committed doc
+    twice);
   * the dictionary is self-consistent: sum(df) == meta n_postings,
     per-term block_n sums == df;
   * every term decodes: docids strictly ascending within bounds
@@ -86,6 +91,18 @@ def _verify_segment(path: str, max_terms: int | None = None) -> tuple[bool, list
                         break
         except OSError as e:
             errors.append(f"bloom.bin: {e!r}")
+    if "key_bloom_sha256" in meta:
+        from jvector_spark.sources.segment import KEY_BLOOM_FILE
+
+        # a segment holding only the legacy key_bloom.bin never loads a
+        # key bloom (it fails open), so only the current file is checked
+        kb_path = os.path.join(path, KEY_BLOOM_FILE)
+        try:
+            if (os.path.exists(kb_path)
+                    and _sha256_file(kb_path) != meta["key_bloom_sha256"]):
+                errors.append("key_bloom_sha256 mismatch")
+        except OSError as e:
+            errors.append(f"{KEY_BLOOM_FILE}: {e!r}")
     df_sum = 0
     lo, hi = int(meta["min_docid"]), int(meta["max_docid"])
     terms = reader.terms if max_terms is None else reader.terms[:max_terms]

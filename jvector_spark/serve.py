@@ -65,12 +65,10 @@ def create_index(index_dir: str, mode: str = "code",
     config lands in create.json BEFORE any segment exists, so subsequent
     writes (this session or a later one) inherit it through
     plans.merge.index_config instead of hardcoded defaults."""
-    import pandas as pd
+    import shutil
 
     from jvector_spark.sources.segment import (
-        MANIFEST_SCHEMA, write_index_manifest)
-
-    import shutil
+        empty_manifest, write_index_manifest)
 
     os.makedirs(index_dir, exist_ok=True)
     # CREATE is a session reset: stale tombstones from a previous index at
@@ -89,9 +87,7 @@ def create_index(index_dir: str, mode: str = "code",
     with open(tmp, "w") as f:
         json.dump(cfg, f, indent=1)
     os.replace(tmp, os.path.join(index_dir, "create.json"))
-    cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
-    empty = pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-    return write_index_manifest(index_dir, empty, mode)
+    return write_index_manifest(index_dir, empty_manifest(), mode)
 
 
 class VectorPool:

@@ -698,14 +698,99 @@ def key_bloom_any(bloom: np.ndarray, hashes: np.ndarray) -> bool:
     return True
 
 
-def write_segment_files(
+def _manifest_row(seg_dir: str, meta: dict, status: str,
+                  secs: float) -> pd.DataFrame:
+    """One MANIFEST_SCHEMA row for a committed segment's meta.json."""
+    return pd.DataFrame([{
+        "segment_id": meta["segment_id"], "path": seg_dir, "status": status,
+        "min_docid": meta["min_docid"], "max_docid": meta["max_docid"],
+        "n_docs": meta["n_docs"], "n_terms": meta["n_terms"],
+        "n_postings": meta["n_postings"],
+        "bytes_postings": meta["bytes_postings"],
+        "build_sec": secs, "fingerprint": meta["fingerprint"],
+    }])
+
+
+def empty_manifest() -> pd.DataFrame:
+    """A zero-segment manifest frame with MANIFEST_SCHEMA's columns."""
+    return pd.DataFrame(
+        columns=[c.split()[0] for c in MANIFEST_SCHEMA.split(",")])
+
+
+def _concat(parts: list[np.ndarray], dtype) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.zeros(0, dtype)
+
+
+def write_segment(
     seg_dir: str,
-    terms_tbl: pa.Table,
-    blob: bytes,
+    p_term: np.ndarray,
+    p_doc: np.ndarray,
+    p_tf: np.ndarray,
+    p_pos: np.ndarray | None,
     docs_pdf: pd.DataFrame,
+    block_size: int,
     meta_extra: dict,
-) -> dict:
-    """Write a segment dir atomically (tmp -> rename -> _SUCCESS last)."""
+    status: str,
+    t0: float,
+    stage: dict,
+    adaptive: bool = True,
+    quantize_meta: bool = False,
+) -> pd.DataFrame:
+    """The one segment writer, for build and compaction alike: order the
+    postings, encode them and commit the segment dir atomically (tmp ->
+    rename -> `_SUCCESS` last). Returns the segment's manifest row.
+
+    Postings (int64 docids/tfs) arrive in any order, each (term, docid)
+    pair once; `p_pos` (None without positions) holds each posting's
+    occurrences in INPUT posting order. `docs_pdf` is the docs sidecar,
+    docid-ascending, non-empty, with a `dl` column. `stage` gains
+    final_sort_sec / encode_sec / write_sec and lands in meta.json as
+    `stage_sec` (write_sec stops before the meta.json dump)."""
+    ts = time.time()
+    docids = docs_pdf["docid"].to_numpy(np.int64)
+    lo = int(docids[0])
+    if len(p_doc):
+        # (term, docid) order via factorize + int sort: no string sort of
+        # the posting stream
+        codes, uniq = pd.factorize(p_term, sort=False)
+        rank = np.empty(len(uniq), dtype=np.int32)
+        rank[np.argsort(uniq, kind="stable")] = np.arange(
+            len(uniq), dtype=np.int32)
+        t_rank = rank[codes]
+        # stable sort on the int32 term rank alone: when the input is
+        # docid-ascending (a sortWithinPartitions build, or a merge of
+        # docid-ordered segments) this is already the full (term, docid)
+        # order, at half the memory traffic of a composite int64 key —
+        # the traffic that inflates at 16 concurrent build workers (the
+        # round-3 scaling table pinned +89% CPU to this sort)
+        order = np.argsort(t_rank, kind="stable")
+        r, d = t_rank[order], p_doc[order]
+        if ((r[1:] == r[:-1]) & (d[1:] < d[:-1])).any():
+            # docids descend somewhere within a term (e.g. assume_partitioned
+            # over rows in arbitrary order): composite (term, docid) key
+            span = int(docids[-1]) - lo + 1
+            order = np.argsort(t_rank.astype(np.int64) * span + (p_doc - lo),
+                               kind="stable")
+            d = p_doc[order]
+        tf = p_tf[order]
+        if p_pos is not None:
+            # gather each posting's occurrence range in the new order
+            occ_off = np.concatenate(([0], np.cumsum(p_tf)))[:-1]
+            p_pos = p_pos[_scatter_positions(occ_off[order], tf)]
+        p_term, p_doc, p_tf = p_term[order], d, tf
+    dl_arr = np.zeros(int(docids[-1]) - lo + 1, dtype=np.int64)
+    dl_arr[docids - lo] = docs_pdf["dl"].to_numpy(np.int64)
+    p_dl = dl_arr[p_doc - lo]
+    stage["final_sort_sec"] = time.time() - ts
+
+    ts = time.time()
+    terms_tbl, blob = encode_postings_frame(
+        p_term, p_doc, p_tf, p_dl, block_size, adaptive=adaptive,
+        p_pos=p_pos, quantize_meta=quantize_meta,
+    )
+    stage["encode_sec"] = time.time() - ts
+
+    ts = time.time()
     tmp_dir = seg_dir + ".tmp"
     shutil.rmtree(tmp_dir, ignore_errors=True)
     os.makedirs(tmp_dir, exist_ok=True)
@@ -731,13 +816,10 @@ def write_segment_files(
         pa.Table.from_pandas(docs_pdf, preserve_index=False),
         os.path.join(tmp_dir, "docs.parquet"),
     )
-    docids = docs_pdf["docid"].to_numpy(np.int64)
-    n_postings = (
-        int(terms_tbl.column("df").to_numpy().sum()) if terms_tbl.num_rows else 0
-    )
+    n_postings = len(p_doc)
     meta = {
         "version": SEGMENT_FORMAT_VERSION,
-        "min_docid": int(docids.min()), "max_docid": int(docids.max()),
+        "min_docid": lo, "max_docid": int(docids[-1]),
         "n_docs": int(len(docs_pdf)),
         "n_terms": int(terms_tbl.num_rows),
         "n_postings": n_postings,
@@ -761,13 +843,15 @@ def write_segment_files(
         },
         **meta_extra,
     }
+    stage["write_sec"] = time.time() - ts
+    meta["stage_sec"] = {k: round(v, 3) for k, v in stage.items()}
     with open(os.path.join(tmp_dir, "meta.json"), "w") as f:
         json.dump(meta, f)
     shutil.rmtree(seg_dir, ignore_errors=True)
     os.rename(tmp_dir, seg_dir)
     with open(os.path.join(seg_dir, "_SUCCESS"), "w") as f:
         f.write(meta.get("fingerprint", ""))
-    return meta
+    return _manifest_row(seg_dir, meta, status, time.time() - t0)
 
 
 def _build_segment_stream(
@@ -793,33 +877,21 @@ def _build_segment_stream(
     Per chunk: tokenize -> factorize the token stream (C hash table) ->
     one int64 sort + run-length for (term, docid, tf). Docids are disjoint
     across chunks, so chunk posting sets concatenate without re-counting;
-    the final pass re-ranks terms lexicographically and orders postings by
-    (term, docid) — byte-identical output to a whole-partition build.
+    write_segment then orders them by (term, docid), encodes and commits —
+    byte-identical output to a whole-partition build.
     """
     t0 = time.time()
-    stage = {"tokenize_sec": 0.0, "chunk_agg_sec": 0.0,
-             "final_sort_sec": 0.0, "encode_sec": 0.0}
+    stage = {"tokenize_sec": 0.0, "chunk_agg_sec": 0.0}
     doc_meta: list[pd.DataFrame] = []
     c_terms: list[np.ndarray] = []
     c_docs: list[np.ndarray] = []
     c_tfs: list[np.ndarray] = []
     c_pos: list[np.ndarray] = []
-    # stream_sorted: docids non-decreasing within AND across chunks. When
-    # it holds (build_index sorts within partitions), the final pass can
-    # sort by term rank alone (stable) instead of a composite key.
-    stream_sorted = True
-    last_docid = -1
     for pdf in batches:
         if not len(pdf):
             continue
         ts = time.time()
         docids = pdf["docid"].to_numpy(np.int64)
-        if stream_sorted:
-            if docids[0] <= last_docid or (
-                    len(docids) > 1 and (np.diff(docids) <= 0).any()):
-                stream_sorted = False
-            else:
-                last_docid = int(docids[-1])
         shas = pdf[content_col].map(
             lambda s: hashlib.sha256(s.encode()).hexdigest()
         )
@@ -886,98 +958,30 @@ def _build_segment_stream(
     seg_id = f"seg-{int(docids[0]):012d}"
     seg_dir = os.path.join(index_dir, seg_id)
 
-    def manifest_row(status: str, meta: dict, secs: float) -> pd.DataFrame:
-        return pd.DataFrame([{
-            "segment_id": seg_id, "path": seg_dir, "status": status,
-            "min_docid": meta["min_docid"], "max_docid": meta["max_docid"],
-            "n_docs": meta["n_docs"], "n_terms": meta["n_terms"],
-            "n_postings": meta["n_postings"],
-            "bytes_postings": meta["bytes_postings"],
-            "build_sec": secs, "fingerprint": fp,
-        }])
-
     meta_path = os.path.join(seg_dir, "meta.json")
     if os.path.exists(os.path.join(seg_dir, "_SUCCESS")) and os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
         if meta.get("fingerprint") == fp:
-            return manifest_row("resumed", meta, 0.0)
+            return _manifest_row(seg_dir, meta, "resumed", 0.0)
         shutil.rmtree(seg_dir, ignore_errors=True)
 
-    ts = time.time()
-    if c_terms:
-        # (term, docid) pairs are unique across chunks (docids disjoint) —
-        # one global order pass, no re-aggregation
-        all_t = np.concatenate(c_terms)
-        all_d = np.concatenate(c_docs)
-        all_tf = np.concatenate(c_tfs)
-        codes, uniq = pd.factorize(all_t, sort=False)
-        term_order = np.argsort(uniq, kind="stable")
-        rank = np.empty(len(uniq), dtype=np.int32)
-        rank[term_order] = np.arange(len(uniq), dtype=np.int32)
-        seg_span = int(docids[-1] - docids[0] + 1)
-        if stream_sorted:
-            # sort by TERM RANK ONLY, int32 keys, stable: the stream is
-            # docid-ascending (verified above), so within a term the
-            # postings already ascend by docid and stability alone yields
-            # the full (term, docid) order — no composite int64 key to
-            # materialize. Halves the sort's memory traffic, which is
-            # exactly what inflates at 16 concurrent build workers (the
-            # round-3 scaling table pinned +89% CPU to this sort).
-            order = np.argsort(rank[codes], kind="stable")
-        else:
-            # unsorted caller (assume_partitioned with arbitrary row
-            # order): fall back to the composite (term, docid) key
-            order = np.argsort(
-                rank[codes].astype(np.int64) * seg_span
-                + (all_d - docids[0]), kind="stable")
-        p_term, p_doc, p_tf = all_t[order], all_d[order], all_tf[order]
-        dl_arr = np.zeros(seg_span, dtype=np.int64)
-        dl_arr[docids - docids[0]] = docs_pdf["dl"].to_numpy(np.int64)
-        p_dl = dl_arr[p_doc - docids[0]]
-        p_pos = None
-        if positions:
-            # gather each posting's occurrence range in the new order
-            all_pos = np.concatenate(c_pos)
-            occ_off = np.concatenate(([0], np.cumsum(all_tf)))[:-1]
-            p_pos = all_pos[_scatter_positions(occ_off[order], p_tf)]
-    else:
-        p_term = np.array([], dtype=object)
-        p_doc = p_tf = p_dl = np.array([], dtype=np.int64)
-        p_pos = np.array([], dtype=np.int64) if positions else None
-
-    stage["final_sort_sec"] = time.time() - ts
-    ts = time.time()
-    terms_tbl, blob = encode_postings_frame(
-        p_term, p_doc.astype(np.int64), p_tf.astype(np.int64), p_dl,
-        block_size, adaptive=(codec == "adaptive"), p_pos=p_pos,
-        quantize_meta=quantize_meta,
-    )
-    stage["encode_sec"] = time.time() - ts
-    ts = time.time()
-    meta = write_segment_files(seg_dir, terms_tbl, blob, docs_pdf, {
-        "segment_id": seg_id, "block_size": block_size,
-        "tokenizer_mode": mode, "codec": codec, "fingerprint": fp,
-        "has_positions": positions, "key_cols": list(key_cols),
-        # content_col persists so index_config can recover it for
-        # build_index-built indexes (create.json only exists for serve
-        # sessions) — without it replace_docs on an index built with
-        # content_col='body' silently tokenizes the default column
-        "content_col": content_col,
-        "quantize_meta": bool(quantize_meta),
-    })
-    stage["write_sec"] = time.time() - ts
-    # stage timers land in meta.json AFTER the write (atomic dir rename
-    # already happened) — via tmp + os.replace: the segment is already
-    # COMMITTED (_SUCCESS published), so a crash mid-rewrite must not be
-    # able to leave a truncated meta.json that makes every later read
-    # (and the resume path's json.loads) fail on a data-complete segment
-    meta["stage_sec"] = {k: round(v, 3) for k, v in stage.items()}
-    mtmp = os.path.join(seg_dir, "meta.json.tmp")
-    with open(mtmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(mtmp, os.path.join(seg_dir, "meta.json"))
-    return manifest_row("built", meta, time.time() - t0)
+    return write_segment(
+        seg_dir, _concat(c_terms, object), _concat(c_docs, np.int64),
+        _concat(c_tfs, np.int64),
+        _concat(c_pos, np.int64) if positions else None,
+        docs_pdf, block_size, {
+            "segment_id": seg_id, "block_size": block_size,
+            "tokenizer_mode": mode, "codec": codec, "fingerprint": fp,
+            "has_positions": positions, "key_cols": list(key_cols),
+            # content_col persists so index_config can recover it for
+            # build_index-built indexes (create.json only exists for serve
+            # sessions) — without it replace_docs on an index built with
+            # content_col='body' silently tokenizes the default column
+            "content_col": content_col,
+            "quantize_meta": bool(quantize_meta),
+        }, "built", t0, stage, adaptive=(codec == "adaptive"),
+        quantize_meta=quantize_meta)
 
 
 def build_index(
@@ -1020,8 +1024,8 @@ def build_index(
         # sortWithinPartitions: a JVM/Tungsten pointer sort that makes the
         # Arrow stream docid-ascending, which lets the python builder
         # replace its composite (term, docid) argsort with a stable
-        # rank-only int32 sort (see _build_segment_stream) — the cheapest
-        # place to buy the ordering is the engine's own sort
+        # rank-only int32 sort (see write_segment) — the cheapest place
+        # to buy the ordering is the engine's own sort
         part = (part.repartitionByRange(num_segments, "docid")
                     .sortWithinPartitions("docid"))
 
@@ -1141,14 +1145,11 @@ def _term_stats_file_sha(path: str) -> str:
     return sha
 
 
-def read_global_term_stats(index_dir: str,
-                           terms: list[str]) -> dict[str, int] | None:
-    """Driver-side df lookup for query terms from the hot-tier dictionary.
-    Returns None if the index predates term_stats.parquet OR the file's
-    sha256 does not match the manifest's recorded hash (a crash between
-    the two writes leaves a mismatched pair — callers fall back to the
-    distributed aggregation, which is always correct); {} just means all
-    terms OOV."""
+def _trusted_term_stats(index_dir: str) -> str | None:
+    """Path of the hot-tier term_stats.parquet when it exists and its
+    sha256 matches the manifest's recorded `term_stats_sha` (or none is
+    recorded); None for a pre-stats index or a stats/manifest torn write
+    (a crash between the two writes leaves a mismatched pair)."""
     path = os.path.join(index_dir, "term_stats.parquet")
     if not os.path.exists(path):
         return None
@@ -1157,7 +1158,19 @@ def read_global_term_stats(index_dir: str,
     except FileNotFoundError:
         want = None
     if want is not None and _term_stats_file_sha(path) != want:
-        return None  # stats/manifest torn write: distrust the hot tier
+        return None
+    return path
+
+
+def read_global_term_stats(index_dir: str,
+                           terms: list[str]) -> dict[str, int] | None:
+    """Driver-side df lookup for query terms from the hot-tier dictionary.
+    Returns None when the stats file is not trusted (_trusted_term_stats)
+    — callers fall back to the distributed aggregation, which is always
+    correct; {} just means all terms OOV."""
+    path = _trusted_term_stats(index_dir)
+    if path is None:
+        return None
     import pyarrow.dataset as ds
 
     tbl = ds.dataset(path).to_table(
@@ -1169,22 +1182,16 @@ def read_global_term_stats(index_dir: str,
 def vocab_dataset_paths(index_dir: str) -> tuple[list[str], bool]:
     """Parquet paths holding the index's (term, df) vocabulary, for
     operators that SCAN the vocabulary (regex/fuzzy/suggest expansion).
-    Returns ([term_stats.parquet], True) when the hot-tier file exists
-    and its sha matches the manifest (each term exactly once), else the
-    manifest's per-segment dictionaries with aggregated=False — terms
-    repeat per segment there and callers must re-aggregate df. Same
-    distrust rules as read_global_term_stats: absence (pre-stats index)
-    and a stats/manifest torn write both fall back to the per-segment
-    truth instead of crashing or silently expanding against a vocabulary
-    that does not match the manifest snapshot being searched."""
-    path = os.path.join(index_dir, "term_stats.parquet")
-    if os.path.exists(path):
-        try:
-            want = load_manifest(index_dir).get("term_stats_sha")
-        except FileNotFoundError:
-            want = None
-        if want is None or _term_stats_file_sha(path) == want:
-            return [path], True
+    Returns ([term_stats.parquet], True) when the hot-tier file is trusted
+    (_trusted_term_stats; each term exactly once), else the manifest's
+    per-segment dictionaries with aggregated=False — terms repeat per
+    segment there and callers must re-aggregate df. Absence (pre-stats
+    index) and a stats/manifest torn write both fall back to the
+    per-segment truth instead of crashing or silently expanding against a
+    vocabulary that does not match the manifest snapshot being searched."""
+    path = _trusted_term_stats(index_dir)
+    if path is not None:
+        return [path], True
     manifest = load_manifest(index_dir)
     return ([os.path.join(s["path"], "terms.parquet")
              for s in manifest["segments"]], False)

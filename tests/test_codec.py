@@ -1,6 +1,8 @@
 """Codec round-trip property tests — analog of TestProductQuantization
 round-trips (TestProductQuantization.java:57-346) and PQLayout chunk-boundary
-edge cases (PQVectors.java:430-492), per FIXTURES.md §6."""
+edge cases (PQVectors.java:430-492), per FIXTURES.md §6. Block-level cases
+run through the segment format that ships (encode_postings_frame decoded by
+SegmentReader), for the adaptive codec and for varint-only."""
 
 from __future__ import annotations
 
@@ -9,16 +11,27 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from jvector_spark.functions.codec import (
-    CODEC_FOR,
-    CODEC_VARINT,
-    decode_block,
-    encode_block,
-    for_decode,
-    for_encode,
-    varint_decode,
-    varint_encode,
-)
+from jvector_spark.functions.codec import varint_decode, varint_encode
+from jvector_spark.sources import segment as S
+
+
+def _frame_reader(tbl, blob) -> S.SegmentReader:
+    """A SegmentReader over an in-memory (dictionary, postings blob) pair."""
+    rd = object.__new__(S.SegmentReader)
+    rd._blob = np.frombuffer(blob, np.uint8)
+    rd._blob_file = None
+    rd._cols = {n: tbl.column(n).to_numpy(zero_copy_only=False)
+                for n in tbl.column_names if n != "term"}
+    rd.terms = tbl.column("term").to_pylist()
+    rd._term_idx = {t: i for i, t in enumerate(rd.terms)}
+    return rd
+
+
+def _one_term_frame(docids, tfs, adaptive):
+    n = len(docids)
+    return S.encode_postings_frame(
+        np.array(["t"] * n, dtype=object), docids, tfs,
+        np.full(n, 17, np.int64), 128, adaptive=adaptive)
 
 
 @given(st.lists(st.integers(0, 2**63 - 1), max_size=300))
@@ -26,13 +39,6 @@ from jvector_spark.functions.codec import (
 def test_varint_roundtrip(vals):
     arr = np.array(vals, dtype=np.uint64)
     assert np.array_equal(varint_decode(varint_encode(arr)), arr) or len(vals) == 0
-
-
-@given(st.lists(st.integers(0, 2**63 - 1), min_size=1, max_size=300))
-@settings(max_examples=200, deadline=None)
-def test_for_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert np.array_equal(for_decode(for_encode(arr), len(arr)), arr)
 
 
 @pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 1000, 100_000])
@@ -44,11 +50,19 @@ def test_block_roundtrip_fixture_lengths(n):
     pick = rng.random(n) < 0.9
     gaps = np.where(pick, dense, sparse).astype(np.int64)
     docids = np.cumsum(gaps) + 17
-    tfs = rng.integers(1, 1000, n)
-    payload = encode_block(docids, tfs)
-    d2, t2 = decode_block(payload, n, int(docids[0]))
-    assert np.array_equal(d2, docids)
-    assert np.array_equal(t2, tfs)
+    tfs = rng.integers(1, 1000, n).astype(np.int64)
+    blk = np.arange(n) // 128
+    even = blk % 2 == 0
+    for adaptive in (True, False):
+        tbl, blob = _one_term_frame(docids, tfs, adaptive)
+        rd = _frame_reader(tbl, blob)
+        d2, t2 = rd.decode_term("t")
+        assert np.array_equal(d2, docids), adaptive
+        assert np.array_equal(t2, tfs), adaptive
+        # block-selective decode: every other 128-posting block
+        d3, t3 = rd.decode_term("t", np.arange(blk[-1] + 1) % 2 == 0)
+        assert np.array_equal(d3, docids[even]), adaptive
+        assert np.array_equal(t3, tfs[even]), adaptive
 
 
 def test_varint_known_values():
@@ -60,21 +74,19 @@ def test_varint_known_values():
     assert np.array_equal(varint_decode(varint_encode(big)), big)
 
 
-def test_for_zero_width():
-    arr = np.zeros(40, dtype=np.uint64)
-    enc = for_encode(arr)
-    assert enc == bytes([0])
-    assert np.array_equal(for_decode(enc, 40), arr)
-
-
 def test_compression_ratio_on_dense_gaps():
     """Dense posting lists must actually compress (sanity, not a perf test)."""
     rng = np.random.default_rng(0)
     docids = np.sort(rng.choice(100_000, 50_000, replace=False)).astype(np.int64)
-    tfs = rng.integers(1, 5, len(docids))
-    payload = encode_block(docids, tfs)
+    tfs = rng.integers(1, 5, len(docids)).astype(np.int64)
     raw = len(docids) * 16
-    assert len(payload) < raw / 4, f"{len(payload)} vs raw {raw}"
+    for adaptive in (True, False):
+        tbl, blob = _one_term_frame(docids, tfs, adaptive)
+        assert len(blob) < raw / 4, f"{len(blob)} vs raw {raw} ({adaptive})"
+        d2, t2 = _frame_reader(tbl, blob).decode_term("t")
+        assert np.array_equal(d2, docids) and np.array_equal(t2, tfs)
+        # dense gaps must pick FOR when the codec may choose
+        assert tbl.column("gap_codec").to_pylist() == [int(adaptive)]
 
 
 # --- segment-level property tests: the full v2 frame (adaptive codec +
@@ -100,8 +112,6 @@ def _posting_sets(draw):
 @given(_posting_sets(), st.booleans(), st.booleans())
 @settings(max_examples=25, deadline=None)
 def test_segment_frame_roundtrip_property(rows, adaptive, with_pos):
-    from jvector_spark.sources import segment as S
-
     p_term = np.array([r[0] for r in rows], dtype=object)
     p_doc = np.array([r[1] for r in rows], dtype=np.int64)
     p_tf = np.array([r[2] for r in rows], dtype=np.int64)
@@ -117,16 +127,8 @@ def test_segment_frame_roundtrip_property(rows, adaptive, with_pos):
         ]) if len(p_tf) else np.zeros(0, np.int64)
     tbl, blob = S.encode_postings_frame(
         p_term, p_doc, p_tf, p_dl, 128, adaptive=adaptive, p_pos=p_pos)
-    rd = object.__new__(S.SegmentReader)
-    rd._blob = np.frombuffer(blob, np.uint8)
-    rd._blob_file = None
-    cols = {n: tbl.column(n).to_numpy(zero_copy_only=False)
-            for n in tbl.column_names if n != "term"}
-    terms = tbl.column("term").to_pylist()
-    rd._cols = cols
-    rd._term_idx = {t: i for i, t in enumerate(terms)}
-    rd.terms = terms
-    for t in terms:
+    rd = _frame_reader(tbl, blob)
+    for t in rd.terms:
         m = p_term == t
         if with_pos:
             d, tf, pos = rd.decode_term_positions(t)

@@ -423,9 +423,11 @@ def test_streaming_auto_compaction(spark, corpus_df, corpus_pdf,
 
 def test_verify_index_detects_corruption(spark, corpus_df, tmp_path_factory):
     """fsck: a clean positional index verifies ok everywhere; flipping one
-    posting byte is caught (sha mismatch and/or decode failure), and a
-    truncated docs sidecar is caught."""
+    posting byte is caught (sha mismatch and/or decode failure), and so is
+    one flipped key-bloom byte, which keeps the file's size and so still
+    loads (a false negative there re-indexes a committed doc)."""
     from jvector_spark.plans.verify import verify_index
+    from jvector_spark.sources.segment import KEY_BLOOM_FILE, load_key_bloom
 
     idx = str(tmp_path_factory.mktemp("idx_fsck"))
     manifest = build_index(assign_dense_docids(corpus_df), idx,
@@ -440,13 +442,24 @@ def test_verify_index_detects_corruption(spark, corpus_df, tmp_path_factory):
     raw[len(raw) // 2] ^= 0xFF
     with open(blob, "wb") as f:
         f.write(bytes(raw))
+    # and one bit of segment 1's key bloom
+    kvictim = manifest["path"].iloc[1]
+    kb = os.path.join(kvictim, KEY_BLOOM_FILE)
+    raw = bytearray(open(kb, "rb").read())
+    raw[len(raw) // 2] ^= 0x01
+    with open(kb, "wb") as f:
+        f.write(bytes(raw))
+    assert load_key_bloom(kvictim) is not None
     res = verify_index(spark, idx).toPandas().set_index("segment_id")
     vid = manifest["segment_id"].iloc[0]
     assert not res.loc[vid, "ok"]
     assert any("sha256" in e or "decode" in e or "ascending" in e
                for e in res.loc[vid, "errors"])
-    others = res.drop(index=vid)
-    assert others["ok"].all()
+    kid = manifest["segment_id"].iloc[1]
+    assert not res.loc[kid, "ok"]
+    assert list(res.loc[kid, "errors"]) == ["key_bloom_sha256 mismatch"]
+    others = res.drop(index=[vid, kid])
+    assert len(others) and others["ok"].all()
 
 
 def test_vacuum_respects_live_lease(spark, corpus_df, tmp_path_factory):

@@ -139,49 +139,38 @@ def test_compression_ratio_improves(v2_index):
 
 def test_sorted_fast_path_byte_identical_to_fallback(
         spark, corpus_df, tmp_path_factory):
-    """The builder's rank-only sort (docid-ascending stream, the
-    sortWithinPartitions fast path) and the composite-key fallback
-    (arbitrary row order) must produce BYTE-IDENTICAL segments — the
-    ordering optimization can never change the on-disk format."""
-    import glob
-    import hashlib as _hl
-
-    from jvector_spark.operators.ids import assign_dense_docids
-    from jvector_spark.sources.segment import build_index
-
-    docs = assign_dense_docids(corpus_df)
-    a = str(tmp_path_factory.mktemp("idx_sorted"))
-    b = str(tmp_path_factory.mktemp("idx_shuffled"))
-    build_index(docs, a, num_segments=2)  # sorted stream (fast path)
-    # shuffled row order + assume_partitioned: the runtime sortedness
-    # check must detect disorder and take the composite fallback
+    """write_segment's order rule: the rank-only sort (docid-ascending
+    stream, the range-sorted build) and the composite-key fallback (rows in
+    random order under assume_partitioned) must write BYTE-IDENTICAL
+    segments, with and without positions. Compaction goes through the same
+    writer, so its segments carry the same stage timers as built ones."""
     from pyspark.sql import functions as F
-    shuffled = docs.orderBy(F.md5(F.col("content"))).coalesce(2)
-    build_index(shuffled, b, num_segments=2, assume_partitioned=True)
 
-    def seg_hashes(d):
-        out = {}
-        for f in sorted(glob.glob(os.path.join(d, "seg-*", "postings.bin"))):
-            out[os.path.basename(os.path.dirname(f))] = _hl.sha256(
-                open(f, "rb").read()).hexdigest()
-        return out
+    from jvector_spark.plans.merge import compact_index, mark_deleted
 
-    ha, hb = seg_hashes(a), seg_hashes(b)
-    # segment boundaries may differ (different partitioning); compare the
-    # union decode instead when they do, else require byte identity
-    if sorted(ha) == sorted(hb):
-        assert ha == hb
-    # regardless of layout, both indexes must return identical results
-    import pandas as pd
-
-    from jvector_spark.operators.wand import search_index
-
-    q = pd.DataFrame({"qid": [0, 1], "terms": [["import"], ["def"]],
-                      "k": [10, 10]})
-    ra = search_index(spark, a, q, merge="driver")
-    rb = search_index(spark, b, q, merge="driver")
-    pd.testing.assert_frame_equal(ra.reset_index(drop=True),
-                                  rb.reset_index(drop=True))
+    # one partition, so both builds cut the same single segment
+    docs = assign_dense_docids(corpus_df, num_partitions=1)
+    shuffled = docs.sortWithinPartitions(F.rand(5))
+    for positions in (False, True):
+        a = str(tmp_path_factory.mktemp("idx_sorted"))
+        b = str(tmp_path_factory.mktemp("idx_shuffled"))
+        ma = build_index(docs, a, num_segments=1, positions=positions)
+        mb = build_index(shuffled, b, assume_partitioned=True,
+                         positions=positions)
+        assert list(ma["segment_id"]) == list(mb["segment_id"])
+        for sid in ma["segment_id"]:
+            for f in ("postings.bin", "terms.parquet", "docs.parquet"):
+                with open(os.path.join(a, sid, f), "rb") as fa, \
+                        open(os.path.join(b, sid, f), "rb") as fb:
+                    assert fa.read() == fb.read(), (positions, sid, f)
+    mark_deleted(a, [0, 7, 8])
+    out = str(tmp_path_factory.mktemp("idx_compacted"))
+    merged = compact_index(spark, a, out, target_segments=1)
+    assert len(merged) and (merged["status"] == "merged").all()
+    for p in merged["path"]:
+        with open(os.path.join(p, "meta.json")) as f:
+            stage = json.load(f)["stage_sec"]
+        assert {"final_sort_sec", "encode_sec", "write_sec"} <= set(stage)
 
 
 def test_block_size_64_round_trip(spark, corpus_df, v2_index,
