@@ -32,9 +32,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
 from jvector_spark.operators.wand import (
-    IndexSnapshot, intersect, live, open_segments, overlapping_blocks,
-    term_postings, topk_partial)
+    IndexSnapshot, intersect, live, open_segments, term_postings,
+    topk_partial)
 from jvector_spark.sources.segment import SegmentReader
+
+
+def overlapping_blocks(row: dict, cand: np.ndarray) -> np.ndarray:
+    """Mask of a term's blocks (its dictionary `row`) whose docid range
+    [block_first, block_last] holds at least one of the sorted
+    candidates — the blocks a candidate-restricted decode must read."""
+    first = np.asarray(row["block_first"], dtype=np.int64)
+    last = np.asarray(row["block_last"], dtype=np.int64)
+    lo = np.searchsorted(cand, first, side="left")
+    overlap = lo < len(cand)
+    overlap[overlap] &= cand[lo[overlap]] <= last[overlap]
+    return overlap
 
 
 def _positions_by_doc(
@@ -51,18 +63,13 @@ def _positions_by_doc(
 
 def match_phrase_on_segment(
     reader: SegmentReader,
+    cache: dict,
     terms: list[str],
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(docids, n_matches) of one phrase against one segment (exact)."""
-    return _phrase_on_segment(reader, {}, terms, tombstones)
-
-
-def _phrase_on_segment(reader: SegmentReader, cache: dict, terms: list[str],
-                       tombstones: np.ndarray | None
-                       ) -> tuple[np.ndarray, np.ndarray]:
-    """match_phrase_on_segment with the candidate docids decoded through
-    the segment cache (wand.term_postings)."""
+    """(docids, n_matches) of one phrase against one segment (exact), the
+    candidate docids decoded through the segment cache
+    (wand.term_postings)."""
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
     # candidate docs: live docs holding every term (no positions yet)
@@ -110,7 +117,7 @@ def phrase_partial(segments, queries: pd.DataFrame) -> pd.DataFrame:
     stop-word-ish phrase over a big segment emits k rows, not millions."""
     return topk_partial(
         segments, queries,
-        lambda seg, q, top: _phrase_on_segment(
+        lambda seg, q, top: match_phrase_on_segment(
             seg.reader, seg.cache, list(q.terms), seg.tombstones),
         "n_matches")
 

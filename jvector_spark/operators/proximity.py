@@ -57,19 +57,14 @@ def window_match_count(
 
 def match_window_on_segment(
     reader: SegmentReader,
+    cache: dict,
     terms: list[str],
     window: int,
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(docids, n_matches) for one proximity query against one segment."""
-    return _window_on_segment(reader, {}, terms, window, tombstones)
-
-
-def _window_on_segment(reader: SegmentReader, cache: dict, terms: list[str],
-                       window: int, tombstones: np.ndarray | None
-                       ) -> tuple[np.ndarray, np.ndarray]:
-    """match_window_on_segment with the candidate docids decoded through
-    the segment cache (wand.term_postings)."""
+    """(docids, n_matches) for one proximity query against one segment,
+    the candidate docids decoded through the segment cache
+    (wand.term_postings)."""
     terms = sorted(set(terms))
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
@@ -128,7 +123,7 @@ def proximity_search(
     def kernel(paths, tomb, q):
         yield topk_partial(
             open_segments(paths, tomb, probe, positions=True), q,
-            lambda seg, r, top: _window_on_segment(
+            lambda seg, r, top: match_window_on_segment(
                 seg.reader, seg.cache, r.terms, int(r.window),
                 seg.tombstones),
             "n_matches")

@@ -6,8 +6,8 @@ Reference mapping (SURVEY §3):
     NodeQueue.java:42-101) -> MaxScore/block-max pruned term-at-a-time
     scoring with a bounded per-query top-k and threshold θ.
   * Two-phase approx+rerank (reranking:465-501) -> block-max upper bounds
-    (cheap, metadata-only) decide what to decode; exact BM25 scores what
-    survives.
+    (cheap, metadata-only) decide which docs become candidates and which
+    segments are skipped; exact BM25 scores the candidates.
   * Multi-index combine with rerankFloor (GraphSearcher.java:368-385) ->
     θ propagates across segments scored sequentially in one task; the global
     merge is a partial-top-k union (a task's top-k is a superset of its
@@ -367,18 +367,6 @@ def intersect(lists: Iterable[np.ndarray]) -> np.ndarray:
     return cand
 
 
-def overlapping_blocks(row: dict, cand: np.ndarray) -> np.ndarray:
-    """Mask of a term's blocks (its dictionary `row`) whose docid range
-    [block_first, block_last] holds at least one of the sorted
-    candidates — the blocks a candidate-restricted decode must read."""
-    first = np.asarray(row["block_first"], dtype=np.int64)
-    last = np.asarray(row["block_last"], dtype=np.int64)
-    lo = np.searchsorted(cand, first, side="left")
-    overlap = lo < len(cand)
-    overlap[overlap] &= cand[lo[overlap]] <= last[overlap]
-    return overlap
-
-
 def live(cand: np.ndarray, accept: np.ndarray | None,
          tombstones: np.ndarray | None) -> np.ndarray:
     """Sorted unique candidates minus docs outside the doc_filter bitmap
@@ -444,9 +432,9 @@ def score_query_on_segment(
     until compaction (2-phase delete, GraphIndexBuilder.java:684-805).
 
     `cache` (per-segment dict, shared across the queries of one task) holds
-    term rows, block upper-bound arrays, and full-term decodes — the analog
-    of the reference's pooled searcher scratch reused across queries
-    (GraphSearcher.java:51-57, ExplicitThreadLocal)."""
+    term rows, block upper-bound arrays, and whole-term decodes and
+    contributions — the analog of the reference's pooled searcher scratch
+    reused across queries (GraphSearcher.java:51-57, ExplicitThreadLocal)."""
     terms = sorted({t for t in terms if t in idfs and reader.has_term(t)})
     if not terms:
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
@@ -491,8 +479,8 @@ def score_query_on_segment(
         stats["blocks_total"] = stats.get("blocks_total", 0) + blocks_total
 
     # MaxScore split: terms that cannot (even jointly) introduce a new
-    # top-k doc generate no candidates; their postings are only gathered
-    # for docs already in the candidate set.
+    # top-k doc generate no candidates; they only add their contributions
+    # to docs already in the candidate set.
     order = np.argsort(term_ub, kind="stable")
     csum = np.cumsum(term_ub[order])
     n_nonessential = int(np.searchsorted(csum, theta, side="left"))
@@ -500,36 +488,20 @@ def score_query_on_segment(
 
     # candidate generation with per-block skipping (BMW): a block whose
     # upper bound plus every other term's upper bound stays below theta
-    # cannot introduce a new top-k doc by itself.
-    gen: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    gen_mask: dict[str, np.ndarray] = {}
+    # cannot introduce a new top-k doc by itself. The bounds only pick
+    # candidates: each term decodes whole, once per segment cache, and the
+    # block mask slices its docids.
     cand_parts = []
-    # terms scored from their cached full-list contributions: already
-    # decoded, shared by >=2 queries of the batch, or pooled; a term
-    # whose generation decodes it fully joins below
-    hot, pooled = cache.get("_hot", ()), cache.get("_pooled")
-    full = {t: ("full", t) in cache or t in hot or pooled for t in terms}
     for i, t in enumerate(terms):
         if t in nonessential:
-            gen_mask[t] = np.zeros(len(block_ub[t]), dtype=bool)
             continue
-        other = total_ub - term_ub[i]
-        mask = block_ub[t] + other >= theta
-        gen_mask[t] = mask
+        mask = block_ub[t] + (total_ub - term_ub[i]) >= theta
         if stats is not None:
             stats["blocks_gen"] = stats.get("blocks_gen", 0) + int(mask.sum())
-        if full[t] or mask.mean() > 0.5:
-            # slice the masked blocks out of the (cached) full decode —
-            # pruning semantics preserved, decode amortized across queries
-            d, tf = term_postings(reader, cache, t)
-            if not mask.all():
-                ex = np.repeat(mask, np.asarray(rows[t]["block_n"],
-                                                dtype=np.int64))
-                d, tf = d[ex], tf[ex]
-            full[t] = True
-        else:
-            d, tf = reader.decode_term(t, mask)
-        gen[t] = (d, tf)
+        d = term_postings(reader, cache, t)[0]
+        if not mask.all():
+            d = d[np.repeat(mask, np.asarray(rows[t]["block_n"],
+                                             dtype=np.int64))]
         cand_parts.append(d)
     if not cand_parts:
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
@@ -540,28 +512,12 @@ def score_query_on_segment(
     if stats is not None:
         stats["candidates"] = stats.get("candidates", 0) + int(len(candidates))
 
-    # exact scoring in canonical sorted-term order (oracle bit-parity)
+    # exact scoring in canonical sorted-term order (oracle bit-parity); the
+    # membership test also drops docids the live filter took out
     scores = np.zeros(len(candidates), dtype=np.float64)
     for t in terms:
-        if full[t]:
-            d, c = term_contrib(reader, cache, t, idfs[t], avgdl)
-        else:
-            parts = [gen[t]] if t in gen else []
-            # gather pass: non-generating blocks that overlap the
-            # candidate set
-            gmask = ~gen_mask[t]
-            if gmask.any():
-                overlap = overlapping_blocks(rows[t], candidates) & gmask
-                if overlap.any():
-                    parts.append(reader.decode_term(t, overlap))
-            if not parts:
-                continue
-            # gen and gather block sets are disjoint, so d is unique
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
-            c = idfs[t] * _tf_norm(tf, reader.doclen(d), avgdl)
-        # the membership test also drops docids the live filter took out
-        n = accumulate(scores, candidates, d, c)
+        n = accumulate(scores, candidates,
+                       *term_contrib(reader, cache, t, idfs[t], avgdl))
         if stats is not None:
             stats["postings_scored"] = stats.get("postings_scored", 0) + n
     return topk_after(candidates, scores, k, after)
@@ -684,11 +640,12 @@ class SearcherPool:
     serving — the reference's pooled-searcher surface (ExplicitThreadLocal
     GraphSearchers in GraphSearcher.java:51-57; long-lived CREATE/SEARCH
     sessions in examples IPCService.java:80-87). One pool serves many
-    request batches against one index GENERATION: term-row/upper-bound/
-    full-decode caches persist across requests (they depend only on the
-    index bytes + global idf, both fixed per generation), so a warm
-    request pays zero dictionary re-reads. Call reset() when the manifest
-    changes (append/compaction)."""
+    request batches against one index GENERATION: the per-segment caches
+    an unpooled task builds for one call (term rows, upper bounds, decodes,
+    contributions) persist across requests instead (they depend only on
+    the index bytes + global idf, both fixed per generation), so a warm
+    request pays zero dictionary re-reads or decodes. Call reset() when
+    the manifest changes (append/compaction)."""
 
     __slots__ = ("readers", "caches", "blooms")
 
@@ -777,14 +734,7 @@ def search_partition(
             unions[qid] = (seg_tomb, np.union1d(seg_tomb, ex))
         return unions[qid][1]
 
-    # terms shared by >=2 queries always decode fully (once, cached) —
-    # repeated partial block decodes of the same hot term cost more than
-    # one full decode amortized across the batch
-    from collections import Counter
-
-    usage = Counter(t for ts in queries["terms"] for t in set(ts))
-    hot = frozenset(t for t, n in usage.items() if n >= 2)
-    all_terms = [t for t in usage if t in idfs]
+    all_terms = sorted({t for ts in queries["terms"] for t in ts if t in idfs})
     n_opened = 0
 
     def segments():
@@ -792,15 +742,6 @@ def search_partition(
         for seg in open_segments(seg_paths, tombstones, all_terms,
                                  doc_filter, pool):
             n_opened += 1
-            seg.cache["_hot"] = hot  # hot set is per request batch
-            if pool is not None:
-                # pooled caches outlive the batch: partial block decodes
-                # of a term would repeat every request, so pooled mode
-                # decodes terms FULLY into the generation-scoped cache and
-                # scores from cached per-term contributions thereafter —
-                # the warm in-memory index trade (results identical; only
-                # which bytes get decoded when changes)
-                seg.cache["_pooled"] = True
             yield seg
 
     def match(seg: Segment, q, top: _TopK):
@@ -921,7 +862,7 @@ def explain_score(
     float64 total, summed in the engine's canonical sorted-term order so
     `total` is bit-identical to the score search_index returns for the
     same doc. Serving-sized driver work: one segment lookup by docid
-    range, block-selective postings decode per term."""
+    range, one postings decode per term."""
     snap = IndexSnapshot(index_dir)
     manifest = snap.manifest
     docid = int(docid)

@@ -1553,7 +1553,8 @@ class SegmentReader:
         self, term: str, block_mask: np.ndarray | None = None
     ) -> tuple[np.ndarray, np.ndarray]:
         """(docids asc, tfs) for a term. With block_mask, only selected
-        blocks are decoded (block-max pruning / candidate-gather path).
+        blocks are decoded (the block-selective read that
+        decode_term_positions shares).
         Codec per (term, stream) from the dictionary: varint (absolute
         first docid + cross-block gaps, the v1 layout — segments without
         codec columns default here) or FOR bit-packing (format v2)."""

@@ -165,11 +165,11 @@ def test_phrase_with_tombstones(spark, pos_index, corpus_pdf):
     idx, manifest = pos_index
     reader = SegmentReader(manifest["path"].iloc[0])
     d, n = match_phrase_on_segment(
-        reader, ["map_get21", "run_parse33"], tombstones=None)
+        reader, {}, ["map_get21", "run_parse33"], tombstones=None)
     if not len(d):
         pytest.skip("fixture segment has no such phrase")
     dead = d[:1]
     d2, n2 = match_phrase_on_segment(
-        reader, ["map_get21", "run_parse33"], tombstones=dead)
+        reader, {}, ["map_get21", "run_parse33"], tombstones=dead)
     assert dead[0] not in d2
     assert np.array_equal(d2, d[1:]) and np.array_equal(n2, n[1:])

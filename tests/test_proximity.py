@@ -57,7 +57,7 @@ def test_segment_window_counts_match_oracle(pos_index, corpus_pdf):
     for terms, w in QUERIES:
         got: dict[int, int] = {}
         for path in manifest["path"]:
-            d, n = match_window_on_segment(SegmentReader(path), terms, w)
+            d, n = match_window_on_segment(SegmentReader(path), {}, terms, w)
             got.update(dict(zip(d.tolist(), n.tolist())))
         exp = _python_window_counts(corpus_pdf, terms, w)
         assert got == exp, (terms, w)

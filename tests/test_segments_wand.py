@@ -32,6 +32,17 @@ def index(spark, corpus_df, tmp_path_factory):
     return idx, manifest
 
 
+@pytest.fixture(scope="module")
+def index_b16(spark, corpus_df, tmp_path_factory):
+    """The same corpus in 16-posting blocks: terms span several blocks per
+    segment, so their block bounds differ and the generation mask can drop
+    some of a term's blocks (with one block per term it never does)."""
+    idx = str(tmp_path_factory.mktemp("idx_b16"))
+    build_index(assign_dense_docids(corpus_df), idx, num_segments=6,
+                block_size=16)
+    return idx
+
+
 def test_manifest_and_meta(index, oracle):
     idx, manifest = index
     assert (manifest["status"] == "built").all()
@@ -169,38 +180,115 @@ def test_driver_merge_equals_spark_merge(spark, index, queries_pdf):
     assert np.array_equal(a["score"].to_numpy(), b["score"].to_numpy())
 
 
-def test_search_metrics_show_pruning(spark, index, queries_pdf):
+def test_search_metrics_show_pruning(spark, index, index_b16, oracle,
+                                     queries_pdf):
     """Per-query search metrics (SearchResult.getVisitedCount analog,
     SearchResult.java:27-31): counters accumulate across tasks, and a
     small-k pruned search must do measurably LESS work than an exhaustive
     one (k = corpus size forces theta=0 everywhere). num_tasks=1 puts all
     segments in one sequential task so theta propagates segment-to-segment
-    (the rerankFloor path) — with one segment per task nothing can prune."""
+    (the rerankFloor path) — with one segment per task nothing can prune.
+    The pruned result is still the oracle's, rank for rank and bit for
+    bit, on one-block and on multi-block terms."""
     from jvector_spark.operators.wand import (
         make_metrics_accumulator, read_metrics)
 
-    idx, _ = index
+    tot = lambda m, key: sum(c.get(key, 0) for c in m.values())  # noqa: E731
     q_small = queries_pdf.copy()
     q_small["k"] = 5
-    acc = make_metrics_accumulator(spark)
-    search_index(spark, idx, q_small, num_tasks=1, metrics_acc=acc).toPandas()
-    pruned = read_metrics(acc)
-    assert pruned, "no metrics accumulated"
-    some_qid = next(iter(pruned))
-    assert pruned[some_qid].get("segments_visited", 0) > 0
-    assert pruned[some_qid].get("candidates", 0) > 0
+    golden = oracle.golden(q_small).sort_values(["qid", "rank"]).reset_index(drop=True)
+    for idx in (index[0], index_b16):
+        acc = make_metrics_accumulator(spark)
+        got = (
+            search_index(spark, idx, q_small, num_tasks=1, metrics_acc=acc)
+            .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+        )
+        pruned = read_metrics(acc)
+        assert pruned, "no metrics accumulated"
+        some_qid = next(iter(pruned))
+        assert pruned[some_qid].get("segments_visited", 0) > 0
+        assert pruned[some_qid].get("candidates", 0) > 0
+        assert list(got["qid"]) == list(golden["qid"])
+        assert list(got["docid"]) == list(golden["docid"])
+        assert np.array_equal(got["score"].to_numpy(),
+                              golden["score"].to_numpy())
+        # θ > 0 kept some blocks out of candidate generation
+        assert tot(pruned, "blocks_gen") < tot(pruned, "blocks_total")
 
-    q_big = queries_pdf.copy()
-    q_big["k"] = 100000  # k >= corpus: theta stays 0, nothing prunes
-    acc2 = make_metrics_accumulator(spark)
-    search_index(spark, idx, q_big, num_tasks=1, metrics_acc=acc2).toPandas()
-    exhaustive = read_metrics(acc2)
-    tot = lambda m, key: sum(c.get(key, 0) for c in m.values())  # noqa: E731
-    assert tot(pruned, "postings_scored") <= tot(exhaustive, "postings_scored")
-    assert tot(pruned, "candidates") < tot(exhaustive, "candidates"), (
-        f"pruning did not reduce candidate work: "
-        f"{tot(pruned, 'candidates')} vs {tot(exhaustive, 'candidates')}"
-    )
+        q_big = queries_pdf.copy()
+        q_big["k"] = 100000  # k >= corpus: theta stays 0, nothing prunes
+        acc2 = make_metrics_accumulator(spark)
+        search_index(spark, idx, q_big, num_tasks=1,
+                     metrics_acc=acc2).toPandas()
+        exhaustive = read_metrics(acc2)
+        assert (tot(pruned, "postings_scored")
+                <= tot(exhaustive, "postings_scored"))
+        assert tot(pruned, "candidates") < tot(exhaustive, "candidates"), (
+            f"pruning did not reduce candidate work: "
+            f"{tot(pruned, 'candidates')} vs {tot(exhaustive, 'candidates')}"
+        )
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_search_partition_pooled_equals_unpooled(index_b16, oracle,
+                                                 queries_pdf, mode):
+    """One task scores every segment (θ propagating) with deletes, a
+    doc_filter, per-query exclusions, search-after cursors and a min_score
+    floor. Unpooled, then cold and warm through one SearcherPool: the same
+    scoring path runs, so the frames and metrics are identical, and equal
+    to the oracle."""
+    from jvector_spark.operators.wand import SearcherPool, search_partition
+    from jvector_spark.plans.merge import TombstoneView
+
+    manifest = load_manifest(index_b16)
+    paths = [s["path"] for s in manifest["segments"]]
+    deleted = np.array([0, 3, 7, 50, 113, 200, 299], dtype=np.int64)
+    tombstones = TombstoneView(index_b16, manifest.get("docid_epoch", 0),
+                               deleted)
+    lo, hi, min_score, k = 200, 1400, 1.0, 5
+    accepted = (oracle.doclen >= lo) & (oracle.doclen < hi)
+    queries = queries_pdf[["qid", "terms", "k"]].assign(k=k)
+
+    expected, exclude, after = {}, {}, {}
+    for q in queries.itertuples():
+        docids, scores = oracle.score_query(list(q.terms))
+        hit = (scores >= min_score) & accepted[docids]
+        hit &= ~np.isin(docids, deleted)
+        if mode == "and":
+            terms = set(q.terms)
+            hit &= all(t in oracle.postings for t in terms)
+            for t in terms & set(oracle.postings):
+                hit &= np.isin(docids, oracle.postings[t][0])
+        d, s = docids[hit], scores[hit]
+        order = np.lexsort((d, -s))
+        d, s = d[order], s[order]
+        if q.qid % 2 == 0 and len(d) >= 2:
+            # resume after the first hit and exclude the second
+            after[int(q.qid)] = (float(s[0]), int(d[0]))
+            exclude[int(q.qid)] = d[1:2]
+            d, s = d[2:], s[2:]
+        expected[int(q.qid)] = (d[:k], s[:k])
+    assert after and any(len(d) for d, _ in expected.values())
+
+    idfs = idf_map(oracle.n_docs, oracle.df)
+    pool = SearcherPool()
+    runs = []
+    for p in (None, pool, pool):
+        metrics: dict = {}
+        out = search_partition(
+            paths, queries, idfs, oracle.avgdl, tombstones,
+            {"dl": {"gte": lo, "lt": hi}}, min_score, after, metrics, mode,
+            pool=p, exclude=exclude)
+        runs.append((out, metrics))
+    assert pool.caches and all(pool.caches.values())
+    for out, metrics in runs[1:]:
+        pd.testing.assert_frame_equal(out, runs[0][0], check_exact=True)
+        assert metrics == runs[0][1]
+    out = runs[0][0]
+    for qid, (d, s) in expected.items():
+        got = out[out["qid"] == qid]
+        assert got["docid"].tolist() == d.tolist(), f"qid={qid}"
+        assert np.array_equal(got["score"].to_numpy(), s), f"qid={qid}"
 
 
 def test_resume_skips_built_segments(spark, corpus_df, index):
