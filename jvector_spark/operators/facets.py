@@ -246,7 +246,7 @@ def _sidecar_attr_best_signv(seg_path: str, attr: str,
 def sorted_scan_partition(
     paths: list[str],
     queries: pd.DataFrame,
-    tombstones,  # np.ndarray | plans.merge.TombstoneView | None
+    tombstones: np.ndarray | None,
     doc_filter: dict | None,
     attr: str,
     sign: int,

@@ -565,9 +565,8 @@ def _rewrite_partitions(df: DataFrame, path: str, clusters: list[int]) -> None:
 def mark_deleted_graph(spark, path: str, doomed) -> int:
     """Phase-1 delete (mark): append a tombstone shard under
     path/_tombstones/. `doomed` is a DataFrame with the index's id column
-    or an iterable of ids; a DataFrame is written distributed — no driver
-    materialization, the shard-append discipline of plans/merge.py's
-    sync_tombstone_shards. Searches mask tombstoned ids immediately
+    or an iterable of ids; a DataFrame is written distributed, with no
+    driver materialization. Searches mask tombstoned ids immediately
     (navigable-but-not-returnable, FreshDiskANN §4.2's lazy delete);
     purge_deleted_graph is the phase-2 cleanup."""
     meta = load_graph_meta(path)

@@ -218,7 +218,7 @@ class Segment(NamedTuple):
 
 def open_segments(
     paths: Iterable[str],
-    tombstones=None,  # plans.merge.TombstoneView | np.ndarray | None
+    tombstones: np.ndarray | None = None,
     probe: Sequence[str] = (),
     doc_filter: dict | None = None,
     pool: "SearcherPool | None" = None,
@@ -234,14 +234,14 @@ def open_segments(
         absent or corrupt bloom.bin never skips). `probe` must hold every
         term a match needs at least one of; empty disables the skip.
       * with `positions`, segments built without positional payloads.
-    `tombstones` resolves per segment when it is a TombstoneView, so a
-    task reads only its own segments' delete shards. The doc_filter
-    bitmap (acceptOrds) is memoized in the segment cache under the
-    filter's canonical key; with a `pool`, readers, blooms and caches
-    (so the bitmap too) persist across calls."""
-    per_segment = hasattr(tombstones, "for_segment")
-    flat = (np.zeros(0, np.int64) if tombstones is None or per_segment
-            else tombstones)
+    `tombstones` is the index's sorted int64 delete list
+    (plans.merge.tombstone_view); each segment gets the slice inside its
+    own [min_docid, max_docid], so its live() filter costs in proportion
+    to its own deletes. The doc_filter bitmap (acceptOrds) is memoized in
+    the segment cache under the filter's canonical key; with a `pool`,
+    readers, blooms and caches (so the bitmap too) persist across
+    calls."""
+    tomb = np.asarray([] if tombstones is None else tombstones, np.int64)
     fkey = ("accept", _filter_key(doc_filter)) if doc_filter else None
     for path in paths:
         bloom = pool.bloom(path) if pool is not None else load_term_bloom(path)
@@ -260,9 +260,9 @@ def open_segments(
             accept = cache.get(fkey)
             if accept is None:
                 accept = cache[fkey] = reader.accepted_docids(doc_filter)
-        yield Segment(path, reader,
-                      tombstones.for_segment(path) if per_segment else flat,
-                      accept, cache)
+        lo, hi = np.searchsorted(
+            tomb, (reader.meta["min_docid"], reader.meta["max_docid"] + 1))
+        yield Segment(path, reader, tomb[lo:hi], accept, cache)
 
 
 class IndexSnapshot:
@@ -271,9 +271,9 @@ class IndexSnapshot:
     every index-scatter operator, so none of them re-derives the epoch
     rule of plans.merge.tombstone_view: the deletes always match the
     segment list being scored, even across a concurrent compaction.
-    Small delete lists ship inline in the view; large ones resolve
-    task-side from per-segment shards, so the driver never materializes
-    (nor broadcasts) an unbounded delete list."""
+    The delete list ships in the task closure as one sorted array (pyspark
+    broadcasts a closure past 1 MiB), and open_segments cuts it to each
+    segment's docid range."""
 
     def __init__(self, index_dir: str) -> None:
         # late bind: the traced benchmark run wraps the module attribute
@@ -680,7 +680,7 @@ def search_partition(
     queries: pd.DataFrame,
     idfs: dict[str, float],
     avgdl: float,
-    tombstones=None,  # np.ndarray | plans.merge.TombstoneView | None
+    tombstones: np.ndarray | None = None,
     doc_filter: dict | None = None,
     min_score: float = 0.0,
     after: dict | None = None,
@@ -720,19 +720,12 @@ def search_partition(
     qex = {qid: np.asarray(exclude[qid], dtype=np.int64)
            for qid in map(int, queries["qid"])
            if exclude.get(qid) is not None and len(exclude[qid])}
-    unions: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
     def qtomb(qid: int, seg_tomb: np.ndarray) -> np.ndarray:
         ex = qex.get(qid)
         if ex is None:
             return seg_tomb
-        if not len(seg_tomb):
-            return ex
-        # inline/flat tombstones are one array for every segment: the
-        # per-query tombstone/exclude union then runs once, not S×Q
-        if qid not in unions or unions[qid][0] is not seg_tomb:
-            unions[qid] = (seg_tomb, np.union1d(seg_tomb, ex))
-        return unions[qid][1]
+        return np.union1d(seg_tomb, ex) if len(seg_tomb) else ex
 
     all_terms = sorted({t for ts in queries["terms"] for t in ts if t in idfs})
     n_opened = 0
@@ -871,8 +864,7 @@ def explain_score(
          if s["min_docid"] <= docid <= s["max_docid"]), None)
     if seg is None:
         raise KeyError(f"docid {docid} not in any segment of {index_dir}")
-    # one segment's shard, not the global delete list
-    if docid in snap.tombstones.for_segment(seg["path"]):
+    if docid in snap.tombstones:
         return {"docid": docid, "deleted": True, "terms": {}, "total": 0.0}
     reader = SegmentReader(seg["path"])
     uniq = sorted({t for t in terms})

@@ -10,7 +10,10 @@ Reference mapping (SURVEY §2.9):
     `removeDeletedNodes` purge (GraphIndexBuilder.java:684-805) ->
     a tombstone docid set applied as a filter bitmap at query time
     (live immediately, like the reference's deleted-bits in search,
-    ImmutableGraphIndex.liveNodes) and physically purged at compaction;
+    ImmutableGraphIndex.liveNodes) and physically purged at compaction.
+    The journal, tombstones.json, is the only form the deletes take:
+    every reader takes its sorted docids for the caller's manifest epoch
+    (tombstone_view), cut to each segment's docid range;
   * `NodeArray.merge` score-sorted merge/dedup (graph/NodeArray.java:63-132)
     -> k-way docid-ordered posting merge. Because our segments are
     DOC-partitioned on disjoint docid ranges, per-term posting lists
@@ -172,7 +175,6 @@ def mark_deleted(index_dir: str, docids: Sequence[int]) -> list[int]:
             json.dump({"docid_epoch": _manifest_epoch(index_dir),
                        "docids": sorted(cur)}, f)
         os.replace(tmp, path)
-        sync_tombstone_shards(index_dir)
     return sorted(cur)
 
 
@@ -202,162 +204,13 @@ def load_tombstones(index_dir: str, epoch: int | None = None) -> list[int]:
     return sorted(docids)
 
 
-# --------------------------------------------------------------------------
-# segment-side tombstone shards
-#
-# tombstones.json is the MARK-PHASE JOURNAL (commit point, epoch scope,
-# carry-over diffing). For the READ path it is the wrong shape at scale:
-# a high-churn 10^12-doc corpus accumulates an unbounded delete list
-# between compactions, and broadcasting it to every search task is
-# unbounded driver memory + broadcast bytes. So every journal write also
-# projects the list into PER-SEGMENT parquet shards
-# (tombstones.d/epoch=<E>/<md5(seg_path)>.parquet, sorted docid column):
-# a search task scoring segment S reads only S's shard — bytes bounded by
-# S's own deletes, never the global list (the per-segment liveNodes bitmap
-# the reference keeps per index view, ImmutableGraphIndex.java:157).
-# --------------------------------------------------------------------------
-
-TOMBSTONE_SHARD_ROOT = "tombstones.d"
-#: journal bytes at/below which searches ship the delete list inline in the
-#: task closure (one driver read, zero per-task IO) — above it, only
-#: (index_dir, epoch) ships and tasks read their segment's shard
-TOMBSTONE_INLINE_MAX_BYTES = 1 << 20
-
-_EMPTY_TOMB = np.array([], dtype=np.int64)
-
-
-def _shard_dir(index_dir: str, epoch: int) -> str:
-    return os.path.join(index_dir, TOMBSTONE_SHARD_ROOT, f"epoch={epoch}")
-
-
-def _shard_name(seg_path: str) -> str:
-    """Shard file for one segment, keyed by a digest of the manifest's
-    path string (basenames collide across generations — gen-A/seg-00003
-    vs seg-00003 — so the full normalized path is the identity)."""
-    import hashlib
-
-    h = hashlib.md5(os.path.normpath(seg_path).encode()).hexdigest()[:20]
-    return f"{h}.parquet"
-
-
-def _journal_stamp(index_dir: str) -> tuple[int, int] | None:
-    """(size, mtime_ns) of the journal, or None if absent — the cheap
-    consistency token binding a shard tree to the journal state it was
-    projected from."""
-    path = os.path.join(index_dir, TOMBSTONES_FILE)
-    try:
-        st = os.stat(path)
-    except FileNotFoundError:
-        return None
-    return (int(st.st_size), int(st.st_mtime_ns))
-
-
-def sync_tombstone_shards(index_dir: str) -> None:
-    """Project the CURRENT journal into the current epoch's shard tree.
-    Idempotent; call under _tombstone_lock after any journal write.
-
-    Update discipline is per-FILE atomic (tmp + os.replace), never a
-    whole-dir swap: within an epoch a segment's tombstone set only GROWS,
-    so a lock-free reader racing an update sees either the old shard or
-    the new superset — more deletes early is safe, a transiently missing
-    shard (a dir swap's window) would silently resurrect docs. Old epoch
-    dirs are left for vacuum_index (an in-flight search over the
-    pre-flip manifest may still be reading them). `_META.json` is written
-    LAST and records the journal stamp: readers seeing a stale stamp
-    (crash between journal write and this sync) fall back to parsing the
-    journal — correct, just not cheap."""
-    import pyarrow as pa
-
-    epoch = _manifest_epoch(index_dir)
-    sdir = _shard_dir(index_dir, epoch)
-    tomb = np.array(load_tombstones(index_dir), dtype=np.int64)
-    if not len(tomb):
-        import shutil
-
-        shutil.rmtree(sdir, ignore_errors=True)
-        return
-    os.makedirs(sdir, exist_ok=True)
-    keep: set[str] = set()
-    manifest = load_manifest(index_dir)
-    for s in manifest["segments"]:
-        lo = int(np.searchsorted(tomb, int(s["min_docid"]), side="left"))
-        hi = int(np.searchsorted(tomb, int(s["max_docid"]), side="right"))
-        if hi <= lo:
-            continue
-        name = _shard_name(s["path"])
-        keep.add(name)
-        dst = os.path.join(sdir, name)
-        tmpf = dst + ".tmp"
-        pq.write_table(pa.table({"docid": tomb[lo:hi]}), tmpf)
-        os.replace(tmpf, dst)
-    for name in os.listdir(sdir):  # shards of merged-away segments
-        if name.endswith(".parquet") and name not in keep:
-            try:
-                os.remove(os.path.join(sdir, name))
-            except FileNotFoundError:
-                pass
-    meta = os.path.join(sdir, "_META.json")
-    with open(meta + ".tmp", "w") as f:
-        json.dump({"journal_stamp": _journal_stamp(index_dir),
-                   "docid_epoch": epoch, "n": int(len(tomb))}, f)
-    os.replace(meta + ".tmp", meta)
-
-
-def _read_shard_file(path: str) -> np.ndarray:
-    """One shard file's docids (sorted int64); missing file = no deletes."""
-    if not os.path.exists(path):
-        return _EMPTY_TOMB
-    return pq.read_table(path, columns=["docid"])["docid"].to_numpy(
-        zero_copy_only=False).astype(np.int64, copy=False)
-
-
-def load_segment_tombstones(
-    index_dir: str, epoch: int, seg_path: str
-) -> np.ndarray:
-    """Executor-side: this segment's tombstoned docids (sorted int64).
-    Missing shard file = no deletes in this segment."""
-    return _read_shard_file(
-        os.path.join(_shard_dir(index_dir, epoch), _shard_name(seg_path)))
-
-
-class TombstoneView:
-    """Per-segment tombstone resolver shipped into search tasks.
-
-    Two regimes (chosen by tombstone_view from the journal's SIZE, without
-    parsing it): small delete lists travel inline (`inline` array — one
-    driver read, no per-task IO); large ones ship only (index_dir, epoch)
-    and each task resolves its segment's shard. Pickles to a few hundred
-    bytes in the sharded regime regardless of delete count."""
-
-    __slots__ = ("index_dir", "epoch", "inline")
-
-    def __init__(self, index_dir: str, epoch: int,
-                 inline: np.ndarray | None) -> None:
-        self.index_dir = index_dir
-        self.epoch = epoch
-        self.inline = inline
-
-    def for_segment(self, seg_path: str) -> np.ndarray:
-        if self.inline is not None:
-            return self.inline
-        return load_segment_tombstones(self.index_dir, self.epoch, seg_path)
-
-    def __len__(self) -> int:  # truthiness: "are there ANY deletes"
-        return len(self.inline) if self.inline is not None else 1
-
-
-def tombstone_view(
-    index_dir: str,
-    inline_max_bytes: int | None = None,
-    epoch: int | None = None,
-) -> TombstoneView:
-    """Build the read-path view WITHOUT materializing a large journal on
-    the driver: journals at/below `inline_max_bytes` parse and ship
-    inline; larger ones ship as shard references after a stamp check
-    (journal size+mtime recorded at the last shard sync). A stamp
-    mismatch — possible only in the crash window between a journal write
-    and its shard sync — falls back to parsing the journal, trading
-    driver memory for correctness.
+def tombstone_view(index_dir: str, epoch: int | None = None) -> np.ndarray:
+    """The read path's deletes: the journal's docids as a sorted int64
+    array. Every reader ships this one array; open_segments cuts it to
+    each segment's docid range, so a segment's live() filter costs in
+    proportion to that segment's own deletes. Past 1 MiB, pyspark ships a
+    task closure as a broadcast, so a large array reaches each executor
+    once.
 
     `epoch` MUST be the docid_epoch of the manifest snapshot whose
     segments the caller is about to score (search paths pass
@@ -368,30 +221,7 @@ def tombstone_view(
     caller still scores the OLD segments, transiently resurrecting
     deleted docs. None re-reads the live manifest, acceptable only for
     mutators serialized against compaction."""
-    if inline_max_bytes is None:  # late bind: tests monkeypatch the module
-        inline_max_bytes = TOMBSTONE_INLINE_MAX_BYTES
-    if epoch is None:
-        epoch = _manifest_epoch(index_dir)
-    stamp = _journal_stamp(index_dir)
-    if stamp is None or stamp[0] <= inline_max_bytes:
-        return TombstoneView(
-            index_dir, epoch,
-            np.array(load_tombstones(index_dir, epoch), dtype=np.int64))
-    meta_path = os.path.join(_shard_dir(index_dir, epoch), "_META.json")
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        ok = (tuple(meta.get("journal_stamp") or ()) == stamp
-              and int(meta.get("docid_epoch", -1)) == epoch)
-    except (OSError, ValueError):
-        ok = False
-    if not ok:
-        # shards stale for this exact journal state (crash window, or a
-        # pre-shard index with a huge journal): correctness over memory
-        return TombstoneView(
-            index_dir, epoch,
-            np.array(load_tombstones(index_dir, epoch), dtype=np.int64))
-    return TombstoneView(index_dir, epoch, None)
+    return np.asarray(load_tombstones(index_dir, epoch), np.int64)
 
 
 def _merge_group(
@@ -638,9 +468,6 @@ def _flip_and_carry_over(index_dir, gen, manifest, mode, old_epoch,
             pass  # a post-flip mark already rewrote it under the new epoch
         elif os.path.exists(tomb):
             os.remove(tomb)  # stale older-epoch leftovers: GC
-        # project carried-over deletes into the NEW epoch's shard tree
-        # (old epoch dirs stay for in-flight pre-flip readers; vacuum GCs)
-        sync_tombstone_shards(index_dir)
 
 
 def vacuum_index(index_dir: str, dry_run: bool = False,
@@ -649,8 +476,10 @@ def vacuum_index(index_dir: str, dry_run: bool = False,
     """Garbage-collect segment directories not referenced by the live
     manifest: crash leftovers (a failed append builds segment dirs but
     dies before the atomic manifest write), `.tmp` staging dirs, and
-    superseded compaction generations. Returns the removed (or
-    would-remove) paths.
+    superseded compaction generations, and the per-segment tombstone
+    copies (`tombstones.d/`) that older versions wrote beside the
+    journal and nothing reads. Returns the removed (or would-remove)
+    paths.
 
     Two independent guards protect concurrent work:
       * LEASES (positive ownership): any dir whose mtime is at/after the
@@ -680,33 +509,15 @@ def vacuum_index(index_dir: str, dry_run: bool = False,
         except OSError:
             continue
         if name.startswith("seg-"):
-            if name.endswith(".tmp") or os.path.realpath(full) not in live:
-                removed.append(full)
-                if not dry_run:
-                    shutil.rmtree(full, ignore_errors=True)
+            doomed = (name.endswith(".tmp")
+                      or os.path.realpath(full) not in live)
         elif name.startswith("gen-"):
             # compaction generation: removable iff it hosts no live segment
             gen_real = os.path.realpath(full)
-            if not any(p.startswith(gen_real + os.sep) for p in live):
-                removed.append(full)
-                if not dry_run:
-                    shutil.rmtree(full, ignore_errors=True)
-    # stale-epoch tombstone shard dirs (same age/lease guards as above:
-    # an in-flight search over a pre-flip manifest snapshot may still be
-    # reading its epoch's shards)
-    root = os.path.join(index_dir, TOMBSTONE_SHARD_ROOT)
-    cur = f"epoch={int(manifest.get('docid_epoch', 0))}"
-    if os.path.isdir(root):
-        for name in sorted(os.listdir(root)):
-            full = os.path.join(root, name)
-            if name == cur or not os.path.isdir(full):
-                continue
-            try:
-                mtime = os.path.getmtime(full)
-                if now - mtime < min_age_sec or mtime >= lease_floor:
-                    continue
-            except OSError:
-                continue
+            doomed = not any(p.startswith(gen_real + os.sep) for p in live)
+        else:
+            doomed = name == "tombstones.d"
+        if doomed:
             removed.append(full)
             if not dry_run:
                 shutil.rmtree(full, ignore_errors=True)
@@ -714,9 +525,13 @@ def vacuum_index(index_dir: str, dry_run: bool = False,
 
 
 def _seg_digest(seg_path: str) -> str:
-    """The 20-hex segment identity used by both the tombstone shard tree
-    and the bulk-doomed partition dirs."""
-    return _shard_name(seg_path)[: -len(".parquet")]
+    """The 20-hex segment identity of the bulk-doomed partition dirs: a
+    digest of the manifest's path string (basenames collide across
+    generations — gen-A/seg-00003 vs seg-00003 — so the full normalized
+    path is the identity)."""
+    import hashlib
+
+    return hashlib.md5(os.path.normpath(seg_path).encode()).hexdigest()[:20]
 
 
 def _load_bulk_doomed(doomed_dir: str, seg_path: str) -> np.ndarray | None:
@@ -764,55 +579,16 @@ def compact_index(
     collide."""
     manifest = load_manifest(index_dir)
     segs = sorted(manifest["segments"], key=lambda s: s["min_docid"])
-    # journal regime mirrors the SEARCH path's (tombstone_view): a small
-    # journal parses and broadcasts inline; a large one never
-    # materializes on the driver — seg_live counts come from the shard
-    # files' parquet FOOTERS (num_rows, metadata-only reads) and each
-    # merge task reads its own segments' shards
-    tv = tombstone_view(index_dir,
-                        epoch=manifest.get("docid_epoch", 0))
-    sharded_tomb = tv.inline is None
-    tomb_snap_dir = None
-    if sharded_tomb:
-        tomb_u = _EMPTY_TOMB
-        shard_epoch = tv.epoch
-        # Pin the EXACT shard bytes the live counts are computed from:
-        # a concurrent mark_deleted (in-contract — the serve 'delete' op)
-        # rewrites shard files via os.replace, and a merge task
-        # re-reading the LIVE shard would purge more rows than the
-        # driver's offset accounting assumed, leaving gaps between output
-        # segments' docid ranges (breaking the dense-renumbering
-        # contract the metadata-only live-count math relies on). The
-        # inline regime is immune (one driver snapshot); here we hardlink
-        # the current shard inodes into the output gen dir (same
-        # filesystem for in-place compaction: zero copy; cross-fs falls
-        # back to a bounded copy) and BOTH the counts and the tasks read
-        # the snapshot. Deletes acked mid-compaction stay journaled and
-        # are carried over by compact_in_place's epoch translation.
-        tomb_snap_dir = os.path.join(out_dir, "_tombstone_snapshot")
-        os.makedirs(tomb_snap_dir, exist_ok=True)
-        for s in segs:
-            src = os.path.join(_shard_dir(index_dir, shard_epoch),
-                               _shard_name(s["path"]))
-            if os.path.exists(src):
-                dst = os.path.join(tomb_snap_dir, _shard_name(s["path"]))
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
+    # ONE driver read of the journal: the live counts below and every
+    # merge task's purge use the same array, so a concurrent mark_deleted
+    # cannot make them disagree (deletes acked mid-compaction stay
+    # journaled and compact_in_place carries them over)
+    tomb = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
 
-        def seg_tomb_count(s: dict) -> int:
-            p = os.path.join(tomb_snap_dir, _shard_name(s["path"]))
-            if not os.path.exists(p):
-                return 0
-            return int(pq.ParquetFile(p).metadata.num_rows)
-    else:
-        tomb_u = np.unique(tv.inline)
-
-        def seg_tomb_count(s: dict) -> int:
-            lo = int(np.searchsorted(tomb_u, s["min_docid"], side="left"))
-            hi = int(np.searchsorted(tomb_u, s["max_docid"], side="right"))
-            return hi - lo
+    def seg_tomb_count(s: dict) -> int:
+        lo = int(np.searchsorted(tomb, s["min_docid"], side="left"))
+        hi = int(np.searchsorted(tomb, s["max_docid"], side="right"))
+        return hi - lo
     doomed_counts = doomed_counts or {}
     if target_bytes is not None:
         # size-bounded policy (the LSM merge-policy surface): greedily
@@ -842,8 +618,8 @@ def compact_index(
             groups[min(i // per, target_segments - 1)].append(s)
         groups = [g for g in groups if g]
 
-    # live-doc count per group from manifest metadata + the (tiny, sorted)
-    # tombstone array — zero data reads on the driver
+    # live-doc count per group from manifest metadata + the sorted
+    # tombstone array — zero segment data reads on the driver
     def seg_live(s: dict) -> int:
         return (int(s["n_docs"]) - seg_tomb_count(s)
                 - doomed_counts.get(_seg_digest(s["path"]), 0))
@@ -855,11 +631,6 @@ def compact_index(
     os.makedirs(out_dir, exist_ok=True)
     mode = manifest["tokenizer_mode"]
     if not groups:  # everything tombstoned: a valid, empty index
-        if tomb_snap_dir is not None:
-            # the early return must not skip the snapshot cleanup below,
-            # or the hardlinked shard pin lives forever inside the new
-            # live generation (vacuum never looks inside live gen dirs)
-            shutil.rmtree(tomb_snap_dir, ignore_errors=True)
         empty = empty_manifest()
         write_index_manifest(out_dir, empty, mode)
         return empty
@@ -872,7 +643,7 @@ def compact_index(
     tasks_df = spark.createDataFrame(
         tasks, "group_id int, paths string, offset long"
     ).repartition(len(tasks))
-    b_tomb = spark.sparkContext.broadcast(tomb_u)
+    b_tomb = spark.sparkContext.broadcast(tomb)
 
     map_dir = os.path.join(out_dir, "docid_map")
     os.makedirs(map_dir, exist_ok=True)
@@ -882,16 +653,6 @@ def compact_index(
             for row in pdf.itertuples():
                 paths = json.loads(row.paths)
                 tomb_task = b_tomb.value
-                if sharded_tomb:
-                    # read the pinned snapshot, NOT the live shard tree —
-                    # count/purge consistency (see the snapshot comment
-                    # at seg_tomb_count)
-                    shards = [_read_shard_file(
-                        os.path.join(tomb_snap_dir, _shard_name(p)))
-                        for p in paths]
-                    shards = [a for a in shards if len(a)]
-                    if shards:
-                        tomb_task = np.unique(np.concatenate(shards))
                 if doomed_dir is not None:
                     # bulk-doomed resolution is PER TASK: each group reads
                     # only its own segments' doomed partitions
@@ -914,10 +675,6 @@ def compact_index(
 
     out_manifest = tasks_df.mapInPandas(run, MANIFEST_SCHEMA).toPandas()
     out_manifest = out_manifest.sort_values("min_docid").reset_index(drop=True)
-    if tomb_snap_dir is not None:
-        # the pinned snapshot served its purpose once every merge task
-        # has read it; don't ship it inside the new live generation
-        shutil.rmtree(tomb_snap_dir, ignore_errors=True)
     write_index_manifest(out_dir, out_manifest, mode)
     return out_manifest
 
@@ -1171,22 +928,11 @@ def replace_docs_bulk(
     hits = existing.join(incoming,
                          on=key_join_cond(existing, incoming, key_cols),
                          how="left_semi")
-    # keep doomed ∩ journal = ∅ (compact_index's offset contract) WITHOUT
-    # materializing a large journal on the driver: the inline regime
-    # broadcast-anti-joins the small array, the sharded regime anti-joins
-    # the shard parquet read distributed (tombstone_view picks the regime
-    # and handles the crash-window stamp check)
-    view = tombstone_view(index_dir)
-    if view.inline is not None:
-        if len(view.inline):
-            tomb_df = spark.createDataFrame(
-                [(int(t),) for t in view.inline], "docid long")
-            hits = hits.join(F.broadcast(tomb_df), "docid", "left_anti")
-    else:
-        shard_df = (spark.read.schema("docid long")
-                    .parquet(_shard_dir(index_dir, view.epoch))
-                    .select("docid").distinct())
-        hits = hits.join(shard_df, "docid", "left_anti")
+    # keep doomed ∩ journal = ∅ (compact_index's offset contract)
+    tomb = tombstone_view(index_dir)
+    if len(tomb):
+        tomb_df = spark.createDataFrame(pd.DataFrame({"docid": tomb}))
+        hits = hits.join(F.broadcast(tomb_df), "docid", "left_anti")
     # LEFT join so a hit whose _segdir maps to no known segment survives
     # into a sentinel partition — the path-normalization drift check
     # rides the same job as the doomed write instead of re-running the

@@ -65,8 +65,6 @@ def create_index(index_dir: str, mode: str = "code",
     config lands in create.json BEFORE any segment exists, so subsequent
     writes (this session or a later one) inherit it through
     plans.merge.index_config instead of hardcoded defaults."""
-    import shutil
-
     from jvector_spark.sources.segment import (
         empty_manifest, write_index_manifest)
 
@@ -79,8 +77,6 @@ def create_index(index_dir: str, mode: str = "code",
         os.remove(os.path.join(index_dir, "tombstones.json"))
     except FileNotFoundError:
         pass
-    shutil.rmtree(os.path.join(index_dir, "tombstones.d"),
-                  ignore_errors=True)
     cfg = {"tokenizer_mode": mode, "positions": bool(positions),
            "key_cols": list(key_cols), "content_col": content_col}
     tmp = os.path.join(index_dir, "create.json.tmp")
@@ -642,9 +638,9 @@ class IndexServer:
         )
 
     def _tombstones(self):
-        """Deletes pinned to this session's manifest snapshot (the epoch
-        rule of plans.merge.tombstone_view); re-read per request, since a
-        delete bumps no manifest."""
+        """The sorted delete array pinned to this session's manifest
+        snapshot (the epoch rule of plans.merge.tombstone_view); re-read
+        per request, since a delete bumps no manifest."""
         from jvector_spark.plans.merge import tombstone_view
 
         return tombstone_view(

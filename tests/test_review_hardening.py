@@ -92,7 +92,7 @@ def test_load_tombstones_respects_caller_epoch(tmp_path):
         json.dump({"docid_epoch": 0, "docids": [3, 7]}, f)
     # a reader still holding the epoch-0 snapshot sees ITS deletes...
     assert load_tombstones(d, epoch=0) == [3, 7]
-    assert list(tombstone_view(d, epoch=0).inline) == [3, 7]
+    assert tombstone_view(d, epoch=0).tolist() == [3, 7]
     # ...while an epoch-1 snapshot (post-flip numbering) ignores them
     assert load_tombstones(d, epoch=1) == []
     # default re-reads the live manifest (mutator-only path)

@@ -142,25 +142,43 @@ def test_search_rank_identical_and_bit_equal(spark, index, oracle, queries_pdf):
     assert np.array_equal(got["score"].to_numpy(), golden["score"].to_numpy())
 
 
-def test_pruning_equals_exhaustive(index, spark, oracle):
-    """θ>0 pruning path must be result-identical to θ=0 exhaustive path."""
-    idx, manifest = index
-    reader = SegmentReader(manifest["path"].iloc[0])
+def _pruning_equals_exhaustive(idx, oracle, terms_pool) -> dict:
+    """θ>0 pruning path must be result-identical to θ=0 exhaustive path,
+    on the index's first segment; returns the pruned calls' counters."""
+    reader = SegmentReader(load_manifest(idx)["segments"][0]["path"])
     idfs = idf_map(oracle.n_docs, oracle.df)
     rng = np.random.default_rng(1)
-    terms_pool = list(oracle.df)
+    terms_pool = terms_pool(reader)
+    stats: dict = {}
     for trial in range(30):
         terms = [terms_pool[rng.integers(0, len(terms_pool))] for _ in range(3)]
         d0, s0 = score_query_on_segment(reader, terms, idfs, 10, 0.0, oracle.avgdl)
         if len(s0) == 0:
             continue
         for theta in [float(s0[-1]) * 0.5, float(s0[-1]), float(s0[0]) * 0.99]:
-            d1, s1 = score_query_on_segment(reader, terms, idfs, 10, theta, oracle.avgdl)
+            d1, s1 = score_query_on_segment(reader, terms, idfs, 10, theta,
+                                            oracle.avgdl, stats=stats)
             # every returned doc with score >= theta must match exactly
             keep = s0 >= theta
             keep1 = s1 >= theta
             assert np.array_equal(d0[keep], d1[keep1])
             assert np.array_equal(s0[keep], s1[keep1])
+    return stats
+
+
+def test_pruning_equals_exhaustive(index, oracle):
+    """θ>0 pruning path must be result-identical to θ=0 exhaustive path."""
+    _pruning_equals_exhaustive(index[0], oracle, lambda r: list(oracle.df))
+
+
+def test_pruning_equals_exhaustive_b16(index_b16, oracle):
+    """The same on 16-posting blocks, with queries drawn from the terms
+    that span several blocks of the segment: their block bounds differ,
+    so the generation mask drops some blocks (blocks_gen < blocks_total)."""
+    stats = _pruning_equals_exhaustive(
+        index_b16, oracle,
+        lambda r: [t for t in r.terms if len(r.term_row(t)["block_n"]) > 1])
+    assert stats["blocks_gen"] < stats["blocks_total"], stats
 
 
 def test_driver_merge_equals_spark_merge(spark, index, queries_pdf):
@@ -238,13 +256,10 @@ def test_search_partition_pooled_equals_unpooled(index_b16, oracle,
     scoring path runs, so the frames and metrics are identical, and equal
     to the oracle."""
     from jvector_spark.operators.wand import SearcherPool, search_partition
-    from jvector_spark.plans.merge import TombstoneView
 
     manifest = load_manifest(index_b16)
     paths = [s["path"] for s in manifest["segments"]]
     deleted = np.array([0, 3, 7, 50, 113, 200, 299], dtype=np.int64)
-    tombstones = TombstoneView(index_b16, manifest.get("docid_epoch", 0),
-                               deleted)
     lo, hi, min_score, k = 200, 1400, 1.0, 5
     accepted = (oracle.doclen >= lo) & (oracle.doclen < hi)
     queries = queries_pdf[["qid", "terms", "k"]].assign(k=k)
@@ -276,7 +291,7 @@ def test_search_partition_pooled_equals_unpooled(index_b16, oracle,
     for p in (None, pool, pool):
         metrics: dict = {}
         out = search_partition(
-            paths, queries, idfs, oracle.avgdl, tombstones,
+            paths, queries, idfs, oracle.avgdl, deleted,
             {"dl": {"gte": lo, "lt": hi}}, min_score, after, metrics, mode,
             pool=p, exclude=exclude)
         runs.append((out, metrics))

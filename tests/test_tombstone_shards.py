@@ -1,16 +1,16 @@
-"""Segment-side tombstone shards: the read path must never materialize
-(or broadcast) an unbounded global delete list on the driver.
+"""Tombstones at scale: the journal (tombstones.json) is the only form the
+deletes take. Every reader takes its sorted docids for the caller's
+manifest epoch (tombstone_view), and open_segments cuts that array to each
+segment's docid range, so a segment's live filter costs in proportion to
+its own deletes.
 
 Reference analog: the per-view liveNodes bitmap
-(ImmutableGraphIndex.java:157, ThreadSafeGrowableBitSet) — deletes are
-resolved against the segment being read, not a global structure shipped
-with every query."""
+(ImmutableGraphIndex.java:157), applied inside the search as acceptOrds."""
 
 from __future__ import annotations
 
 import json
 import os
-import pickle
 
 import numpy as np
 import pandas as pd
@@ -20,14 +20,14 @@ from jvector_spark.operators.ids import assign_dense_docids
 from jvector_spark.operators.wand import search_index
 from jvector_spark.plans.merge import (
     TOMBSTONES_FILE,
-    _shard_dir,
-    load_segment_tombstones,
-    load_tombstones,
+    compact_index,
+    compact_in_place,
     mark_deleted,
     tombstone_view,
     vacuum_index,
 )
-from jvector_spark.sources.segment import build_index, load_manifest
+from jvector_spark.sources.segment import (
+    SegmentReader, build_index, load_manifest)
 
 
 @pytest.fixture(scope="module")
@@ -37,7 +37,7 @@ def idx(spark, corpus_df, tmp_path_factory):
     return d
 
 
-def _expected(oracle_fn, corpus_pdf, terms, k, excluded):
+def _expected(corpus_pdf, terms, k, excluded):
     from jvector_spark.oracle import BM25Oracle
 
     keyed = corpus_pdf.sort_values(
@@ -52,147 +52,68 @@ def _expected(oracle_fn, corpus_pdf, terms, k, excluded):
     return d[order].tolist()
 
 
-def test_shards_mirror_journal(idx):
-    doomed = [0, 5, 77, 150]
-    mark_deleted(idx, doomed)
-    man = load_manifest(idx)
-    epoch = int(man.get("docid_epoch", 0))
-    got = np.concatenate([
-        load_segment_tombstones(idx, epoch, s["path"])
-        for s in man["segments"]
-    ])
-    assert sorted(got.tolist()) == sorted(load_tombstones(idx))
-    # each shard holds only docids inside its segment's range
-    for s in man["segments"]:
-        t = load_segment_tombstones(idx, epoch, s["path"])
-        assert ((t >= s["min_docid"]) & (t <= s["max_docid"])).all()
-
-
-def test_sharded_view_search_matches_inline(spark, idx, corpus_pdf,
-                                            monkeypatch):
-    """Force the sharded regime (inline budget 0): search results must be
-    identical to the inline regime, and the view must pickle WITHOUT the
-    delete list (the no-driver-materialization contract)."""
-    import jvector_spark.plans.merge as merge_mod
-
-    q = pd.DataFrame({"qid": [0], "terms": [["import"]], "k": [10]})
-    inline_res = search_index(spark, idx, q, merge="driver")
-
-    monkeypatch.setattr(merge_mod, "TOMBSTONE_INLINE_MAX_BYTES", 0)
-    view = tombstone_view(idx)
-    assert view.inline is None  # sharded regime engaged
-    assert len(pickle.dumps(view)) < 1024  # ships as a reference, not data
-    shard_res = search_index(spark, idx, q, merge="driver")
-    pd.testing.assert_frame_equal(
-        inline_res.reset_index(drop=True), shard_res.reset_index(drop=True))
-    exp = _expected(None, corpus_pdf, ["import"], 10, {0, 5, 77, 150})
-    assert shard_res.sort_values("rank")["docid"].tolist() == exp
-
-
-def test_million_tombstones_stay_off_driver(spark, idx, monkeypatch):
-    """10^6 marked deletes: the journal is ~7 MB, so the view must choose
-    the sharded regime on its own (default budget) — queries run green
-    while the driver ships only (index_dir, epoch)."""
+def test_million_tombstones_stay_off_driver(spark, idx, corpus_pdf,
+                                            tmp_path_factory):
+    """10^6 marked deletes (a ~7 MB journal, past the 1 MiB line where
+    pyspark ships a task closure as a broadcast) plus 3 real ones: search
+    returns the oracle's top-k without the deleted docs, and compaction
+    purges exactly the real deletes."""
     man = load_manifest(idx)
     hi = max(s["max_docid"] for s in man["segments"])
-    # mark 10^6 synthetic docids beyond the live range plus 3 real ones
-    # (a just-compacted-away range: legal journal content)
+    # 10^6 synthetic docids beyond the live range (a just-compacted-away
+    # range: legal journal content) plus 3 real ones
     ids = np.arange(hi + 1, hi + 1_000_001, dtype=np.int64).tolist()
     mark_deleted(idx, ids + [1, 2, 3])
     try:
-        view = tombstone_view(idx)
-        assert view.inline is None  # big journal -> sharded, unparsed
-        assert len(pickle.dumps(view)) < 1024
+        tomb = tombstone_view(idx, epoch=man.get("docid_epoch", 0))
+        assert tomb.dtype == np.int64 and len(tomb) == 1_000_003
+        assert (np.diff(tomb) > 0).all()
         q = pd.DataFrame({"qid": [0], "terms": [["import"]], "k": [5]})
         res = search_index(spark, idx, q, merge="driver")
         assert len(res) == 5
         assert not res["docid"].isin([1, 2, 3]).any()
+        exp = _expected(corpus_pdf, ["import"], 5, {1, 2, 3})
+        assert res.sort_values("rank")["docid"].tolist() == exp
+        out = str(tmp_path_factory.mktemp("out_million")) + "/v"
+        m = compact_index(spark, idx, out, target_segments=2)
+        assert int(m["n_docs"].sum()) == int(man["n_docs"]) - 3
     finally:
-        # reset journal + shards for the other tests in this module
         os.remove(os.path.join(idx, TOMBSTONES_FILE))
-        mark_deleted(idx, [0, 5, 77, 150])
-
-
-def test_stale_shard_stamp_falls_back_to_journal(idx):
-    """Crash window: journal rewritten without a shard sync -> stamp
-    mismatch -> the view parses the journal (correct, inline) instead of
-    trusting stale shards."""
-    path = os.path.join(idx, TOMBSTONES_FILE)
-    with open(path) as f:
-        data = json.load(f)
-    data["docids"] = sorted(set(data["docids"]) | {42})
-    with open(path, "w") as f:
-        json.dump(data, f)  # journal write WITHOUT sync_tombstone_shards
-    import jvector_spark.plans.merge as merge_mod
-
-    view = merge_mod.tombstone_view(idx, inline_max_bytes=0)
-    assert view.inline is not None  # fallback engaged
-    assert 42 in view.inline.tolist()
-    mark_deleted(idx, [])  # re-sync for later tests
 
 
 def test_compaction_moves_shards_to_new_epoch_and_vacuum_gcs(
         spark, corpus_df, tmp_path_factory):
-    from jvector_spark.plans.merge import compact_in_place
-
+    """After an in-place compaction the journal is scoped to epoch 1; a
+    late delete lands there and the next search drops the doc. vacuum
+    removes the per-segment tombstone copies older versions left in
+    tombstones.d/."""
     d = str(tmp_path_factory.mktemp("idx_tsh_epoch"))
     build_index(assign_dense_docids(corpus_df), d, num_segments=3)
     mark_deleted(d, [0, 1])
     compact_in_place(spark, d, vacuum_min_age_sec=10**9)
-    # post-flip: a delete marked late lands in the NEW epoch's shards
-    mark_deleted(d, [7])
     man = load_manifest(d)
-    epoch = int(man["docid_epoch"])
-    assert epoch == 1
-    got = np.concatenate([
-        load_segment_tombstones(d, epoch, s["path"])
-        for s in man["segments"]
-    ])
-    assert 7 in got.tolist()
-    # old epoch dir survives until vacuum's age gate clears it
-    old_dir = _shard_dir(d, 0)
-    if os.path.isdir(old_dir):
-        removed = vacuum_index(d, min_age_sec=0, lease_timeout_sec=0)
-        assert old_dir in removed
-        assert not os.path.isdir(old_dir)
+    assert int(man["docid_epoch"]) == 1
+    assert tombstone_view(d, epoch=1).tolist() == []  # purged, not carried
 
+    # the rarest term of doc 7: a query for it with k above its df
+    # returns every doc that holds it
+    seg = next(s for s in man["segments"]
+               if s["min_docid"] <= 7 <= s["max_docid"])
+    r = SegmentReader(seg["path"])
+    term = min((t for t in r.terms if 7 in r.decode_term(t)[0]),
+               key=lambda t: (r.term_row(t)["df"], t))
+    q = pd.DataFrame({"qid": [0], "terms": [[term]], "k": [1000]})
+    before = search_index(spark, d, q, merge="driver")["docid"].tolist()
+    assert 7 in before
 
-def test_compaction_sharded_regime_matches_inline(spark, corpus_df,
-                                                  tmp_path_factory,
-                                                  monkeypatch):
-    """compact_index under the SHARDED journal regime (inline budget 0)
-    must produce the same surviving index as the inline regime: seg_live
-    offsets come from shard parquet FOOTERS and each merge task reads its
-    own segments' shards — the driver never parses the journal."""
-    import jvector_spark.plans.merge as merge_mod
-    from jvector_spark.plans.merge import compact_index
+    mark_deleted(d, [7])
+    with open(os.path.join(d, TOMBSTONES_FILE)) as f:
+        assert json.load(f) == {"docid_epoch": 1, "docids": [7]}
+    after = search_index(spark, d, q, merge="driver")["docid"].tolist()
+    assert after == [x for x in before if x != 7]
 
-    d1 = str(tmp_path_factory.mktemp("idx_cshard_a"))
-    d2 = str(tmp_path_factory.mktemp("idx_cshard_b"))
-    for d in (d1, d2):
-        build_index(assign_dense_docids(corpus_df), d, num_segments=4)
-        mark_deleted(d, [3, 7, 20, 21, 22, 150])
-    out1 = str(tmp_path_factory.mktemp("out_inline")) + "/v"
-    out2 = str(tmp_path_factory.mktemp("out_shard")) + "/v"
-    m1 = compact_index(spark, d1, out1, target_segments=2)
-
-    monkeypatch.setattr(merge_mod, "TOMBSTONE_INLINE_MAX_BYTES", 0)
-    # guard: the sharded path must not read the journal on the driver
-    orig = merge_mod.load_tombstones
-    calls = []
-
-    def spy(path, epoch=None):
-        calls.append(path)
-        return orig(path, epoch)
-
-    monkeypatch.setattr(merge_mod, "load_tombstones", spy)
-    m2 = compact_index(spark, d2, out2, target_segments=2)
-    assert not any(c == d2 for c in calls), "journal parsed on the driver"
-
-    assert m1["n_docs"].tolist() == m2["n_docs"].tolist()
-    assert m1["min_docid"].tolist() == m2["min_docid"].tolist()
-    q = pd.DataFrame({"qid": [0], "terms": [["import"]], "k": [50]})
-    r1 = search_index(spark, out1, q, merge="driver")
-    r2 = search_index(spark, out2, q, merge="driver")
-    assert r1["docid"].tolist() == r2["docid"].tolist()
-    assert np.allclose(r1["score"], r2["score"], atol=0)
+    legacy = os.path.join(d, "tombstones.d")
+    os.makedirs(os.path.join(legacy, "epoch=0"))
+    removed = vacuum_index(d, min_age_sec=0, lease_timeout_sec=0)
+    assert legacy in removed
+    assert not os.path.isdir(legacy)
