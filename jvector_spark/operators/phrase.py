@@ -17,8 +17,9 @@ if a score is wanted).
 
 Scale shape (same scatter/gather as wand.search_index): phrases broadcast;
 segments are the parallel dimension; per segment, candidate docs come from
-the docid-intersection of the phrase's term postings FIRST — positions
-(the big stream) decode only for blocks containing surviving candidates.
+the docid-intersection of the phrase's term postings FIRST — only then are
+positions (the big stream) read, each term's decoded whole once per
+segment cache (wand.term_positions) and cut to the candidates.
 Partial results are bounded at k per (task, query) by the shared
 collector wand.topk_partial — top-k of n_matches composes across
 segments — then merged by a window/driver rank like search_index.
@@ -32,33 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
 from jvector_spark.operators.wand import (
-    IndexSnapshot, intersect, live, open_segments, term_postings,
-    topk_partial)
+    IndexSnapshot, intersect, live, open_segments, term_positions,
+    term_postings, topk_partial)
 from jvector_spark.sources.segment import SegmentReader
-
-
-def overlapping_blocks(row: dict, cand: np.ndarray) -> np.ndarray:
-    """Mask of a term's blocks (its dictionary `row`) whose docid range
-    [block_first, block_last] holds at least one of the sorted
-    candidates — the blocks a candidate-restricted decode must read."""
-    first = np.asarray(row["block_first"], dtype=np.int64)
-    last = np.asarray(row["block_last"], dtype=np.int64)
-    lo = np.searchsorted(cand, first, side="left")
-    overlap = lo < len(cand)
-    overlap[overlap] &= cand[lo[overlap]] <= last[overlap]
-    return overlap
-
-
-def _positions_by_doc(
-    reader: SegmentReader, term: str, cand: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(docids, tfs, flat_positions) restricted to blocks overlapping the
-    sorted candidate docids (block-selective payload read)."""
-    overlap = overlapping_blocks(reader.term_row(term), cand)
-    if not overlap.any():
-        z = np.zeros(0, np.int64)
-        return z, z, z
-    return reader.decode_term_positions(term, overlap)
 
 
 def match_phrase_on_segment(
@@ -68,8 +45,8 @@ def match_phrase_on_segment(
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(docids, n_matches) of one phrase against one segment (exact), the
-    candidate docids decoded through the segment cache
-    (wand.term_postings)."""
+    candidate docids and the positions decoded through the segment cache
+    (wand.term_postings, wand.term_positions)."""
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
     # candidate docs: live docs holding every term (no positions yet)
@@ -85,17 +62,10 @@ def match_phrase_on_segment(
     # stay far below 2^31, positions below 2^32.
     base = np.int64(reader.meta["min_docid"])
     anchors = None
-    # decode the positional payload once per UNIQUE term: a phrase like
-    # "do re do re do" otherwise block-reads and varint-decodes the big
-    # positions stream once per SLOT (5x instead of 2x here)
-    pos_cache: dict[str, tuple] = {}
     for j, t in enumerate(terms):
-        if t not in pos_cache:
-            pos_cache[t] = _positions_by_doc(reader, t, cand)
-        d, tf, pos = pos_cache[t]
-        keep = np.isin(d, cand, assume_unique=True)
-        occ = np.repeat(keep, tf)
-        doc_of_occ = np.repeat(d, tf)[occ]
+        doc_of_occ, pos = term_positions(reader, cache, t)
+        occ = np.isin(doc_of_occ, cand)
+        doc_of_occ = doc_of_occ[occ]
         p = pos[occ] - j  # anchor = position of tj minus its offset
         valid = p >= 0
         key = (doc_of_occ[valid] - base) * np.int64(1 << 32) + p[valid]

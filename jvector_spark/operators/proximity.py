@@ -15,9 +15,9 @@ terms of a W=8 query counts 1, not 0 (mirrors the oracle's
 
 Scale shape: identical scatter/gather to phrase_search — queries
 broadcast, segments the parallel dimension, candidates from the
-conjunctive docid intersection FIRST (positions decode only for blocks
-holding survivors), per-(task,query) top-k cut (wand.topk_partial)
-before the shuffle.
+conjunctive docid intersection FIRST (then each term's positions, decoded
+whole once per segment cache, cut to the survivors), per-(task,query)
+top-k cut (wand.topk_partial) before the shuffle.
 The per-candidate window count is O(m * dl) numpy work via two
 searchsorted sweeps per term, no per-token Python.
 """
@@ -28,10 +28,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from jvector_spark.operators.phrase import _positions_by_doc
 from jvector_spark.operators.wand import (
-    IndexSnapshot, intersect, live, open_segments, term_postings,
-    topk_partial)
+    IndexSnapshot, intersect, live, open_segments, term_positions,
+    term_postings, topk_partial)
 from jvector_spark.sources.segment import SegmentReader
 
 
@@ -63,8 +62,8 @@ def match_window_on_segment(
     tombstones: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(docids, n_matches) for one proximity query against one segment,
-    the candidate docids decoded through the segment cache
-    (wand.term_postings)."""
+    the candidate docids and the positions decoded through the segment
+    cache (wand.term_postings, wand.term_positions)."""
     terms = sorted(set(terms))
     if not terms or not all(reader.has_term(t) for t in terms):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
@@ -73,20 +72,16 @@ def match_window_on_segment(
     if not len(cand):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
 
-    # positions per (term, candidate doc): list-of-arrays keyed by doc
+    # positions per (term, candidate doc): list-of-arrays keyed by doc,
+    # each ascending (occurrences arrive sorted by docid, then position)
     pos_by_doc: dict[int, list[np.ndarray]] = {int(c): [] for c in cand}
     for t in terms:
-        d, tf, pos = _positions_by_doc(reader, t, cand)
-        keep = np.isin(d, cand, assume_unique=True)
-        occ = np.repeat(keep, tf)
-        doc_of_occ = np.repeat(d, tf)[occ]
-        p = pos[occ]
-        order = np.argsort(doc_of_occ, kind="stable")
-        doc_of_occ, p = doc_of_occ[order], p[order]
-        bounds = np.searchsorted(doc_of_occ, cand)
-        bounds = np.append(bounds, len(doc_of_occ))
+        doc_of_occ, pos = term_positions(reader, cache, t)
+        occ = np.isin(doc_of_occ, cand)
+        doc_of_occ, p = doc_of_occ[occ], pos[occ]
+        bounds = np.append(np.searchsorted(doc_of_occ, cand), len(doc_of_occ))
         for ci, c in enumerate(cand):
-            pos_by_doc[int(c)].append(np.sort(p[bounds[ci]:bounds[ci + 1]]))
+            pos_by_doc[int(c)].append(p[bounds[ci]:bounds[ci + 1]])
 
     dls = reader.doclen(cand).astype(np.int64)
     out_d, out_n = [], []

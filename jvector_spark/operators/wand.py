@@ -343,6 +343,18 @@ def term_postings(reader: SegmentReader, cache: dict,
     return cache[key]
 
 
+def term_positions(reader: SegmentReader, cache: dict,
+                   t: str) -> tuple[np.ndarray, np.ndarray]:
+    """(docid of each occurrence, position) of term t, which the segment
+    holds — docid ascending, then position ascending — decoded once per
+    segment cache."""
+    key = ("pos", t)
+    if key not in cache:
+        d, tf, pos = reader.decode_term_positions(t)
+        cache[key] = (np.repeat(d, tf), pos)
+    return cache[key]
+
+
 def term_contrib(reader: SegmentReader, cache: dict, t: str, idf: float,
                  avgdl: float) -> tuple[np.ndarray, np.ndarray]:
     """(docids, exact BM25 contribution idf·tf_norm) of term t's full

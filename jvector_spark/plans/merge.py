@@ -165,15 +165,29 @@ def mark_deleted(index_dir: str, docids: Sequence[int]) -> list[int]:
     would silently delete the wrong live docs). This makes the
     in-place-compaction manifest flip atomic w.r.t. deletes: a crash
     between the flip and the tombstone-file removal leaves stale-epoch
-    tombstones that every reader ignores."""
+    tombstones that every reader ignores.
+
+    A docid in no segment's [min_docid, max_docid] raises ValueError and
+    leaves the journal unchanged: journaled, it would hide the doc a
+    later append gives that docid."""
     path = os.path.join(index_dir, TOMBSTONES_FILE)
+    ids = np.asarray([int(d) for d in docids], np.int64)
     with _tombstone_lock(index_dir):
-        cur: set[int] = set(load_tombstones(index_dir))
-        cur.update(int(d) for d in docids)
+        man = load_manifest(index_dir)
+        held = np.zeros(len(ids), bool)
+        for seg in man["segments"]:
+            held |= (ids >= seg["min_docid"]) & (ids <= seg["max_docid"])
+        if not held.all():
+            bad = np.unique(ids[~held])
+            raise ValueError(
+                f"{len(bad)} docid(s) in no segment of {index_dir}: "
+                f"{bad[:20].tolist()}")
+        epoch = int(man.get("docid_epoch", 0))
+        cur: set[int] = set(load_tombstones(index_dir, epoch))
+        cur.update(ids.tolist())
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"docid_epoch": _manifest_epoch(index_dir),
-                       "docids": sorted(cur)}, f)
+            json.dump({"docid_epoch": epoch, "docids": sorted(cur)}, f)
         os.replace(tmp, path)
     return sorted(cur)
 

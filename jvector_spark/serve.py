@@ -649,8 +649,9 @@ class IndexServer:
     def phrase(self, queries: pd.DataFrame) -> pd.DataFrame:
         """Exact phrase queries over the warm index: queries(qid,
         phrase:str, k) -> (qid, rank, docid, n_matches). Local mode runs
-        phrase_partial over the POOLED readers (block-selective position
-        decode, zero Spark jobs); spark mode delegates to
+        phrase_partial over the POOLED readers and caches (positions
+        decode once per segment generation, zero Spark jobs); spark mode
+        delegates to
         phrase_search(merge="driver")."""
         from jvector_spark.functions.tokenizer import tokenize_series
         from jvector_spark.operators.phrase import (

@@ -21,10 +21,9 @@ the v1 layout) or FOR (per-term fixed-width bit-packing in per-block
 byte-aligned sections; see encode_postings_frame). Per-block metadata
 (byte offsets, value counts, first/last docid, max_tf, min_dl) lives in
 the dictionary together with the per-term (codec, width), so:
-  * whole-term decode = ONE varint_decode + cumsum, or ONE unpackbits +
-    gather for FOR terms (no per-block calls either way);
-  * block-selective decode = per-block byte ranges (skip-pointer analog of
-    the graph's O(1) record addressing, OnDiskGraphIndex.baseNodeOffsetFor);
+  * every read decodes a term whole: ONE range read + varint_decode +
+    cumsum, or ONE unpackbits + gather for FOR terms, and one range read +
+    varint_decode for its positions (no per-block calls);
   * (max_tf, min_dl) per block upper-bounds the BM25 tf-norm for block-max
     pruning (FusedADC-style inline metadata, feature/FusedADC.java:39-59).
 v1 segments (no codec columns in the dictionary) still load: every stream
@@ -1429,23 +1428,16 @@ class SegmentReader:
             return self._blob[off : off + ln]
         return np.frombuffer(self._blob_file.read_at(ln, off), np.uint8)
 
-    def _bytes(self, off: int, ln: int) -> bytes:
-        return self._range(off, ln).tobytes()
-
     def _for_region_values(
-        self, r: dict, off_key: str, len_key: str, w: int,
-        sel: np.ndarray | None = None,
+        self, r: dict, off_key: str, len_key: str, w: int
     ) -> np.ndarray:
         """Decode a term's FOR-coded stream (per-block byte-aligned bit
         sections, per-term width w) -> per-value uint64. One unpackbits
         over the term's contiguous region, one gather for the block
-        sections (full 128-value blocks are padding-free by construction).
-        `sel` (bool per block) restricts to selected blocks."""
+        sections (full 128-value blocks are padding-free by construction)."""
         blk_n = np.asarray(r["block_n"], dtype=np.int64)
         offs = np.asarray(r[off_key], dtype=np.int64)
         lens = np.asarray(r[len_key], dtype=np.int64)
-        if sel is not None:
-            blk_n, offs, lens = blk_n[sel], offs[sel], lens[sel]
         total_n = int(blk_n.sum())
         if w == 0 or total_n == 0:
             return np.zeros(total_n, np.uint64)
@@ -1457,111 +1449,62 @@ class SegmentReader:
         shifts = np.arange(w - 1, -1, -1, dtype=np.uint64)
         return (vals_bits << shifts).sum(axis=1, dtype=np.uint64)
 
-    def _decode_docids(
-        self, r: dict, sel: np.ndarray | None = None
-    ) -> np.ndarray:
-        """docids (asc) of the selected blocks (all blocks when sel=None)."""
-        gap_codec = int(r.get("gap_codec", 0))
-        blk_n = np.asarray(r["block_n"], dtype=np.int64)
-        first = np.asarray(r["block_first"], dtype=np.int64)
-        if sel is not None:
-            blk_n, first = blk_n[sel], first[sel]
-        if gap_codec == 1:
+    def _varint_region(self, r: dict, off_key: str, len_key: str,
+                       n: int) -> np.ndarray:
+        """Decode n varints from a term's contiguous region of one stream
+        (the encoder lays a term's blocks end to end): one range read,
+        one varint_decode."""
+        off = int(r[off_key][0])
+        end = int(r[off_key][-1] + r[len_key][-1])
+        return varint_decode(self._range(off, end - off).tobytes(),
+                             n).astype(np.int64)
+
+    def _decode_docids(self, r: dict) -> np.ndarray:
+        """docids (asc) of a term's whole posting list."""
+        if int(r.get("gap_codec", 0)) == 1:
+            blk_n = np.asarray(r["block_n"], dtype=np.int64)
+            first = np.asarray(r["block_first"], dtype=np.int64)
             v = self._for_region_values(
-                r, "block_doc_off", "block_doc_len", int(r["gap_width"]), sel
+                r, "block_doc_off", "block_doc_len", int(r["gap_width"])
             ).astype(np.int64)
             c = np.cumsum(v)
             starts = np.concatenate(([0], np.cumsum(blk_n)[:-1]))
             # v[block start] == 0 by format: docid = block_first + (c - c@start)
             return np.repeat(first - c[starts], blk_n) + c
-        if sel is None:
-            total_n = int(r["df"])
-            doc_off = int(r["block_doc_off"][0])
-            doc_end = int(r["block_doc_off"][-1] + r["block_doc_len"][-1])
-            gaps = varint_decode(self._bytes(doc_off, doc_end - doc_off), total_n)
-            return np.cumsum(gaps.astype(np.int64))
-        out = []
-        for bi in np.flatnonzero(sel):
-            nb = int(r["block_n"][bi])
-            gaps = varint_decode(
-                self._bytes(int(r["block_doc_off"][bi]),
-                            int(r["block_doc_len"][bi])), nb,
-            ).astype(np.int64)
-            out.append(np.cumsum(gaps) - gaps[0] + int(r["block_first"][bi]))
-        return np.concatenate(out) if out else np.zeros(0, np.int64)
+        return np.cumsum(self._varint_region(
+            r, "block_doc_off", "block_doc_len", int(r["df"])))
 
-    def _decode_tfs(self, r: dict, sel: np.ndarray | None = None) -> np.ndarray:
-        tf_codec = int(r.get("tf_codec", 0))
-        if tf_codec == 1:
+    def _decode_tfs(self, r: dict) -> np.ndarray:
+        if int(r.get("tf_codec", 0)) == 1:
             return self._for_region_values(
-                r, "block_tf_off", "block_tf_len", int(r["tf_width"]), sel
+                r, "block_tf_off", "block_tf_len", int(r["tf_width"])
             ).astype(np.int64)
-        if sel is None:
-            total_n = int(r["df"])
-            tf_off = int(r["block_tf_off"][0])
-            tf_end = int(r["block_tf_off"][-1] + r["block_tf_len"][-1])
-            return varint_decode(
-                self._bytes(tf_off, tf_end - tf_off), total_n
-            ).astype(np.int64)
-        out = []
-        for bi in np.flatnonzero(sel):
-            out.append(varint_decode(
-                self._bytes(int(r["block_tf_off"][bi]),
-                            int(r["block_tf_len"][bi])),
-                int(r["block_n"][bi]),
-            ).astype(np.int64))
-        return np.concatenate(out) if out else np.zeros(0, np.int64)
+        return self._varint_region(
+            r, "block_tf_off", "block_tf_len", int(r["df"]))
 
     @property
     def has_positions(self) -> bool:
         return "block_pos_off" in self._cols
 
     def decode_term_positions(
-        self, term: str, block_mask: np.ndarray | None = None
+        self, term: str
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docids, tfs, flat_positions) — posting i of the return owns
         flat_positions[cum_tf[i] : cum_tf[i+1]] (token indices, ascending).
-        The per-posting payload read path (Feature plugin analog); block-
-        selective like decode_term."""
+        The per-posting payload read path (Feature plugin analog): the
+        term's whole positions region is one range read and one
+        varint_decode."""
         if not self.has_positions:
             raise ValueError("segment was built without positions=True")
         r = self.term_row(term)
-        sel = None
-        if block_mask is not None and not block_mask.all():
-            sel = np.asarray(block_mask, dtype=bool)
-            if not sel.any():
-                z = np.zeros(0, np.int64)
-                return z, z, z
-        d = self._decode_docids(r, sel)
-        tf = self._decode_tfs(r, sel)
-        offs = np.asarray(r["block_pos_off"], dtype=np.int64)
-        lens = np.asarray(r["block_pos_len"], dtype=np.int64)
-        if sel is not None:
-            offs, lens = offs[sel], lens[sel]
-        n_occ = int(tf.sum())
-        if n_occ == 0:
-            return d, tf, np.zeros(0, np.int64)
-        # positions region is sequential varint; selected block ranges may
-        # be non-contiguous -> concatenate the byte ranges, one decode
-        buf = b"".join(
-            self._bytes(int(o), int(ln)) for o, ln in zip(offs, lens) if ln
-        )
-        pos = varint_decode(buf, n_occ).astype(np.int64)
-        return d, tf, pos
+        d, tf = self._decode_docids(r), self._decode_tfs(r)
+        return d, tf, self._varint_region(
+            r, "block_pos_off", "block_pos_len", int(tf.sum()))
 
-    def decode_term(
-        self, term: str, block_mask: np.ndarray | None = None
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """(docids asc, tfs) for a term. With block_mask, only selected
-        blocks are decoded (the block-selective read that
-        decode_term_positions shares).
+    def decode_term(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+        """(docids asc, tfs) of a term's whole posting list.
         Codec per (term, stream) from the dictionary: varint (absolute
         first docid + cross-block gaps, the v1 layout — segments without
         codec columns default here) or FOR bit-packing (format v2)."""
         r = self.term_row(term)
-        sel = None
-        if block_mask is not None and not block_mask.all():
-            sel = np.asarray(block_mask, dtype=bool)
-            if not sel.any():
-                return np.zeros(0, np.int64), np.zeros(0, np.int64)
-        return self._decode_docids(r, sel), self._decode_tfs(r, sel)
+        return self._decode_docids(r), self._decode_tfs(r)

@@ -59,23 +59,6 @@ def test_positions_roundtrip(pos_index, corpus_pdf):
             assert got.tolist() == exp, (term, docid)
 
 
-def test_positions_blockwise_equals_full(pos_index):
-    idx, manifest = pos_index
-    reader = SegmentReader(manifest["path"].iloc[0])
-    term = reader.terms[int(np.argmax(
-        [reader.term_row(t)["df"] for t in reader.terms]))]
-    d, tf, pos = reader.decode_term_positions(term)
-    nb = len(reader.term_row(term)["block_n"])
-    mask = np.arange(nb) % 2 == 0
-    d2, tf2, pos2 = reader.decode_term_positions(term, mask)
-    sel = np.repeat(mask, np.asarray(reader.term_row(term)["block_n"],
-                                     dtype=np.int64))
-    occ_sel = np.repeat(sel, tf)
-    assert np.array_equal(d2, d[sel])
-    assert np.array_equal(tf2, tf[sel])
-    assert np.array_equal(pos2, pos[occ_sel])
-
-
 # bigrams/trigrams that actually occur in the seed-42 synthetic corpus
 # (identifier Zipf vocabulary), plus a guaranteed miss
 PHRASES = [
@@ -87,8 +70,7 @@ PHRASES = [
 ]
 
 
-def test_phrase_search_matches_oracle(spark, pos_index, corpus_pdf):
-    idx, _ = pos_index
+def _check_phrase_search(spark, idx, corpus_pdf):
     queries = pd.DataFrame({
         "qid": np.arange(len(PHRASES), dtype=np.int64),
         "phrase": PHRASES,
@@ -105,6 +87,16 @@ def test_phrase_search_matches_oracle(spark, pos_index, corpus_pdf):
         assert g["n_matches"].tolist() == [n for _, n in exp_sorted], phrase
         any_hits += len(g)
     assert any_hits > 0, "fixture phrases never matched — vacuous test"
+
+
+def test_phrase_search_matches_oracle(spark, pos_index, corpus_pdf):
+    _check_phrase_search(spark, pos_index[0], corpus_pdf)
+
+
+def test_phrase_search_matches_oracle_b16(spark, pos_index_b16, corpus_pdf):
+    """The same over 16-posting blocks: a term's occurrences span several
+    blocks, all read whole and cut to the candidates."""
+    _check_phrase_search(spark, pos_index_b16[0], corpus_pdf)
 
 
 def test_phrase_spark_merge_equals_driver(spark, pos_index):

@@ -52,8 +52,7 @@ QUERIES = [
 ]
 
 
-def test_segment_window_counts_match_oracle(pos_index, corpus_pdf):
-    idx, manifest = pos_index
+def _check_segment_window_counts(manifest, corpus_pdf):
     for terms, w in QUERIES:
         got: dict[int, int] = {}
         for path in manifest["path"]:
@@ -63,8 +62,16 @@ def test_segment_window_counts_match_oracle(pos_index, corpus_pdf):
         assert got == exp, (terms, w)
 
 
-def test_proximity_search_topk(spark, pos_index, corpus_pdf):
-    idx, _ = pos_index
+def test_segment_window_counts_match_oracle(pos_index, corpus_pdf):
+    _check_segment_window_counts(pos_index[1], corpus_pdf)
+
+
+def test_segment_window_counts_match_oracle_b16(pos_index_b16, corpus_pdf):
+    """The same over 16-posting blocks (terms span several blocks)."""
+    _check_segment_window_counts(pos_index_b16[1], corpus_pdf)
+
+
+def _check_proximity_search_topk(spark, idx, corpus_pdf):
     qpdf = pd.DataFrame(
         [(i, t, w, 15) for i, (t, w) in enumerate(QUERIES)],
         columns=["qid", "terms", "window", "k"],
@@ -78,6 +85,15 @@ def test_proximity_search_topk(spark, pos_index, corpus_pdf):
         got = res[res["qid"] == i].sort_values("rank")
         assert got["docid"].tolist() == d[order].tolist(), terms
         assert got["n_matches"].tolist() == n[order].tolist()
+
+
+def test_proximity_search_topk(spark, pos_index, corpus_pdf):
+    _check_proximity_search_topk(spark, pos_index[0], corpus_pdf)
+
+
+def test_proximity_search_topk_b16(spark, pos_index_b16, corpus_pdf):
+    """The same over 16-posting blocks (terms span several blocks)."""
+    _check_proximity_search_topk(spark, pos_index_b16[0], corpus_pdf)
 
 
 def test_short_doc_clipped_window(spark, tmp_path_factory):

@@ -112,13 +112,6 @@ def test_reader_spi_filesystem_path(v2_index):
         d1, t1 = local.decode_term(term)
         d2, t2 = remote_style.decode_term(term)
         assert np.array_equal(d1, d2) and np.array_equal(t1, t2), term
-    # block-masked decode through the SPI too
-    term = local.terms[0]
-    nb = len(local.term_row(term)["block_n"])
-    mask = np.arange(nb) % 2 == 0
-    d1, t1 = local.decode_term(term, mask)
-    d2, t2 = remote_style.decode_term(term, mask)
-    assert np.array_equal(d1, d2) and np.array_equal(t1, t2)
     # attribute filter (acceptOrds) through the SPI — filter on a real
     # value of the sidecar's `repo` key column
     some_repo = pq.read_table(

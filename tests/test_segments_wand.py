@@ -76,23 +76,6 @@ def test_segment_roundtrip_postings(index, oracle):
         assert np.array_equal(tf, tf_exp.astype(np.int64)), term
 
 
-def test_blockwise_decode_equals_full(index):
-    idx, manifest = index
-    r = SegmentReader(manifest["path"].iloc[0])
-    # pick the heaviest term (most blocks) to exercise block boundaries
-    term = r.terms[int(np.argmax([r.term_row(t)["df"] for t in r.terms]))]
-    d_full, tf_full = r.decode_term(term)
-    nb = len(r.term_row(term)["block_n"])
-    for pattern in [np.ones(nb, bool), np.arange(nb) % 2 == 0, np.arange(nb) >= nb // 2]:
-        mask_d, mask_tf = r.decode_term(term, pattern)
-        sel = np.concatenate([
-            np.arange(i * 128, min((i + 1) * 128, len(d_full)))
-            for i in range(nb) if pattern[i]
-        ]) if pattern.any() else np.zeros(0, np.int64)
-        assert np.array_equal(mask_d, d_full[sel.astype(int)])
-        assert np.array_equal(mask_tf, tf_full[sel.astype(int)])
-
-
 def test_global_term_stats_match_oracle(spark, index, oracle):
     idx, _ = index
     some_terms = list(oracle.df)[:20] + ["import", "zz_missing_term"]

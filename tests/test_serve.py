@@ -200,13 +200,40 @@ def test_serve_phrase_matches_batch(spark, corpus_df, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("idx_srv_pos"))
     build_index(assign_dense_docids(corpus_df), idx, num_segments=4,
                 positions=True)
-    q = pd.DataFrame({"qid": [0, 1], "phrase": ["import os", "def main"],
+    q = pd.DataFrame({"qid": [0, 1],
+                      "phrase": ["map_get21 run_parse33", "import run_parse33"],
                       "k": [8, 8]})
     exp = phrase_search(spark, idx, q, merge="driver")
+    assert sorted(set(exp["qid"])) == [0, 1]
     for mode in ("local", "spark"):
         got = IndexServer(spark, idx, mode=mode).phrase(q)
         assert got["docid"].tolist() == exp["docid"].tolist(), mode
         assert got["n_matches"].tolist() == exp["n_matches"].tolist()
+
+
+def test_serve_phrase_positions_stay_warm(spark, pos_index_b16,
+                                         monkeypatch):
+    """A repeated phrase request reads every term's positions from the
+    pooled segment cache: the second request decodes none again."""
+    from jvector_spark.sources.segment import SegmentReader
+
+    calls = []
+    decode = SegmentReader.decode_term_positions
+
+    def spy(self, *args):
+        calls.append(args)
+        return decode(self, *args)
+
+    monkeypatch.setattr(SegmentReader, "decode_term_positions", spy)
+    server = IndexServer(spark, pos_index_b16[0], mode="local")
+    q = pd.DataFrame({"qid": [0], "phrase": ["map_get21 run_parse33"],
+                      "k": [10]})
+    first = server.phrase(q)
+    n_first = len(calls)
+    second = server.phrase(q)
+    assert n_first > 0 and len(first) > 0
+    assert len(calls) == n_first
+    pd.testing.assert_frame_equal(first, second)
 
 
 def test_serve_phrase_requires_positions(spark, served_index):

@@ -60,10 +60,13 @@ def test_million_tombstones_stay_off_driver(spark, idx, corpus_pdf,
     purges exactly the real deletes."""
     man = load_manifest(idx)
     hi = max(s["max_docid"] for s in man["segments"])
-    # 10^6 synthetic docids beyond the live range (a just-compacted-away
-    # range: legal journal content) plus 3 real ones
+    # 10^6 synthetic docids beyond the live range plus 3 real ones, as a
+    # journal written before mark_deleted refused out-of-range docids:
+    # readers must still take it whole
     ids = np.arange(hi + 1, hi + 1_000_001, dtype=np.int64).tolist()
-    mark_deleted(idx, ids + [1, 2, 3])
+    with open(os.path.join(idx, TOMBSTONES_FILE), "w") as f:
+        json.dump({"docid_epoch": man.get("docid_epoch", 0),
+                   "docids": [1, 2, 3] + ids}, f)
     try:
         tomb = tombstone_view(idx, epoch=man.get("docid_epoch", 0))
         assert tomb.dtype == np.int64 and len(tomb) == 1_000_003
@@ -79,6 +82,31 @@ def test_million_tombstones_stay_off_driver(spark, idx, corpus_pdf,
         assert int(m["n_docs"].sum()) == int(man["n_docs"]) - 3
     finally:
         os.remove(os.path.join(idx, TOMBSTONES_FILE))
+
+
+def test_out_of_range_delete_raises_and_spares_next_append(
+        spark, corpus_pdf, tmp_path_factory):
+    """A docid in no segment is refused with the journal unchanged: left
+    in the journal, it would hide the doc the next append numbers so."""
+    from jvector_spark.streaming.micro_segments import append_micro_segment
+
+    d = str(tmp_path_factory.mktemp("idx_oor_delete"))
+    build_index(assign_dense_docids(
+        spark.createDataFrame(corpus_pdf.head(10))), d, num_segments=1)
+    mark_deleted(d, [3])
+    with open(os.path.join(d, TOMBSTONES_FILE)) as f:
+        journal = f.read()
+    with pytest.raises(ValueError, match=r"\[10, 11\]"):
+        mark_deleted(d, [4, 10, 11])
+    with open(os.path.join(d, TOMBSTONES_FILE)) as f:
+        assert f.read() == journal
+
+    new = corpus_pdf.head(1).assign(path="new.py",
+                                    content="zz_fresh_token import")
+    append_micro_segment(spark.createDataFrame(new), 0, d)
+    assert load_manifest(d)["n_docs"] == 11
+    q = pd.DataFrame({"qid": [0], "terms": [["zz_fresh_token"]], "k": [5]})
+    assert search_index(spark, d, q, merge="driver")["docid"].tolist() == [10]
 
 
 def test_compaction_moves_shards_to_new_epoch_and_vacuum_gcs(
