@@ -1200,7 +1200,7 @@ def q_lifecycle_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase='crud' = tombstone-journal replace_docs then compact_in_place
     (the addGraphNode/markNodeDeleted incremental regime); phase='bulk' =
     replace_docs_bulk (the buildAndMergeNewNodes MERGE-INTO regime: the
-    doomed set never touches the driver; compact-with-doomed THEN
+    same live-key match, purged by a compaction into a fresh index THEN
     append). The two regimes converge to the SAME final index — survivors
     keep their relative order, replacements land at the tail in key
     order — so one DuckDB twin gates both (new docids = max(doc_id)+1 +

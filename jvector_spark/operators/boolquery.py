@@ -311,7 +311,8 @@ def boolean_search_index(
     snap = IndexSnapshot(index_dir)
     avgdl = snap.manifest["avgdl"]
     idfs = idf_map(snap.manifest["n_docs"],
-                   global_term_stats(spark, index_dir, pos_terms)
+                   global_term_stats(spark, index_dir, pos_terms,
+                                     snap.manifest)
                    if pos_terms else {})
 
     def kernel(paths, tomb, payload):

@@ -178,7 +178,7 @@ def collapse_topk(
     qs = _or_queries(queries)
     probe = _probe(qs)
     idfs = idf_map(snap.manifest["n_docs"],
-                   global_term_stats(spark, index_dir, probe)
+                   global_term_stats(spark, index_dir, probe, snap.manifest)
                    if probe else {})
 
     def kernel(paths, tomb, payload):

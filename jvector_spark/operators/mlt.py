@@ -111,7 +111,7 @@ def more_like_this(
     toks = tokenize_series(
         pd.Series([texts[int(d)] for d in doc_ids]), mode)
     all_terms = sorted({t for terms in toks for t in terms})
-    dfm = global_term_stats(spark, index_dir, all_terms)
+    dfm = global_term_stats(spark, index_dir, all_terms, manifest)
     idfs = idf_map(manifest["n_docs"], dfm)
     qterms = mlt_select_terms(
         {int(d): texts[int(d)] for d in doc_ids}, idfs, num_terms, mode,

@@ -55,19 +55,22 @@ def idf_map(n_docs: int, df_by_term: dict[str, int]) -> dict[str, float]:
 
 
 def global_term_stats(
-    spark: SparkSession, index_dir: str, terms: list[str]
+    spark: SparkSession, index_dir: str, terms: list[str],
+    manifest: dict | None = None,
 ) -> dict[str, int]:
-    """Global df for the query terms.
+    """Global df for the query terms over `manifest`'s segments (default:
+    the live manifest). Scorers pass their IndexSnapshot's, so df, n_docs
+    and avgdl all come from one write.
 
     Fast path: one driver-side pyarrow read of the index's hot-tier
     term_stats.parquet (written at build/compaction — the in-memory upper
-    layer analog, OnDiskGraphIndex.java:83-84). Fallback for indexes
-    without it: distributed aggregation over the per-segment dictionaries
-    (term-filtered parquet scan, row-group pruned).
+    layer analog, OnDiskGraphIndex.java:83-84) while `manifest` records
+    its sha. Fallback otherwise: distributed aggregation over the
+    manifest's dictionaries (term-filtered parquet scan, row-group pruned).
     """
     from jvector_spark.sources.segment import read_global_term_stats
 
-    fast = read_global_term_stats(index_dir, list(terms))
+    fast = read_global_term_stats(index_dir, list(terms), manifest)
     if fast is not None:
         return fast
     # enumerate the MANIFEST's segments, never a `seg-*` glob: a glob
@@ -75,7 +78,8 @@ def global_term_stats(
     # terms.parquet there first) and crashed/unpublished orphan segments,
     # double-counting their df and silently skewing idf vs the
     # manifest's n_docs
-    manifest = load_manifest(index_dir)
+    if manifest is None:
+        manifest = load_manifest(index_dir)
     dict_paths = [os.path.join(s["path"], "terms.parquet")
                   for s in manifest["segments"]]
     if not dict_paths:
@@ -830,7 +834,8 @@ def search_index(
     snap = IndexSnapshot(index_dir)
     avgdl = snap.manifest["avgdl"]
     all_terms = sorted({t for ts in queries["terms"] for t in ts})
-    dfm = global_term_stats(spark, index_dir, all_terms) if all_terms else {}
+    dfm = (global_term_stats(spark, index_dir, all_terms, snap.manifest)
+           if all_terms else {})
     idfs = idf_map(snap.manifest["n_docs"], dfm)
 
     def kernel(paths, tomb, payload):
@@ -880,7 +885,7 @@ def explain_score(
         return {"docid": docid, "deleted": True, "terms": {}, "total": 0.0}
     reader = SegmentReader(seg["path"])
     uniq = sorted({t for t in terms})
-    dfm = global_term_stats(spark, index_dir, uniq)
+    dfm = global_term_stats(spark, index_dir, uniq, manifest)
     idfs = idf_map(manifest["n_docs"], dfm)
     dl = float(reader.doclen(np.array([docid], dtype=np.int64))[0])
     out: dict = {"docid": docid, "deleted": False, "dl": dl,

@@ -42,7 +42,6 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from jvector_spark import BLOCK_SIZE
 from jvector_spark.sources.segment import (
@@ -50,7 +49,9 @@ from jvector_spark.sources.segment import (
     SegmentReader,
     _concat,
     empty_manifest,
+    key_join_cond,
     load_manifest,
+    write_global_term_stats,
     write_index_manifest,
     write_segment,
 )
@@ -154,7 +155,8 @@ class _tombstone_lock:
         return False
 
 
-def mark_deleted(index_dir: str, docids: Sequence[int]) -> list[int]:
+def mark_deleted(index_dir: str, docids: Sequence[int],
+                 epoch: int | None = None) -> list[int]:
     """Phase-1 delete: record tombstones in the index manifest dir
     (markNodeDeleted analog). Queries must exclude these immediately;
     the postings bytes are untouched until compaction.
@@ -169,11 +171,19 @@ def mark_deleted(index_dir: str, docids: Sequence[int]) -> list[int]:
 
     A docid in no segment's [min_docid, max_docid] raises ValueError and
     leaves the journal unchanged: journaled, it would hide the doc a
-    later append gives that docid."""
+    later append gives that docid.
+
+    `epoch`: the docid_epoch the caller read its docids in. If a
+    compaction renumbered them since: ValueError, journal unchanged."""
     path = os.path.join(index_dir, TOMBSTONES_FILE)
     ids = np.asarray([int(d) for d in docids], np.int64)
     with _tombstone_lock(index_dir):
         man = load_manifest(index_dir)
+        cur_epoch = int(man.get("docid_epoch", 0))
+        if epoch is not None and cur_epoch != int(epoch):
+            raise ValueError(
+                f"{index_dir} was compacted (docid epoch {epoch} -> "
+                f"{cur_epoch}) since the docids were read")
         held = np.zeros(len(ids), bool)
         for seg in man["segments"]:
             held |= (ids >= seg["min_docid"]) & (ids <= seg["max_docid"])
@@ -182,12 +192,11 @@ def mark_deleted(index_dir: str, docids: Sequence[int]) -> list[int]:
             raise ValueError(
                 f"{len(bad)} docid(s) in no segment of {index_dir}: "
                 f"{bad[:20].tolist()}")
-        epoch = int(man.get("docid_epoch", 0))
-        cur: set[int] = set(load_tombstones(index_dir, epoch))
+        cur: set[int] = set(load_tombstones(index_dir, cur_epoch))
         cur.update(ids.tolist())
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"docid_epoch": epoch, "docids": sorted(cur)}, f)
+            json.dump({"docid_epoch": cur_epoch, "docids": sorted(cur)}, f)
         os.replace(tmp, path)
     return sorted(cur)
 
@@ -368,11 +377,7 @@ def compact_in_place(
     dirs are vacuumed. The LSM minor->major compaction lifecycle without
     a second index location.
     """
-    import time as _time
-
-    from jvector_spark.sources.segment import write_index_manifest
-
-    gen = os.path.join(index_dir, f"gen-{int(_time.time() * 1000):013d}")
+    gen = os.path.join(index_dir, f"gen-{int(time.time() * 1000):013d}")
     old_epoch = _manifest_epoch(index_dir)
     # segments live BEFORE the flip: their supersession moment is the
     # flip, not their build time — see the mtime bump below
@@ -417,7 +422,7 @@ def compact_in_place(
     # pre-flip manifest snapshot, despite the documented grace. Touch
     # each superseded dir (and its hosting gen dir) so "age" means
     # time-since-supersession for exactly the dirs the flip orphaned.
-    now = _time.time()
+    now = time.time()
     for p in old_live:
         for tgt in (p, os.path.dirname(p)):
             if (os.path.basename(tgt).startswith(("seg-", "gen-"))
@@ -433,9 +438,6 @@ def compact_in_place(
 
 def _flip_and_carry_over(index_dir, gen, manifest, mode, old_epoch,
                          snap_epoch, snap, tomb) -> None:
-    from jvector_spark.sources.segment import (
-        write_global_term_stats, write_index_manifest)
-
     # Hoist the O(vocabulary) dictionary aggregation OUT of the critical
     # section — the lock otherwise blocks every concurrent mark_deleted
     # (the serve 'delete' op) for its duration. Window semantics: the new
@@ -445,11 +447,11 @@ def _flip_and_carry_over(index_dir, gen, manifest, mode, old_epoch,
     # flip below records the new sha.
     stats_sha = write_global_term_stats(index_dir, manifest)
     with _tombstone_lock(index_dir):
-        # flip the PARENT manifest to the new generation's segments (paths
-        # are absolute). The epoch bump makes the flip atomic w.r.t.
-        # deletes: the old tombstones carry the old epoch and every reader
-        # ignores them the instant the new manifest lands (no
-        # wrong-results window at any crash point).
+        # flip the PARENT manifest to the new generation's segments
+        # (stored as gen-*/seg-* under index_dir). The epoch bump makes
+        # the flip atomic w.r.t. deletes: the old tombstones carry the
+        # old epoch and every reader ignores them the instant the new
+        # manifest lands (no wrong-results window at any crash point).
         write_index_manifest(index_dir, manifest, mode,
                              docid_epoch=old_epoch + 1,
                              stats_sha=stats_sha)
@@ -538,29 +540,6 @@ def vacuum_index(index_dir: str, dry_run: bool = False,
     return removed
 
 
-def _seg_digest(seg_path: str) -> str:
-    """The 20-hex segment identity of the bulk-doomed partition dirs: a
-    digest of the manifest's path string (basenames collide across
-    generations — gen-A/seg-00003 vs seg-00003 — so the full normalized
-    path is the identity)."""
-    import hashlib
-
-    return hashlib.md5(os.path.normpath(seg_path).encode()).hexdigest()[:20]
-
-
-def _load_bulk_doomed(doomed_dir: str, seg_path: str) -> np.ndarray | None:
-    """Executor-side: one segment's bulk-doomed docids (written by
-    replace_docs_bulk as segd=<digest> parquet partitions). None if the
-    segment has no doomed rows."""
-    part = os.path.join(doomed_dir, f"segd={_seg_digest(seg_path)}")
-    if not os.path.isdir(part):
-        return None
-    import pyarrow.parquet as _pq
-
-    return _pq.read_table(part, columns=["docid"])["docid"].to_numpy(
-        zero_copy_only=False).astype(np.int64, copy=False)
-
-
 def compact_index(
     spark: SparkSession,
     index_dir: str,
@@ -568,8 +547,8 @@ def compact_index(
     target_segments: int | None = None,
     block_size: int = BLOCK_SIZE,
     target_bytes: int | None = None,
-    doomed_dir: str | None = None,
-    doomed_counts: dict[str, int] | None = None,
+    deletes: np.ndarray | None = None,
+    epoch: int | None = None,
 ) -> pd.DataFrame:
     """Sort-merge-compact an index: group docid-adjacent segments, purge
     tombstones, renumber docids densely, write a fresh index + docid_map
@@ -584,26 +563,22 @@ def compact_index(
     dropped up front, so output seg-{offset} dirs are strictly increasing
     (no collisions) and no task ever builds an empty segment.
 
-    `doomed_dir` / `doomed_counts` (replace_docs_bulk): an EXTRA doomed
-    set that never touched the journal — parquet partitions
-    doomed_dir/segd=<digest>/ written distributed, resolved per segment
-    INSIDE each merge task (the driver sees only the per-segment counts
-    needed for offsets). The caller guarantees doomed ∩ journal = ∅, or
-    the metadata-only live counts double-subtract and docid offsets
-    collide."""
+    `deletes` (replace_docs_bulk): more docids to purge with the
+    journal's, read at docid_epoch `epoch`; if a compaction renumbered
+    the index since, ValueError is raised before anything is written."""
     manifest = load_manifest(index_dir)
+    if epoch is not None and manifest.get("docid_epoch", 0) != epoch:
+        raise ValueError(f"{index_dir} was compacted since the deletes "
+                         f"were read (docid epoch {epoch})")
     segs = sorted(manifest["segments"], key=lambda s: s["min_docid"])
     # ONE driver read of the journal: the live counts below and every
     # merge task's purge use the same array, so a concurrent mark_deleted
     # cannot make them disagree (deletes acked mid-compaction stay
     # journaled and compact_in_place carries them over)
     tomb = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-
-    def seg_tomb_count(s: dict) -> int:
-        lo = int(np.searchsorted(tomb, s["min_docid"], side="left"))
-        hi = int(np.searchsorted(tomb, s["max_docid"], side="right"))
-        return hi - lo
-    doomed_counts = doomed_counts or {}
+    if deletes is not None:
+        # a union: a delete that is also journaled is subtracted once
+        tomb = np.union1d(tomb, np.asarray(deletes, np.int64))
     if target_bytes is not None:
         # size-bounded policy (the LSM merge-policy surface): greedily
         # pack ADJACENT segments (groups must stay docid-contiguous for
@@ -635,8 +610,8 @@ def compact_index(
     # live-doc count per group from manifest metadata + the sorted
     # tombstone array — zero segment data reads on the driver
     def seg_live(s: dict) -> int:
-        return (int(s["n_docs"]) - seg_tomb_count(s)
-                - doomed_counts.get(_seg_digest(s["path"]), 0))
+        lo, hi = np.searchsorted(tomb, [s["min_docid"], s["max_docid"] + 1])
+        return int(s["n_docs"]) - int(hi - lo)
 
     live_counts = [sum(seg_live(s) for s in g) for g in groups]
     groups = [g for g, n in zip(groups, live_counts) if n > 0]
@@ -665,20 +640,9 @@ def compact_index(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples():
-                paths = json.loads(row.paths)
-                tomb_task = b_tomb.value
-                if doomed_dir is not None:
-                    # bulk-doomed resolution is PER TASK: each group reads
-                    # only its own segments' doomed partitions
-                    extra = [d for p in paths
-                             if (d := _load_bulk_doomed(doomed_dir, p))
-                             is not None]
-                    if extra:
-                        tomb_task = np.unique(
-                            np.concatenate([tomb_task, *extra]))
                 man, dmap = _merge_group(
-                    paths, out_dir, int(row.group_id),
-                    int(row.offset), tomb_task, block_size,
+                    json.loads(row.paths), out_dir, int(row.group_id),
+                    int(row.offset), b_tomb.value, block_size,
                 )
                 if man is None:  # defensive: group emptied under our feet
                     continue
@@ -743,8 +707,6 @@ def index_config(index_dir: str) -> dict:
     analyzer, or appending a position-less segment to a positional index,
     silently corrupts subsequent search/phrase results (the manifest's
     has_positions is ANDed over segment metas)."""
-    from jvector_spark.sources.segment import load_manifest
-
     manifest = load_manifest(index_dir)
     # a serve-session CREATE records its intended config in create.json
     # BEFORE any segment exists (the manifest's has_positions is ANDed
@@ -787,6 +749,44 @@ def index_config(index_dir: str) -> dict:
     }
 
 
+def _replace_config(index_dir: str, mode: str | None,
+                    positions: bool | None,
+                    key_cols: tuple[str, ...] | None,
+                    content_col: str | None) -> tuple:
+    """(mode, positions, key_cols, content_col) for a replace: each None
+    takes the live index's own config (index_config), never a constant —
+    a hardcoded 'code'/False would tokenize a mode='simple' index's new
+    docs with the wrong analyzer or flip a positional manifest's
+    has_positions."""
+    cfg = index_config(index_dir)
+    return (cfg["tokenizer_mode"] if mode is None else mode,
+            cfg["has_positions"] if positions is None else positions,
+            tuple(cfg["key_cols"] if key_cols is None else key_cols),
+            cfg["content_col"] if content_col is None else content_col)
+
+
+def _live_key_matches(spark: SparkSession, index_dir: str, manifest: dict,
+                      new_docs: DataFrame,
+                      key_cols: tuple[str, ...]) -> np.ndarray:
+    """Sorted docids of the manifest's live docs whose key matches a row
+    of `new_docs`: the docs a replace supersedes, in the numbering of the
+    manifest's docid_epoch. Key equality is null-safe and NaN-canonical
+    (key_join_cond): a null/NaN key column still matches its committed
+    copy, or the old version would stay live next to the replacement."""
+    if not manifest["segments"]:
+        return np.empty(0, np.int64)
+    existing = spark.read.parquet(
+        *[os.path.join(s["path"], "docs.parquet")
+          for s in manifest["segments"]]).select("docid", *key_cols)
+    incoming = new_docs.select(*key_cols).distinct()
+    hits = existing.join(
+        incoming, on=key_join_cond(existing, incoming, key_cols),
+        how="left_semi").select("docid").toPandas()
+    return np.setdiff1d(
+        hits["docid"].to_numpy(np.int64),
+        tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0)))
+
+
 def replace_docs(
     spark: SparkSession,
     index_dir: str,
@@ -802,12 +802,9 @@ def replace_docs(
     versions as a micro segment. Old versions become invisible the moment
     the tombstone file lands; space reclaims at the next compaction.
 
-    mode / positions / key_cols / content_col default to the LIVE index's own config
-    (index_config) — never to fixed constants: replacing into a
-    mode='simple' or positions=True index with hardcoded 'code'/False
-    would tokenize the new docs with the wrong analyzer and flip the
-    manifest's has_positions, corrupting search and disabling warm
-    phrase serving. Explicit arguments still override.
+    mode / positions / key_cols / content_col default to the live index's
+    own config (_replace_config). A compaction between the match and the
+    tombstone write raises ValueError before anything is written.
 
     At-least-once safe: a retry after any crash point re-tombstones
     whatever live copy exists (old or the just-appended new one) and
@@ -816,47 +813,17 @@ def replace_docs(
     """
     from jvector_spark.streaming.micro_segments import append_micro_segment
 
-    cfg = index_config(index_dir)
-    if mode is None:
-        mode = cfg["tokenizer_mode"]
-    if positions is None:
-        positions = cfg["has_positions"]
-    if key_cols is None:
-        key_cols = cfg["key_cols"]
-    if content_col is None:
-        content_col = cfg["content_col"]
-    from jvector_spark.sources.segment import load_manifest
-
+    mode, positions, key_cols, content_col = _replace_config(
+        index_dir, mode, positions, key_cols, content_col)
     manifest = load_manifest(index_dir)
-    n_replaced = 0
-    if manifest["segments"]:
-        existing = spark.read.parquet(
-            *[os.path.join(s["path"], "docs.parquet")
-              for s in manifest["segments"]]
-        ).select("docid", *key_cols)
-        tomb = set(load_tombstones(index_dir))
-        # null-safe, NaN-canonical key equality: a null/NaN key column
-        # must still match its committed copy (plain = never matches
-        # null, leaving the old version live next to the replacement)
-        from jvector_spark.sources.segment import key_join_cond
-
-        incoming = new_docs.select(*key_cols).distinct()
-        hits = (
-            existing.join(incoming,
-                          on=key_join_cond(existing, incoming, key_cols),
-                          how="left_semi")
-            .select("docid").collect()
-        )
-        doomed = [int(r["docid"]) for r in hits
-                  if int(r["docid"]) not in tomb]
-        if doomed:
-            mark_deleted(index_dir, doomed)
-            n_replaced = len(doomed)
+    doomed = _live_key_matches(spark, index_dir, manifest, new_docs, key_cols)
+    if len(doomed):
+        mark_deleted(index_dir, doomed, epoch=manifest.get("docid_epoch", 0))
     append_micro_segment(
         new_docs, batch_id=-1, index_dir=index_dir, mode=mode,
         content_col=content_col, key_cols=key_cols, positions=positions,
     )
-    return {"replaced": n_replaced, "appended": True}
+    return {"replaced": len(doomed), "appended": True}
 
 
 def replace_docs_bulk(
@@ -873,115 +840,44 @@ def replace_docs_bulk(
 ) -> dict:
     """Bulk upsert — the MERGE-INTO-shaped big sibling of replace_docs
     (the buildAndMergeNewNodes regime, GraphIndexBuilder.java:992-1029,
-    vs addGraphNode's incremental one). replace_docs journals a tombstone
-    per replaced doc and is therefore driver-bounded by the journal (its
-    stated serving-sized-CRUD contract); THIS path never materializes the
-    doomed set on the driver:
+    vs addGraphNode's incremental one). Where replace_docs journals the
+    superseded docs, this path purges them in a rewrite:
 
-    1. doomed = existing ⋉ incoming-keys, computed AND WRITTEN
-       distributed as parquet partitions doomed/segd=<digest>/ — the
-       driver collects only one COUNT per affected segment (needed for
-       the compaction's metadata-only docid offsets).
-    2. compact_index(doomed_dir=...) rewrites the index into `out_dir`
-       with each merge task resolving its own segments' doomed ids
-       executor-side (journal tombstones purge in the same pass).
+    1. doomed = the live docs whose key matches an incoming row — the
+       same match as replace_docs (_live_key_matches).
+    2. compact_index(deletes=doomed) rewrites the index into `out_dir`,
+       purging the doomed docs and the journal's in the same pass.
     3. the new docs append to the fresh index (multi-segment build; the
        old copies are gone, so the committed-key dedup passes them).
 
     Cost model: O(index) rewrite like any major compaction — right when
-    the incoming batch is a meaningful fraction of the corpus (a 10^8-key
-    re-ingest), wrong for point updates (use replace_docs). Docids
-    renumber (epoch bump via the fresh manifest), same contract as
-    compact_index; out_dir/docid_map preserves old->new. Crash-safe: the
-    source index is read-only throughout; a crash leaves it intact and
-    out_dir incomplete (no _SUCCESS-equivalent manifest until the end).
+    the incoming batch is a meaningful fraction of the corpus, wrong for
+    point updates (use replace_docs). Docids renumber (epoch bump via the
+    fresh manifest), same contract as compact_index; out_dir/docid_map
+    preserves old->new. The source index is read-only throughout. A crash
+    in step 2 leaves out_dir without a manifest; one between steps 2 and
+    3 leaves it the source minus the superseded docs; rerun into a fresh
+    out_dir. A compaction of the source between steps 1 and 2 raises
+    ValueError before out_dir is written.
 
     `new_docs` must be key-unique; duplicate keys would both survive
-    (first-writer-wins is not defined for a bulk batch).
+    (first-writer-wins is not defined for a bulk batch). `mode` /
+    `positions` / `key_cols` / `content_col` default as in replace_docs.
     """
-    from jvector_spark.sources.segment import key_join_cond
     from jvector_spark.streaming.micro_segments import append_micro_segment
 
-    cfg = index_config(index_dir)
-    # same default discipline as replace_docs: the LIVE index's own
-    # config, explicit arguments override (the config-drift guard)
-    if mode is None:
-        mode = cfg["tokenizer_mode"]
-    if positions is None:
-        positions = cfg["has_positions"]
-    if key_cols is None:
-        key_cols = cfg["key_cols"]
-    if content_col is None:
-        content_col = cfg["content_col"]
+    mode, positions, key_cols, content_col = _replace_config(
+        index_dir, mode, positions, key_cols, content_col)
     manifest = load_manifest(index_dir)
     if not manifest["segments"]:
         raise ValueError("replace_docs_bulk needs a non-empty index; "
                          "bulk-load an empty one instead")
-    segs = manifest["segments"]
-    doomed_dir = out_dir.rstrip("/") + "._doomed"
-
-    # --- 1. distributed doomed set ------------------------------------
-    # segment identity travels WITH each row (input_file_name -> segment
-    # dir -> digest via a broadcast map); the driver never sees docids
-    existing = (
-        spark.read.parquet(
-            *[os.path.join(s["path"], "docs.parquet") for s in segs])
-        .withColumn(
-            "_segdir",
-            F.regexp_replace(
-                F.regexp_extract(F.input_file_name(),
-                                 r"(.*)/docs\.parquet", 1),
-                "^file:/+", "/"))
-        .select("docid", "_segdir", *key_cols)
-    )
-    seg_map = F.broadcast(spark.createDataFrame(
-        [(os.path.normpath(s["path"]), _seg_digest(s["path"]))
-         for s in segs],
-        "_segdir string, segd string"))
-    incoming = new_docs.select(*key_cols).distinct()
-    hits = existing.join(incoming,
-                         on=key_join_cond(existing, incoming, key_cols),
-                         how="left_semi")
-    # keep doomed ∩ journal = ∅ (compact_index's offset contract)
-    tomb = tombstone_view(index_dir)
-    if len(tomb):
-        tomb_df = spark.createDataFrame(pd.DataFrame({"docid": tomb}))
-        hits = hits.join(F.broadcast(tomb_df), "docid", "left_anti")
-    # LEFT join so a hit whose _segdir maps to no known segment survives
-    # into a sentinel partition — the path-normalization drift check
-    # rides the same job as the doomed write instead of re-running the
-    # full scan + semi-join for a second count
-    doomed = hits.join(seg_map, "_segdir", "left").select(
-        "docid", F.coalesce("segd", F.lit("__unmapped__")).alias("segd"))
-    doomed.write.mode("overwrite").partitionBy("segd").parquet(doomed_dir)
-    # read the counts back from the COMMITTED files (what the merge tasks
-    # will actually see); explicit schema — an all-new-keys batch commits
-    # zero doomed rows and inference has nothing to look at
-    back = spark.read.schema("docid long, segd string").parquet(doomed_dir)
-    counts = {r["segd"]: int(r["n"])
-              for r in back.groupBy("segd").agg(
-                  F.count("*").alias("n")).collect()}
-    # every hit must have mapped to a known segment dir: a URI-vs-path
-    # normalization drift between input_file_name and the manifest would
-    # otherwise silently drop doomed rows and resurrect old copies
-    n_unmapped = counts.pop("__unmapped__", 0)
-    if n_unmapped:
-        raise RuntimeError(
-            f"segment-dir mapping dropped {n_unmapped} doomed rows "
-            "(path normalization drift between input_file_name and the "
-            "manifest)")
-    n_doomed = int(sum(counts.values()))
-
-    # --- 2. rewrite, purging doomed + journal tombstones in-task -------
+    doomed = _live_key_matches(spark, index_dir, manifest, new_docs, key_cols)
     compact_index(spark, index_dir, out_dir, block_size=block_size,
-                  doomed_dir=doomed_dir, doomed_counts=counts)
-
-    # --- 3. append the replacements to the fresh index -----------------
+                  deletes=doomed, epoch=manifest.get("docid_epoch", 0))
     append_micro_segment(
         new_docs, batch_id=-2, index_dir=out_dir,
-        mode=mode, content_col=content_col,
-        key_cols=tuple(key_cols), positions=positions,
-        segments_per_batch=segments_per_batch,
+        mode=mode, content_col=content_col, key_cols=key_cols,
+        positions=positions, segments_per_batch=segments_per_batch,
     )
-    shutil.rmtree(doomed_dir, ignore_errors=True)
-    return {"replaced": n_doomed, "index": out_dir}
+    return {"replaced": len(doomed), "index": out_dir}

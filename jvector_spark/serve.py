@@ -629,7 +629,8 @@ class IndexServer:
         missing = [t for t in terms if t not in self._df_memo]
         if missing:
             self._df_memo.update(
-                global_term_stats(self.spark, self.index_dir, missing))
+                global_term_stats(self.spark, self.index_dir, missing,
+                                  self.manifest))
             for t in missing:  # OOV terms memoize as absent (df lookup ran)
                 self._df_memo.setdefault(t, 0)
         return idf_map(

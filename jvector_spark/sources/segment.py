@@ -1144,30 +1144,33 @@ def _term_stats_file_sha(path: str) -> str:
     return sha
 
 
-def _trusted_term_stats(index_dir: str) -> str | None:
+def _trusted_term_stats(index_dir: str,
+                        manifest: dict | None = None) -> str | None:
     """Path of the hot-tier term_stats.parquet when it exists and its
     sha256 matches the manifest's recorded `term_stats_sha` (or none is
-    recorded); None for a pre-stats index or a stats/manifest torn write
-    (a crash between the two writes leaves a mismatched pair)."""
+    recorded); None for a pre-stats index, a stats/manifest torn write
+    (a crash between the two writes leaves a mismatched pair), or a
+    `manifest` (default: the live one) that a later write superseded."""
     path = os.path.join(index_dir, "term_stats.parquet")
     if not os.path.exists(path):
         return None
-    try:
-        want = load_manifest(index_dir).get("term_stats_sha")
-    except FileNotFoundError:
-        want = None
+    if manifest is None and os.path.exists(
+            os.path.join(index_dir, "manifest.json")):
+        manifest = load_manifest(index_dir)
+    want = (manifest or {}).get("term_stats_sha")
     if want is not None and _term_stats_file_sha(path) != want:
         return None
     return path
 
 
-def read_global_term_stats(index_dir: str,
-                           terms: list[str]) -> dict[str, int] | None:
+def read_global_term_stats(index_dir: str, terms: list[str],
+                           manifest: dict | None = None
+                           ) -> dict[str, int] | None:
     """Driver-side df lookup for query terms from the hot-tier dictionary.
-    Returns None when the stats file is not trusted (_trusted_term_stats)
-    — callers fall back to the distributed aggregation, which is always
-    correct; {} just means all terms OOV."""
-    path = _trusted_term_stats(index_dir)
+    Returns None when the stats file is not trusted for `manifest`
+    (_trusted_term_stats) — callers fall back to the distributed
+    aggregation, which is always correct; {} just means all terms OOV."""
+    path = _trusted_term_stats(index_dir, manifest)
     if path is None:
         return None
     import pyarrow.dataset as ds
@@ -1252,16 +1255,28 @@ def write_index_manifest(index_dir: str, manifest: pd.DataFrame, mode: str,
     idx_meta["term_stats_sha"] = (
         stats_sha if stats_sha is not None
         else write_global_term_stats(index_dir, manifest))
+    # paths relative to index_dir, so a copied or moved index reads its
+    # own segments; the marker tells load_manifest to resolve them
+    stored = dict(idx_meta, paths="relative", segments=[
+        dict(s, path=os.path.relpath(s["path"], index_dir))
+        for s in idx_meta["segments"]])
     tmp = os.path.join(index_dir, "manifest.json.tmp")
     with open(tmp, "w") as f:
-        json.dump(idx_meta, f, indent=1)
+        json.dump(stored, f, indent=1)
     os.replace(tmp, os.path.join(index_dir, "manifest.json"))
     return idx_meta
 
 
 def load_manifest(index_dir: str) -> dict:
+    """The manifest, each segment path joined to index_dir when the
+    manifest marks its paths relative (`paths: "relative"`); an older
+    manifest's paths are returned as stored."""
     with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)
+        man = json.load(f)
+    if man.pop("paths", None) == "relative":
+        for s in man.get("segments", []):
+            s["path"] = os.path.join(index_dir, s["path"])
+    return man
 
 
 class SegmentReader:

@@ -5,13 +5,20 @@ only, or a deleted doc's key can never be re-indexed."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from jvector_spark.operators.ids import assign_dense_docids
 from jvector_spark.operators.wand import search_index
-from jvector_spark.plans.merge import load_tombstones, mark_deleted, replace_docs
+from jvector_spark.plans.merge import (
+    load_tombstones,
+    mark_deleted,
+    replace_docs,
+    replace_docs_bulk,
+)
 from jvector_spark.sources.segment import build_index, load_manifest
 from jvector_spark.streaming.micro_segments import append_micro_segment
 
@@ -92,12 +99,25 @@ def test_replace_new_key_is_plain_insert(spark, idx):
     assert _live_count(spark, idx, "alpha") == 21
 
 
-def test_replace_defaults_preserve_index_config(spark, tmp_path_factory):
+def _replace_via(how, spark, idx, new, tmp_path_factory):
+    """Replace through replace_docs ("point") or replace_docs_bulk
+    ("bulk", into a fresh out_dir); returns the index that answers."""
+    if how == "point":
+        replace_docs(spark, idx, new)  # NO kwargs — the serve-protocol shape
+        return idx
+    out = str(tmp_path_factory.mktemp("idx_replaced")) + "/v2"
+    replace_docs_bulk(spark, idx, new, out)
+    return out
+
+
+@pytest.mark.parametrize("how", ["point", "bulk"])
+def test_replace_defaults_preserve_index_config(spark, tmp_path_factory, how):
     """Regression (ADVICE r3, high): a no-kwargs replace into an index
     built with mode='simple' + positions=True must NOT re-tokenize with
     the 'code' analyzer or flip the manifest's has_positions — the serve
     protocol's 'replace' op passes no kwargs, so the defaults must come
-    from the live index config, not constants."""
+    from the live index config, not constants. Both replace paths take
+    them from one helper."""
     d = str(tmp_path_factory.mktemp("idx_cfg"))
     docs = assign_dense_docids(_mk(spark, _base_rows(10)).repartition(2))
     build_index(docs, d, num_segments=2, mode="simple", positions=True)
@@ -108,12 +128,109 @@ def test_replace_defaults_preserve_index_config(spark, tmp_path_factory):
         "repo": "r", "path": "003", "commit": "c0", "lang": "python",
         "content": "alpha zz_cfg_updated shared",
     }])
-    replace_docs(spark, d, new)  # NO kwargs — the serve-protocol shape
+    d = _replace_via(how, spark, d, new, tmp_path_factory)
     man = load_manifest(d)
     assert man["tokenizer_mode"] == "simple"
     assert man["has_positions"] is True          # append carried positions
     assert _live_count(spark, d, "zz_cfg_updated") == 1
     assert _live_count(spark, d, "token3") == 0
+
+
+@pytest.mark.parametrize("how", ["point", "bulk"])
+def test_replace_matches_null_key_column(spark, tmp_path_factory, how):
+    """A key with a null column matches its committed copy null-safely
+    (key_join_cond), so the replace supersedes it instead of leaving the
+    old version live beside the new one."""
+    d = str(tmp_path_factory.mktemp("idx_null_key"))
+    rows = _base_rows(10)
+    rows[4]["commit"] = None
+    docs = assign_dense_docids(_mk(spark, rows).repartition(2))
+    build_index(docs, d, num_segments=2)
+    new = _mk(spark, [{
+        "repo": "r", "path": "004", "commit": None, "lang": "python",
+        "content": "alpha zz_null_key shared",
+    }])
+    d = _replace_via(how, spark, d, new, tmp_path_factory)
+    assert _live_count(spark, d, "token4") == 0
+    assert _live_count(spark, d, "zz_null_key") == 1
+    assert _live_count(spark, d, "alpha") == 10
+
+
+def _answers(spark, idx):
+    """What the index answers, by key: the sorted paths of all live docs
+    (every doc holds 'alpha'), and the live counts of the old and new
+    versions of key 010."""
+    res = search_index(
+        spark, idx,
+        pd.DataFrame({"qid": [0], "terms": [["alpha"]], "k": [100]}),
+        merge="driver")
+    keys = pd.concat(
+        pd.read_parquet(os.path.join(s["path"], "docs.parquet"),
+                        columns=["docid", "path"])
+        for s in load_manifest(idx)["segments"])
+    paths = sorted(keys.set_index("docid").loc[res["docid"], "path"])
+    return (paths, _live_count(spark, idx, "token10"),
+            _live_count(spark, idx, "zz_raced"))
+
+
+def test_replace_raises_when_compaction_overtakes_it(spark, idx,
+                                                     monkeypatch):
+    """A compaction that renumbers the index between replace_docs' key
+    match and its tombstone write: the matched docids now name other
+    docs, so mark_deleted refuses them and the index answers as before
+    (journaled, they would delete the unrelated doc that took docid 10
+    and keep the old version of key 010)."""
+    import jvector_spark.plans.merge as merge_mod
+
+    mark_deleted(idx, [0, 1, 2])
+    before = _answers(spark, idx)
+    real = merge_mod.mark_deleted
+
+    def compact_first(index_dir, docids, **kw):
+        merge_mod.compact_in_place(spark, index_dir)
+        return real(index_dir, docids, **kw)
+
+    monkeypatch.setattr(merge_mod, "mark_deleted", compact_first)
+    new = _mk(spark, [{
+        "repo": "r", "path": "010", "commit": "c0", "lang": "python",
+        "content": "alpha zz_raced shared",
+    }])
+    with pytest.raises(ValueError, match="compacted"):
+        replace_docs(spark, idx, new)
+    assert _answers(spark, idx) == before
+
+
+def test_bulk_replace_raises_when_source_compaction_overtakes_it(
+        spark, idx, tmp_path_factory, monkeypatch):
+    """A compaction of the source between replace_docs_bulk's key match
+    and its rewrite renumbers the source under the matched docids, so a
+    rewrite would purge the wrong doc: the call raises before out_dir is
+    created instead of returning an index that lost the new version, and
+    the source answers as before."""
+    import jvector_spark.plans.merge as merge_mod
+
+    out_dir = str(tmp_path_factory.mktemp("idx_raced_out")) + "/v2"
+    mark_deleted(idx, [0, 1, 2])
+    before = _answers(spark, idx)
+    real = merge_mod.compact_index
+    fired = []
+
+    def compact_source_first(*args, **kw):
+        if not fired:  # compact_in_place calls compact_index too
+            fired.append(True)
+            merge_mod.compact_in_place(spark, idx)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(merge_mod, "compact_index", compact_source_first)
+    new = _mk(spark, [{
+        "repo": "r", "path": "010", "commit": "c0", "lang": "python",
+        "content": "alpha zz_raced shared",
+    }])
+    with pytest.raises(ValueError, match="compacted"):
+        replace_docs_bulk(spark, idx, new, out_dir)
+    assert fired
+    assert not os.path.exists(out_dir)
+    assert _answers(spark, idx) == before
 
 
 def test_append_rejects_tokenizer_mode_mismatch(spark, tmp_path_factory):

@@ -1,8 +1,8 @@
 """Bulk upsert via replace_docs_bulk — the MERGE-INTO-shaped regime
-(buildAndMergeNewNodes, GraphIndexBuilder.java:992-1029): the doomed set
-is computed and consumed DISTRIBUTED (parquet partitions per segment,
-driver sees only counts), the index rewrites through compact_index's
-merge tasks, and the replacements append to the fresh index."""
+(buildAndMergeNewNodes, GraphIndexBuilder.java:992-1029): the docs a
+replace supersedes are matched as in replace_docs, the index rewrites
+through compact_index's merge tasks purging them with the journal, and
+the replacements append to the fresh index."""
 
 from __future__ import annotations
 
@@ -52,8 +52,8 @@ def _live_count(spark, idx, term):
 def test_bulk_replace_rewrites_and_appends(spark, idx, tmp_path_factory):
     """Replace a third of the corpus in one batch: old versions gone, new
     content live, untouched docs survive with exactly one copy, docid_map
-    written, replaced count = batch size, and the doomed scratch dir is
-    cleaned up."""
+    written, replaced count = batch size, and nothing but out_dir is
+    written beside it."""
     out_dir = str(tmp_path_factory.mktemp("idx_bulk_out")) + "/v2"
     new = _mk(spark, [
         {"repo": "r", "path": f"{i:03d}", "commit": "c0", "lang": "python",
@@ -74,7 +74,7 @@ def test_bulk_replace_rewrites_and_appends(spark, idx, tmp_path_factory):
     assert _live_count(spark, out_dir, "zz_fresh") == 1    # pure insert
     assert _live_count(spark, out_dir, "alpha") == 31      # one per key
     assert os.path.isdir(os.path.join(out_dir, "docid_map"))
-    assert not os.path.exists(out_dir.rstrip("/") + "._doomed")
+    assert os.listdir(os.path.dirname(out_dir)) == ["v2"]
     # the source index is untouched (read-only contract)
     assert _live_count(spark, idx, "token0") == 1
 
@@ -83,7 +83,7 @@ def test_bulk_replace_purges_journal_tombstones_too(spark, idx,
                                                     tmp_path_factory):
     """Pre-existing journal tombstones purge in the same rewrite, and a
     doc that is BOTH journal-tombstoned and in the incoming batch is not
-    double-subtracted (offset contract: doomed ∩ journal = ∅)."""
+    double-subtracted from the docid offsets."""
     out_dir = str(tmp_path_factory.mktemp("idx_bulk_out2")) + "/v2"
     mark_deleted(idx, [2, 4])  # journal path; docid 4 == path 004
     new = _mk(spark, [
@@ -112,29 +112,3 @@ def test_bulk_replace_empty_index_refuses(spark, tmp_path_factory):
     new = _mk(spark, _base_rows(2))
     with pytest.raises(ValueError, match="non-empty"):
         replace_docs_bulk(spark, d, new, d + "_v2")
-
-
-def test_bulk_replace_driver_never_sees_doomed_ids(spark, idx,
-                                                   tmp_path_factory,
-                                                   monkeypatch):
-    """The distributed-doomed contract itself: replace_docs_bulk must
-    never call .collect()/.toPandas() on a docid-bearing plan. Guarded by
-    intercepting DataFrame.collect — only the per-segment count rows and
-    compact's manifest/metadata collects may pass."""
-    from pyspark.sql import DataFrame
-
-    out_dir = str(tmp_path_factory.mktemp("idx_bulk_out3")) + "/v2"
-    seen = []
-    orig = DataFrame.collect
-
-    def spy(self):
-        seen.append([f.name for f in self.schema.fields])
-        return orig(self)
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    new = _mk(spark, [
-        {"repo": "r", "path": "005", "commit": "c0", "lang": "python",
-         "content": "alpha zz_spy shared"}])
-    replace_docs_bulk(spark, idx, new, out_dir)
-    for cols in seen:
-        assert "docid" not in cols, f"driver collected docids: {cols}"

@@ -112,6 +112,92 @@ def test_term_stats_fallback_ignores_orphan_dirs(spark, index, oracle,
         assert stats[t] == oracle.df[t], t
 
 
+def _assert_matches_oracle(got, golden):
+    got = got.sort_values(["qid", "rank"]).reset_index(drop=True)
+    golden = golden.sort_values(["qid", "rank"]).reset_index(drop=True)
+    assert list(got["qid"]) == list(golden["qid"])
+    assert list(got["docid"]) == list(golden["docid"])
+    assert np.array_equal(got["score"].to_numpy(), golden["score"].to_numpy())
+
+
+def test_search_takes_df_from_its_snapshot(spark, corpus_pdf,
+                                           tmp_path_factory, monkeypatch):
+    """An append that lands after search_index read its manifest must not
+    leak into the df it scores with: n_docs, avgdl and segments come from
+    the snapshot, so df must come from it too (the live term_stats.parquet
+    already counts the appended docs)."""
+    import jvector_spark.plans.merge as merge_mod
+    from jvector_spark.corpus import generate_queries
+    from jvector_spark.oracle import BM25Oracle
+    from jvector_spark.streaming.micro_segments import append_micro_segment
+
+    base, later = corpus_pdf.iloc[:200], corpus_pdf.iloc[200:]
+    idx = str(tmp_path_factory.mktemp("idx_snapshot_df"))
+    build_index(assign_dense_docids(spark.createDataFrame(base)), idx,
+                num_segments=2)
+    real = merge_mod.tombstone_view
+    fired = []
+
+    def append_then_view(*args, **kw):
+        # IndexSnapshot reads the manifest, then the tombstone view
+        if not fired:
+            fired.append(True)
+            append_micro_segment(spark.createDataFrame(later), batch_id=0,
+                                 index_dir=idx)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(merge_mod, "tombstone_view", append_then_view)
+    queries = generate_queries(base, n_queries=20, seed=3)
+    got = search_index(spark, idx, queries, merge="driver")
+    assert fired and load_manifest(idx)["n_docs"] == len(corpus_pdf)
+    _assert_matches_oracle(got, BM25Oracle(base).golden(queries))
+
+
+def test_copied_index_reads_its_own_segments(spark, corpus_df, oracle,
+                                             queries_pdf, tmp_path_factory):
+    """Manifest segment paths are relative to the index dir: a copy of an
+    index still searches, oracle-identical, once the original is gone."""
+    import shutil
+
+    root = str(tmp_path_factory.mktemp("idx_copy"))
+    src, dst = os.path.join(root, "src"), os.path.join(root, "dst")
+    build_index(assign_dense_docids(corpus_df), src, num_segments=3)
+    shutil.copytree(src, dst)
+    shutil.rmtree(src)
+    assert all(s["path"].startswith(dst + os.sep)
+               for s in load_manifest(dst)["segments"])
+    _assert_matches_oracle(search_index(spark, dst, queries_pdf).toPandas(),
+                           oracle.golden(queries_pdf))
+
+
+def test_older_manifest_paths_load_as_stored(spark, corpus_df, oracle,
+                                             queries_pdf, tmp_path_factory):
+    """A manifest written before paths were stored relative (no `paths`
+    marker) holds them as they were written: for an index built under a
+    cwd-relative dir, `<dir>/seg-...` relative to the cwd. They load as
+    stored, not joined to the index dir a second time: the index searches
+    and vacuum keeps its live segments."""
+    from jvector_spark.plans.merge import vacuum_index
+
+    idx = os.path.relpath(str(tmp_path_factory.mktemp("idx_old_paths")))
+    build_index(assign_dense_docids(corpus_df), idx, num_segments=3)
+    mpath = os.path.join(idx, "manifest.json")
+    with open(mpath) as f:
+        stored = json.load(f)
+    assert stored.pop("paths") == "relative"
+    for s in stored["segments"]:
+        s["path"] = os.path.join(idx, s["path"])
+    with open(mpath, "w") as f:
+        json.dump(stored, f)
+    segs = load_manifest(idx)["segments"]
+    assert [s["path"] for s in segs] == [s["path"] for s in stored["segments"]]
+    assert all(os.path.isdir(s["path"]) for s in segs)
+    assert vacuum_index(idx, dry_run=True, min_age_sec=0) == []
+    _assert_matches_oracle(
+        search_index(spark, idx, queries_pdf, merge="driver"),
+        oracle.golden(queries_pdf))
+
+
 def test_search_rank_identical_and_bit_equal(spark, index, oracle, queries_pdf):
     idx, _ = index
     got = (
