@@ -250,8 +250,9 @@ def _ensure_cached_index(spark: SparkSession, sf_dir: str,
     """ONE /tmp segment-index cache discipline for every index-backed
     query family: format-version + fixture-content signature (_input_sig
     — regenerated fixtures must invalidate, not just library bumps) +
-    manifest-shape checks, rebuild on ANY doubt (stale /tmp survives
-    process restarts; "metrics" marks the current manifest shape).
+    manifest-shape checks + every manifest segment's meta.json present,
+    rebuild on ANY doubt (stale /tmp survives process restarts; "metrics"
+    marks the current manifest shape).
     `extra_valid(manifest, index_dir) -> bool` adds the per-cache
     structural predicate; `build_kwargs` extend the shared build call.
     Parameterized so the staleness rules can never drift between the
@@ -274,6 +275,9 @@ def _ensure_cached_index(spark: SparkSession, sf_dir: str,
             if (m.get("version") != SEGMENT_FORMAT_VERSION
                     or cached_sig != sig
                     or "metrics" not in m
+                    or not all(os.path.exists(os.path.join(s["path"],
+                                                           "meta.json"))
+                               for s in m["segments"])
                     or not extra_valid(m, index_dir)):
                 shutil.rmtree(index_dir, ignore_errors=True)
         except Exception:
@@ -324,10 +328,7 @@ def q_bm25_topk_index_nvq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = _ensure_cached_index(
         spark, sf_dir, "-nvq", "qmeta",
-        lambda m, d: any(
-            s.get("path") and os.path.exists(
-                os.path.join(s["path"], "meta.json"))
-            for s in m.get("segments", [])),
+        lambda m, d: bool(m["segments"]),
         quantize_meta=True)
     out = search_index(spark, index_dir, _qpdf())
     return _rerank_rounded(out)

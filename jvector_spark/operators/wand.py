@@ -28,6 +28,7 @@ All inner loops are numpy-vectorized; Python iterates only over query terms
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Iterable, Iterator, NamedTuple, Sequence
 
@@ -135,19 +136,19 @@ def read_metrics(acc) -> dict:
 
 def scatter_paths(spark: SparkSession, seg_paths: list[str],
                   num_tasks: int | None) -> DataFrame:
-    """Segment paths -> a small DataFrame pre-sliced into num_tasks
-    partitions (explicit numSlices — no repartition shuffle). Shared by
-    every index-scatter operator (BM25/phrase/regex)."""
+    """Segment paths -> a small `path string` DataFrame in num_tasks
+    contiguous partitions (spark.range splits at i*n/num_tasks; no
+    repartition shuffle). Shared by every index-scatter operator
+    (BM25/phrase/regex). The source runs in the JVM: the paths travel as
+    one JSON literal that Spark folds once, so no Python worker hosts the
+    scan beside the operator's own."""
     if num_tasks is None:
         num_tasks = min(len(seg_paths),
                         int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     num_tasks = max(1, num_tasks)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p,) for p in seg_paths], numSlices=num_tasks
-        ),
-        "path string",
-    )
+    paths = F.from_json(F.lit(json.dumps(seg_paths)), "array<string>")
+    return spark.range(0, len(seg_paths), 1, num_tasks).select(
+        F.element_at(paths, (F.col("id") + 1).cast("int")).alias("path"))
 
 
 def _empty_result(value_col: str) -> pd.DataFrame:

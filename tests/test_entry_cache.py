@@ -42,3 +42,23 @@ def test_ensure_index_invalidates_on_fixture_change(spark, sf_clone):
 
     assert load_manifest(idx2)["n_docs"] == len(pdf) - 1
     shutil.rmtree(idx2, ignore_errors=True)
+
+
+def test_ensure_index_rebuilds_when_a_segment_dir_is_missing(
+        spark, sf_clone, tmp_path, monkeypatch):
+    """A cached index whose manifest names a segment dir that does not
+    resolve (no meta.json) is rebuilt, not served: every query over it
+    would fail with FileNotFoundError."""
+    import __spark_entry__ as e
+    from jvector_spark.sources.segment import load_manifest
+
+    monkeypatch.setattr(e, "ENTRY_INDEX_ROOT", str(tmp_path / "entry"))
+    idx = e._ensure_index(spark, sf_clone)
+    assert idx.startswith(str(tmp_path / "entry"))
+    gone = load_manifest(idx)["segments"][0]["path"]
+    shutil.rmtree(gone)
+    m1 = os.path.getmtime(os.path.join(idx, "manifest.json"))
+    assert e._ensure_index(spark, sf_clone) == idx
+    assert os.path.getmtime(os.path.join(idx, "manifest.json")) != m1
+    assert all(os.path.exists(os.path.join(s["path"], "meta.json"))
+               for s in load_manifest(idx)["segments"])
